@@ -110,30 +110,17 @@ def run_once(
         # index) are skipped for embedding but STILL ledgered below, so
         # the retry converges — no duplicate vectors, no forever-pending
         # doc. Cost: one columnar scan of the index's source_file column
-        # per incremental run (nothing at all on the first run).
+        # per incremental run (nothing at all on the first run). Both
+        # join sides are STRING, so ids like '01' and '1' stay distinct.
         try:
-            # the doc key is derived from vec_id (a plain STRING data
-            # column), NOT from the source_file partition column:
-            # partition-column type inference reads 'source_file=1'
-            # back as an int, and the string-vs-int join would coerce
-            # both sides to double — conflating distinct string ids
-            # like '01' and '1' (a never-indexed doc would be skipped
-            # for embedding yet still ledgered: silent data loss).
-            # vec_id = '<doc_key>:<chunk_idx>' with a digits-only tail,
-            # so stripping the final ':<digits>' recovers doc_key
-            # exactly even when doc_key itself contains ':'.
             indexed = (
                 sinks.read_vector_index(spark, index_path)
-                .select(
-                    F.regexp_replace(
-                        F.col("vec_id"), r":[0-9]+$", ""
-                    ).alias("_idx_doc")
-                )
+                .select("source_file")
                 .distinct()
             )
             embed_docs = docs.join(
                 indexed,
-                docs["doc_id"].cast("string") == F.col("_idx_doc"),
+                docs["doc_id"].cast("string") == indexed["source_file"],
                 "left_anti",
             )
         except AnalysisException as e:

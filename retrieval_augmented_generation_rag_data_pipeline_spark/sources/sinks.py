@@ -1,9 +1,9 @@
 """Sinks (SURVEY.md §2.1 S5-S8).
 
 The FAISS index + pickle sidecar pair (reference
-src/embedding_engine.py:74-99) is unified into one Parquet vector-index
-table partitioned by source_file — same per-file layout, but queryable,
-schema'd, and splittable.
+src/embedding_engine.py:74-99) is unified into one flat Parquet
+vector-index table; per-file identity is the ``source_file`` column, so
+writes and scans cost O(files written), not O(documents indexed).
 """
 
 from __future__ import annotations
@@ -82,10 +82,21 @@ def write_dialogue_text(df: DataFrame, path: str, mode: str = "overwrite") -> No
 
 
 def write_vector_index(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Vector-index sink (S7): (vec_id, embedding, text, source_file)
-    partitioned by source_file — one 'index' per source file, matching the
-    reference's per-file FAISS layout (src/embedding_engine.py:74-84)."""
-    df.write.mode(mode).partitionBy("source_file").parquet(path)
+    """Vector-index sink (S7): (vec_id, embedding, text, source_file) as
+    flat Parquet. The reference's per-file FAISS layout
+    (src/embedding_engine.py:74-84) is the ``source_file`` column, so an
+    append adds one file per write partition, not one per document;
+    ``compact_parquet`` merges the small files many appends leave.
+    Appending onto an old ``source_file=*/`` layout raises before
+    writing: Spark reads a mixed root as one layout, dropping rows."""
+    if mode == "append":
+        p, fs = _hadoop_path_fs(df.sparkSession, f"{path}/source_file=*")
+        if fs.globStatus(p):
+            raise ValueError(
+                f"append to {path!r}, which holds a per-source_file "
+                "partitioned index; rewrite it with mode='overwrite'"
+            )
+    df.write.mode(mode).parquet(path)
 
 
 def write_time_partitioned(
@@ -115,7 +126,8 @@ def write_time_partitioned(
 
 def read_vector_index(spark: SparkSession, path: str) -> DataFrame:
     """Vector-index load (S8, reference src/embedding_engine.py:88-99).
-    Partition pruning on source_file replaces the per-file .faiss open."""
+    A ``source_file`` filter replaces the per-file .faiss open; it skips
+    Parquet row groups by their min/max stats."""
     return spark.read.parquet(path)
 
 

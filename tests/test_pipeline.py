@@ -232,11 +232,10 @@ def test_ledger_pending_strict_raises_on_null_key(spark):
 
 def test_run_once_retry_heal_does_not_conflate_numeric_like_ids(spark, tmp_path):
     """The heal's already-indexed check must compare doc keys as
-    STRINGS: source_file is a partition column that type-inference
-    reads back as int, and a string-vs-int join coerces both sides to
-    double — conflating '01' with '1' (a never-indexed doc would be
-    skipped for embedding yet still ledgered). The key is therefore
-    derived from the vec_id string column."""
+    STRINGS: a string-vs-int join coerces both sides to double —
+    conflating '01' with '1' (a never-indexed doc would be skipped for
+    embedding yet still ledgered). The index's source_file column is
+    STRING, so the anti-join on it keeps the two apart."""
     from retrieval_augmented_generation_rag_data_pipeline_spark.sources.sinks import read_vector_index
 
     idx = str(tmp_path / "idx")
@@ -253,3 +252,21 @@ def test_run_once_retry_heal_does_not_conflate_numeric_like_ids(spark, tmp_path)
     back = read_vector_index(spark, idx)
     assert back.count() == 2 * n1  # doc '01' embedded, not skipped
     assert back.select("vec_id").distinct().count() == 2 * n1
+
+
+def test_run_once_appends_stay_flat(spark, tmp_path):
+    """Ledger batches append flat files: no directory per document, and
+    each batch adds at most one file per write partition — the file
+    count tracks batches, not documents indexed."""
+    idx = tmp_path / "idx"
+    led = str(tmp_path / "led")
+    words = " ".join(f"w{i}" for i in range(40))
+    for b in range(3):
+        docs = spark.range(20 * b, 20 * (b + 1), numPartitions=2).select(
+            F.col("id").alias("doc_id"), F.lit(words).alias("text")
+        )
+        run_once(spark, docs, str(idx), ledger_path=led)
+    assert not [p for p in idx.iterdir() if p.is_dir()]
+    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert len(list(idx.glob("*.parquet"))) <= 3 * shuffle
+    assert spark.read.parquet(str(idx)).select("source_file").distinct().count() == 60

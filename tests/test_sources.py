@@ -11,6 +11,7 @@ from __future__ import annotations
 import json
 import pathlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from retrieval_augmented_generation_rag_data_pipeline_spark.operators.text import format_dialogue
@@ -98,22 +99,48 @@ def test_dialogue_text_sink_format(spark, tmp_path):
     assert lines == ["[0.00-1.50] SPEAKER_00: hello there"]
 
 
-def test_vector_index_partitioned_by_source(spark, tmp_path):
+def test_vector_index_flat_with_string_source_file(spark, tmp_path):
+    """The index is flat Parquet: per-file identity is the source_file
+    STRING column, not a directory level (partition inference read
+    'source_file=01' and 'source_file=1' back as the same int 1)."""
     df = spark.createDataFrame(
-        [(0, [1.0, 0.0], "a", "f1"), (1, [0.0, 1.0], "b", "f2")],
+        [
+            (0, [1.0, 0.0], "a", "f1"),
+            (1, [0.0, 1.0], "b", "f2"),
+            (2, [0.5, 0.5], "c", "f1"),
+            (3, [1.0, 1.0], "d", "01"),
+            (4, [0.0, 0.0], "e", "1"),
+        ],
         "vec_id long, embedding array<double>, text string, source_file string",
     )
     out = str(tmp_path / "idx")
     sinks.write_vector_index(df, out)
-    # one directory per source file, mirroring the reference's
-    # one-FAISS-index-per-file layout
-    parts = {p.name for p in pathlib.Path(out).iterdir() if p.is_dir()}
-    assert parts == {"source_file=f1", "source_file=f2"}
+    assert not [p for p in pathlib.Path(out).iterdir() if p.is_dir()]
     back = sinks.read_vector_index(spark, out)
-    assert back.count() == 2
-    # partition pruning: reading one source touches one partition
+    assert dict(back.dtypes)["source_file"] == "string"
+    counts = back.groupBy("source_file").count().collect()
+    assert {r.source_file: r["count"] for r in counts} == {
+        "f1": 2, "f2": 1, "01": 1, "1": 1
+    }
     one = back.filter(F.col("source_file") == "f1")
-    assert one.count() == 1
+    assert sorted(r.vec_id for r in one.collect()) == [0, 2]
+
+
+def test_vector_index_append_refuses_partitioned_root(spark, tmp_path):
+    """Spark reads a root holding both source_file=*/ directories and
+    flat files as one layout and silently drops the other's rows, so
+    appending onto the old per-document layout must raise before any
+    file is written."""
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0], "a", "f1"), (1, [0.0, 1.0], "b", "f2")],
+        "vec_id long, embedding array<double>, text string, source_file string",
+    )
+    out = tmp_path / "idx"
+    df.write.partitionBy("source_file").parquet(str(out))
+    files_before = sorted(p for p in out.rglob("*") if p.is_file())
+    with pytest.raises(ValueError, match="per-source_file"):
+        sinks.write_vector_index(df, str(out), mode="append")
+    assert sorted(p for p in out.rglob("*") if p.is_file()) == files_before
 
 
 def test_artifact_probe_against_catalog_scan(spark, tmp_path):

@@ -241,6 +241,7 @@ def test_full_pipeline_as_stream(spark, tmp_path):
     from retrieval_augmented_generation_rag_data_pipeline_spark.plans.pipeline import (
         embed_chunks,
     )
+    from retrieval_augmented_generation_rag_data_pipeline_spark.sources import sinks
 
     src = str(tmp_path / "docs")
     docs = spark.read.parquet(f"{SF}/documents.parquet").limit(30)
@@ -249,7 +250,7 @@ def test_full_pipeline_as_stream(spark, tmp_path):
 
     def index_batch(batch_df, _epoch):
         chunks = chunk_text(batch_df, chunk_words=32)
-        embed_chunks(chunks).write.mode("append").parquet(index_path)
+        sinks.write_vector_index(embed_chunks(chunks), index_path, mode="append")
 
     q = run_stream(
         read_document_stream(spark, src, max_files_per_trigger=1),
