@@ -546,43 +546,104 @@ def cc_jump_round(und: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(
-    vertices: DataFrame,
-    edges: DataFrame,
-    vertex_col: str = "doc_id",
-    edge_cols: tuple[str, str] = ("doc_a", "doc_b"),
-    max_iter: int = 25,
+def _cc_payload_bytes(und: DataFrame) -> Column:
+    """Per-row driver payload of the (_src, _dst) edge list in bytes:
+    a STRING/BINARY id counts its encoded length (NULL: 0), any other
+    id type a fixed 8 bytes."""
+    from pyspark.sql.types import BinaryType, StringType
+
+    return sum(
+        F.coalesce(F.octet_length(f.name), F.lit(0))
+        if isinstance(f.dataType, (StringType, BinaryType))
+        else F.lit(8)
+        for f in und.schema.fields
+    )
+
+
+def _cc_union_find(src: list, dst: list) -> tuple[list, list]:
+    """Min-id union-find over the collected undirected edge list.
+    Returns parallel (vertex, label) lists covering every edge
+    endpoint, each label the minimum id in the endpoint's component.
+
+    A NULL endpoint gets what the distributed loop gives it: NULL never
+    equals an id, so it passes no label on, but as a grouping key it
+    absorbs the minimum label of its non-NULL neighbors (NULL if it has
+    none)."""
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = x = parent[parent[x]]
+        return x
+
+    null_nbrs = []
+    has_null = False
+    for a, b in zip(src, dst):
+        if a is None or b is None:
+            has_null = True
+            # und holds both directions, so each neighbor of NULL shows
+            # up once as (nbr, NULL)
+            if b is None and a is not None:
+                null_nbrs.append(a)
+                parent.setdefault(a, a)
+            continue
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # the smaller root wins, so every root is its component's min
+            if rb < ra:
+                ra, rb = rb, ra
+            parent[rb] = ra
+    ids = list(parent)
+    labels = [find(v) for v in ids]
+    if has_null:
+        ids.append(None)
+        labels.append(min((find(v) for v in null_nbrs), default=None))
+    return ids, labels
+
+
+def _cc_driver(vertices: DataFrame, und: DataFrame, vertex_col: str) -> DataFrame:
+    """Driver tier of ``connected_components``: collect the pinned
+    edge list through Arrow, close it with union-find, and return the
+    labels as one Arrow-built local relation. The vertex rows and the
+    labeled endpoints meet in ONE aggregate keyed on the vertex (as in
+    ``cc_first_round``): duplicate vertex rows collapse, dangling
+    endpoints keep their row, and ``coalesce(label, doc_id)`` gives
+    every vertex without an edge its own id."""
+    import pyarrow as pa
+    from pyspark.sql.types import StructField, StructType
+
+    vx = vertices.select(F.col(vertex_col).alias("doc_id"))
+    # compare ids in the type the loop compares them in: its rounds
+    # union the vertex column with the edge columns
+    wide = vx.unionByName(und.select(F.col("_src").alias("doc_id")))
+    wide = wide.schema[0].dataType
+    tbl = und.select(F.col("_src").cast(wide), F.col("_dst").cast(wide)).toArrow()
+    ids, labels = _cc_union_find(
+        tbl.column(0).to_pylist(), tbl.column(1).to_pylist()
+    )
+    lab = und.sparkSession.createDataFrame(
+        pa.table({"doc_id": ids, "_lab": labels}),
+        StructType([StructField("doc_id", wide), StructField("_lab", wide)]),
+    )
+    return (
+        vx.select("doc_id", F.lit(None).cast(wide).alias("_lab"))
+        .unionByName(lab)
+        .groupBy("doc_id")
+        .agg(F.min("_lab").alias("_lab"))
+        .select("doc_id", F.coalesce("_lab", "doc_id").alias("component_id"))
+    )
+
+
+def _cc_loop(
+    vertices: DataFrame, und: DataFrame, vertex_col: str, max_iter: int
 ) -> DataFrame:
-    """Duplicate-cluster assignment: (doc_id, component_id) where
-    component_id = min doc_id reachable through candidate-pair edges.
-
-    Iterative min-label propagation with pointer jumping
-    (``cc_first_round`` / ``cc_jump_round``), so convergence is
-    O(log diameter) rounds — not O(diameter) as plain propagation would
-    be on chain graphs. Each round is two shuffles keyed on the vertex;
-    lineage is truncated per round with a local checkpoint so the plan
-    doesn't grow with iterations. The driver sees only a changed-row
-    count per round — no data collects.
-
-    Per-round job budget (round-15, guide §1/§2 — fixed job overhead
-    dominated the bench's closure queries): the identity seed is folded
-    into round 1 (no seed checkpoint job, no round-1 labels join), and
-    each round's convergence probe is a narrow ``_changed`` filter over
-    the round's OWN checkpointed output (the flag is computed inside
-    the round — see ``cc_jump_round``) instead of a shuffle join of the
-    new and old label snapshots. Per closure that removes one
-    full-lineage job plus one join job per round.
-    """
-    # materialize the edge list ONCE: without this every iteration
-    # re-executes the upstream pipeline that produced the edges (for
-    # LSH candidate pairs that is the whole tokenize->minhash->band
-    # join — measured 5x the loop's own cost at sf0.1)
+    """Distributed tier of ``connected_components``: min-label
+    propagation with pointer jumping over the pinned edge list, one
+    eager checkpoint per round."""
     from pyspark.sql import Observation
 
-    # LAZY pin: the persist rides round 1's checkpoint job (the first
-    # action that scans the edges) instead of paying a separate
-    # materialization pass; rounds 2+ read the persisted blocks
-    und = cc_edge_list(edges, edge_cols).localCheckpoint(eager=False)
     labels = None
     for rnd in range(max_iter):
         if rnd == 0:
@@ -603,6 +664,73 @@ def connected_components(
         if changed == 0:
             break
     return labels
+
+
+def connected_components(
+    vertices: DataFrame,
+    edges: DataFrame,
+    vertex_col: str = "doc_id",
+    edge_cols: tuple[str, str] = ("doc_a", "doc_b"),
+    max_iter: int = 25,
+) -> DataFrame:
+    """Duplicate-cluster assignment: (doc_id, component_id) where
+    component_id = min doc_id reachable through candidate-pair edges.
+    Every vertex row and every edge endpoint gets exactly one row.
+
+    Two tiers, chosen by the size of the edge list and agreeing row
+    for row:
+
+    - **Driver tier** (``_cc_driver``): when the undirected edge
+      list's payload is at most ``spark.sql.autoBroadcastJoinThreshold``
+      bytes (see ``_cc_payload_bytes``), it is collected once through
+      Arrow, closed with min-id union-find on the driver, and the
+      labels return as one local relation joined back to the vertices
+      in a single aggregate. Construction costs the edge
+      materialization plus one collect, whatever the graph's diameter.
+    - **Distributed tier** (``_cc_loop``): above the bound, iterative
+      min-label propagation with pointer jumping (``cc_first_round`` /
+      ``cc_jump_round``), so convergence is O(log diameter) rounds —
+      not O(diameter) as plain propagation would be on chain graphs.
+      Each round is two shuffles keyed on the vertex; lineage is
+      truncated per round with a local checkpoint so the plan doesn't
+      grow with iterations, and the driver sees only a changed-row
+      count per round. The identity seed is folded into round 1 and
+      each round's convergence probe is an observed ``_changed`` sum
+      riding the round's own checkpoint, so a round is one job.
+
+    The edge list is pinned once, ahead of either tier: without that
+    every round (or the collect) would re-execute the upstream
+    pipeline that produced the edges — for LSH candidate pairs the
+    whole tokenize->minhash->band join. The byte count is an observed
+    sum riding that materialization, so the bound is checked
+    executor-side before any edge row reaches the driver.
+
+    A threshold of -1 (broadcasting off) keeps the loop, and so does
+    ``pinning_disabled()``: plan tooling sees the same loop-truncated
+    plans as before, and its edge list is pinned lazily so the
+    materialization rides round 1's checkpoint job.
+
+    NULL ids never join anything, so they link no two vertices; a NULL
+    vertex takes the minimum label of its non-NULL neighbors, or NULL
+    (``_cc_union_find``)."""
+    from pyspark.sql import Observation
+
+    from .pinning import pinning_is_disabled
+
+    und = cc_edge_list(edges, edge_cols)
+    # the session's parsed byte value (the raw conf may read "10MB")
+    conf = und.sparkSession._jsparkSession.sessionState().conf()
+    limit = conf.autoBroadcastJoinThreshold()
+    if pinning_is_disabled() or limit < 0:
+        und = und.localCheckpoint(eager=False)
+        return _cc_loop(vertices, und, vertex_col, max_iter)
+    obs = Observation("cc_edge_bytes")
+    und = und.observe(
+        obs, F.sum(_cc_payload_bytes(und)).alias("b")
+    ).localCheckpoint(eager=True)
+    if int(obs.get["b"] or 0) > limit:
+        return _cc_loop(vertices, und, vertex_col, max_iter)
+    return _cc_driver(vertices, und, vertex_col)
 
 
 def dedup_corpus_edges(
@@ -810,9 +938,12 @@ def dedup_corpus(
 
     Scale notes (100 TB): exact edges are star-shaped (canonical -> each
     copy, no quadratic bucket expansion); near edges inherit the banded
-    LSH shuffle + ``max_bucket_size`` skew cap; the closure is
-    pointer-jumping min-label, O(log diameter) rounds. No stage sees
-    more than (id, id) edge rows after the LSH bucket join.
+    LSH shuffle + ``max_bucket_size`` skew cap; the closure
+    (``connected_components``) pins the edge list once and counts its
+    bytes on the executors: up to ``spark.sql.autoBroadcastJoinThreshold``
+    bytes it closes on the driver with union-find (one collect), above
+    that it runs pointer-jumping min-label rounds, O(log diameter). No
+    stage sees more than (id, id) edge rows after the LSH bucket join.
 
     ``vertices`` (round-15, guide §1.2 — don't recompute what a pinned
     frame already holds): an optional (id_col) frame whose id SET must

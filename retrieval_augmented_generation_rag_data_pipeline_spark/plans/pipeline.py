@@ -199,8 +199,10 @@ def prepare_corpus(
     reached dedup; ``split`` is non-NULL exactly for final keeps.
 
     Scale shape: stages 1-2 are narrow scan-side projections; dedup
-    inherits the banded-LSH shuffle + pointer-jumping closure; the
-    only added joins are on doc_id (a semi join into dedup and a left
+    inherits the banded-LSH shuffle and the two-tier closure (driver
+    union-find while the edge list is at most
+    ``spark.sql.autoBroadcastJoinThreshold`` bytes, pointer-jumping
+    rounds above it); the only added joins are on doc_id (a semi join into dedup and a left
     join back out), both AQE-managed.
     """
     from ..operators.dedup import dedup_corpus

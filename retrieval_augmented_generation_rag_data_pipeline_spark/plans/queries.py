@@ -5263,138 +5263,3 @@ def dsir_select(spark, sf):
     return sampling.dsir_select(
         _t(spark, sf, "documents"), _DSIR_K, seed=_DSIR_SEED
     )
-
-
-# =====================================================================
-# Registry ordering (driver correctness-window rotation)
-# =====================================================================
-# The driver records correctness rows for the first 50 registry entries
-# in insertion order. Standing rotation: each round, the queries that
-# fell past position 50 last round (all green in the previous
-# CORRECTNESS file) move to the front, plus any newly added queries, so
-# no query's driver evidence ages past one round. Round 4 rotates in
-# the 21 that sat at positions 51-71 during round 3 (green in
-# CORRECTNESS_r02.json) plus the 9 queries new this round.
-#
-# STALENESS POLICY (codified round 8, after the registry outgrew two
-# 50-entry windows): every registry entry's latest driver evidence must
-# be at most TWO rounds old. Each round's ordering therefore puts, in
-# order: (1) entries whose evidence is 2 rounds old (they'd breach the
-# cap if skipped), (2) entries with NO evidence yet (new queries), (3)
-# the previous round's NON-window entries oldest-evidence-first. New
-# queries per round must stay within the window slack after the stale
-# leaders (slack = 50 - len(stale)); the cycle is then exactly 2 rounds
-# + overflow and nothing ever ages past 2. Enforced by
-# tests/test_rotation_policy.py, which derives per-entry evidence from
-# the CORRECTNESS_r*.json files and fails if any >=2-round-stale or
-# evidence-less entry sits outside the first 50 positions.
-#
-# STANDING ROTATION (round 15): the THIRTY-FIVE entries whose latest
-# evidence is r12 (exactly at the cap — named by the round-14 verdict
-# and the previous rotation note) LEAD, in the note's order; then the
-# SIX queries new this round (five prescribed by the round-14
-# verdict: url_filter_psl — public-suffix-list registered domains,
-# item 2; lang_id_trained — the trained CCNet langid stage, item 3;
-# dsir_select — DSIR importance resampling, item 4;
-# dedup_image_phash — perceptual-hash image near-dup, item 5;
-# decontaminate_fuzzy — MinHash-LSH benchmark decontamination, item
-# 6; plus one beyond the prescription: token_count_subword — the
-# frozen-BPE tokenizer-calibrated counts of "missing" item 4), all
-# with no evidence yet; then SIX queries whose implementation was
-# touched this round, re-validating in-gate rather than riding r14
-# evidence (the PSL suffixes seam touches extract_host ->
-# url_filter + domain_caps; the strict-mode restructure touches
-# ledger.pending -> anti_join_ledger; the integral-desc widening
-# touches rank_small -> sample_exact_k; the minhash_band_keys
-# extraction touches lsh_candidate_pairs -> dedup_lsh_pairs +
-# dedup_eval — plan_guard shows all existing shapes byte-identical,
-# so these are belt-and-braces); then THREE r13-evidenced fill in
-# CORRECTNESS_r13.json order. The FORTY-THREE r13 entries left over
-# after this window:
-#   topn_per_group, join_asof, retrieval_eval, ann_ivf_topk,
-#   ann_pq_topk, ann_ivfpq_mem, dedup_embedding_cosine,
-#   dedup_minhash, dedup_clusters, dedup_simhash,
-#   dedup_ngram_jaccard, lang_id, quality_score, quality_filter,
-#   token_count, pack_assembly, doc_fingerprint, chunk_documents,
-#   tfidf_top_terms, mix_report, sample_group_k, sample_weighted_k,
-#   quality_classifier, select_budget_classifier, dedup_semantic,
-#   dedup_corpus, prepare_corpus, retrieval_eval_ivf,
-#   retrieval_eval_ivf_trained, pii_scrub, ngram_topk, corpus_stats,
-#   vocab_entropy, assign_split, mix_corpora, window_rank,
-#   window_lead_lag, window_first_last, agg_stats, agg_pivot,
-#   unpivot_melt, multimodal_features, artifact_probe
-# overflow the 50-entry window and MUST lead round 16's rotation —
-# leaving only SEVEN round-16 slots for new/touched/fill work (the
-# registry is 139; per the standing ~140-145 comfort zone, round 16
-# should prefer replacing low-information gates over net growth).
-_PRIORITY_QUERIES = [
-    # (1) evidence exactly 2 rounds old (r12) -- must refresh this round
-    "limit_pushdown",
-    "sessionize_islands",
-    "window_tumbling",
-    "window_sliding",
-    "window_session",
-    "agg_rollup",
-    "agg_cube",
-    "argmin_nearest",
-    "select_budget_grouped",
-    "dedup_exact",
-    "dedup_spans",
-    "dedup_spans_strip",
-    "dedup_spans_strip_raw",
-    "window_running",
-    "format_dialogue",
-    "str_funcs",
-    "date_funcs",
-    "math_funcs",
-    "array_funcs",
-    "json_funcs",
-    "map_funcs",
-    "knn_topk",
-    "ann_lsh_buckets",
-    "ann_lsh_topk",
-    "decontaminate",
-    "normalize_text",
-    "dedup_chunks",
-    "dedup_incremental",
-    "filter_suffix",
-    "union_globs",
-    "limit_n",
-    "distinct_keys",
-    "bloom_anti_join",
-    "join_positional",
-    "join_salted",
-    # (2) no evidence yet (new this round)
-    "url_filter_psl",
-    "lang_id_trained",
-    "dsir_select",
-    "dedup_image_phash",
-    "decontaminate_fuzzy",
-    "token_count_subword",
-    # (3) implementation touched this round -- deliberate re-validation
-    "url_filter",
-    "domain_caps",
-    "anti_join_ledger",
-    "sample_exact_k",
-    "dedup_lsh_pairs",
-    "dedup_eval",
-    # (4) r13-evidenced fill, CORRECTNESS_r13.json order; the leftover
-    #     43-name overflow cohort that MUST lead round 16 is the
-    #     STANDING ROTATION block above
-    "filter_year",
-    "project_arith",
-    "sort_desc",
-]
-
-
-def _reorder_registry(first: list[str]) -> None:
-    unknown = [n for n in first if n not in REGISTRY]
-    if unknown:
-        raise KeyError(f"priority queries missing from REGISTRY: {unknown}")
-    ordered = {n: REGISTRY[n] for n in first}
-    ordered.update({n: v for n, v in REGISTRY.items() if n not in ordered})
-    REGISTRY.clear()
-    REGISTRY.update(ordered)
-
-
-_reorder_registry(_PRIORITY_QUERIES)

@@ -274,6 +274,151 @@ def test_connected_components_property_matches_union_find(spark):
         assert got == expected, f"trial {trial}: {got} != {expected}"
 
 
+def _cc_tiers(spark, verts, edges, id_type="bigint", edge_type=None):
+    """Run connected_components on the driver tier (default threshold)
+    and on the distributed loop (autoBroadcastJoinThreshold=-1); return
+    both sorted row lists. Asserts each run took the intended tier: the
+    loop's result is a checkpoint that still carries its ``_changed``
+    flag, the driver tier's is an aggregate over the labels relation."""
+    from retrieval_augmented_generation_rag_data_pipeline_spark.operators.dedup import (
+        connected_components,
+    )
+
+    def run():
+        vdf = spark.createDataFrame(verts, f"doc_id {id_type}")
+        et = edge_type or id_type
+        edf = spark.createDataFrame(edges, f"doc_a {et}, doc_b {et}")
+        out = connected_components(vdf, edf)
+        loop = "_changed" in out._jdf.queryExecution().optimizedPlan().toString()
+        return loop, sorted(
+            (tuple(r) for r in out.collect()), key=lambda t: (t[0] is None, t)
+        )
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    driver_loop, driver = run()
+    spark.conf.set(key, "-1")
+    try:
+        loop_loop, loop = run()
+    finally:
+        spark.conf.set(key, prev)
+    assert not driver_loop and loop_loop
+    return driver, loop
+
+
+_CHAIN = [(i, i + 1) for i in range(39)]
+
+_CC_TIER_CASES = {
+    "empty_edges": ([(1,), (2,)], [], "bigint"),
+    "self_loops_and_duplicate_edges": (
+        [(1,), (2,), (3,), (4,)],
+        [(1, 1), (1, 2), (2, 1), (1, 2), (4, 4), (4, 4)],
+        "bigint",
+    ),
+    # 40 vertices: longer than the loop's 25-round cap in plain
+    # propagation, so pointer jumping has to do the work
+    "chain_40": ([(i,) for i in range(40)], _CHAIN[::-1], "bigint"),
+    "stars": (
+        [(i,) for i in range(30)],
+        [(5, i) for i in range(6, 15)] + [(i, 20) for i in range(21, 30)],
+        "bigint",
+    ),
+    "dangling_endpoints": ([(1,), (2,), (5,)], [(2, 9), (9, 5), (7, 8)], "bigint"),
+    "duplicate_vertex_rows": ([(1,), (1,), (2,), (3,), (3,)], [(1, 2)], "bigint"),
+    # '01' and '1' are distinct ids; '01' < '1' < '10' < '9' as strings
+    "string_ids": (
+        [("1",), ("01",), ("9",), ("10",), ("x",)],
+        [("1", "9"), ("9", "10"), ("01", "x")],
+        "string",
+    ),
+    # the loop compares ids in the vertex/edge union type (BIGINT under
+    # ANSI coercion): 9 < 10 although '10' < '9', and '01' and '1' are
+    # the same vertex 1
+    "string_edges_bigint_vertices": (
+        [(2,), (9,), (10,)],
+        [("10", "9"), ("01", "2"), ("1", "5")],
+        "bigint",
+        "string",
+    ),
+    # NULL never equals an id, so it links nothing; the NULL vertex
+    # absorbs the min label of its non-NULL neighbors on both tiers
+    "null_ids": (
+        [(1,), (None,), (4,), (None,)],
+        [(None, 3), (3, 2), (None, 7), (4, None), (None, None), (8, 9)],
+        "bigint",
+    ),
+}
+
+
+@pytest.mark.parametrize("case", list(_CC_TIER_CASES))
+def test_connected_components_tiers_agree(spark, case):
+    driver, loop = _cc_tiers(spark, *_CC_TIER_CASES[case])
+    assert driver == loop
+
+
+def test_connected_components_tier_cases_pin_expected_labels(spark):
+    # the agreement test above would pass if both tiers were wrong the
+    # same way; spot-check the cases whose answer is least obvious
+    driver, _ = _cc_tiers(spark, *_CC_TIER_CASES["string_ids"])
+    assert dict(driver) == {
+        "01": "01", "x": "01", "1": "1", "9": "1", "10": "1"
+    }
+    driver, _ = _cc_tiers(spark, *_CC_TIER_CASES["null_ids"])
+    assert dict(driver) == {
+        1: 1, 2: 2, 3: 2, 4: 4, 7: 7, 8: 8, 9: 8, None: 2
+    }
+
+
+def test_connected_components_tiers_agree_on_random_graphs(spark):
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    ids = st.integers(min_value=0, max_value=30)
+
+    @settings(max_examples=6, deadline=None)
+    @given(
+        verts=st.lists(ids, max_size=20),
+        edges=st.lists(st.tuples(ids, ids), max_size=25),
+    )
+    def check(verts, edges):
+        driver, loop = _cc_tiers(spark, [(v,) for v in verts], edges)
+        assert driver == loop
+
+    check()
+
+
+def test_connected_components_byte_bound_picks_the_tier(spark):
+    """The driver tier fires iff the undirected edge list's payload is
+    at most autoBroadcastJoinThreshold bytes: 2 edges -> 4 directed
+    rows x 2 BIGINT ids x 8 bytes = 64 bytes. Pins off keeps the loop."""
+    from retrieval_augmented_generation_rag_data_pipeline_spark.operators.dedup import (
+        connected_components,
+    )
+    from retrieval_augmented_generation_rag_data_pipeline_spark.operators.pinning import (
+        pinning_disabled,
+    )
+
+    vdf = spark.createDataFrame([(1,), (2,), (3,)], "doc_id bigint")
+    edf = spark.createDataFrame([(1, 2), (2, 3)], "doc_a bigint, doc_b bigint")
+
+    def is_loop():
+        out = connected_components(vdf, edf)
+        return "_changed" in out._jdf.queryExecution().optimizedPlan().toString()
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "64")
+        assert not is_loop()
+        spark.conf.set(key, "63")
+        assert is_loop()
+        spark.conf.set(key, prev)
+        with pinning_disabled():
+            assert is_loop()
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_dedup_corpus_collapses_exact_and_near_dups(spark):
     base = (
         "alpha beta gamma delta epsilon zeta eta theta iota kappa "

@@ -1,7 +1,8 @@
 """Round-15 optimization measurement harness (guide §1).
 
 Isolates each headline query: N timed runs of the bench action
-(`.count()`, matching bench.py's methodology) plus an optional noop-sink
+(`.count()`, matching bench.py's methodology, with the construction
+share — time and jobs before the action starts — split out) plus an optional noop-sink
 run (guide §1.4 — computes every column, so column-pruning effects are
 visible as the count-vs-noop gap), the Spark JOB COUNT the query
 submits (driver-side fixed overhead dominates small-SF readings, and
@@ -57,17 +58,28 @@ def main() -> None:
     for name in names:
         fn, _sql = REGISTRY[name]
         sc.setJobDescription(f"opt:{name}")
-        ts = []
-        jobs_before = sc._jsc.sc().dagScheduler().nextJobId()
+        ts, build_ts = [], []
+        build_jobs = 0
+        dag = sc._jsc.sc().dagScheduler()
+        jobs_before = dag.nextJobId()
         for _ in range(args.runs):
             t0 = time.time()
-            fn(spark, args.sf_dir).count()
+            j0 = dag.nextJobId()
+            df = fn(spark, args.sf_dir)
+            build_jobs += dag.nextJobId() - j0
+            build_ts.append(round(time.time() - t0, 3))
+            df.count()
             ts.append(round(time.time() - t0, 3))
-        jobs_after = sc._jsc.sc().dagScheduler().nextJobId()
+        jobs_after = dag.nextJobId()
         rec = {
             "count": ts,
             "med": round(statistics.median(ts), 3),
             "jobs_per_run": round((jobs_after - jobs_before) / args.runs, 1),
+            # construction-time share: jobs fired and seconds spent
+            # before the count() action starts (pins, closure rounds,
+            # bounded collects)
+            "build_med": round(statistics.median(build_ts), 3),
+            "build_jobs_per_run": round(build_jobs / args.runs, 1),
         }
         if args.noop:
             t0 = time.time()
