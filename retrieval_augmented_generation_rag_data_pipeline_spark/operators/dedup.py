@@ -130,8 +130,8 @@ def minhash_signatures(
 def band_key_sql(sig_sql: str, band: int) -> str:
     """SQL string for one band's LSH key over a staged signature column
     — the single definition shared by minhash_band_keys (exploded rows)
-    and text.decontaminate_fuzzy's collected-InSet fast path, so the
-    two can never band differently. A string (not a Column) so callers
+    and text.decontaminate_fuzzy's per-row key arrays, so the two can
+    never band differently. A string (not a Column) so callers
     composing whole projections pay one parse, not one py4j round trip
     per node (round 16)."""
     items = ", ".join(
@@ -139,11 +139,6 @@ def band_key_sql(sig_sql: str, band: int) -> str:
         for r in range(LSH_ROWS)
     )
     return f"concat_ws(':', {items})"
-
-
-def band_key_col(sig_col: str, band: int) -> Column:
-    """Column form of ``band_key_sql`` (same tree, for Column callers)."""
-    return F.expr(band_key_sql(f"`{sig_col}`", band))
 
 
 def minhash_band_keys(
@@ -546,20 +541,6 @@ def cc_jump_round(und: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
-def _cc_payload_bytes(und: DataFrame) -> Column:
-    """Per-row driver payload of the (_src, _dst) edge list in bytes:
-    a STRING/BINARY id counts its encoded length (NULL: 0), any other
-    id type a fixed 8 bytes."""
-    from pyspark.sql.types import BinaryType, StringType
-
-    return sum(
-        F.coalesce(F.octet_length(f.name), F.lit(0))
-        if isinstance(f.dataType, (StringType, BinaryType))
-        else F.lit(8)
-        for f in und.schema.fields
-    )
-
-
 def _cc_union_find(src: list, dst: list) -> tuple[list, list]:
     """Min-id union-find over the collected undirected edge list.
     Returns parallel (vertex, label) lists covering every edge
@@ -611,8 +592,9 @@ def _cc_driver(vertices: DataFrame, und: DataFrame, vertex_col: str) -> DataFram
     ``cc_first_round``): duplicate vertex rows collapse, dangling
     endpoints keep their row, and ``coalesce(label, doc_id)`` gives
     every vertex without an edge its own id."""
-    import pyarrow as pa
     from pyspark.sql.types import StructField, StructType
+
+    from .joins import local_relation
 
     vx = vertices.select(F.col(vertex_col).alias("doc_id"))
     # compare ids in the type the loop compares them in: its rounds
@@ -623,9 +605,10 @@ def _cc_driver(vertices: DataFrame, und: DataFrame, vertex_col: str) -> DataFram
     ids, labels = _cc_union_find(
         tbl.column(0).to_pylist(), tbl.column(1).to_pylist()
     )
-    lab = und.sparkSession.createDataFrame(
-        pa.table({"doc_id": ids, "_lab": labels}),
+    lab = local_relation(
+        und.sparkSession,
         StructType([StructField("doc_id", wide), StructField("_lab", wide)]),
+        [ids, labels],
     )
     return (
         vx.select("doc_id", F.lit(None).cast(wide).alias("_lab"))
@@ -682,7 +665,7 @@ def connected_components(
 
     - **Driver tier** (``_cc_driver``): when the undirected edge
       list's payload is at most ``spark.sql.autoBroadcastJoinThreshold``
-      bytes (see ``_cc_payload_bytes``), it is collected once through
+      bytes (see ``joins.payload_bytes``), it is collected once through
       Arrow, closed with min-id union-find on the driver, and the
       labels return as one local relation joined back to the vertices
       in a single aggregate. Construction costs the edge
@@ -702,8 +685,9 @@ def connected_components(
     every round (or the collect) would re-execute the upstream
     pipeline that produced the edges — for LSH candidate pairs the
     whole tokenize->minhash->band join. The byte count is an observed
-    sum riding that materialization, so the bound is checked
-    executor-side before any edge row reaches the driver.
+    sum riding that materialization (``joins.measured_pin``), so the
+    bound is checked executor-side before any edge row reaches the
+    driver.
 
     A threshold of -1 (broadcasting off) keeps the loop, and so does
     ``pinning_disabled()``: plan tooling sees the same loop-truncated
@@ -713,8 +697,7 @@ def connected_components(
     NULL ids never join anything, so they link no two vertices; a NULL
     vertex takes the minimum label of its non-NULL neighbors, or NULL
     (``_cc_union_find``)."""
-    from pyspark.sql import Observation
-
+    from .joins import measured_pin
     from .pinning import pinning_is_disabled
 
     und = cc_edge_list(edges, edge_cols)
@@ -724,11 +707,8 @@ def connected_components(
     if pinning_is_disabled() or limit < 0:
         und = und.localCheckpoint(eager=False)
         return _cc_loop(vertices, und, vertex_col, max_iter)
-    obs = Observation("cc_edge_bytes")
-    und = und.observe(
-        obs, F.sum(_cc_payload_bytes(und)).alias("b")
-    ).localCheckpoint(eager=True)
-    if int(obs.get["b"] or 0) > limit:
+    und, nbytes, _ = measured_pin(und)
+    if nbytes > limit:
         return _cc_loop(vertices, und, vertex_col, max_iter)
     return _cc_driver(vertices, und, vertex_col)
 

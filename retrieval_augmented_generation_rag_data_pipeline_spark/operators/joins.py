@@ -32,16 +32,152 @@ zero driver-side iteration.
 from __future__ import annotations
 
 from collections.abc import Sequence
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-# range_parted_offsets: max partition count for which the partition->
-# prefix-offset mapping is inlined as a literal create_map (O(n) per-row
-# GetMapValue scan + 2n-node Catalyst expression — fine at local-mode
-# partition counts, a blowup at cluster-scale ones). Above this, the
-# mapping is broadcast-joined instead (constant per-row probe).
-OFFSETS_MAP_MAX = 1024
+# The one bound for every small side of a join (see ``small_side``), in
+# bytes of rendered SQL literal: a side that renders within it rides
+# inline as one parsed ``IN`` list or ``map`` literal (a join-free plan,
+# an O(1) InSet probe per row); a larger one joins as a broadcast frame,
+# so the expression tree and the serialized plan stay bounded.
+INLINE_MAX_BYTES = 64 * 1024
+
+
+def payload_bytes(df: DataFrame) -> Column:
+    """Per-row payload of ``df`` in bytes: a STRING/BINARY value counts
+    its encoded length (NULL: 0), any other column a fixed 8 bytes."""
+    from pyspark.sql.types import BinaryType, StringType
+
+    return sum(
+        F.coalesce(F.octet_length(F.col(f"`{f.name}`")), F.lit(0))
+        if isinstance(f.dataType, (StringType, BinaryType))
+        else F.lit(8)
+        for f in df.schema.fields
+    )
+
+
+def measured_pin(df: DataFrame) -> tuple[DataFrame, int, int]:
+    """Eagerly pin ``df`` and return ``(pinned, payload bytes, rows)``.
+    Both counts are observed metrics riding the pin's own job, so they
+    are taken on the executors before any row reaches the driver."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    pinned = df.observe(
+        obs,
+        F.sum(payload_bytes(df)).alias("b"),
+        F.count(F.lit(1)).alias("n"),
+    ).localCheckpoint(eager=True)
+    m = obs.get
+    return pinned, int(m["b"] or 0), int(m["n"])
+
+
+def local_relation(
+    spark: SparkSession, schema: StructType, columns: list
+) -> DataFrame:
+    """One Arrow-built local relation from column-major driver values:
+    a single LocalRelation in the plan, not one py4j literal per cell."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    tbl = pa.table(list(columns), schema=to_arrow_schema(schema))
+    return spark.createDataFrame(tbl, schema)
+
+
+def _sql_literal(v, dtype) -> str:
+    """One escaped SQL literal of a STRING, BIGINT or INT value."""
+    name = dtype.simpleString()
+    if name == "string":
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if name == "bigint":
+        return f"{int(v)}L"
+    if name == "int":
+        return str(int(v))
+    raise TypeError(f"small_side: no SQL literal for {name} values")
+
+
+class SmallSide(NamedTuple):
+    """A small relation in one of two tiers, agreeing row for row:
+    ``literal`` (the rendered, comma-separated items) when inline, else
+    ``frame`` (distinct rows, joined as a broadcast). ``n`` is its row
+    count, or None when a DataFrame side was never run (pins off)."""
+
+    n: int | None
+    literal: str | None
+    frame: DataFrame | None
+
+    def in_sql(self, key_sql: str) -> str:
+        """``key IN (...)`` over a one-column inline side."""
+        return f"{key_sql} IN ({self.literal})"
+
+    def lookup_sql(self, key_sql: str) -> str:
+        """``element_at(map(...), key)`` over a two-column inline side."""
+        return f"element_at(map({self.literal}), {key_sql})"
+
+    def mark(self, df: DataFrame, key_sql: str, name: str) -> DataFrame:
+        """``df`` plus a boolean column ``name``: is ``key_sql`` in this
+        one-column side. Inline: one ``IN`` expression. Join tier: a
+        broadcast left join of the distinct side (a NULL key is False
+        here and NULL inline; both read as "not in")."""
+        if self.frame is None:
+            return df.withColumn(name, F.expr(self.in_sql(key_sql)))
+        tmp = f"_k{name}"
+        hits = self.frame.select(
+            F.col(self.frame.columns[0]).alias(tmp), F.lit(True).alias(name)
+        )
+        return (
+            df.join(F.broadcast(hits), F.expr(key_sql) == F.col(tmp), "left")
+            .withColumn(name, F.col(name).isNotNull())
+            .drop(tmp)
+        )
+
+
+def small_side(
+    spark: SparkSession, side, schema: str | None = None
+) -> SmallSide:
+    """The one "inline a small side as a literal, else broadcast it"
+    seam, deciding the tier by ``INLINE_MAX_BYTES``.
+
+    ``side`` is either driver-held rows (tuples, with a DDL ``schema``)
+    or a DataFrame. Driver-held rows are rendered and take the inline
+    tier if the literal fits, else become one ``local_relation``; no
+    Spark job runs either way. A DataFrame side is pinned by
+    ``measured_pin`` (one job): above the bound in payload bytes it
+    stays on the executors and the pinned frame is the join side;
+    otherwise it is collected and decided like driver-held rows. Under
+    ``pinning_disabled()`` a DataFrame side takes the join tier without
+    running anything, so plan tooling sees the lineage.
+
+    NULL values never equal a probe key, so they are dropped from the
+    literal; an empty side is inline with ``n == 0`` (callers handle it
+    before rendering ``IN ()``)."""
+    from .pinning import pinning_is_disabled
+
+    pinned = None
+    if isinstance(side, DataFrame):
+        if pinning_is_disabled():
+            return SmallSide(None, None, side.distinct())
+        pinned, nbytes, n = measured_pin(side)
+        if nbytes > INLINE_MAX_BYTES:
+            return SmallSide(n, None, pinned.distinct())
+        st = pinned.schema
+        rows = pinned.collect() if n else []
+    else:
+        st = StructType.fromDDL(schema)
+        rows = side
+    rows = sorted({tuple(r) for r in rows if r[0] is not None})
+    literal = ",".join(
+        _sql_literal(v, f.dataType) for r in rows for v, f in zip(r, st.fields)
+    )
+    if len(literal.encode()) <= INLINE_MAX_BYTES:
+        return SmallSide(len(rows), literal, None)
+    if pinned is not None:
+        return SmallSide(len(rows), None, pinned.distinct())
+    cols = [[r[i] for r in rows] for i in range(len(st.fields))]
+    return SmallSide(len(rows), None, local_relation(spark, st, cols))
 
 
 def asof_align(
@@ -401,13 +537,6 @@ def salted_join(
     return f.join(d, [key, "_salt"], how).drop("_salt")
 
 
-# Above this many hot-key hashes, hot_salted_count_join stops inlining
-# them as IN-list expression literals (py4j shipping cost + serialized
-# plan size on BOTH join sides) and broadcasts a tiny hot-hash frame
-# instead. InSet evaluation is O(1) either way; this bounds the PLAN.
-HOT_INSET_MAX = 1024
-
-
 def hot_salted_count_join(
     probe: DataFrame,
     build: DataFrame,
@@ -441,9 +570,9 @@ def hot_salted_count_join(
     ``count_col >= hot_threshold`` replicate.
 
     How the probe learns hotness (round 11; was a broadcast-left-join):
-    the hot keys are read once from the PINNED aggregate at
-    plan-construction time as ``xxhash64(key)`` longs — a driver read
-    bounded by ``max_hot_keys`` (the call raises past the cap with
+    the hot keys are measured once from the PINNED aggregate at
+    plan-construction time as ``xxhash64(key)`` longs, their count
+    capped by ``max_hot_keys`` (the call raises past the cap with
     guidance to raise ``hot_threshold``, instead of the round-10
     failure mode: an unbounded forced broadcast silently OOMing the
     driver). Both sides then test the SAME ``xxhash64(key) IN <set>``
@@ -477,24 +606,25 @@ def hot_salted_count_join(
     round-11 verdict item 5 folded the bounded hot-set read into the
     build materialization, so the aggregation lineage — often a full
     corpus pass — runs as ONE job whose checkpointed output serves the
-    hot read AND the executed join build; the lazy-pin + filter-collect
-    pair it replaced submitted the same stages twice). The pinned frame
-    is the per-key aggregate: key + counts, orders of magnitude narrower
-    than the probe it summarizes. Note the construction-time
-    materialization makes this operator EAGER (it runs the build's jobs
-    when called, not at the first downstream action) — bench.py times
-    construction+action together, so the cost stays measured. The
-    override / plan-inspection paths keep the lazy ``pin`` (no collect
-    happens there, so there is nothing to fold).
+    hot-set measure AND the executed join build; the lazy-pin +
+    filter-collect pair it replaced submitted the same stages twice).
+    The pinned frame is the per-key aggregate: key + counts, orders of
+    magnitude narrower than the probe it summarizes. Note the
+    construction-time materialization makes this operator EAGER (it
+    runs the build's jobs when called, not at the first downstream
+    action) — bench.py times construction+action together, so the cost
+    stays measured. The override / plan-inspection paths keep the lazy
+    ``pin`` (no hot-set read happens there, so there is nothing to
+    fold).
 
-    How the hot set rides back into the plan: up to ``HOT_INSET_MAX``
-    hashes it is an ``IN <literals>`` predicate (Catalyst compiles it
-    to an O(1) InSet) — the join-free common case. Past that, ~100k
-    64-bit literals would ship through py4j into BOTH sides'
-    expression trees (slow plan construction, a multi-MB serialized
-    plan — the literal-centroid ceiling class of cost), so the hot set
-    instead becomes a tiny one-column frame and hotness is a broadcast
-    LEFT join + null test on each side. Same results either way.
+    How the hot set rides back into the plan: through ``small_side``
+    (the package's one literal-or-broadcast seam). A hot set whose
+    literal fits ``INLINE_MAX_BYTES`` is an ``xxhash64(key) IN
+    (<literals>)`` predicate (Catalyst compiles it to an O(1) InSet) —
+    the join-free common case. A larger one becomes a broadcast LEFT
+    join of the pinned hot-hash frame + null test on each side; its
+    payload is measured on the executors first, so a hot set past the
+    bound never reaches the driver. Same results either way.
 
     ``hot_hashes_override`` injects a synthetic hot-hash set and skips
     the construction-time read entirely — the plan-inspection seam
@@ -505,9 +635,12 @@ def hot_salted_count_join(
     from .pinning import pin, pinning_is_disabled
 
     salt_cols = [salt_src] if isinstance(salt_src, str) else list(salt_src)
+    spark = probe.sparkSession
     if hot_hashes_override is not None:
         build = pin(build)
-        hot_rows = [{"_hx": int(v)} for v in hot_hashes_override]
+        hot = small_side(
+            spark, [(int(v),) for v in hot_hashes_override], "_hx bigint"
+        )
     elif pinning_is_disabled():
         # plan-inspection context (plan_guard / make_explain): the
         # construction-time hot-key read would execute the build's full
@@ -516,26 +649,22 @@ def hot_salted_count_join(
         # -> plain equi-join on a constant salt), which is also the
         # runtime plan for every gate-scale input.
         build = pin(build)
-        hot_rows: list = []
+        hot = SmallSide(0, "", None)
     else:
-        # Fold the build materialization and the hot-set read into ONE
-        # aggregation pass (round-11 verdict item 5): an EAGER local
-        # checkpoint runs every stage of the build's lineage in a single
-        # job and pins the result; the bounded hot read below then scans
-        # only the checkpointed per-key aggregate (trivial next to the
-        # aggregation). The previous lazy-pin + filter-collect pair paid
-        # two submissions for the same work — AQE submits the lazy
-        # checkpoint's shuffle stages at .localCheckpoint() call time,
-        # and the collect then ran the final stage under CollectLimit's
-        # incremental partition scans on top.
+        # Fold the build materialization into ONE aggregation pass
+        # (round-11 verdict item 5): an EAGER local checkpoint runs
+        # every stage of the build's lineage in a single job and pins
+        # the result; the hot-set measure and read below then scan only
+        # the checkpointed per-key aggregate (trivial next to the
+        # aggregation).
         build = build.localCheckpoint(eager=True)
-        hot_rows = (
-            build.filter(F.col(count_col) >= hot_threshold)
-            .select(F.xxhash64(F.col(key)).alias("_hx"))
-            .limit(max_hot_keys + 1)
-            .collect()
+        hot = small_side(
+            spark,
+            build.filter(F.col(count_col) >= hot_threshold).select(
+                F.xxhash64(F.col(key)).alias("_hx")
+            ),
         )
-    if len(hot_rows) > max_hot_keys:
+    if hot.n > max_hot_keys:
         raise ValueError(
             f"hot_salted_count_join: more than {max_hot_keys} keys have "
             f"{count_col} >= {hot_threshold}; the hot-key set must stay "
@@ -543,52 +672,24 @@ def hot_salted_count_join(
             f"carries >= {hot_threshold} probe rows, so fewer keys can "
             "be hot) or max_hot_keys if the driver has the memory."
         )
-    hot_vals = sorted({r["_hx"] for r in hot_rows})
-    if hot_vals:
-        probe_salt_for = lambda hot: (  # noqa: E731
-            F.when(
-                hot,
-                F.pmod(
-                    F.xxhash64(*[F.col(c) for c in salt_cols]),
-                    F.lit(n_salts),
-                ).cast("int"),
-            ).otherwise(F.lit(0))
+    if hot.n:
+        hot_key = f"xxhash64(`{key}`)"
+        salt = F.pmod(
+            F.xxhash64(*[F.col(c) for c in salt_cols]), F.lit(n_salts)
+        ).cast("int")
+        salted_probe = (
+            hot.mark(probe, hot_key, "_hot")
+            .withColumn("_salt", F.when(F.col("_hot"), salt).otherwise(0))
+            .drop("_hot")
         )
-        build_salts_for = lambda hot: F.when(  # noqa: E731
-            hot, F.sequence(F.lit(0), F.lit(n_salts - 1))
+        salts = F.when(
+            F.col("_hot"), F.sequence(F.lit(0), F.lit(n_salts - 1))
         ).otherwise(F.array(F.lit(0)))
-        if len(hot_vals) <= HOT_INSET_MAX:
-            def _is_hot(c):
-                return F.xxhash64(c).isin(hot_vals)
-
-            salted_probe = probe.withColumn(
-                "_salt", probe_salt_for(_is_hot(F.col(key)))
-            )
-            salted_build = build.withColumn(
-                "_salt", F.explode(build_salts_for(_is_hot(F.col(key))))
-            )
-        else:
-            # large hot set: a broadcast join against a tiny hot-hash
-            # frame instead of shipping every hash as an expression
-            # literal through py4j into both sides' plans
-            hot_df = probe.sparkSession.createDataFrame(
-                [(int(v),) for v in hot_vals], "_hx bigint"
-            )
-
-            def _mark(df, salt_expr_for):
-                marked = df.join(
-                    F.broadcast(hot_df),
-                    F.xxhash64(F.col(key)) == F.col("_hx"),
-                    "left",
-                )
-                return marked.withColumn(
-                    "_salt", salt_expr_for(F.col("_hx").isNotNull())
-                ).drop("_hx")
-
-            salted_probe = _mark(probe, probe_salt_for)
-            salted_build = _mark(
-                build, lambda hot: F.explode(build_salts_for(hot))
-            )
+        salted_build = (
+            hot.mark(build, hot_key, "_hot")
+            .withColumn("_salt", F.explode(salts))
+            .drop("_hot")
+        )
     else:
         salted_probe = probe.withColumn("_salt", F.lit(0))
         salted_build = build.withColumn(
@@ -642,12 +743,15 @@ def range_parted_offsets(
     sums. Consumers add a per-partition running value (window or
     row_number partitioned by ``_part``) on top.
 
-    The partition->offset mapping rides back into the plan one of two
-    ways, switched on ``OFFSETS_MAP_MAX``: at local-mode partition
-    counts it is a literal ``create_map`` (join-free plan); above the
-    threshold it is a broadcast join of the tiny (part, offset) frame —
-    ``parted`` then carries a ``_poff`` column and ``off`` references
-    it. Consumers must drop BOTH ``_part`` and ``_poff`` when done
+    The partition->offset mapping rides back into the plan through
+    ``small_side``: while its literal fits ``INLINE_MAX_BYTES`` (every
+    local-mode partition count) it is an ``element_at(map(...), _part)``
+    literal (join-free plan); above that — the 10^4-10^5 partitions a
+    100 TB corpus implies, where the map would be an O(n) per-row scan
+    and a 2n-node expression — it is a broadcast join of the tiny
+    (part, offset) relation; ``parted`` then carries a ``_poff`` column
+    and ``off`` references it. ``off`` is BIGINT on both tiers.
+    Consumers must drop BOTH ``_part`` and ``_poff`` when done
     (``drop`` ignores absent columns, so unconditionally dropping both
     is safe on either path).
 
@@ -732,30 +836,14 @@ def range_parted_offsets(
         acc += sums[p]
     if not offsets:
         return parted, F.lit(0)
-    if len(offsets) <= OFFSETS_MAP_MAX:
-        # small partition counts: a literal map keeps the plan join-free
-        # (the per-row GetMapValue scan over <= OFFSETS_MAP_MAX entries
-        # is cheaper than a join, and local-mode plan shapes stay pinned)
-        off = F.element_at(
-            F.create_map(
-                *[F.lit(v) for p in sorted(offsets) for v in (p, offsets[p])]
-            ),
-            F.col("_part"),
-        )
-        return parted, off
-    # Cluster-scale partition counts: element_at(create_map(2n literals))
-    # is an O(n) PER-ROW scan of the expression tree AND a Catalyst
-    # expression blowup (the tree itself has 2n nodes) — at the 10^4-10^5
-    # shuffle partitions a 100 TB corpus implies, both bite. Join the
-    # offsets back via a broadcast of the tiny (part, offset) frame
-    # instead: one BroadcastHashJoin, constant per-row probe, plan size
-    # independent of partition count.
-    offs_df = spark.createDataFrame(
-        [(int(p), int(offsets[p])) for p in sorted(offsets)],
-        "_part int, _poff long",
+    side = small_side(
+        spark,
+        [(int(p), int(o)) for p, o in sorted(offsets.items())],
+        "_part int, _poff bigint",
     )
-    parted = parted.join(F.broadcast(offs_df), "_part")
-    return parted, F.col("_poff")
+    if side.frame is None:
+        return parted, F.expr(side.lookup_sql("_part"))
+    return parted.join(F.broadcast(side.frame), "_part"), F.col("_poff")
 
 
 def range_parted_offsets_grouped(

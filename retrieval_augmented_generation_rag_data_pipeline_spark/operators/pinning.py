@@ -16,6 +16,13 @@ explain, recovering the full lineage. Note that `localCheckpoint(
 eager=False)` is NOT free at build time either — under AQE it submits
 the shuffle-stage jobs of the checkpointed plan when called — so
 disabling pins also keeps plan inspection from executing those stages.
+
+The switch also picks a tier at the one literal-or-broadcast seam,
+``joins.small_side``: with pins off, a DataFrame-backed small side
+(decontamination's benchmark sketch keys) is never measured or
+collected and takes the broadcast join tier, so the tooling sees that
+tier's full plan. Both tiers drop, mark and look up row for row, so
+this too never changes results (tests/test_small_side.py).
 """
 
 from __future__ import annotations
@@ -130,10 +137,10 @@ def pin_all(*dfs: DataFrame) -> list[DataFrame]:
 def pinning_is_disabled() -> bool:
     """True inside a ``pinning_disabled()`` block — i.e. a
     plan-inspection context. Operators whose CONSTRUCTION runs Spark
-    jobs (hot_salted_count_join's bounded hot-key read) consult this to
-    skip the data-dependent step and build their cold-path plan
-    instead, keeping the 'plan inspection must not execute stages'
-    guarantee above."""
+    jobs (``joins.small_side``'s measured pin, hot_salted_count_join's
+    hot-key read) consult this to skip the data-dependent step and
+    build a plan without it, keeping the 'plan inspection must not
+    execute stages' guarantee above."""
     return _DISABLED.get()
 
 

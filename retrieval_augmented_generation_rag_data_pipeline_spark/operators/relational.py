@@ -43,11 +43,6 @@ def filter_year(df: DataFrame, ts_col: str, year: int) -> DataFrame:
     return df.filter(F.year(F.col(ts_col)) == year)
 
 
-def project_mb(df: DataFrame, bytes_col: str, out: str = "size_mb") -> DataFrame:
-    """Bytes -> MB arithmetic projection (reference testing/check_bucket_files.py:105)."""
-    return df.withColumn(out, F.col(bytes_col) / (1024.0 * 1024.0))
-
-
 def project_derived(df: DataFrame, path_col: str, ts_col: str) -> DataFrame:
     """Derived columns: year / extension / stem (reference
     testing/check_bucket_files.py:53,130; src/embedding_engine.py:60)."""

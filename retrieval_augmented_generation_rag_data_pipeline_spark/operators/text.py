@@ -14,14 +14,18 @@ from pyspark.sql import functions as F
 
 from ..functions.binding import let
 from ..functions.hashing import (
+    LSH_BANDS,
     hash_array,
+    hash_array_sql,
     md5_long,
     minhash_signature,
     tokens,
     tokens_sql,
     word_shingles,
+    word_shingles_sql,
 )
 from ..session import ensure_parallelism
+from .joins import small_side
 
 # Tiny function-word profiles for the n-gram/stopword language heuristic.
 # Deterministic and engine-portable (plain array intersection counts).
@@ -368,17 +372,6 @@ def normalize_text(
     return df.select(F.col(id_col).alias("doc_id"), clean.alias("norm_text"))
 
 
-# Collected-InSet ceiling for the decontaminate fast paths (round 16,
-# guide §2.4/§3.1 — same curated-scale convention as web.SUFFIX_INSET_MAX
-# and joins.HOT_INSET_MAX): a benchmark is test-set-sized, so its
-# distinct gram hashes / band keys are collected to the driver once and
-# probed as an InSet literal on the single corpus scan — zero joins,
-# zero doc-side shuffles past the parallelism seam. Past the ceiling
-# (a benchmark so large its sketch set exceeds bounded-collect scale)
-# the operators fall back to the broadcast semi/anti-join shape.
-BENCH_INSET_MAX = 4096
-
-
 def _drop_marked_rows(staged: DataFrame, drop: Column, payload_col: str) -> DataFrame:
     """Keep rows where ``drop`` is falsy via the explode-marker shape.
 
@@ -392,6 +385,51 @@ def _drop_marked_rows(staged: DataFrame, drop: Column, payload_col: str) -> Data
     return staged.select(
         F.explode(F.when(~drop, F.array(F.col(payload_col)))).alias("_r")
     ).select("_r.*")
+
+
+def _explode_keys() -> Column:
+    """One row per distinct ``_k`` key. The explode's input must be an
+    expression, not the bare ``_k`` column: from an attribute input
+    Spark infers a ``size(_k) > 0`` filter, and pushing it down inlines
+    the whole sketch chain into the scan-side filter (below the
+    ensure_parallelism repartition, evaluated twice)."""
+    return F.explode(F.array_distinct("_k")).alias("_k")
+
+
+def _drop_contaminated(
+    docs: DataFrame, staged: DataFrame, bench_keys: DataFrame
+) -> DataFrame:
+    """The decontaminate tiers: drop each ``staged`` row — ``_p`` (the
+    doc row as a struct) plus ``_k`` (its array of sketch keys) — with
+    ANY key among ``bench_keys``' one ``_k`` column.
+
+    The benchmark keys go through ``joins.small_side``, and the drop is
+    per ROW on both of its tiers, so they agree row for row: a
+    duplicated doc id never takes its clean twin with it, and a
+    contaminated row with a NULL id never survives.
+
+    - Inline: ``exists(_k, k -> k IN (...))`` on the one corpus scan —
+      no semi join, no anti join, no doc-side shuffle.
+    - Join tier (a benchmark past the bound, or plan inspection): the
+      staged keys explode into one broadcast semi join against the
+      distinct benchmark keys, and the hit rows leave by a null-safe
+      anti join on the whole-row struct ``_p``. Rows with equal ``_p``
+      have equal text, hence equal verdicts, so keying on ``_p`` is
+      exact. At 100 TB the benchmark side is test-set-sized and
+      broadcasts; nothing ever materializes a pair list."""
+    side = small_side(docs.sparkSession, bench_keys)
+    if side.n == 0:
+        return docs
+    if side.frame is None:
+        hit = F.expr(f"coalesce(exists(_k, k -> {side.in_sql('k')}), false)")
+        return _drop_marked_rows(staged, hit, "_p")
+    hits = staged.select("_p", _explode_keys()).join(
+        F.broadcast(side.frame), "_k", "left_semi"
+    )
+    d, h = staged.select("_p").alias("_d"), hits.alias("_h")
+    return d.join(
+        h, F.col("_d._p").eqNullSafe(F.col("_h._p")), "left_anti"
+    ).select("_p.*")
 
 
 def decontaminate(
@@ -409,91 +447,28 @@ def decontaminate(
 
     Returns ``docs`` rows whose text contains no benchmark n-gram.
 
-    Fast path (round 16, guide §2.4 "remove shuffles outright"): the
-    benchmark's distinct gram hashes are test-set-sized, so they are
-    collected once (bounded by BENCH_INSET_MAX) and each doc row is
-    tested inline with exists(grams, h -> h IN set) — an InSet probe
-    on the one corpus scan; no semi join, no contaminated-id distinct,
-    no anti join. Per-row semantics — identical to the join shape when
-    ``id_col`` is unique (the house invariant; a duplicated contaminated
-    id would anti-join away its clean twin rows, which no caller wants).
-
-    Fallback (benchmark sketch set above the ceiling, or inside a
-    pinning_disabled plan-inspection block where construction must not
-    run jobs): both corpora explode to distinct n-gram HASHES (narrow,
-    scan-side, the same staged tokenize→shingle→md5 pipeline as the
-    dedup sketches); contaminated ids = one semi join on the hash;
-    the result = one anti join on the id. At 100 TB the benchmark side
-    is test-set-sized — the optimizer broadcasts it and the doc corpus
-    never shuffles; nothing ever materializes a pair list.
+    Both corpora run the same staged tokenize→shingle→md5 pipeline as
+    the dedup sketches. The benchmark's distinct gram hashes are the
+    small side of ``_drop_contaminated``: test-set-sized, they ride
+    inline as one ``IN`` literal probed on the single corpus scan (the
+    round-16 fast path, guide §2.4), and a benchmark past
+    ``joins.INLINE_MAX_BYTES`` — MMLU's 14k test items, say — takes
+    the broadcast join tier without its hashes reaching the driver.
+    Either way a document is dropped per row, never by id (``id_col``
+    is accepted for call compatibility only).
     """
-    from .pinning import pinning_is_disabled
-
-    if not pinning_is_disabled():
-        # one shuffle-free job: per-row distinct gram arrays, deduped on
-        # the driver (a distinct().limit().collect() pipeline costs a
-        # repartition + distinct exchange + AQE rounds — measured 1.2 s
-        # of the old 1.4 s total at sf0.1 for a 20-row benchmark)
-        gram_rows = benchmark.select(
-            F.array_distinct(
-                hash_array(word_shingles(tokens(F.col(bench_text_col)), n))
-            ).alias("_g")
-        ).limit(BENCH_INSET_MAX + 1)
-        collected = gram_rows.collect()
-        hashes_set: set[int] = set()
-        for r in collected:
-            hashes_set.update(r["_g"] or ())
-        if (
-            len(collected) <= BENCH_INSET_MAX
-            and len(hashes_set) <= BENCH_INSET_MAX
-        ):
-            if not hashes_set:
-                return docs
-            hashes = sorted(hashes_set)
-            staged = ensure_parallelism(docs).select(
-                F.struct(*[F.col(c) for c in docs.columns]).alias("_p"),
-                hash_array(word_shingles(tokens(F.col(text_col)), n)).alias(
-                    "_g"
-                ),
-            )
-            # emitted as ONE SQL string: Column.isin() costs one py4j
-            # literal conversion per element (~0.6 s for 1k hashes,
-            # dominating the query's own runtime at bench scale — the
-            # minhash_signature lesson); the parsed IN list optimizes
-            # to the same InSet
-            in_list = ",".join(f"{h}L" for h in hashes)
-            hit = F.expr(
-                f"coalesce(exists(_g, h -> h in ({in_list})), false)"
-            )
-            return _drop_marked_rows(staged, hit, "_p")
-    bench_grams = (
-        ensure_parallelism(benchmark)
-        .select(
-            F.explode(
-                F.array_distinct(
-                    hash_array(word_shingles(tokens(F.col(bench_text_col)), n))
-                )
-            ).alias("_h")
-        )
-        .distinct()
+    staged = ensure_parallelism(docs).select(
+        F.struct(*[F.col(c) for c in docs.columns]).alias("_p"),
+        hash_array(word_shingles(tokens(F.col(text_col)), n)).alias("_k"),
     )
-    # key=id_col: the contaminated-id distinct below clusters by _did
-    # (the alias carries the partitioning), so the keyed repartition
-    # is the doc side's only exchange (§2.4)
-    doc_grams = ensure_parallelism(docs, key=id_col).select(
-        F.col(id_col).alias("_did"),
+    bench_keys = benchmark.select(
         F.explode(
             F.array_distinct(
-                hash_array(word_shingles(tokens(F.col(text_col)), n))
+                hash_array(word_shingles(tokens(F.col(bench_text_col)), n))
             )
-        ).alias("_h"),
+        ).alias("_k")
     )
-    contaminated = (
-        doc_grams.join(bench_grams, "_h", "left_semi").select("_did").distinct()
-    )
-    return docs.join(
-        contaminated, docs[id_col] == contaminated["_did"], "left_anti"
-    )
+    return _drop_contaminated(docs, staged, bench_keys)
 
 
 def decontaminate_fuzzy(
@@ -529,99 +504,48 @@ def decontaminate_fuzzy(
     tool below the shingle width.
 
     Both corpora run the SHARED tokenize -> shingle -> MinHash -> band
-    chain (dedup.minhash_band_keys / band_key_col — the
-    lsh_candidate_pairs machinery, so fuzzy-decon and dedup can never
-    band differently).
+    chain (the hashing *_sql forms and dedup.band_key_sql — the pieces
+    of minhash_band_keys and lsh_candidate_pairs, so fuzzy-decon and
+    dedup can never band differently).
 
-    Fast path (round 16, guide §2.4): the benchmark's distinct
-    (band, key) rows are test-set-sized, so they are collected once
-    (bounded by BENCH_INSET_MAX) and each doc row is tested inline —
-    per-band InSet probes over the staged signature on the one corpus
-    scan; no semi join, no contaminated-id distinct, no anti join.
-    Per-row semantics — identical to the join shape when ``id_col``
-    is unique (the house invariant).
+    Each row's keys are its LSH_BANDS band keys prefixed with the band
+    number (``band:key``), so one key set covers every band. The
+    benchmark's distinct keys are the small side of
+    ``_drop_contaminated``: inline as one ``IN`` literal on the single
+    corpus scan while they fit ``joins.INLINE_MAX_BYTES``, else the
+    broadcast join tier. Either way a document is dropped per row,
+    never by id (``id_col`` is accepted for call compatibility only)."""
+    from .dedup import band_key_sql
 
-    Fallback (oversized benchmark sketch set, or a pinning_disabled
-    plan-inspection block): contaminated ids = ONE semi join of doc
-    band keys against the DISTINCT benchmark band keys (bipartite — no
-    bucket pair expansion at all); result = one anti join on the id.
-    At 100 TB the benchmark side is test-set-sized, broadcasts, and
-    the doc corpus never shuffles."""
-    from .dedup import _shingle_hashes, band_key_col, minhash_band_keys
-    from .pinning import pinning_is_disabled
+    keys = ", ".join(
+        f"concat_ws(':', {b}, {band_key_sql('_sig', b)})"
+        for b in range(LSH_BANDS)
+    )
 
-    if not pinning_is_disabled():
-        # one shuffle-free job: per-row band-key arrays via the SAME
-        # signature/band expressions, deduped on the driver (the
-        # distinct().limit().collect() pipeline costs a repartition +
-        # distinct exchange + AQE rounds — the decontaminate lesson)
-        from ..functions.hashing import LSH_BANDS
-
-        bench_sigs = benchmark.select(
-            hash_array(
-                word_shingles(tokens(F.col(bench_text_col)), k)
-            ).alias("_h")
-        ).select(
-            (F.size("_h") > 0).alias("_ok"),
-            minhash_signature("_h").alias("_sig"),
-        )
-        key_arr = F.array(*[band_key_col("_sig", b) for b in range(LSH_BANDS)])
-        collected = (
-            bench_sigs.select(F.when(F.col("_ok"), key_arr).alias("_k"))
-            .limit(BENCH_INSET_MAX + 1)
-            .collect()
-        )
-        band_sets: dict[int, set[str]] = {}
-        for r in collected:
-            if r["_k"] is not None:
-                for b, key in enumerate(r["_k"]):
-                    band_sets.setdefault(b, set()).add(key)
-        n_keys = sum(len(s) for s in band_sets.values())
-        if len(collected) <= BENCH_INSET_MAX and n_keys <= BENCH_INSET_MAX:
-            if not band_sets:
-                return docs
-            by_band = {b: sorted(s) for b, s in band_sets.items()}
-            # the same staged-projection discipline as minhash_band_keys:
-            # one (payload, _h) projection, one (_ok, _sig) projection,
-            # band keys as cheap array indexing over the staged _sig
-            payload = F.struct(*[F.col(c) for c in docs.columns])
-            sigs = _shingle_hashes(
-                docs.select(payload.alias("_p"), F.col(text_col)),
-                id_col="_p",
-                text_col=text_col,
-                k=k,
-            ).select(
-                F.col("doc_id").alias("_p"),
+    def sketch(df: DataFrame, payload: Column, text: str) -> DataFrame:
+        # the minhash_band_keys staging: one (payload, _h) projection,
+        # one (_ok, _sig) projection, band keys as cheap array indexing
+        # over the staged _sig; shingle-less rows get no keys
+        h = hash_array_sql(word_shingles_sql(tokens_sql(f"`{text}`"), k))
+        return (
+            df.select(payload.alias("_p"), F.expr(h).alias("_h"))
+            .select(
+                "_p",
                 (F.size("_h") > 0).alias("_ok"),
                 minhash_signature("_h").alias("_sig"),
             )
-            hit = None
-            for b in sorted(by_band):
-                probe = band_key_col("_sig", b).isin(by_band[b])
-                hit = probe if hit is None else (hit | probe)
-            return _drop_marked_rows(sigs, F.col("_ok") & hit, "_p")
-    # the benchmark needs only a per-row grouping key for its own
-    # signatures; a content hash is deterministic under stage retry
-    # (the house rand()/monotonic-id rule) and identical bench rows
-    # collapsing is harmless — their band keys are identical anyway
-    bench = benchmark.select(
-        F.md5(F.col(bench_text_col)).alias(id_col),
-        F.col(bench_text_col).alias("_btext"),
+            .selectExpr("_p", f"CASE WHEN _ok THEN array({keys}) END AS _k")
+        )
+
+    staged = sketch(
+        ensure_parallelism(docs),
+        F.struct(*[F.col(c) for c in docs.columns]),
+        text_col,
     )
-    bench_bands = (
-        minhash_band_keys(bench, id_col=id_col, text_col="_btext", k=k)
-        .select("band", "key")
-        .distinct()
+    bench_keys = sketch(benchmark, F.lit(0), bench_text_col).select(
+        _explode_keys()
     )
-    doc_bands = minhash_band_keys(docs, id_col, text_col, k)
-    contaminated = (
-        doc_bands.join(F.broadcast(bench_bands), ["band", "key"], "left_semi")
-        .select(F.col("doc_id").alias("_did"))
-        .distinct()
-    )
-    return docs.join(
-        contaminated, docs[id_col] == contaminated["_did"], "left_anti"
-    )
+    return _drop_contaminated(docs, staged, bench_keys)
 
 
 def quality_filter(

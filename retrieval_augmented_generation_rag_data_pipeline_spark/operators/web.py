@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_long
+from .joins import small_side
 
 # RE2-portable (no backreferences / lookaround, runs identically under
 # Java regex and DuckDB's RE2): scheme, optional userinfo, then the
@@ -34,13 +35,6 @@ HOST_RE = r"^[A-Za-z][A-Za-z0-9+.-]*://(?:[^/?#@]*@)?(\[[^/?#\]]*\]|[^/?#:]+)"
 # ``suffixes=frozen_suffixes()`` for co.uk-style ccTLD suffixes.
 DOMAIN_RE = r"([^.]+\.[^.]+)$"
 
-# extract_host PSL mode: suffix lists at or below this size ride as
-# per-depth literal InSet predicates (join-free, O(1) probe/row);
-# larger lists (the full published PSL) fall back to broadcast joins
-# so the plan's expression tree stays bounded. Same pattern as
-# joins.OFFSETS_MAP_MAX.
-SUFFIX_INSET_MAX = 4096
-
 _SUFFIX_CACHE: dict[str, dict] = {}
 
 
@@ -51,8 +45,9 @@ def frozen_suffixes(path: str | None = None) -> list[str]:
     freeze/apply seam as the frozen LM/classifier artifacts: the table
     is metadata-sized public data, committed so both engines replay
     identical literals; production swaps in the full published list
-    without touching the operator (the lookup is a broadcast join,
-    agnostic to list size). Loaded once per process (tiny, cached)."""
+    without touching the operator (the lookup goes through
+    ``joins.small_side``, agnostic to list size). Loaded once per
+    process (tiny, cached)."""
     from .text import _load_frozen
 
     return _load_frozen(path, "public_suffixes.json", _SUFFIX_CACHE)[
@@ -85,17 +80,20 @@ def extract_host(
     ``suffixes`` (e.g. ``frozen_suffixes()``) switches the registered-
     domain rule from the two-label default to a public-suffix-list
     longest-suffix match: the host's trailing 2..4 labels are tested
-    against the listed suffixes via one broadcast left join per suffix
-    depth (an equi join each — never an OR-predicate nested loop), the
-    LONGEST listed suffix wins, and the registered domain is that
-    suffix plus one preceding label. Without this, ``www.bbc.co.uk``
+    against the listed suffixes with one membership test per suffix
+    depth through ``joins.small_side`` (an ``IN`` literal up to
+    ``joins.INLINE_MAX_BYTES``, a broadcast left equi join past it —
+    never an OR-predicate nested loop; both tiers give the same rows,
+    and the quotes and backslashes in a suffix are escaped in the
+    literal), the LONGEST listed suffix wins, and the registered
+    domain is that suffix plus one preceding label. Without this, ``www.bbc.co.uk``
     maps to domain ``co.uk`` — so a blocklist entry ``bbc.co.uk``
     never matches via the domain anti-join and every ``.co.uk`` site
     pools into one domain-cap key (over-capping plus a hot window
     partition on a UK-heavy crawl). A host that IS a bare listed
     suffix degrades to itself. Scale shape: the suffix table is
-    metadata-sized (full PSL ~ 10^4 rows — kilobytes), every join
-    broadcasts, and the corpus side stays shuffle-free."""
+    metadata-sized (full PSL ~ 10^4 rows — kilobytes), so either tier
+    leaves the corpus side shuffle-free."""
     host = F.regexp_replace(
         F.lower(F.regexp_extract(F.col(url_col), HOST_RE, 1)),
         r"\.+$",
@@ -116,54 +114,31 @@ def extract_host(
                 "default rule)"
             )
         by_depth.setdefault(k, set()).add(s.lower())
-    spark = df.sparkSession
-    if len(suffixes) <= SUFFIX_INSET_MAX:
-        # curated-subset scale: per-depth literal InSet membership —
-        # join-free plan, O(1) hash probe per row, no broadcast-build
-        # jobs (three of them under the join form — measured ~0.6s of
-        # the query at bench scale). Same switch rationale as
-        # range_parted_offsets' OFFSETS_MAP_MAX: above the threshold
-        # (the full 10^4-row published PSL) the literal expression tree
-        # itself becomes the cost and the broadcast joins win. The IN
-        # list is ONE SQL string: Column.isin costs a py4j round trip
-        # per literal — 267 suffixes measured 0.5 s of construction
-        # chatter per URL query (round 16, the decontaminate lesson).
-        for k in sorted(by_depth):
-            in_list = ",".join(
-                "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-                for s in sorted(by_depth[k])
-            )
-            out = out.withColumn(
+    # one small side per suffix depth through joins.small_side: an
+    # ``_last{k} IN (...)`` literal (join-free, O(1) probe per row, no
+    # broadcast-build jobs) up to joins.INLINE_MAX_BYTES, a broadcast
+    # left join past it (the full 10^4-row published PSL)
+    for k in sorted(by_depth):
+        out = small_side(
+            df.sparkSession, [(s,) for s in by_depth[k]], "_sfx string"
+        ).mark(
+            out.withColumn(
                 f"_last{k}",
                 F.regexp_extract(F.col(host_col), _last_labels_re(k), 1),
-            ).withColumn(f"_m{k}", F.expr(f"_last{k} IN ({in_list})"))
-        match = {k: F.col(f"_m{k}") for k in by_depth}
-        drop = [c for k in by_depth for c in (f"_last{k}", f"_m{k}")]
-    else:
-        # one broadcast left join per suffix depth, deepest flags win below
-        for k in sorted(by_depth):
-            sfx = spark.createDataFrame(
-                [(s,) for s in sorted(by_depth[k])], f"_sfx{k} string"
-            )
-            out = out.withColumn(
-                f"_last{k}", F.regexp_extract(F.col(host_col), _last_labels_re(k), 1)
-            ).join(
-                F.broadcast(sfx.withColumn(f"_m{k}", F.lit(1))),
-                F.col(f"_last{k}") == F.col(f"_sfx{k}"),
-                "left",
-            )
-        match = {k: F.col(f"_m{k}").isNotNull() for k in by_depth}
-        drop = [c for k in by_depth for c in (f"_last{k}", f"_sfx{k}", f"_m{k}")]
+            ),
+            f"_last{k}",
+            f"_m{k}",
+        )
     dom = default_dom
     for k in sorted(by_depth):  # ascending: deeper match overrides
         reg = F.regexp_extract(F.col(host_col), _last_labels_re(k + 1), 1)
         dom = F.when(
-            match[k],
+            F.col(f"_m{k}"),
             # host shorter than suffix+1 labels -> the host itself
             F.when(reg != "", reg).otherwise(F.col(host_col)),
         ).otherwise(dom)
     out = out.withColumn(domain_col, dom)
-    return out.drop(*drop)
+    return out.drop(*[c for k in by_depth for c in (f"_last{k}", f"_m{k}")])
 
 
 def url_filter(

@@ -33,7 +33,7 @@ def mock_embed(col: Column, dim: int = EMBED_DIM) -> Column:
     """Deterministic hash-based embedding (U4-mock, FIXTURES.md §2):
     component i = md5_long(text || ':' || i) scaled to [-1, 1), then
     L2-normalized — keeps the embed->index->search path value-checkable
-    without a model. Swap with ml.embedding.encode_udf for real vectors."""
+    without a model. Swap with ml.udfs.make_embed_udf for real vectors."""
     comps = [
         (
             (md5_long(F.concat(col, F.lit(f":{i}"))) % 2000000) / 1000000.0 - 1.0

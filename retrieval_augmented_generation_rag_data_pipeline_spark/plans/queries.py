@@ -2439,10 +2439,11 @@ def decontaminate_fuzzy(spark, sf):
     item 6): docs whose LSH band signature collides with any benchmark
     doc are dropped — catches paraphrased contamination that exact
     8-gram overlap provably misses. Shared banding chain with
-    lsh_candidate_pairs (dedup.minhash_band_keys); ONE bipartite semi
-    join on (band, key) against the broadcast test-set-sized benchmark
-    bands, then one anti join — the corpus never pair-expands
-    (operators/text.py decontaminate_fuzzy)."""
+    lsh_candidate_pairs; each doc row's band keys are probed against
+    the test-set-sized benchmark keys through joins.small_side (one IN
+    literal at this size, else a broadcast semi join plus an anti join
+    on the whole row), dropping per row — the corpus never
+    pair-expands (operators/text.py decontaminate_fuzzy)."""
     docs = _t(spark, sf, "documents")
     bench = docs.filter(F.col("doc_id") < 20).select("text")
     return text.decontaminate_fuzzy(docs, bench).select("doc_id", "n_chars")
@@ -4956,8 +4957,9 @@ WHERE host NOT IN ({blocked}) AND domain NOT IN ({blocked})
 def url_filter_psl(spark, sf):
     """RefinedWeb URL filtering with public-suffix-list registered
     domains (round-14 verdict item 2): the committed PSL subset
-    (artifacts/public_suffixes.json) rides one broadcast equi left
-    join per suffix depth, the longest listed suffix wins, and the
+    (artifacts/public_suffixes.json) is tested once per suffix depth
+    through joins.small_side (an IN literal at this size, a broadcast
+    equi left join past the bound), the longest listed suffix wins, and the
     registered domain is suffix + one label — so a blocklist entry
     ``example.co.uk`` blocks every subdomain instead of silently
     matching nothing, while the corpus side stays shuffle-free

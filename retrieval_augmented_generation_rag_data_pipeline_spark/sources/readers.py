@@ -103,11 +103,6 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 def scan_catalog(
     spark: SparkSession,
     path: str,

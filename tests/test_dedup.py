@@ -1091,18 +1091,29 @@ def test_sql_twins_match_column_forms(spark):
     from retrieval_augmented_generation_rag_data_pipeline_spark.functions.hashing import (
         hash_array,
         hash_array_sql,
+        hash_pair_array,
+        hash_pair_array_sql,
+        md5_long,
+        md5_long_sql,
+        md5_pair,
+        md5_pair_sql,
         tokens,
         tokens_sql,
         word_shingles,
         word_shingles_sql,
     )
-    from retrieval_augmented_generation_rag_data_pipeline_spark.operators.dedup import (
-        band_key_col,
-        band_key_sql,
+    from retrieval_augmented_generation_rag_data_pipeline_spark.operators.vectors import (
+        dot,
+        dot_sql,
+        l2_norm,
+        l2_norm_sql,
     )
     from pyspark.sql import functions as F
 
-    df = spark.createDataFrame([(1, "a b c d e")], "doc_id long, text string")
+    df = spark.createDataFrame(
+        [(1, "a b c d e", [1.0, 2.0], [0.5, -1.0])],
+        "doc_id long, text string, u array<double>, v array<double>",
+    )
 
     def same(c_form, sql_form):
         # optimized (not analyzed) plans: the Column shingle builder
@@ -1121,9 +1132,11 @@ def test_sql_twins_match_column_forms(spark):
         hash_array(word_shingles(tokens(F.col("text")), 3)),
         hash_array_sql(word_shingles_sql(tokens_sql("`text`"), 3)),
     )
-    sig = df.selectExpr("array(1L, 2L, 3L, 4L) AS _sig")
-    a = sig.select(band_key_col("_sig", 0).alias("x"))
-    b = sig.selectExpr(f"{band_key_sql('_sig', 0)} AS x")
-    assert a._jdf.queryExecution().optimizedPlan().sameResult(
-        b._jdf.queryExecution().optimizedPlan()
+    assert same(md5_long(F.col("text")), md5_long_sql("`text`"))
+    assert same(md5_pair(F.col("text")), md5_pair_sql("`text`"))
+    assert same(
+        hash_pair_array(tokens(F.col("text"))),
+        hash_pair_array_sql(tokens_sql("`text`")),
     )
+    assert same(dot(F.col("u"), F.col("v")), dot_sql("`u`", "`v`"))
+    assert same(l2_norm(F.col("u")), l2_norm_sql("`u`"))

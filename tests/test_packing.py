@@ -211,10 +211,11 @@ def test_pack_pieces_guard_raises_on_mismatched_seq_len(spark):
 
 
 def test_pack_offsets_broadcast_path_matches_literal_map(spark, monkeypatch):
-    """Above OFFSETS_MAP_MAX partitions, range_parted_offsets swaps the
-    literal create_map offset lookup for a broadcast join (the literal
-    is an O(n)-per-row scan + Catalyst expression blowup at
-    cluster-scale partition counts). Force the join path and check it
+    """When the partition->offset map renders past the one small-side
+    bound (joins.INLINE_MAX_BYTES), range_parted_offsets swaps the
+    literal map offset lookup for a broadcast join (the literal is an
+    O(n)-per-row scan + Catalyst expression blowup at cluster-scale
+    partition counts). Force the join path and check it
     is coordinate-identical, plan-clean, and leaves no helper column.
     """
     from retrieval_augmented_generation_rag_data_pipeline_spark.operators import joins
@@ -228,7 +229,7 @@ def test_pack_offsets_broadcast_path_matches_literal_map(spark, monkeypatch):
     )
     # fixture-scoped patch (not a bare global mutation): restored by
     # pytest even on assertion failure, and safe under threaded runs
-    monkeypatch.setattr(joins, "OFFSETS_MAP_MAX", 0)
+    monkeypatch.setattr(joins, "INLINE_MAX_BYTES", 0)
     packed = pack_sequences(df, seq_len=64, num_parts=8)
     assert sorted(map(key, packed.collect())) == lit
     assert "_poff" not in packed.columns and "_part" not in packed.columns

@@ -282,10 +282,11 @@ def test_hot_salted_count_join_builds_no_jobs_under_pinning_disabled(spark):
 
 
 def test_hot_salted_count_join_large_hot_set_broadcasts(spark, monkeypatch):
-    """Round-12 advisory: past HOT_INSET_MAX hot hashes the hot set
-    must ride into the plan as a broadcast join against a tiny frame,
-    not as IN-list expression literals on both sides — and results
-    must stay exactly the plain inner join's either way."""
+    """Round-12 advisory: once its literal renders past the one
+    small-side bound (joins.INLINE_MAX_BYTES) the hot set must ride
+    into the plan as a broadcast join against a tiny frame, not as
+    IN-list expression literals on both sides — and results must stay
+    exactly the plain inner join's either way."""
     from retrieval_augmented_generation_rag_data_pipeline_spark.operators import joins as J
 
     rows = (
@@ -300,7 +301,7 @@ def test_hot_salted_count_join_large_hot_set_broadcasts(spark, monkeypatch):
     want = sorted(
         map(tuple, probe.join(build, "k").select("id", "k", "n", "lead_id").collect())
     )
-    monkeypatch.setattr(J, "HOT_INSET_MAX", 0)  # force the bcast path
+    monkeypatch.setattr(J, "INLINE_MAX_BYTES", 0)  # force the bcast path
     got = J.hot_salted_count_join(
         probe, build, key="k", count_col="n", salt_src="id",
         hot_threshold=50, n_salts=4,

@@ -199,9 +199,11 @@ def pseudo_queries() -> dict:
         return _hot_salted(spark, sf, [1, 2, 3])
 
     def hot_salted_bcast(spark, sf):
-        # past HOT_INSET_MAX -> broadcast hot-hash frame marks each side
+        # a hot set whose literal exceeds joins.INLINE_MAX_BYTES (every
+        # value renders to >= 2 bytes, "0L") -> broadcast hot-hash
+        # frame marks each side
         return _hot_salted(
-            spark, sf, list(range(joins.HOT_INSET_MAX + 1))
+            spark, sf, list(range(joins.INLINE_MAX_BYTES))
         )
 
     return {
