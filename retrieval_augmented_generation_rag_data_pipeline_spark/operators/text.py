@@ -435,7 +435,6 @@ def _drop_contaminated(
 def decontaminate(
     docs: DataFrame,
     benchmark: DataFrame,
-    id_col: str = "doc_id",
     text_col: str = "text",
     bench_text_col: str = "text",
     n: int = 8,
@@ -454,8 +453,7 @@ def decontaminate(
     round-16 fast path, guide §2.4), and a benchmark past
     ``joins.INLINE_MAX_BYTES`` — MMLU's 14k test items, say — takes
     the broadcast join tier without its hashes reaching the driver.
-    Either way a document is dropped per row, never by id (``id_col``
-    is accepted for call compatibility only).
+    Either way a document is dropped per row, never by id.
     """
     staged = ensure_parallelism(docs).select(
         F.struct(*[F.col(c) for c in docs.columns]).alias("_p"),
@@ -474,7 +472,6 @@ def decontaminate(
 def decontaminate_fuzzy(
     docs: DataFrame,
     benchmark: DataFrame,
-    id_col: str = "doc_id",
     text_col: str = "text",
     bench_text_col: str = "text",
     k: int = 3,
@@ -514,7 +511,7 @@ def decontaminate_fuzzy(
     ``_drop_contaminated``: inline as one ``IN`` literal on the single
     corpus scan while they fit ``joins.INLINE_MAX_BYTES``, else the
     broadcast join tier. Either way a document is dropped per row,
-    never by id (``id_col`` is accepted for call compatibility only)."""
+    never by id."""
     from .dedup import band_key_sql
 
     keys = ", ".join(

@@ -213,9 +213,9 @@ def test_pack_pieces_guard_raises_on_mismatched_seq_len(spark):
 def test_pack_offsets_broadcast_path_matches_literal_map(spark, monkeypatch):
     """When the partition->offset map renders past the one small-side
     bound (joins.INLINE_MAX_BYTES), range_parted_offsets swaps the
-    literal map offset lookup for a broadcast join (the literal is an
-    O(n)-per-row scan + Catalyst expression blowup at cluster-scale
-    partition counts). Force the join path and check it
+    literal array offset lookup for a broadcast join (the literal's
+    expression and serialized plan would grow with the partition
+    count). Force the join path and check it
     is coordinate-identical, plan-clean, and leaves no helper column.
     """
     from retrieval_augmented_generation_rag_data_pipeline_spark.operators import joins

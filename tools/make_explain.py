@@ -326,9 +326,10 @@ PICKS = {
     ),
     "decontaminate_fuzzy": (
         "fuzzy decontamination: the shared minhash band chain feeds "
-        "ONE bipartite broadcast semi join on (band, key) against the "
-        "test-set-sized benchmark bands — no pair expansion, no "
-        "self-join; the corpus touches one anti join on the id"
+        "ONE broadcast semi join on band:key strings against the "
+        "test-set-sized benchmark keys — no pair expansion, no "
+        "self-join; hit rows leave by a null-safe anti join on the "
+        "whole row, so a duplicated or NULL id never decides the drop"
     ),
     "token_count_subword": (
         "frozen-BPE counts: greedy segmentation is ONE fold expression "
