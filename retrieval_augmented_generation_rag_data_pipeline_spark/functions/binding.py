@@ -23,6 +23,10 @@ null behavior the unbound expression had). Nest ``let`` for derived
 values (tokens -> trigrams). Emit ALL downstream outputs as fields of
 one struct inside the innermost body so a pushed filter inlines exactly
 one evaluation.
+
+``let_sql`` is the same shape as SQL text, for chains whose bodies
+apply the ``*_sql`` primitives to the bound variable (a Column lambda
+variable cannot be spliced into SQL text).
 """
 
 from __future__ import annotations
@@ -41,3 +45,10 @@ def let(value: Column, body: Callable[[Column], Column]) -> Column:
     inlines the whole expression into a Filter or another Project.
     """
     return F.element_at(F.transform(F.array(value), body), 1)
+
+
+def let_sql(value: str, name: str, body: str) -> str:
+    """SQL text of ``let``: bind the SQL expression ``value`` to the
+    lambda variable ``name`` and evaluate ``body`` (SQL text that
+    refers to ``name``) on it, once per row."""
+    return f"element_at(transform(array({value}), {name} -> {body}), 1)"

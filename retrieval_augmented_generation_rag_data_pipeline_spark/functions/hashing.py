@@ -4,6 +4,14 @@ Every primitive here has an exactly-matching DuckDB SQL fragment in
 ``functions.oracle`` so the dedup / fingerprint / LSH operators stay on the
 DuckDB-oracle-checkable path (SURVEY.md §5.1).
 
+Each primitive has ONE form: a ``*_sql`` builder returning Spark SQL
+text, which callers splice into ``F.expr``/``selectExpr`` (one parse,
+where a Column tree costs one py4j round trip per node). Caller SQL is
+only ever spliced into a builder's higher-order-function ARRAY
+arguments, never into its lambda bodies, so a builder's lambda names
+cannot capture the caller's. ``minhash_signature`` and ``simhash16``
+also take a column NAME and return the parsed Column.
+
 The base hash is the first 15 hex chars of md5 parsed as a 60-bit
 non-negative int — md5 is bit-identical across engines, and 15 hex chars
 (60 bits) fit a signed 64-bit long with headroom for modular arithmetic.
@@ -17,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .binding import let_sql
+
 MERSENNE31 = 2147483647  # 2^31 - 1
 
 # Fixed permutation parameters for MinHash (NUM_PERM odd-prime multipliers).
@@ -29,70 +39,30 @@ LSH_ROWS = NUM_PERM // LSH_BANDS
 SIMHASH_BITS = 16
 
 
-def md5_long(col: Column) -> Column:
-    """60-bit deterministic hash of a string (first 15 hex chars of md5)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def tokens(col: Column) -> Column:
-    """Lowercased whitespace tokens, empty strings dropped.
+def tokens_sql(col_sql: str) -> str:
+    """Lowercased whitespace tokens of a string, empty strings dropped.
 
     The filter (not trim) handles EVERY whitespace edge: Spark's trim
     strips only ASCII spaces, so "hello\\n" used to yield a trailing
     empty token and "\\n\\t" a whole phantom token — inflating token
     counts and polluting shingles for newline-terminated documents.
-    Mirrored exactly by functions.oracle.tokens (DuckDB list_filter).
-    """
-    return F.filter(F.split(F.lower(col), r"\s+"), lambda t: t != "")
-
-
-def word_shingles(toks: Column, k: int = 3) -> Column:
-    """k-word shingles (1-based element_at, matching DuckDB list indexing).
-
-    The input array is let-bound internally (functions.binding.let): the
-    shingle body references it k+2 times, and those references live
-    inside a `transform` lambda, which is evaluated interpreted — no
-    codegen subexpression elimination — so an inline argument like
-    `tokens(text)` used to be RE-EVALUATED per shingle element per
-    reference. Measured on sf0.1 documents at 32 partitions: 1.47s
-    inline vs 0.34s bound for the bare pipeline (~4.5x); the whole
-    dedup sketch family sits on this helper. Passing an already-bound
-    lambda variable just adds a no-op 1-element array wrap.
-    """
-    from .binding import let
-
-    def body(t: Column) -> Column:
-        n = F.size(t)
-        idx = F.sequence(F.lit(1), n - (k - 1))
-        shingle = lambda i: F.concat_ws(  # noqa: E731
-            " ", *[F.element_at(t, i + j) for j in range(k)]
-        )
-        return F.when(n >= k, F.transform(idx, shingle)).otherwise(
-            F.array().cast("array<string>")
-        )
-
-    return let(toks, body)
-
-
-def hash_array(arr: Column) -> Column:
-    """Apply md5_long to every element of a string array."""
-    return F.transform(arr, md5_long)
-
-
-def tokens_sql(col_sql: str) -> str:
-    """SQL-string twin of ``tokens`` — SAME expression tree, ONE parse.
-
-    The Column builders cost one py4j round trip per node (~0.3 ms
-    each); the dedup-family sketches build hundreds of nodes per
-    construction, which the bench pays per run (round 16; the
-    minhash_signature lesson generalized). Keep the two forms in
-    LOCKSTEP — tests/test_dedup.py::test_sql_twins_match_column_forms
-    asserts tree equality."""
+    Mirrored exactly by functions.oracle.tokens (DuckDB list_filter)."""
     return f"filter(split(lower({col_sql}), '\\\\s+'), x -> x != '')"
 
 
 def word_shingles_sql(toks_sql: str, k: int = 3) -> str:
-    """SQL-string twin of ``word_shingles`` (same let-bound tree)."""
+    """k-word shingles of a token array (1-based element_at, matching
+    DuckDB list indexing).
+
+    The input array is let-bound (functions.binding.let_sql): the shingle
+    body references it k+2 times, and those references live inside a
+    `transform` lambda, which is evaluated interpreted — no codegen
+    subexpression elimination — so an inline argument like
+    `tokens_sql(text)` used to be RE-EVALUATED per shingle element per
+    reference. Measured on sf0.1 documents at 32 partitions: 1.47s
+    inline vs 0.34s bound for the bare pipeline (~4.5x); the whole
+    dedup sketch family sits on this helper. Passing an already-bound
+    lambda variable just adds a no-op 1-element array wrap."""
     els = ", ".join(
         f"element_at(t, i + {j})" if j else "element_at(t, i)"
         for j in range(k)
@@ -102,57 +72,41 @@ def word_shingles_sql(toks_sql: str, k: int = 3) -> str:
         f"transform(sequence(1, size(t) - {k - 1}), i -> concat_ws(' ', {els}))"
         " ELSE CAST(array() AS array<string>) END"
     )
-    return f"element_at(transform(array({toks_sql}), t -> {body}), 1)"
+    return let_sql(toks_sql, "t", body)
 
 
 def md5_long_sql(col_sql: str) -> str:
-    """SQL-string twin of ``md5_long``."""
+    """60-bit deterministic hash of a string (first 15 hex chars of md5)."""
     return f"CAST(conv(substring(md5({col_sql}), 1, 15), 16, 10) AS BIGINT)"
 
 
 def hash_array_sql(arr_sql: str) -> str:
-    """SQL-string twin of ``hash_array``."""
+    """``md5_long_sql`` of every element of a string array."""
     return f"transform({arr_sql}, h -> {md5_long_sql('h')})"
 
 
-def md5_pair(col: Column) -> Column:
+def md5_pair_sql(col_sql: str) -> str:
     """120-bit deterministic hash of a string: struct<h1,h2> of two
     60-bit longs from md5 hex chars 1-15 and 16-30. For keys that must
     stay collision-free at extreme cardinality — at 2.5e13 spans
     (~100 TB of text) the birthday bound is n^2/2^121 ~ 2e-10, where
-    the single 60-bit ``md5_long`` is past its birthday point by seven
-    orders of magnitude (n^2/2^61 >> 1: guaranteed collisions). Two
-    longs (16 bytes) shuffle leaner than the 32-char hex string; the
+    the single 60-bit ``md5_long_sql`` is past its birthday point by
+    seven orders of magnitude (n^2/2^61 >> 1: guaranteed collisions).
+    Two longs (16 bytes) shuffle leaner than the 32-char hex string; the
     md5 is let-bound so both halves evaluate it once per element.
     Oracle mirror: ``functions.oracle.md5_span_key`` (substr(md5,1,30)
     — the same 120 bits, so both engines group identically)."""
-    from .binding import let
-
-    return let(
-        F.md5(col),
-        lambda m: F.struct(
-            F.conv(F.substring(m, 1, 15), 16, 10).cast("long").alias("h1"),
-            F.conv(F.substring(m, 16, 15), 16, 10).cast("long").alias("h2"),
-        ),
-    )
-
-
-def hash_pair_array(arr: Column) -> Column:
-    """Apply md5_pair to every element of a string array."""
-    return F.transform(arr, md5_pair)
-
-
-def md5_pair_sql(col_sql: str) -> str:
-    """SQL-string twin of ``md5_pair`` (same let-bound tree)."""
-    return (
-        f"element_at(transform(array(md5({col_sql})), m -> named_struct("
+    return let_sql(
+        f"md5({col_sql})",
+        "m",
+        "named_struct("
         "'h1', CAST(conv(substring(m, 1, 15), 16, 10) AS BIGINT), "
-        "'h2', CAST(conv(substring(m, 16, 15), 16, 10) AS BIGINT))), 1)"
+        "'h2', CAST(conv(substring(m, 16, 15), 16, 10) AS BIGINT))",
     )
 
 
 def hash_pair_array_sql(arr_sql: str) -> str:
-    """SQL-string twin of ``hash_pair_array``."""
+    """``md5_pair_sql`` of every element of a string array."""
     return f"transform({arr_sql}, x -> {md5_pair_sql('x')})"
 
 
@@ -182,8 +136,8 @@ def minhash_signature(hashes_col: str) -> Column:
 
 
 def simhash16_sql(hashes_sql: str) -> str:
-    """SQL-string twin of ``simhash16`` (same tree, one parse — the
-    Column loop was ~2300 py4j round trips per construction).
+    """16-bit SimHash of a 60-bit hash array (one parse — a Column loop
+    was ~2300 py4j round trips per construction).
 
     bit b is set iff sum over tokens of (2*((h>>b)&1) - 1) > 0.
     """
@@ -197,9 +151,8 @@ def simhash16_sql(hashes_sql: str) -> str:
 
 
 def simhash16(hashes: str) -> Column:
-    """Column form of ``simhash16_sql`` over a column referenced by
-    NAME (the minhash_signature convention — the SQL twin splices the
-    reference into one parsed string)."""
+    """``simhash16_sql`` over a column referenced by NAME, parsed (the
+    minhash_signature convention)."""
     return F.expr(simhash16_sql(f"`{hashes}`"))
 
 

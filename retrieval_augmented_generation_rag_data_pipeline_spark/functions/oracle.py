@@ -11,7 +11,7 @@ from .hashing import LSH_BANDS, LSH_ROWS, MERSENNE31, MINHASH_A, MINHASH_B, SIMH
 
 
 def md5_long(x: str) -> str:
-    """60-bit int from first 15 hex chars of md5 — mirrors hashing.md5_long."""
+    """60-bit int from first 15 hex chars of md5 — mirrors hashing.md5_long_sql."""
     return (
         "list_reduce(list_transform(string_split(substr(md5(" + x + "),1,15),''),"
         " c -> CAST(instr('0123456789abcdef', c)-1 AS BIGINT)), (a,b) -> a*16+b)"
@@ -19,7 +19,7 @@ def md5_long(x: str) -> str:
 
 
 def tokens(x: str) -> str:
-    # empty tokens dropped — the exact mirror of functions.hashing.tokens.
+    # empty tokens dropped — the exact mirror of functions.hashing.tokens_sql.
     # The whitespace class is spelled EXPLICITLY as Java's \s
     # ([ \t\n\x0B\f\r]): RE2's \s excludes vertical tab \x0B, so the
     # previous '\s+' spelling silently tokenized '\x0B'-bearing docs
@@ -46,7 +46,7 @@ def hash_array(arr: str) -> str:
 
 def md5_span_key(x: str) -> str:
     """120-bit span key: first 30 hex chars of md5 — the exact same
-    bits ``hashing.md5_pair`` packs into its two 60-bit longs, so both
+    bits ``hashing.md5_pair_sql`` packs into its two 60-bit longs, so both
     engines partition spans into identical hash groups."""
     return f"substr(md5({x}),1,30)"
 

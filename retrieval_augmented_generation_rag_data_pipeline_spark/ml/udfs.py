@@ -8,7 +8,7 @@ iterator-of-batches pandas UDF, which initializes once per python
 worker and streams Arrow batches through it.
 
 Heavy deps are import-gated: `*_available()` probes let callers pick
-the deterministic fakes (plans.pipeline.mock_embed, fake_transcribe)
+the deterministic fakes (plans.pipeline.mock_embed_sql, fake_transcribe)
 when torch/transformers are absent — which is always the case in this
 container, so these UDFs are exercised via the fakes in tests.
 """
@@ -65,10 +65,6 @@ def _try_import(mod: str):
 
 def asr_available() -> bool:
     return _try_import("transformers") is not None and _try_import("torch") is not None
-
-
-def embedder_available() -> bool:
-    return _try_import("sentence_transformers") is not None
 
 
 # Reference generation parameters, verbatim (src/transcription.py:158-166).
@@ -174,63 +170,8 @@ def make_asr_udf(
     return asr
 
 
-def make_embed_udf(model_name: str = "all-MiniLM-L6-v2", batch_size: int = 64):
-    """U4: STRING -> ARRAY<FLOAT> L2-normalized
-    (reference src/embedding_engine.py:15-22)."""
-
-    @F.pandas_udf(T.ArrayType(T.FloatType()))
-    def encode(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        if not embedder_available():
-            raise NotImplementedError(
-                "sentence-transformers not installed — use plans.pipeline.mock_embed"
-            )
-        from sentence_transformers import SentenceTransformer
-
-        model = _cached_model(
-            ("st", model_name), lambda: SentenceTransformer(model_name)
-        )
-        for series in batches:
-            # NULL text -> '' : model.encode(None) crashes, and the
-            # empty string embeds deterministically like the fake
-            texts = ["" if t is None else t for t in series.tolist()]
-            vecs = model.encode(
-                texts, batch_size=batch_size, normalize_embeddings=True
-            )
-            yield pd.Series([v.tolist() for v in vecs])
-
-    return encode
-
-
 def diarizer_available() -> bool:
     return _try_import("pyannote") is not None
-
-
-def make_decode_udf(sample_rate: int = 16000):
-    """U2: binary media -> ARRAY<FLOAT> mono PCM, L2-normalized
-    (reference src/transcription.py:176-188: ffmpeg_read + torch
-    normalize). Gated on torch/ffmpeg presence."""
-
-    @F.pandas_udf(T.ArrayType(T.FloatType()))
-    def decode(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        if not asr_available():
-            raise NotImplementedError(
-                "torch/transformers not installed — use fake_decode for tests"
-            )
-        import numpy as np
-        from transformers.pipelines.audio_utils import ffmpeg_read
-
-        for series in batches:
-            out = []
-            for blob in series:
-                if blob is None:
-                    out.append(None)  # NULL-in -> NULL-out, like the fake
-                    continue
-                pcm = ffmpeg_read(bytes(blob), sample_rate).astype("float32")
-                norm = float(np.linalg.norm(pcm)) or 1.0
-                out.append((pcm / norm).tolist())
-            yield pd.Series(out)
-
-    return decode
 
 
 def make_diarize_udf(

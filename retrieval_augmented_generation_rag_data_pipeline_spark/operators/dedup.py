@@ -25,24 +25,21 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.binding import let_sql
 from ..functions.hashing import (
     LSH_BANDS,
     LSH_ROWS,
     NUM_PERM,
-    hash_array,
     hash_array_sql,
-    hash_pair_array,
     hash_pair_array_sql,
-    md5_long,
+    md5_long_sql,
     minhash_signature,
     minhash_signature_sql,
     simhash16,
-    tokens,
     tokens_sql,
-    word_shingles,
     word_shingles_sql,
 )
 from ..session import ensure_parallelism
@@ -103,10 +100,9 @@ def _shingle_hashes(
     16x up front). Staging it here means one evaluation per row, and the
     downstream permutations are cheap modular math over a column ref.
 
-    Emitted as ONE SQL string (round 16): the Column form of this chain
-    is ~200 py4j round trips, paid per construction by every sketch
-    query; the *_sql twins build the identical tree in one parse
-    (tree-equality pinned in tests/test_dedup.py).
+    Emitted as ONE SQL string (round 16): built as Column trees this
+    chain was ~200 py4j round trips, paid per construction by every
+    sketch query; the hashing ``*_sql`` builders parse it once.
     """
     df = ensure_parallelism(df)
     return df.selectExpr(
@@ -269,9 +265,10 @@ def ngram_jaccard_pairs(
     stop-shingle control — essential at scale, off by default so the
     oracle stays simple).
     """
-    shingled = ensure_parallelism(df).select(
-        F.col(id_col).alias("doc_id"),
-        F.array_distinct(word_shingles(tokens(F.col(text_col)), k)).alias("_sh"),
+    shingled = ensure_parallelism(df).selectExpr(
+        f"`{id_col}` AS doc_id",
+        f"array_distinct({word_shingles_sql(tokens_sql(f'`{text_col}`'), k)})"
+        " AS _sh",
     )
     # The inverted index is pinned (lazy localCheckpoint): it feeds BOTH
     # sides of the pair self-join (plus the optional hot-shingle cap),
@@ -286,7 +283,7 @@ def ngram_jaccard_pairs(
 
     inv = pin(
         shingled.select("doc_id", F.explode("_sh").alias("shingle"))
-        .select("doc_id", md5_long(F.col("shingle")).alias("_h"))
+        .selectExpr("doc_id", f"{md5_long_sql('shingle')} AS _h")
     )
     if df_cap is not None:
         hot = inv.groupBy("_h").count().filter(F.col("count") > df_cap).select("_h")
@@ -385,11 +382,10 @@ def verify_pairs_jaccard(
     from .pinning import pin
 
     sh = pin(
-        ensure_parallelism(docs).select(
-            F.col(id_col).alias("doc_id"),
-            F.array_distinct(
-                word_shingles(tokens(F.col(text_col)), k)
-            ).alias("s"),
+        ensure_parallelism(docs).selectExpr(
+            f"`{id_col}` AS doc_id",
+            f"array_distinct({word_shingles_sql(tokens_sql(f'`{text_col}`'), k)})"
+            " AS s",
         )
     )
     # contract guard (see docstring): assert_true is NULL when passing,
@@ -1016,34 +1012,29 @@ def embedding_near_dup_pairs(
     ``exact=True`` keeps the all-pairs self-join — the verification /
     small-n mode (and the only mode that guarantees recall 1.0).
     """
-    from .vectors import dot, l2_norm, lsh_band_keys
+    from .vectors import dot_sql, l2_norm_sql, lsh_band_keys
 
-    # Norms depend on ONE side each: computing cosine() per candidate
-    # pair re-derives both norms inside the pair loop — 3 interpreted
-    # array folds per pair instead of 1 (the same factoring knn_topk,
-    # ann_lsh_topk and semantic_dedup already use). Same expressions on
-    # the same arrays, so the factored score is bit-identical; try_divide
-    # keeps the zero-vector -> NULL contract of cosine().
+    # Norms depend on ONE side each: an inline per-pair cosine (dot_sql
+    # over both l2_norm_sql folds) re-derives both norms inside the pair
+    # loop — 3 interpreted array folds per pair instead of 1 (the same
+    # factoring knn_topk, ann_lsh_topk and semantic_dedup already use).
+    # Same expressions on the same arrays, so the factored score is
+    # bit-identical; try_divide keeps a zero vector's cosine NULL (the
+    # oracle's nullif(norm * norm, 0)).
+    norm = l2_norm_sql(f"`{vec_col}`")
     if exact:
-        a = emb.select(
-            F.col(id_col).alias("vec_a"),
-            F.col(vec_col).alias("_va"),
-            l2_norm(F.col(vec_col)).alias("_na"),
+        a = emb.selectExpr(
+            f"`{id_col}` AS vec_a", f"`{vec_col}` AS _va", f"{norm} AS _na"
         )
-        b = emb.select(
-            F.col(id_col).alias("vec_b"),
-            F.col(vec_col).alias("_vb"),
-            l2_norm(F.col(vec_col)).alias("_nb"),
+        b = emb.selectExpr(
+            f"`{id_col}` AS vec_b", f"`{vec_col}` AS _vb", f"{norm} AS _nb"
         )
         return (
             a.join(b, F.col("vec_a") < F.col("vec_b"))
-            .select(
+            .selectExpr(
                 "vec_a",
                 "vec_b",
-                F.try_divide(
-                    dot(F.col("_va"), F.col("_vb")),
-                    F.col("_na") * F.col("_nb"),
-                ).alias("cos_sim"),
+                f"try_divide({dot_sql('_va', '_vb')}, _na * _nb) AS cos_sim",
             )
             .filter(F.col("cos_sim") >= threshold)
         )
@@ -1060,10 +1051,8 @@ def embedding_near_dup_pairs(
     # _n computed BEFORE the explode: Generate copies the projected
     # columns per emitted key, so the norm fold runs once per vector,
     # not once per (vector, table)
-    keyed = ensure_parallelism(emb).select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
-        l2_norm(F.col(vec_col)).alias("_n"),
+    keyed = ensure_parallelism(emb).selectExpr(
+        f"`{id_col}` AS _id", f"`{vec_col}` AS _v", f"{norm} AS _n"
     ).withColumn(
         "_bk", F.explode(lsh_band_keys("_v", dim, n_tables, n_planes))
     )
@@ -1099,13 +1088,10 @@ def embedding_near_dup_pairs(
     scored = a.join(
         b,
         (F.col("a._bk") == F.col("b._bk")) & (F.col("a._id") < F.col("b._id")),
-    ).select(
-        F.col("a._id").alias("vec_a"),
-        F.col("b._id").alias("vec_b"),
-        F.try_divide(
-            dot(F.col("a._v"), F.col("b._v")),
-            F.col("a._n") * F.col("b._n"),
-        ).alias("cos_sim"),
+    ).selectExpr(
+        "a._id AS vec_a",
+        "b._id AS vec_b",
+        f"try_divide({dot_sql('a._v', 'b._v')}, a._n * b._n) AS cos_sim",
     )
     return (
         scored.filter(F.col("cos_sim") >= threshold)
@@ -1220,10 +1206,10 @@ def semantic_dedup(
     from .pinning import pin
     from .vectors import (
         assign_cells_table,
-        dot,
+        dot_sql,
         ivf_cell,
         ivf_centroid,
-        l2_norm,
+        l2_norm_sql,
     )
 
     if centroids is not None:
@@ -1237,7 +1223,7 @@ def semantic_dedup(
         assign = _auto_assign_path(n_cells)
     # Per-pair work is the hot path (a cell of m vectors scores ~m^2/2
     # pairs), so the L2 norm is computed ONCE per vector here, pinned —
-    # an inline cosine() re-aggregates both norms for every pair
+    # an inline per-pair cosine re-aggregates both norms for every pair
     # (measured 8.5s at sf0.1 vs 0.6s for this plan). Same doubles as
     # the oracle's inline norms: fold orders match, parity unchanged.
     # ensure_parallelism on EVERY assignment path (round-15; was
@@ -1294,7 +1280,7 @@ def semantic_dedup(
         assigned = spine.withColumn(
             "_cell", ivf_cell("_v", dim, n_cells, centroids).cast("int")
         )
-    base = pin(assigned.withColumn("_n", l2_norm(F.col("_v"))))
+    base = pin(assigned.selectExpr("*", f"{l2_norm_sql('_v')} AS _n"))
     paired = base
     if max_cell_size is not None:
         ok = (
@@ -1318,17 +1304,14 @@ def semantic_dedup(
         b,
         (F.col("a._cell") == F.col("b._cell"))
         & (F.col("a.vec_id") < F.col("b.vec_id")),
-    ).select(
-        F.col("a.vec_id").alias("_ia"),
-        F.col("b.vec_id").alias("_ib"),
+    ).selectExpr(
+        "a.vec_id AS _ia",
+        "b.vec_id AS _ib",
         # try_divide: a zero vector has _n = 0 and a bare division kills
         # the job with ANSI DIVIDE_BY_ZERO; NULL cosine fails the
         # threshold when() below, so zero vectors dedup nothing — the
         # oracle's nullif(na*nb, 0) semantics
-        F.try_divide(
-            dot(F.col("a._v"), F.col("b._v")),
-            F.col("a._n") * F.col("b._n"),
-        ).alias("_cs"),
+        f"try_divide({dot_sql('a._v', 'b._v')}, a._n * b._n) AS _cs",
     )
     dropped = (
         scored.groupBy(F.col("_ib").alias("vec_id"))
@@ -1603,7 +1586,7 @@ def duplicated_spans(
     so min_region_len below k is meaningless and left to the caller's
     choice of k.
 
-    Span identity is the 120-bit ``md5_pair`` key (two 60-bit longs
+    Span identity is the 120-bit ``md5_pair_sql`` key (two 60-bit longs
     from md5 hex chars 1-30): at 2.5e13 spans (~100 TB of text) the
     birthday false-positive bound is n^2/2^121 ~ 2e-10, so "exact" is
     honest at the stated scale — a single 60-bit key is past its
@@ -1697,7 +1680,7 @@ def strip_duplicated_spans(
 
     Returns (doc_id, text, n_dropped): text is rebuilt from the KEPT
     tokens — output lives in token space (lowercased, single-spaced,
-    exactly the ``tokens()`` normalization the span index measures),
+    exactly the ``tokens_sql`` normalization the span index measures),
     NOT original byte offsets; n_dropped counts removed tokens. Docs
     with no duplicated regions pass through with n_dropped = 0 (their
     text still token-normalized, so the column is uniform).
@@ -1734,10 +1717,11 @@ def strip_duplicated_spans(
         "r -> ((i + 1) >= r.region_start) AND "
         "((i + 1) < (r.region_start + r.region_len))))"
     )
-    out = (
-        "element_at(transform(array(" + kept + "), kt -> named_struct("
-        "'text', concat_ws(' ', kt), "
-        "'n_dropped', CAST((size(_tk) - size(kt)) AS BIGINT))), 1)"
+    out = let_sql(
+        kept,
+        "kt",
+        "named_struct('text', concat_ws(' ', kt), "
+        "'n_dropped', CAST((size(_tk) - size(kt)) AS BIGINT))",
     )
     return joined.selectExpr("doc_id", f"{out} AS _o").selectExpr(
         "doc_id", "_o.text AS text", "_o.n_dropped AS n_dropped"

@@ -87,11 +87,16 @@ def local_relation(
     return spark.createDataFrame(tbl, schema)
 
 
+def sql_string(v: str) -> str:
+    """One escaped Spark SQL string literal."""
+    return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def _sql_literal(v, dtype) -> str:
     """One escaped SQL literal of a STRING, BIGINT or INT value."""
     name = dtype.simpleString()
     if name == "string":
-        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        return sql_string(v)
     if name == "bigint":
         return f"{int(v)}L"
     if name == "int":
@@ -990,30 +995,21 @@ def positional_zip_join(
     The two sides' indexes are INDEPENDENT (separate inputs, separate
     range exchanges), but each one eagerly runs a checkpoint job plus a
     stats collect — built sequentially, the second side's jobs wait for
-    the first side's stragglers. Build them from two driver threads
-    instead (guide §2.6 — actions are only sequential because driver
-    code calls them sequentially): same plans, same results, the two
-    materializations just overlap. contextvars (the pinning switch) are
-    captured explicitly because worker threads don't inherit them.
+    the first side's stragglers. Build them on ``pinning.construct_all``:
+    same plans, same results, the two materializations just overlap,
+    and the caller's job group and description reach every job either
+    side fires.
     """
-    import contextvars
-    from concurrent.futures import ThreadPoolExecutor
+    from .pinning import construct_all
 
-    ctx = contextvars.copy_context()
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fl = pool.submit(
-            ctx.copy().run,
-            global_index,
-            left,
-            left_order if left_order is not None else ["_ord"],
-        )
-        fr = pool.submit(
-            ctx.copy().run,
-            global_index,
-            right,
-            right_order if right_order is not None else ["_ord"],
-        )
-        l, r = fl.result(), fr.result()
+    l, r = construct_all(
+        lambda: global_index(
+            left, left_order if left_order is not None else ["_ord"]
+        ),
+        lambda: global_index(
+            right, right_order if right_order is not None else ["_ord"]
+        ),
+    )
     if "_ord" in l.columns and "_ord" in r.columns:
         r = r.withColumnRenamed("_ord", "_ord_r")
     return l.join(r, "_rn", "inner")

@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.hashing import tokens
+from ..functions.hashing import tokens_sql
 from ..session import ensure_parallelism
 from .relational import rank_small
 
@@ -55,7 +55,7 @@ def doc_terms(
     aggregation on (doc_id, term) with map-side combine.
 
     The token array is staged in its own projection: dl and the explode
-    both consume it, and building both from an inline tokens(text)
+    both consume it, and building both from an inline tokens_sql(text)
     evaluates the tokenizer twice per row (CollapseProject refuses to
     inline the staged non-cheap multi-referenced alias, so the staging
     sticks — no filter reaches below the explode here)."""
@@ -67,7 +67,8 @@ def doc_terms(
     # (sf0.1 was a wash). Keying only pays where the aggregate
     # collapses to ~one row per key (the per-doc scorers).
     staged = ensure_parallelism(docs).select(
-        F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("_tk")
+        F.col(id_col).alias("doc_id"),
+        F.expr(tokens_sql(f"`{text_col}`")).alias("_tk"),
     )
     exploded = staged.select(
         "doc_id",
@@ -117,7 +118,9 @@ def tfidf_top_terms(
         ensure_parallelism(docs)
         .select(
             F.col(id_col).alias("doc_id"),
-            F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("term"),
+            F.expr(
+                f"explode(array_distinct({tokens_sql(f'`{text_col}`')}))"
+            ).alias("term"),
         )
         .groupBy("term")
         .agg(F.count_distinct("doc_id").cast("long").alias("df_t"))
@@ -186,7 +189,7 @@ def bm25_search(
     from .pinning import pin
 
     # lowercase the query terms: corpus tokens come from
-    # functions.hashing.tokens, which lowercases — a cased query term
+    # functions.hashing.tokens_sql, which lowercases — a cased query term
     # ('Apple') would otherwise silently contribute zero matches
     qset = F.array(*[F.lit(t) for t in sorted({t.lower() for t in query_terms})])
     # token array staged once for dl + the match filter (see doc_terms);
@@ -198,7 +201,8 @@ def bm25_search(
     # checkpoint (LogicalRDD keeps outputPartitioning), so the tf
     # aggregation downstream needs no exchange of its own (§2.4)
     staged = ensure_parallelism(docs, key=id_col).select(
-        F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("_tk")
+        F.col(id_col).alias("doc_id"),
+        F.expr(tokens_sql(f"`{text_col}`")).alias("_tk"),
     )
     per_doc = pin(
         staged.select(

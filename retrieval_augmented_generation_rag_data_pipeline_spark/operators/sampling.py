@@ -16,7 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import md5_long
+from ..functions.hashing import md5_long_sql
+from .joins import sql_string
 
 # hash-bucket resolution: rates are quantized to 1/RESOLUTION steps
 RESOLUTION = 1_000_000
@@ -32,11 +33,18 @@ def quantize(fraction: float) -> int:
     return int(round(float(fraction) * RESOLUTION))
 
 
-def _keep_expr(stratum: Column, row_id: Column, fraction: float, seed: int) -> Column:
-    bucket = md5_long(
-        F.concat_ws(":", F.lit(str(seed)), stratum.cast("string"), row_id.cast("string"))
-    ) % RESOLUTION
-    return bucket < quantize(fraction)
+def seed_hash_sql(seed: int, *parts: str) -> str:
+    """SQL text of the 60-bit hash of ``seed:part:...`` that every
+    sampler keys on; each part is SQL text, cast to STRING."""
+    cast = ", ".join(f"CAST({p} AS STRING)" for p in parts)
+    return md5_long_sql(f"concat_ws(':', {sql_string(str(seed))}, {cast})")
+
+
+def _keep_expr(stratum: str, id_col: str, fraction: float, seed: int) -> Column:
+    """hash(seed:stratum:id) bucket under the quantized rate; ``stratum``
+    is SQL text."""
+    bucket = f"{seed_hash_sql(seed, stratum, f'`{id_col}`')} % {RESOLUTION}"
+    return F.expr(f"{bucket} < {quantize(fraction)}")
 
 
 def sample_deterministic(
@@ -47,7 +55,7 @@ def sample_deterministic(
 ) -> DataFrame:
     """Keep ~``fraction`` of rows, decided by hash(seed:id) — the
     reproducible Bernoulli sample."""
-    return df.filter(_keep_expr(F.lit(""), F.col(id_col), fraction, seed))
+    return df.filter(_keep_expr("''", id_col, fraction, seed))
 
 
 def assign_split(
@@ -74,19 +82,20 @@ def assign_split(
             "assign_split: splits must name at least one label "
             "(pass None for the 0.9/0.05/0.05 default)"
         )
-    bucket = md5_long(
-        F.concat_ws(":", F.lit(str(seed)), F.col(id_col).cast("string"))
-    ) % RESOLUTION
+    bucket = f"{seed_hash_sql(seed, f'`{id_col}`')} % {RESOLUTION}"
     labels = list(splits)
-    expr = F.lit(labels[-1])
+    expr = sql_string(labels[-1])
     cum = 0
     bounds: list[tuple[str, int]] = []
     for name, fr in splits.items():
         cum += quantize(fr)
         bounds.append((name, cum))
     for name, upper in reversed(bounds[:-1]):
-        expr = F.when(bucket < upper, F.lit(name)).otherwise(expr)
-    return df.withColumn("split", expr)
+        expr = (
+            f"CASE WHEN {bucket} < {upper} THEN {sql_string(name)} "
+            f"ELSE {expr} END"
+        )
+    return df.withColumn("split", F.expr(expr))
 
 
 def mix_corpora(
@@ -112,7 +121,7 @@ def mix_corpora(
     parts = []
     for name, (df, rate) in sorted(corpora.items()):
         kept = df.filter(
-            _keep_expr(F.lit(name), F.col(id_col), rate, seed)
+            _keep_expr(sql_string(name), id_col, rate, seed)
         ).withColumn("source_name", F.lit(name))
         parts.append(kept)
     return union_sources(parts)
@@ -133,8 +142,8 @@ def sample_stratified(
     (seed, stratum, id), so changing one stratum's rate never reshuffles
     which rows another stratum keeps.
     """
-    stratum = F.col(stratum_col)
     if isinstance(fraction, dict):
+        stratum = F.col(stratum_col)
         threshold = F.lit(0).cast("long")
         for value, fr in sorted(fraction.items()):
             # native-typed comparison, NOT cast("string") == str(value):
@@ -144,13 +153,14 @@ def sample_stratified(
             threshold = F.when(
                 stratum == F.lit(value), F.lit(quantize(fr)).cast("long")
             ).otherwise(threshold)
-        bucket = md5_long(
-            F.concat_ws(
-                ":", F.lit(str(seed)), stratum.cast("string"), F.col(id_col).cast("string")
-            )
-        ) % RESOLUTION
+        bucket = F.expr(
+            f"{seed_hash_sql(seed, f'`{stratum_col}`', f'`{id_col}`')}"
+            f" % {RESOLUTION}"
+        )
         return df.filter(bucket < threshold)
-    return df.filter(_keep_expr(stratum, F.col(id_col), float(fraction), seed))
+    return df.filter(
+        _keep_expr(f"`{stratum_col}`", id_col, float(fraction), seed)
+    )
 
 
 def sample_exact(
@@ -176,9 +186,7 @@ def sample_exact(
     are ranked window-free via `relational.rank_small` — the same
     post-limit ranking pattern as `retrieval.bm25_search`.
     """
-    h = md5_long(
-        F.concat_ws(":", F.lit(str(seed)), F.col(id_col).cast("string"))
-    )
+    h = F.expr(seed_hash_sql(seed, f"`{id_col}`"))
     out = df.withColumn("_sample_h", h).orderBy(
         F.col("_sample_h").asc(), F.col(id_col).asc()
     ).limit(int(k))
@@ -213,9 +221,7 @@ def sample_exact_per_group(
     """
     from pyspark.sql import Window
 
-    h = md5_long(
-        F.concat_ws(":", F.lit(str(seed)), F.col(id_col).cast("string"))
-    )
+    h = F.expr(seed_hash_sql(seed, f"`{id_col}`"))
     w = Window.partitionBy(*group_cols).orderBy(h.asc(), F.col(id_col).asc())
     return (
         df.withColumn("_rn", F.row_number().over(w))
@@ -247,11 +253,7 @@ def sample_weighted(
     """
     u = (
         (
-            md5_long(
-                F.concat_ws(
-                    ":", F.lit(str(seed)), F.col(id_col).cast("string")
-                )
-            )
+            F.expr(seed_hash_sql(seed, f"`{id_col}`"))
             % RESOLUTION
             + 1
         ).cast("double")
@@ -633,7 +635,7 @@ def dsir_importance_weights(
     union-vocab DIFF table (one row per token — the two models are
     pre-subtracted driver-side, so one join does the work of two) ->
     one map-side-combined per-doc sum. Only the doc_id aggregation
-    shuffles; ``tokens()`` never emits NULL elements, so a NULL term
+    shuffles; ``tokens_sql`` never emits NULL elements, so a NULL term
     row is exactly a token-less doc and never draws the OOV mass."""
     from .text import frozen_lm
 
@@ -641,7 +643,7 @@ def dsir_importance_weights(
         raw_lm = frozen_lm()
     if target_lm is None:
         target_lm = frozen_lm(_default_target_path())
-    from ..functions.hashing import tokens
+    from ..functions.hashing import tokens_sql
     from ..session import ensure_parallelism
 
     diff, oov_diff = dsir_diff_table(target_lm, raw_lm)
@@ -655,7 +657,7 @@ def dsir_importance_weights(
         # key="doc_id": the per-doc sum below is the seam's next
         # shuffle — keyed repartition is the only exchange (§2.4)
         ensure_parallelism(spine, key="doc_id")
-        .select("doc_id", F.explode_outer(tokens(F.col("_t"))).alias("term"))
+        .selectExpr("doc_id", f"explode_outer({tokens_sql('_t')}) AS term")
         .join(F.broadcast(dtab), "term", "left")
         .groupBy("doc_id")
         .agg(
@@ -712,11 +714,7 @@ def dsir_select(
     w = dsir_importance_weights(docs, target_lm, raw_lm, id_col, text_col)
     u = (
         (
-            md5_long(
-                F.concat_ws(
-                    ":", F.lit(str(seed)), F.col("doc_id").cast("string")
-                )
-            )
+            F.expr(seed_hash_sql(seed, "doc_id"))
             % RESOLUTION
             + 1
         ).cast("double")

@@ -12,16 +12,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.binding import let
+from ..functions.binding import let, let_sql
 from ..functions.hashing import (
     LSH_BANDS,
-    hash_array,
     hash_array_sql,
-    md5_long,
+    md5_long_sql,
     minhash_signature,
-    tokens,
     tokens_sql,
-    word_shingles,
     word_shingles_sql,
 )
 from ..session import ensure_parallelism
@@ -55,11 +52,11 @@ def chunk_text(
     Returns (doc_id, chunk_idx, chunk_text, n_words) — one row per chunk,
     via explode (narrow, no shuffle). The token array is let-bound: the
     chunk-builder lambda slices it per chunk, and HOF lambdas run
-    interpreted, so an inline tokens(text) would re-tokenize per chunk.
+    interpreted, so an inline tokens_sql(text) would re-tokenize per chunk.
     Empty/whitespace-only docs are handled by emitting an EMPTY chunk
     array inside the binding (explode drops it) rather than a separate
     `.filter(size(tokens) > 0)` — the filter's predicate would carry its
-    own tokens(text) copy in a different operator, which codegen CSE
+    own tokens_sql(text) copy in a different operator, which codegen CSE
     cannot merge with the projection's, doubling the tokenize per row
     (round-6 review finding).
 
@@ -80,15 +77,15 @@ def chunk_text(
     # bogus empty chunk — and a NULL text must yield no rows, same as
     # the old filter
     w = int(chunk_words)
-    chunks = (
-        "element_at(transform(array("
-        + tokens_sql(f"`{text_col}`")
-        + "), tk -> CASE WHEN size(tk) > 0 THEN "
+    chunks = let_sql(
+        tokens_sql(f"`{text_col}`"),
+        "tk",
+        "CASE WHEN size(tk) > 0 THEN "
         f"transform(sequence(0, CAST(FLOOR((size(tk) - 1) / {w}) AS INT)), "
         "i -> named_struct('chunk_idx', i, 'chunk_text', "
         f"array_join(slice(tk, i * {w} + 1, {w}), ' '))) "
         "ELSE CAST(array() AS array<struct<chunk_idx:int,chunk_text:string>>)"
-        " END), 1)"
+        " END",
     )
     explode_fn = "explode_outer" if keep_chunkless else "explode"
     return (
@@ -170,7 +167,7 @@ def lang_id(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
 
     staged = df.select(
         F.col(id_col).alias("doc_id"),
-        let(tokens(F.col(text_col)), with_tokens).alias("_m"),
+        let(F.expr(tokens_sql(f"`{text_col}`")), with_tokens).alias("_m"),
     )
     return staged.select(
         "doc_id",
@@ -179,33 +176,44 @@ def lang_id(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
     )
 
 
-def _quality_signals(t, toks):
-    """The shared (n_tok, punct, stop_ratio, mean_wlen, score) Column
-    family — quality_score REPORTS it, quality_filter GATES on it; one
+def _num_sql(v) -> str:
+    """A Python number as the SQL literal ``F.lit`` builds for it (a
+    float as DOUBLE, not the parser's DECIMAL)."""
+    return f"{v!r}D" if isinstance(v, float) else str(int(v))
+
+
+def _quality_signals_sql(t: str, toks: str):
+    """The shared (n_tok, punct, stop_ratio, mean_wlen, score) SQL
+    family over a text reference ``t`` and a token-array variable
+    ``toks`` — quality_score REPORTS it, quality_filter GATES on it; one
     builder so a weight tweak can never desynchronize the two."""
-    n_tok = F.size(toks).cast("double")
-    n_chars = F.length(t).cast("double")
+    n_tok = f"CAST(size({toks}) AS DOUBLE)"
+    n_chars = f"CAST(length({t}) AS DOUBLE)"
     punct = (
-        n_chars - F.length(F.regexp_replace(t, PUNCT_CLASS, ""))
-    ) / F.greatest(n_chars, F.lit(1.0))
-    stop = F.array(*[F.lit(w) for w in LANG_PROFILES["en"]])
+        f"(({n_chars} - length(regexp_replace({t}, '{PUNCT_CLASS}', ''))) / "
+        f"greatest({n_chars}, 1.0D))"
+    )
+    stop = ", ".join(f"'{w}'" for w in LANG_PROFILES["en"])
     # greatest(n_tok, 1): an empty/whitespace-only doc has n_tok = 0 and
     # a bare /n_tok dies with DIVIDE_BY_ZERO under Spark 4's default
     # ANSI mode (killing prepare_corpus on one blank doc); the guarded
     # form gives 0-ratios, same as the punct denominator above and the
     # oracle's greatest(len(tk), 1)
-    n_tok_safe = F.greatest(n_tok, F.lit(1.0))
+    n_tok_safe = f"greatest({n_tok}, 1.0D)"
     stop_ratio = (
-        F.size(F.filter(toks, lambda x: F.array_contains(stop, x))) / n_tok_safe
+        f"(size(filter({toks}, x -> array_contains(array({stop}), x))) / "
+        f"{n_tok_safe})"
     )
-    mean_wlen = F.aggregate(
-        toks, F.lit(0.0), lambda s, x: s + F.length(x).cast("double")
-    ) / n_tok_safe
+    mean_wlen = (
+        f"(aggregate({toks}, 0.0D, (s, x) -> s + CAST(length(x) AS DOUBLE)) / "
+        f"{n_tok_safe})"
+    )
     score = (
-        F.least(n_tok / 64.0, F.lit(1.0)) * 0.4
-        + F.least(stop_ratio * 4.0, F.lit(1.0)) * 0.3
-        + F.when((mean_wlen >= 3.0) & (mean_wlen <= 10.0), 0.3).otherwise(0.0)
-        - punct
+        f"(least({n_tok} / 64.0D, 1.0D) * 0.4D"
+        f" + least({stop_ratio} * 4.0D, 1.0D) * 0.3D"
+        f" + CASE WHEN {mean_wlen} >= 3.0D AND {mean_wlen} <= 10.0D"
+        " THEN 0.3D ELSE 0.0D END"
+        f" - {punct})"
     )
     return n_tok, punct, stop_ratio, mean_wlen, score
 
@@ -222,28 +230,25 @@ def quality_score(
     filtering on any metric (pushdown inlines the projection) still
     tokenizes once per row — see functions.binding.let.
     """
-    t = F.col(text_col)
-
-    def with_tokens(tk):
-        n_tok, punct, stop_ratio, mean_wlen, score = _quality_signals(t, tk)
-        return F.struct(
-            n_tok.cast("long").alias("n_tokens"),
-            F.round(punct, 6).alias("punct_ratio"),
-            F.round(stop_ratio, 6).alias("stopword_ratio"),
-            F.round(mean_wlen, 6).alias("mean_word_len"),
-            F.round(score, 6).alias("quality"),
-        )
-
-    staged = df.select(
-        F.col(id_col).alias("doc_id"), let(tokens(t), with_tokens).alias("_m")
+    t = f"`{text_col}`"
+    n_tok, punct, stop_ratio, mean_wlen, score = _quality_signals_sql(t, "toks")
+    metrics = let_sql(
+        tokens_sql(t),
+        "toks",
+        f"struct(CAST({n_tok} AS BIGINT) AS n_tokens, "
+        f"round({punct}, 6) AS punct_ratio, "
+        f"round({stop_ratio}, 6) AS stopword_ratio, "
+        f"round({mean_wlen}, 6) AS mean_word_len, "
+        f"round({score}, 6) AS quality)",
     )
-    return staged.select(
+    staged = df.selectExpr(f"`{id_col}` AS doc_id", f"{metrics} AS _m")
+    return staged.selectExpr(
         "doc_id",
-        F.col("_m.n_tokens").alias("n_tokens"),
-        F.col("_m.punct_ratio").alias("punct_ratio"),
-        F.col("_m.stopword_ratio").alias("stopword_ratio"),
-        F.col("_m.mean_word_len").alias("mean_word_len"),
-        F.col("_m.quality").alias("quality"),
+        "_m.n_tokens AS n_tokens",
+        "_m.punct_ratio AS punct_ratio",
+        "_m.stopword_ratio AS stopword_ratio",
+        "_m.mean_word_len AS mean_word_len",
+        "_m.quality AS quality",
     )
 
 
@@ -254,7 +259,9 @@ def token_count(
     t = F.col(text_col)
     return df.select(
         F.col(id_col).alias("doc_id"),
-        F.size(tokens(t)).cast("long").alias("ws_tokens"),
+        F.expr(f"CAST(size({tokens_sql(f'`{text_col}`')}) AS BIGINT)").alias(
+            "ws_tokens"
+        ),
         F.size(F.regexp_extract_all(t, F.lit(BPE_ISH), 0)).cast("long").alias(
             "bpe_ish_tokens"
         ),
@@ -269,43 +276,34 @@ def doc_fingerprint(
     The shingle-hash array is let-bound so a pushed filter on either
     fingerprint hashes once, not per reference; the whole-doc fallback
     digest is inlined so coalesce short-circuits it (see comment)."""
-
-    def with_hashes(h):
-        # the whole-doc md5 fallback is deliberately NOT let-bound:
-        # let() evaluates its binding unconditionally per row, which
-        # would compute a full-text hash for EVERY document; inlined,
-        # coalesce short-circuits and only the rare < k-token docs
-        # (where array_min(h) is NULL) ever pay it — at most twice,
-        # and only for those rows
-        whole = md5_long(F.trim(F.col(text_col)))
-        return F.struct(
-            F.coalesce(F.array_min(h), whole).alias("fp_min"),
-            F.coalesce(F.array_max(h), whole).alias("fp_max"),
-        )
-
-    staged = df.select(
-        F.col(id_col).alias("doc_id"),
-        let(
-            hash_array(word_shingles(tokens(F.col(text_col)), k)), with_hashes
-        ).alias("_m"),
+    # the whole-doc md5 fallback is deliberately NOT let-bound: let
+    # evaluates its binding unconditionally per row, which would compute
+    # a full-text hash for EVERY document; inlined, coalesce
+    # short-circuits and only the rare < k-token docs (where
+    # array_min(hs) is NULL) ever pay it — at most twice, and only for
+    # those rows
+    t = f"`{text_col}`"
+    whole = md5_long_sql(f"trim({t})")
+    fp = let_sql(
+        hash_array_sql(word_shingles_sql(tokens_sql(t), k)),
+        "hs",
+        f"struct(coalesce(array_min(hs), {whole}) AS fp_min, "
+        f"coalesce(array_max(hs), {whole}) AS fp_max)",
     )
-    return staged.select(
-        "doc_id",
-        F.col("_m.fp_min").alias("fp_min"),
-        F.col("_m.fp_max").alias("fp_max"),
-    )
+    staged = df.selectExpr(f"`{id_col}` AS doc_id", f"{fp} AS _m")
+    return staged.selectExpr("doc_id", "_m.fp_min AS fp_min", "_m.fp_max AS fp_max")
 
 
-def _dup_frac(arr):
+def _dup_frac_sql(arr: str) -> str:
     """Duplicate fraction of an n-gram array, 6dp-rounded; empty -> 0.0.
     ONE definition shared by repetition_metrics (reports it) and
     quality_filter (gates on it) so a rounding or empty-array tweak can
     never desynchronize the reported metric from the gate."""
-    n = F.size(arr)
-    return F.when(
-        n > 0,
-        F.round((n - F.size(F.array_distinct(arr))) / n.cast("double"), 6),
-    ).otherwise(F.lit(0.0))
+    return (
+        f"CASE WHEN size({arr}) > 0 THEN round((size({arr}) - "
+        f"size(array_distinct({arr}))) / CAST(size({arr}) AS DOUBLE), 6) "
+        "ELSE 0.0D END"
+    )
 
 
 def repetition_metrics(
@@ -323,28 +321,26 @@ def repetition_metrics(
     that further.
     """
 
-    def with_tokens(tk):
-        def with_bigrams(t2):
-            def with_trigrams(t3):
-                return F.struct(
-                    _dup_frac(tk).alias("dup_unigram_frac"),
-                    _dup_frac(t2).alias("dup_bigram_frac"),
-                    _dup_frac(t3).alias("dup_trigram_frac"),
-                )
-
-            return let(word_shingles(tk, 3), with_trigrams)
-
-        return let(word_shingles(tk, 2), with_bigrams)
-
-    staged = df.select(
-        F.col(id_col).alias("doc_id"),
-        let(tokens(F.col(text_col)), with_tokens).alias("_m"),
+    dups = (
+        f"struct({_dup_frac_sql('toks')} AS dup_unigram_frac, "
+        f"{_dup_frac_sql('bi')} AS dup_bigram_frac, "
+        f"{_dup_frac_sql('tri')} AS dup_trigram_frac)"
     )
-    return staged.select(
+    metrics = let_sql(
+        tokens_sql(f"`{text_col}`"),
+        "toks",
+        let_sql(
+            word_shingles_sql("toks", 2),
+            "bi",
+            let_sql(word_shingles_sql("toks", 3), "tri", dups),
+        ),
+    )
+    staged = df.selectExpr(f"`{id_col}` AS doc_id", f"{metrics} AS _m")
+    return staged.selectExpr(
         "doc_id",
-        F.col("_m.dup_unigram_frac").alias("dup_unigram_frac"),
-        F.col("_m.dup_bigram_frac").alias("dup_bigram_frac"),
-        F.col("_m.dup_trigram_frac").alias("dup_trigram_frac"),
+        "_m.dup_unigram_frac AS dup_unigram_frac",
+        "_m.dup_bigram_frac AS dup_bigram_frac",
+        "_m.dup_trigram_frac AS dup_trigram_frac",
     )
 
 
@@ -455,16 +451,15 @@ def decontaminate(
     the broadcast join tier without its hashes reaching the driver.
     Either way a document is dropped per row, never by id.
     """
+    def keys(text: str) -> str:
+        return hash_array_sql(word_shingles_sql(tokens_sql(f"`{text}`"), n))
+
     staged = ensure_parallelism(docs).select(
         F.struct(*[F.col(c) for c in docs.columns]).alias("_p"),
-        hash_array(word_shingles(tokens(F.col(text_col)), n)).alias("_k"),
+        F.expr(keys(text_col)).alias("_k"),
     )
-    bench_keys = benchmark.select(
-        F.explode(
-            F.array_distinct(
-                hash_array(word_shingles(tokens(F.col(bench_text_col)), n))
-            )
-        ).alias("_k")
+    bench_keys = benchmark.selectExpr(
+        f"explode(array_distinct({keys(bench_text_col)})) AS _k"
     )
     return _drop_contaminated(docs, staged, bench_keys)
 
@@ -560,7 +555,7 @@ def quality_filter(
 
     Computes every signal in ONE evaluation of the tokenize pipeline per
     row — and stays one evaluation even under predicate pushdown. A
-    plain staged-projection (`.select(tokens(text).alias("_tk"))`) is
+    plain staged-projection (`.selectExpr(f"{tokens_sql(text)} AS _tk")`) is
     NOT enough: a downstream `.filter(keep)` pushes the predicate
     through the projection, substituting the tokens expression at every
     reference (~30x here), and the duplicated higher-order lambdas get
@@ -576,43 +571,37 @@ def quality_filter(
     Returns (doc_id, n_tokens, quality, dup_trigram_frac, is_too_short,
     is_low_quality, is_repetitive, keep). Narrow, no shuffle.
     """
-    def _struct_of(t):
-        def with_tokens(tk):
-            n_tok, _punct, _stop_ratio, _mean_wlen, score = _quality_signals(t, tk)
-            n_tokens = n_tok.cast("long")
-            quality = F.round(score, 6)
-
-            def with_trigrams(tri):
-                dup3 = _dup_frac(tri)
-                too_short = n_tokens < F.lit(min_tokens)
-                low_q = quality < F.lit(min_quality)
-                rep = dup3 > F.lit(max_dup_trigram)
-                return F.struct(
-                    n_tokens.alias("n_tokens"),
-                    quality.alias("quality"),
-                    dup3.alias("dup_trigram_frac"),
-                    too_short.alias("is_too_short"),
-                    low_q.alias("is_low_quality"),
-                    rep.alias("is_repetitive"),
-                    (~too_short & ~low_q & ~rep).alias("keep"),
-                )
-
-            return let(word_shingles(tk, 3), with_trigrams)
-
-        return let(tokens(t), with_tokens)
-
-    staged = df.select(
-        F.col(id_col).alias("doc_id"), _struct_of(F.col(text_col)).alias("_m")
+    t = f"`{text_col}`"
+    n_tok, _punct, _stop_ratio, _mean_wlen, score = _quality_signals_sql(
+        t, "toks"
     )
-    return staged.select(
+    n_tokens = f"CAST({n_tok} AS BIGINT)"
+    quality = f"round({score}, 6)"
+    dup3 = _dup_frac_sql("tri")
+    too_short = f"({n_tokens} < {_num_sql(min_tokens)})"
+    low_q = f"({quality} < {_num_sql(min_quality)})"
+    rep = f"({dup3} > {_num_sql(max_dup_trigram)})"
+    flags = (
+        f"struct({n_tokens} AS n_tokens, {quality} AS quality, "
+        f"{dup3} AS dup_trigram_frac, {too_short} AS is_too_short, "
+        f"{low_q} AS is_low_quality, {rep} AS is_repetitive, "
+        f"NOT {too_short} AND NOT {low_q} AND NOT {rep} AS keep)"
+    )
+    gate = let_sql(
+        tokens_sql(t),
+        "toks",
+        let_sql(word_shingles_sql("toks", 3), "tri", flags),
+    )
+    staged = df.selectExpr(f"`{id_col}` AS doc_id", f"{gate} AS _m")
+    return staged.selectExpr(
         "doc_id",
-        F.col("_m.n_tokens").alias("n_tokens"),
-        F.col("_m.quality").alias("quality"),
-        F.col("_m.dup_trigram_frac").alias("dup_trigram_frac"),
-        F.col("_m.is_too_short").alias("is_too_short"),
-        F.col("_m.is_low_quality").alias("is_low_quality"),
-        F.col("_m.is_repetitive").alias("is_repetitive"),
-        F.col("_m.keep").alias("keep"),
+        "_m.n_tokens AS n_tokens",
+        "_m.quality AS quality",
+        "_m.dup_trigram_frac AS dup_trigram_frac",
+        "_m.is_too_short AS is_too_short",
+        "_m.is_low_quality AS is_low_quality",
+        "_m.is_repetitive AS is_repetitive",
+        "_m.keep AS keep",
     )
 
 
@@ -659,7 +648,7 @@ def vocab_entropy(
 
     staged = df.select(
         F.col(id_col).alias("doc_id"),
-        let(tokens(F.col(text_col)), with_tokens).alias("_m"),
+        let(F.expr(tokens_sql(f"`{text_col}`")), with_tokens).alias("_m"),
     )
     return staged.select(
         "doc_id",
@@ -685,7 +674,7 @@ def corpus_stats(
     """
     staged = df.select(
         *group_cols,
-        F.size(tokens(F.col(text_col))).alias("_nt"),
+        F.expr(f"size({tokens_sql(f'`{text_col}`')})").alias("_nt"),
         F.length(F.col(text_col)).alias("_nc"),
     )
     return staged.groupBy(*group_cols).agg(
@@ -715,8 +704,8 @@ def ngram_topk(
     not token count) → TakeOrderedAndProject for the top-k (per
     partition partial top-k; no global sort materializes).
     """
-    grams = ensure_parallelism(df).select(
-        F.explode(word_shingles(tokens(F.col(text_col)), n)).alias("gram")
+    grams = ensure_parallelism(df).selectExpr(
+        f"explode({word_shingles_sql(tokens_sql(f'`{text_col}`'), n)}) AS gram"
     )
     return (
         grams.groupBy("gram")
@@ -869,7 +858,7 @@ def quality_classifier(
     the aggregate — its NULL-term row contributes 0 weight, and
     ``count(term)`` skips NULLs so n_tokens lands on 0). The weight
     table is metadata-sized (<= max_vocab rows) and rides a
-    broadcast, never a per-token map literal. ``tokens()`` can never
+    broadcast, never a per-token map literal. ``tokens_sql`` can never
     emit NULL elements (split+filter), so a NULL term row is
     EXACTLY a token-less doc."""
     if clf is None:
@@ -882,7 +871,7 @@ def quality_classifier(
     # key="doc_id": the groupBy below is the seam's next shuffle, so
     # the keyed repartition is the operator's ONLY exchange (§2.4)
     ex = ensure_parallelism(spine, key="doc_id").select(
-        "doc_id", F.explode_outer(tokens(F.col("_t"))).alias("term")
+        "doc_id", F.expr(f"explode_outer({tokens_sql('_t')})").alias("term")
     )
     summed = (
         ex.join(F.broadcast(weights), "term", "left")
@@ -1011,7 +1000,7 @@ def token_count_subword(
     of a corpus re-uses a tiny distinct-word set) -> LEFT-join the
     counts back (AQE picks broadcast while the distinct-word table
     fits; left, so a token-less doc's NULL-word marker row survives —
-    ``count(word)``/the NULL-skipping sum land it on 0/0; tokens()
+    ``count(word)``/the NULL-skipping sum land it on 0/0; tokens_sql
     never emits NULL elements, so the marker is unambiguous) ->
     one map-side-combined per-doc sum."""
     if vocab is None:
@@ -1030,7 +1019,7 @@ def token_count_subword(
     # checkpoint, so the per-doc aggregation downstream reuses it (§2.4)
     words = pin(
         ensure_parallelism(spine, key="doc_id").select(
-            "doc_id", F.explode_outer(tokens(F.col("_t"))).alias("word")
+            "doc_id", F.expr(f"explode_outer({tokens_sql('_t')})").alias("word")
         )
     )
     dw = (
@@ -1264,7 +1253,7 @@ def lm_cross_entropy(
     ex = ensure_parallelism(docs, key=id_col).select(
         F.col(id_col).alias("doc_id"),
         *[F.col(c) for c in carries],
-        F.explode(tokens(F.col(text_col))).alias("term"),
+        F.expr(f"explode({tokens_sql(f'`{text_col}`')})").alias("term"),
     )
     summed = (
         ex.join(F.broadcast(vocab), "term", "left")
@@ -1441,7 +1430,7 @@ def lm_cross_entropy_bigram(
         "s string, t string, _blp double",
     )
     oov = float(lm["oov_logp"])
-    tk = tokens(F.col(text_col))
+    tk = F.expr(tokens_sql(f"`{text_col}`"))
 
     # arrays_zip pads to the LONGER input, and the shifted side is
     # [NULL] (length 1) for an empty token array — unguarded, an

@@ -19,15 +19,17 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.binding import let_sql
 from ..functions.hashing import hyperplane_component
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Sequential double-precision dot product (deterministic fold order —
-    bit-identical to the DuckDB oracle fragment).
+def dot_sql(a: str, b: str) -> str:
+    """Sequential double-precision dot product of two array references
+    (deterministic fold order — bit-identical to the DuckDB oracle
+    fragment), ONE parse; shared by every ANN scorer's hot projection.
 
     Guarded against silent length mismatch: zip_with null-pads the
     shorter array, which would make the whole sum NULL and quietly rank
@@ -39,26 +41,6 @@ def dot(a: Column, b: Column) -> Column:
     guard). A NULL input vector is explicitly allowed through and yields
     a NULL dot (NULL-in -> NULL-out), matching pre-guard behavior.
     """
-    raw = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda s, v: s + v,
-    )
-    guard = F.coalesce(
-        F.assert_true(
-            a.isNull() | b.isNull() | (F.size(a) == F.size(b)),
-            F.lit("dot(): vector length mismatch"),
-        ).cast("double"),
-        F.lit(0.0),
-    )
-    return guard + raw
-
-
-def dot_sql(a: str, b: str) -> str:
-    """SQL-string twin of ``dot`` over two array references — same tree
-    (guard first, then the sequential fold), ONE parse instead of ~50
-    py4j round trips; shared by every ANN scorer's hot projection
-    (round 16). Keep in lockstep with ``dot``."""
     guard = (
         f"coalesce(CAST(assert_true((({a} IS NULL) OR ({b} IS NULL)) OR "
         f"(size({a}) = size({b})), 'dot(): vector length mismatch') "
@@ -73,7 +55,7 @@ def dot_sql(a: str, b: str) -> str:
 
 
 def l2_norm_sql(a: str) -> str:
-    """SQL-string twin of ``l2_norm`` (same tree, one parse)."""
+    """Euclidean norm of an array reference (sequential double fold)."""
     return (
         f"sqrt(aggregate(transform({a}, "
         "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
@@ -81,48 +63,25 @@ def l2_norm_sql(a: str) -> str:
     )
 
 
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda s, v: s + v,
-        )
-    )
+def l2_normalize_sql(a: str) -> str:
+    """L2-normalize an array expression (reference normalize_embeddings=True
+    at src/embedding_engine.py:20; torch F.normalize at
+    src/transcription.py:187).
 
+    Both the input array and its norm are let-bound
+    (functions.binding.let_sql): the norm is referenced inside the
+    transform lambda, and HOF lambdas run interpreted (no subexpression
+    elimination), so an inline norm would be re-aggregated once PER
+    ELEMENT — O(dim^2) per row; the array itself is referenced twice
+    (norm + transform), which doubles expensive inputs like the
+    mock-embed md5 component array.
 
-def l2_normalize(a: Column) -> Column:
-    """L2-normalize (reference normalize_embeddings=True at
-    src/embedding_engine.py:20; torch F.normalize at src/transcription.py:187).
-
-    Both the input array and its norm are let-bound: the norm is
-    referenced inside the transform lambda, and HOF lambdas run
-    interpreted (no subexpression elimination), so an inline norm would
-    be re-aggregated once PER ELEMENT — O(dim^2) per row; the array
-    itself is referenced twice (norm + transform), which doubles
-    expensive inputs like the mock-embed md5 component array."""
-    from ..functions.binding import let
-
-    # try_divide: a zero vector has norm 0 and a bare per-element
-    # division aborts the job under Spark 4's default ANSI mode; the
-    # normalized form of a zero vector is all-NULL (undefined direction)
-    return let(
-        a,
-        lambda arr: let(
-            l2_norm(arr),
-            lambda n: F.transform(
-                arr, lambda x: F.try_divide(x.cast("double"), n)
-            ),
-        ),
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    # try_divide, not /: an all-zero vector has norm 0 and a bare
-    # division aborts the job with DIVIDE_BY_ZERO under Spark 4's
-    # default ANSI mode; NULL-on-zero matches the DuckDB oracle's
-    # nullif(norm*norm, 0) — a zero vector is similar to nothing
-    return F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))
+    try_divide: a zero vector has norm 0 and a bare per-element
+    division aborts the job under Spark 4's default ANSI mode; the
+    normalized form of a zero vector is all-NULL (undefined direction).
+    """
+    scaled = "transform(arr, x -> try_divide(CAST(x AS DOUBLE), n))"
+    return let_sql(a, "arr", let_sql(l2_norm_sql("arr"), "n", scaled))
 
 
 def _topk_per_query(scored, corpus_id: str, k: int, score_col: str = "sim"):
@@ -174,9 +133,10 @@ def knn_topk(
         f"`{corpus_id}` AS `{corpus_id}`", f"`{vec_col}` AS _cv"
     )
     if metric == "cosine":
-        # norms depend on ONE side each — computing cosine() per pair
-        # would re-derive both inside the O(|Q|x|C|) loop (3 array
-        # traversals per pair instead of 1). Same expressions on the
+        # norms depend on ONE side each — an inline per-pair cosine
+        # (dot_sql over l2_norm_sql * l2_norm_sql) would re-derive both
+        # inside the O(|Q|x|C|) loop (3 array traversals per pair
+        # instead of 1). Same expressions on the
         # same arrays, so the factored sim is bit-identical.
         q = q.selectExpr("*", f"{l2_norm_sql('_qv')} AS _qn")
         c = c.selectExpr("*", f"{l2_norm_sql('_cv')} AS _cn")
@@ -324,9 +284,9 @@ _FROZEN_CACHE: dict[str, tuple] = {}
 
 def _dot_sql(col_name: str, values: list[float], guard: bool = True) -> str:
     """SQL-text dot product against a literal vector — same fold order
-    as the Column-API `dot` (zip_with then sequential aggregate).
+    as `dot_sql` (zip_with then sequential aggregate).
 
-    Guarded like `dot`: a dim mismatch (wrong `dim` argument vs actual
+    Guarded like `dot_sql`: a dim mismatch (wrong `dim` argument vs actual
     vector length) null-pads zip_with, nulls the sum, and silently
     collapses IVF/LSH cell assignment — assert_true raises instead.
     The guard term is emitted FIRST (``guard + agg``): null-safe Add
@@ -931,7 +891,7 @@ def ann_ivf_topk(
         "query_id", "_qv", F.explode(probes).alias("_cell")
     ).selectExpr("*", f"{l2_norm_sql('_qv')} AS _qn")
     # try_divide: a zero vector (norm 0) scores NULL (ranked last),
-    # never an ANSI DIVIDE_BY_ZERO job abort — same as cosine()
+    # never an ANSI DIVIDE_BY_ZERO job abort — same as knn_topk
     scored = cb.join(F.broadcast(qb), "_cell").selectExpr(
         "query_id",
         f"`{corpus_id}`",
@@ -1027,16 +987,17 @@ def ann_ivf_topk_indexed(
     cells = sorted(r["_cell"] for r in qb.select("_cell").distinct().collect())
     corpus = spark.read.parquet(index_path).filter(F.col("_cell").isin(cells))
     scored = (
-        corpus.withColumn("_cn", l2_norm(F.col(index_vec_col)))
-        .join(F.broadcast(qb.withColumn("_qn", l2_norm(F.col("_qv")))), "_cell")
-        .select(
+        corpus.selectExpr("*", f"{l2_norm_sql(f'`{index_vec_col}`')} AS _cn")
+        .join(
+            F.broadcast(qb.selectExpr("*", f"{l2_norm_sql('_qv')} AS _qn")),
+            "_cell",
+        )
+        .selectExpr(
             "query_id",
-            corpus_id,
+            f"`{corpus_id}`",
             # try_divide: zero-norm vectors score NULL, never abort
-            F.try_divide(
-                dot(F.col("_qv"), F.col(index_vec_col)),
-                F.col("_qn") * F.col("_cn"),
-            ).alias("sim"),
+            f"try_divide({dot_sql('_qv', f'`{index_vec_col}`')}, _qn * _cn)"
+            " AS sim",
         )
     )
     return _topk_per_query(scored, corpus_id, k, "sim")
@@ -1497,19 +1458,18 @@ def ann_lsh_topk(
     ).withColumn("_bucket", lsh_bucket("_qv", dim, n_planes))
     cb = corpus.select(
         F.col(corpus_id).alias(corpus_id), F.col(vec_col).alias("_cv")
-    ).withColumn("_bucket", lsh_bucket("_cv", dim, n_planes)).withColumn(
-        "_cn", l2_norm(F.col("_cv"))
+    ).withColumn("_bucket", lsh_bucket("_cv", dim, n_planes)).selectExpr(
+        "*", f"{l2_norm_sql('_cv')} AS _cn"
     )
     scored = cb.join(
-        F.broadcast(qb.withColumn("_qn", l2_norm(F.col("_qv")))), "_bucket"
-    ).select(
+        F.broadcast(qb.selectExpr("*", f"{l2_norm_sql('_qv')} AS _qn")),
+        "_bucket",
+    ).selectExpr(
         "query_id",
-        corpus_id,
+        f"`{corpus_id}`",
         # try_divide: a zero vector (norm 0) scores NULL (ranked last),
-        # never an ANSI DIVIDE_BY_ZERO job abort — same as cosine()
-        F.try_divide(
-            dot(F.col("_qv"), F.col("_cv")), F.col("_qn") * F.col("_cn")
-        ).alias("sim"),
+        # never an ANSI DIVIDE_BY_ZERO job abort — same as knn_topk
+        f"try_divide({dot_sql('_qv', '_cv')}, _qn * _cn) AS sim",
     )
     return _topk_per_query(scored, corpus_id, k, "sim")
 
@@ -1567,9 +1527,7 @@ def ann_ivfpq_rerank(
     qv = queries.select(
         F.col(query_id).alias("query_id"), F.col(vec_col).alias("_qv")
     )
-    scored = cand.join(F.broadcast(qv), "query_id").select(
-        "query_id",
-        corpus_id,
-        dot(F.col("_qv"), F.col("_cv")).alias("score"),
+    scored = cand.join(F.broadcast(qv), "query_id").selectExpr(
+        "query_id", f"`{corpus_id}`", f"{dot_sql('_qv', '_cv')} AS score"
     )
     return _topk_per_query(scored, corpus_id, k, "score")

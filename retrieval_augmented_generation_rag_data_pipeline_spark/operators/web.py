@@ -20,8 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.hashing import md5_long
 from .joins import small_side
+from .sampling import seed_hash_sql
 
 # RE2-portable (no backreferences / lookaround, runs identically under
 # Java regex and DuckDB's RE2): scheme, optional userinfo, then the
@@ -218,9 +218,7 @@ def domain_caps(
     suffix-list registered-domain rule to the cap key — without it a
     UK-heavy crawl pools every ``.co.uk`` site into ONE cap key
     (over-capping unrelated sites AND a hot window partition)."""
-    h = md5_long(
-        F.concat_ws(":", F.lit(str(seed)), F.col(id_col).cast("string"))
-    )
+    h = F.expr(seed_hash_sql(seed, f"`{id_col}`"))
     # \x00 prefix keeps the per-doc fallback keys out of the host/
     # domain value space (no real host contains a NUL)
     cap_key = (

@@ -17,30 +17,29 @@ micro-batch via foreachBatch, replacing the reference's poll loop.
 from __future__ import annotations
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.hashing import md5_long
+from ..functions.hashing import md5_long_sql
 from ..operators.text import chunk_text
-from ..operators.vectors import knn_topk, l2_normalize
+from ..operators.vectors import knn_topk, l2_normalize_sql
 from ..sources import ledger as ledger_mod
 from ..sources import sinks
 
 EMBED_DIM = 16
 
 
-def mock_embed(col: Column, dim: int = EMBED_DIM) -> Column:
-    """Deterministic hash-based embedding (U4-mock, FIXTURES.md §2):
-    component i = md5_long(text || ':' || i) scaled to [-1, 1), then
-    L2-normalized — keeps the embed->index->search path value-checkable
-    without a model. Swap with ml.udfs.make_embed_udf for real vectors."""
-    comps = [
-        (
-            (md5_long(F.concat(col, F.lit(f":{i}"))) % 2000000) / 1000000.0 - 1.0
-        ).cast("double")
+def mock_embed_sql(col_sql: str, dim: int = EMBED_DIM) -> str:
+    """Deterministic hash-based embedding (U4-mock, FIXTURES.md §2) of a
+    string SQL expression: component i = md5_long(text || ':' || i)
+    scaled to [-1, 1), then L2-normalized — keeps the
+    embed->index->search path value-checkable without a model."""
+    comps = ", ".join(
+        "CAST(" + md5_long_sql(f"concat({col_sql}, ':{i}')")
+        + " % 2000000 / 1000000.0D - 1.0D AS DOUBLE)"
         for i in range(dim)
-    ]
-    return l2_normalize(F.array(*comps))
+    )
+    return l2_normalize_sql(f"array({comps})")
 
 
 def embed_chunks(chunks: DataFrame, text_col: str = "chunk_text") -> DataFrame:
@@ -69,7 +68,7 @@ def embed_chunks(chunks: DataFrame, text_col: str = "chunk_text") -> DataFrame:
         F.concat_ws(
             ":", doc_key, F.col("chunk_idx").cast("string")
         ).alias("vec_id"),
-        mock_embed(F.col(text_col)).alias("embedding"),
+        F.expr(mock_embed_sql(f"`{text_col}`")).alias("embedding"),
         F.col(text_col).alias("text"),
         F.col("doc_id").cast("string").alias("source_file"),
     )
@@ -159,7 +158,7 @@ def search(
     src/embedding_engine.py:88-99 load + IndexFlatIP search)."""
     index = sinks.read_vector_index(spark, index_path)
     q = query_texts.select(
-        F.col("query_id"), mock_embed(F.col("query_text")).alias("embedding")
+        F.col("query_id"), F.expr(mock_embed_sql("query_text")).alias("embedding")
     )
     return knn_topk(q, index, k=k, metric="dot")
 

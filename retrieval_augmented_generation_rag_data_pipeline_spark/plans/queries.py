@@ -1103,9 +1103,9 @@ def math_funcs(spark, sf):
         FROM t""",
 )
 def array_funcs(spark, sf):
-    from ..functions.hashing import tokens as tok_fn
+    from ..functions.hashing import tokens_sql
 
-    d = _t(spark, sf, "documents").select("doc_id", tok_fn(F.col("text")).alias("tk"))
+    d = _t(spark, sf, "documents").selectExpr("doc_id", f"{tokens_sql('text')} AS tk")
     return d.select(
         "doc_id",
         F.size("tk").cast("int").alias("n_tokens"),
@@ -2398,18 +2398,18 @@ def dedup_corpus(spark, sf):
 
 _DECON_HS = O.hash_array(O.word_shingles(O.tokens("text"), 8))
 
+# Both decontamination oracles drop per ROW, as both operator tiers do:
+# a row leaves iff its own key list meets the benchmark's key set, so a
+# clean duplicate-id twin stays and a contaminated NULL-id row goes (an
+# id-keyed NOT IN would drop the twin, drop every clean NULL-id row, and
+# drop everything once a contaminated id is NULL).
 _DECON_SQL = f"""
 WITH bench AS (
-  SELECT DISTINCT unnest({_DECON_HS}) AS h FROM documents WHERE doc_id < 20
-),
-contaminated AS (
-  SELECT DISTINCT d.doc_id
-  FROM (SELECT doc_id, unnest(list_distinct({_DECON_HS})) AS h
-        FROM documents) d
-  JOIN bench b ON d.h = b.h
+  SELECT list(DISTINCT h) AS hs
+  FROM (SELECT unnest({_DECON_HS}) AS h FROM documents WHERE doc_id < 20)
 )
-SELECT doc_id, n_chars FROM documents
-WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)
+SELECT doc_id, n_chars FROM documents, bench
+WHERE NOT coalesce(list_has_any({_DECON_HS}, bench.hs), false)
 """
 
 
@@ -2421,15 +2421,25 @@ def decontaminate(spark, sf):
 
 
 def _decon_fuzzy_sql() -> str:
+    keys = ", ".join(
+        f"'{b}:' || "
+        + " || ':' || ".join(
+            f"CAST(mh[{b * LSH_ROWS + r + 1}] AS VARCHAR)" for r in range(LSH_ROWS)
+        )
+        for b in range(LSH_BANDS)
+    )
     return f"""
-WITH {_lsh_ctes("corpus AS (SELECT doc_id, text FROM documents)")},
-bench AS (SELECT DISTINCT band, key FROM bands WHERE doc_id < 20),
-contaminated AS (
-  SELECT DISTINCT d.doc_id
-  FROM bands d JOIN bench b ON d.band = b.band AND d.key = b.key
+WITH t AS (SELECT doc_id, n_chars, {_HS} AS hs FROM documents),
+sig AS (SELECT doc_id, n_chars, len(hs) > 0 AS ok,
+               {O.minhash_signature('hs')} AS mh FROM t),
+k AS (SELECT doc_id, n_chars, CASE WHEN ok THEN [{keys}] ELSE [] END AS ks
+      FROM sig),
+bench AS (
+  SELECT list(DISTINCT x) AS ks
+  FROM (SELECT unnest(ks) AS x FROM k WHERE doc_id < 20)
 )
-SELECT doc_id, n_chars FROM documents
-WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)
+SELECT k.doc_id, k.n_chars FROM k, bench
+WHERE NOT coalesce(list_has_any(k.ks, bench.ks), false)
 """
 
 
@@ -3585,10 +3595,10 @@ def dedup_image_phash(spark, sf):
     (pigeonhole), which is exactly what the oracle computes
     (operators/dedup.py phash_near_dup_pairs; hashes from
     ml/multimodal.py image_phash in production)."""
-    from ..functions.hashing import md5_long as _md5l
+    from ..functions.hashing import md5_long_sql
 
-    base = _md5l(
-        F.concat(F.lit("g"), (F.col("doc_id") % _PHASH_GROUPS).cast("string"))
+    base = F.expr(
+        md5_long_sql(f"concat('g', CAST(doc_id % {_PHASH_GROUPS} AS STRING))")
     )
     noise = (F.col("doc_id") % 5).cast("int")
     mask = F.when(noise == 0, F.lit(_PHASH_MASKS[0]).cast("long"))
@@ -3981,13 +3991,13 @@ def mix_report(spark, sf):
     on the same pass, then a map-side-combined agg shuffles only the
     |sources| x |splits| cells — no join, unlike the oracle's two-pass
     SQL formulation."""
-    from ..functions.hashing import tokens
+    from ..functions.hashing import tokens_sql
 
-    docs = _t(spark, sf, "documents").select(
+    docs = _t(spark, sf, "documents").selectExpr(
         "doc_id",
         "source",
         "n_chars",
-        F.size(tokens(F.col("text"))).cast("long").alias("ws_tokens"),
+        f"CAST(size({tokens_sql('text')}) AS BIGINT) AS ws_tokens",
     )
     labeled = sampling.assign_split(docs, "doc_id", _SPLITS, seed=_SPLIT_SEED)
     return labeled.groupBy("source", "split").agg(
@@ -4430,10 +4440,10 @@ SELECT doc_id, CAST(i - 1 AS INT) AS pos, tk[i] AS token FROM idx
 @_q("explode_pos", _EXPLODE_POS_SQL)
 def explode_pos(spark, sf):
     docs = _t(spark, sf, "documents").filter(F.col("doc_id") < 50)
-    from ..functions.hashing import tokens as _tokens
+    from ..functions.hashing import tokens_sql
 
-    return docs.select(
-        "doc_id", F.posexplode(_tokens(F.col("text"))).alias("pos", "token")
+    return docs.selectExpr(
+        "doc_id", f"posexplode({tokens_sql('text')}) AS (pos, token)"
     )
 
 
@@ -4687,10 +4697,10 @@ def c4_line_filter(spark, sf):
     flags, kept lines reassembled. operators/text.py c4_line_filter;
     the input is linified from the word-soup documents by a shared
     deterministic SQL fragment (comment above)."""
-    from ..functions.hashing import tokens as _tk
+    from ..functions.hashing import tokens_sql
 
-    docs = _t(spark, sf, "documents").select(
-        "doc_id", _tk(F.col("text")).alias("_w")
+    docs = _t(spark, sf, "documents").selectExpr(
+        "doc_id", f"{tokens_sql('text')} AS _w"
     )
     lined = docs.select(
         "doc_id", F.expr(_C4_LINED_SPARK).alias("text")
@@ -5061,11 +5071,11 @@ def html_clean(spark, sf):
     the six ubiquitous entities decoded (&amp; last — single-pass),
     whitespace tidied; tag/entity audit counts measured on the input.
     Narrow regex chain, no shuffle (operators/web.py html_clean)."""
-    from ..functions.hashing import tokens as _tk
+    from ..functions.hashing import tokens_sql
     from ..operators import web
 
-    docs = _t(spark, sf, "documents").select(
-        "doc_id", _tk(F.col("text")).alias("_w")
+    docs = _t(spark, sf, "documents").selectExpr(
+        "doc_id", f"{tokens_sql('text')} AS _w"
     )
     html = docs.select("doc_id", F.expr(_HTML_SPARK).alias("text"))
     return web.html_clean(html)

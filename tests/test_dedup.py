@@ -1080,63 +1080,3 @@ def test_ngram_jaccard_df_cap_scores_capped_space_consistently(spark):
         for r in ngram_jaccard_pairs(df, df_cap=6).collect()
     }
     assert pairs[(100, 101)] == 1.0  # identical docs stay jaccard 1.0
-
-
-def test_sql_twins_match_column_forms(spark):
-    """The *_sql expression twins (round 16 — one parse instead of one
-    py4j round trip per node) must build EXACTLY the tree their Column
-    forms build: canonicalized-plan equality, not just value equality,
-    so a drift in either form fails here before it can change a plan
-    or a result."""
-    from retrieval_augmented_generation_rag_data_pipeline_spark.functions.hashing import (
-        hash_array,
-        hash_array_sql,
-        hash_pair_array,
-        hash_pair_array_sql,
-        md5_long,
-        md5_long_sql,
-        md5_pair,
-        md5_pair_sql,
-        tokens,
-        tokens_sql,
-        word_shingles,
-        word_shingles_sql,
-    )
-    from retrieval_augmented_generation_rag_data_pipeline_spark.operators.vectors import (
-        dot,
-        dot_sql,
-        l2_norm,
-        l2_norm_sql,
-    )
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        [(1, "a b c d e", [1.0, 2.0], [0.5, -1.0])],
-        "doc_id long, text string, u array<double>, v array<double>",
-    )
-
-    def same(c_form, sql_form):
-        # optimized (not analyzed) plans: the Column shingle builder
-        # writes `i + 0` for the first element, which constant-folds
-        # away — the EXECUTED trees must match, surface spelling may not
-        a = df.select(c_form.alias("x"))._jdf.queryExecution().optimizedPlan()
-        b = df.selectExpr(f"{sql_form} AS x")._jdf.queryExecution().optimizedPlan()
-        return a.sameResult(b)
-
-    assert same(tokens(F.col("text")), tokens_sql("`text`"))
-    assert same(
-        word_shingles(tokens(F.col("text")), 3),
-        word_shingles_sql(tokens_sql("`text`"), 3),
-    )
-    assert same(
-        hash_array(word_shingles(tokens(F.col("text")), 3)),
-        hash_array_sql(word_shingles_sql(tokens_sql("`text`"), 3)),
-    )
-    assert same(md5_long(F.col("text")), md5_long_sql("`text`"))
-    assert same(md5_pair(F.col("text")), md5_pair_sql("`text`"))
-    assert same(
-        hash_pair_array(tokens(F.col("text"))),
-        hash_pair_array_sql(tokens_sql("`text`")),
-    )
-    assert same(dot(F.col("u"), F.col("v")), dot_sql("`u`", "`v`"))
-    assert same(l2_norm(F.col("u")), l2_norm_sql("`u`"))

@@ -82,8 +82,55 @@ def _oracle_for(name: str, sql: str) -> str:
 def test_query_matches_oracle(spark, duck, name):
     fn, sql = REGISTRY[name]
     sql = _oracle_for(name, sql)
-    got = normalize(fn(spark, SF_DIR).toPandas())
-    exp = normalize(duck.execute(sql).fetchdf())
+    _assert_same(name, fn(spark, SF_DIR).toPandas(), duck.execute(sql).fetchdf())
+
+
+@pytest.mark.parametrize("name", ["decontaminate", "decontaminate_fuzzy"])
+def test_decontaminate_oracles_drop_per_row(spark, tmp_path, name):
+    """Both decontaminate oracles drop per row, like the operators: a
+    corpus with a duplicated id (one contaminated row, one clean twin)
+    and NULL ids (one contaminated row, one clean) must match row for
+    row. The benchmark is the corpus rows with doc_id < 20, so the
+    contaminated rows copy a benchmark row's text."""
+    src = f"{SF_DIR}/documents.parquet"
+    if os.path.isdir(src):
+        src = f"{src}/*.parquet"
+    clean = [
+        "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo",
+        "mike november oscar papa quebec romeo sierra tango uniform victor",
+    ]
+    con = duckdb.connect()
+    con.execute(
+        f"""COPY (
+          SELECT * FROM '{src}' WHERE doc_id < 60
+          UNION ALL
+          SELECT * REPLACE (CAST(900 AS BIGINT) AS doc_id)
+            FROM '{src}' WHERE doc_id = 3
+          UNION ALL
+          SELECT CAST(900 AS BIGINT), '{clean[0]}', 'en', 'web', {len(clean[0])}
+          UNION ALL
+          SELECT * REPLACE (CAST(NULL AS BIGINT) AS doc_id)
+            FROM '{src}' WHERE doc_id = 5
+          UNION ALL
+          SELECT CAST(NULL AS BIGINT), '{clean[1]}', 'en', 'web', {len(clean[1])}
+        ) TO '{tmp_path}/documents.parquet' (FORMAT PARQUET)"""
+    )
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'"
+    )
+    fn, sql = REGISTRY[name]
+    got = fn(spark, str(tmp_path)).toPandas()
+    exp = con.execute(sql).fetchdf()
+    con.close()
+    # the clean twin and the clean NULL-id row survive; their
+    # contaminated copies do not
+    assert sorted(got.n_chars[got.doc_id.isna()].tolist()) == [len(clean[1])]
+    assert sorted(got.n_chars[got.doc_id == 900].tolist()) == [len(clean[0])]
+    _assert_same(name, got, exp)
+
+
+def _assert_same(name: str, got: pd.DataFrame, exp: pd.DataFrame) -> None:
+    got, exp = normalize(got), normalize(exp)
     assert list(got.columns) == list(exp.columns), (
         f"{name} columns {list(got.columns)} != {list(exp.columns)}"
     )

@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 from retrieval_augmented_generation_rag_data_pipeline_spark.operators.text import chunk_text
 from retrieval_augmented_generation_rag_data_pipeline_spark.plans.pipeline import (
     embed_chunks,
-    mock_embed,
+    mock_embed_sql,
     run_once,
     search,
 )
@@ -27,7 +27,7 @@ def test_chunk_text_covers_all_words(spark):
 
 def test_mock_embed_deterministic_unit_norm(spark):
     df = spark.createDataFrame([("hello world",), ("hello world",), ("x",)], ["t"])
-    rows = df.select(mock_embed(F.col("t")).alias("e")).collect()
+    rows = df.selectExpr(f"{mock_embed_sql('t')} AS e").collect()
     assert rows[0].e == rows[1].e
     assert rows[0].e != rows[2].e
     assert sum(v * v for v in rows[0].e) == pytest.approx(1.0)

@@ -149,6 +149,40 @@ def test_construct_all_lazy_disable_and_local_props(spark):
         sc.setLocalProperty("spark.job.description", None)
 
 
+def test_positional_zip_join_jobs_run_in_callers_job_group(spark):
+    """positional_zip_join builds its two global indexes on
+    construct_all, so every construction job (checkpoints and stats
+    collects) carries the caller's job group: a group cancellation or
+    job description reaches them all."""
+    from retrieval_augmented_generation_rag_data_pipeline_spark.operators.joins import (
+        positional_zip_join,
+    )
+
+    sc = spark.sparkContext
+    dag = sc._jsc.sc().dagScheduler()
+    left = spark.range(40).selectExpr("id AS a", "id AS _ord")
+    right = spark.range(40).selectExpr("id * 2 AS b", "id AS _ord")
+    sc.setJobGroup("zip-join-group", "positional_zip_join construction")
+    try:
+        first = dag.nextJobId()
+        out = positional_zip_join(left, right)
+        last = dag.nextJobId()
+    finally:
+        for key in (
+            "spark.jobGroup.id",
+            "spark.job.description",
+            "spark.job.interruptOnCancel",
+        ):
+            sc.setLocalProperty(key, None)
+    fired = set(range(first, last))
+    assert fired, "global_index runs construction jobs"
+    grouped = set(sc.statusTracker().getJobIdsForGroup("zip-join-group"))
+    assert fired <= grouped, (sorted(fired), sorted(grouped))
+    assert sorted((r.a, r.b) for r in out.collect()) == [
+        (i, 2 * i) for i in range(40)
+    ]
+
+
 def test_no_row_at_a_time_python_in_headline_plans():
     """BatchEvalPython (row-at-a-time UDF) must never appear; the only
     Python in any headline plan is Arrow-vectorized."""

@@ -7,10 +7,10 @@ from pyspark.sql import functions as F
 
 from retrieval_augmented_generation_rag_data_pipeline_spark.operators.vectors import (
     ann_lsh_topk,
-    cosine,
-    dot,
+    dot_sql,
     knn_topk,
-    l2_normalize,
+    l2_norm_sql,
+    l2_normalize_sql,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -18,14 +18,14 @@ SF = "/root/testdata/sf0.001"
 
 def test_dot_and_norm(spark):
     df = spark.createDataFrame([([1.0, 2.0, 2.0], [2.0, 0.0, 1.0])], ["a", "b"])
-    row = df.select(
-        dot(F.col("a"), F.col("b")).alias("d"),
-        l2_normalize(F.col("a")).alias("n"),
-        cosine(F.col("a"), F.col("a")).alias("self_cos"),
+    row = df.selectExpr(
+        f"{dot_sql('a', 'b')} AS d",
+        f"{l2_normalize_sql('a')} AS n",
+        f"{l2_norm_sql('a')} AS norm",
     ).first()
     assert row.d == 4.0
     assert row.n == pytest.approx([1 / 3, 2 / 3, 2 / 3])
-    assert row.self_cos == pytest.approx(1.0)
+    assert row.norm == pytest.approx(3.0)
 
 
 def test_knn_full_k_equals_sorted_crossjoin(spark):
@@ -192,7 +192,7 @@ def test_dot_guard_raises_on_length_mismatch(spark):
     produces). The guard now comes first and must actually fire."""
     df = spark.createDataFrame([([1.0, 2.0], [1.0])], ["a", "b"])
     with pytest.raises(Exception, match="length mismatch"):
-        df.select(dot(F.col("a"), F.col("b")).alias("d")).collect()
+        df.selectExpr(f"{dot_sql('a', 'b')} AS d").collect()
 
 
 def test_dot_null_vector_yields_null_not_error(spark):
@@ -200,7 +200,7 @@ def test_dot_null_vector_yields_null_not_error(spark):
         [([1.0, 2.0], None), (None, [1.0, 2.0]), ([1.0, 2.0], [3.0, 4.0])],
         "a array<double>, b array<double>",
     )
-    rows = df.select(dot(F.col("a"), F.col("b")).alias("d")).collect()
+    rows = df.selectExpr(f"{dot_sql('a', 'b')} AS d").collect()
     assert [r.d for r in rows] == [None, None, 11.0]
 
 
@@ -705,7 +705,7 @@ def test_ann_paths_tolerate_zero_and_null_vectors(spark):
         ann_ivf_topk,
         ann_lsh_topk,
         knn_topk,
-        l2_normalize,
+        l2_normalize_sql,
     )
 
     dim = 8
@@ -720,9 +720,9 @@ def test_ann_paths_tolerate_zero_and_null_vectors(spark):
     assert got == {0}  # NULL-vector query emits nothing; job survives
     out2 = ann_lsh_topk(q.filter("query_id = 0"), corpus, k=3, dim=dim)
     assert all(r.query_id == 0 for r in out2.collect())
-    # l2_normalize of the zero vector: all-NULL, not a crash
-    z = corpus.filter("vec_id = 100").select(
-        l2_normalize(F.col("embedding")).alias("n")
+    # l2_normalize_sql of the zero vector: all-NULL, not a crash
+    z = corpus.filter("vec_id = 100").selectExpr(
+        f"{l2_normalize_sql('embedding')} AS n"
     ).collect()[0].n
     assert all(v is None for v in z)
 

@@ -54,7 +54,7 @@ from pyspark.sql import functions as F
 from retrieval_augmented_generation_rag_data_pipeline_spark.functions.artifacts import (
     corpus_fingerprint,
 )
-from retrieval_augmented_generation_rag_data_pipeline_spark.functions.hashing import tokens
+from retrieval_augmented_generation_rag_data_pipeline_spark.functions.hashing import tokens_sql
 from retrieval_augmented_generation_rag_data_pipeline_spark.session import get_spark
 
 MAX_VOCAB = 4096
@@ -97,7 +97,7 @@ def main() -> None:
             ),
             "doc_id",
         )
-        .withColumn("tk", tokens(F.col("text")))
+        .withColumn("tk", F.expr(tokens_sql("text")))
         .select("doc_id", "tk", "label")
     )
     cv = CountVectorizer(

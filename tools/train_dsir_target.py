@@ -33,7 +33,7 @@ sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 from retrieval_augmented_generation_rag_data_pipeline_spark.functions.artifacts import (
     corpus_fingerprint,
 )
-from retrieval_augmented_generation_rag_data_pipeline_spark.functions.hashing import tokens
+from retrieval_augmented_generation_rag_data_pipeline_spark.functions.hashing import tokens_sql
 from retrieval_augmented_generation_rag_data_pipeline_spark.session import get_spark
 
 MAX_VOCAB = 4096
@@ -56,7 +56,7 @@ def main() -> None:
 
     docs = spark.read.parquet(src).where(where)
     counts = (
-        docs.select(F.explode(tokens(F.col("text"))).alias("term"))
+        docs.selectExpr(f"explode({tokens_sql('text')}) AS term")
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("c"))
         .orderBy(F.desc("c"), F.asc("term"))
@@ -64,7 +64,7 @@ def main() -> None:
         .collect()
     )
     total = docs.select(
-        F.sum(F.size(tokens(F.col("text")))).alias("t")
+        F.expr(f"sum(size({tokens_sql('text')}))").alias("t")
     ).collect()[0]["t"]
     v = len(counts)
     denom = float(total + v + 1)

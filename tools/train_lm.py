@@ -62,7 +62,7 @@ from pyspark.sql import functions as F
 from retrieval_augmented_generation_rag_data_pipeline_spark.functions.artifacts import (
     corpus_fingerprint,
 )
-from retrieval_augmented_generation_rag_data_pipeline_spark.functions.hashing import tokens
+from retrieval_augmented_generation_rag_data_pipeline_spark.functions.hashing import tokens_sql
 from retrieval_augmented_generation_rag_data_pipeline_spark.session import get_spark
 
 MAX_VOCAB = 4096
@@ -79,7 +79,7 @@ def main() -> None:
     spark = get_spark("train_lm")
     counts = (
         spark.read.parquet(src)
-        .select(F.explode(tokens(F.col("text"))).alias("term"))
+        .selectExpr(f"explode({tokens_sql('text')}) AS term")
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("c"))
         .orderBy(F.desc("c"), F.asc("term"))
@@ -88,7 +88,7 @@ def main() -> None:
     )
     total = (
         spark.read.parquet(src)
-        .select(F.sum(F.size(tokens(F.col("text")))).alias("t"))
+        .selectExpr(f"sum(size({tokens_sql('text')})) AS t")
         .collect()[0]["t"]
     )
     v = len(counts)
@@ -97,7 +97,7 @@ def main() -> None:
     # conditional-bigram tier: adjacent (prev, tok) pairs via a
     # zip-with-shifted-self explode — one distributed pass each for the
     # pair counts and the per-context totals
-    toks_arr = tokens(F.col("text"))
+    toks_arr = F.expr(tokens_sql("text"))
     pairs = (
         spark.read.parquet(src)
         .select(
