@@ -1,7 +1,7 @@
-"""Expression-level let-binding for expensive column expressions.
+"""Expression-level let-binding for expensive SQL expressions.
 
 Why this exists: a staged projection
-(``.select(expensive(text).alias("_x"))``) protects an expensive
+(``.selectExpr(f"{expensive} AS _x")``) protects an expensive
 expression from duplication by CollapseProject (which refuses to inline
 non-cheap expressions referenced more than once) — but NOT from filter
 pushdown. ``PushPredicateThroughNonJoin`` substitutes the alias into
@@ -11,7 +11,7 @@ common-subexpression elimination. Measured in this repo: the Gopher
 quality predicate inlined a document tokenizer ~30x, 42s for 5k docs at
 sf0.1 (see operators/text.py:quality_filter).
 
-``let(x, body)`` compiles to ``transform(array(x), v -> body(v))[1]``:
+``let_sql(x, "v", body)`` compiles to ``transform(array(x), v -> body)[1]``:
 the array wraps the expensive expression so the lambda binds it to a
 variable evaluated ONCE per row however many times ``body`` references
 it — and the binding survives pushdown, alias substitution, and
@@ -19,36 +19,22 @@ projection collapse intact, because it is a single expression tree.
 
 NULL semantics: ``array(x)`` is a 1-element array containing NULL when
 x is NULL, so ``body`` still runs with a NULL argument (match whatever
-null behavior the unbound expression had). Nest ``let`` for derived
+null behavior the unbound expression had). Nest ``let_sql`` for derived
 values (tokens -> trigrams). Emit ALL downstream outputs as fields of
 one struct inside the innermost body so a pushed filter inlines exactly
 one evaluation.
 
-``let_sql`` is the same shape as SQL text, for chains whose bodies
-apply the ``*_sql`` primitives to the bound variable (a Column lambda
-variable cannot be spliced into SQL text).
+A lambda variable shadows a column of the same name inside ``body``,
+so a body that also reads an outer column names its variables apart
+from that column (``_``-prefixed names in this package).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-
-def let(value: Column, body: Callable[[Column], Column]) -> Column:
-    """Bind ``value`` to a per-row variable and evaluate ``body`` on it.
-
-    ``value`` is evaluated exactly once per row regardless of how many
-    times ``body`` references its argument, even after the optimizer
-    inlines the whole expression into a Filter or another Project.
-    """
-    return F.element_at(F.transform(F.array(value), body), 1)
-
 
 def let_sql(value: str, name: str, body: str) -> str:
-    """SQL text of ``let``: bind the SQL expression ``value`` to the
-    lambda variable ``name`` and evaluate ``body`` (SQL text that
-    refers to ``name``) on it, once per row."""
+    """Bind the SQL expression ``value`` to the lambda variable ``name``
+    and evaluate ``body`` (SQL text that refers to ``name``) on it, once
+    per row, even after the optimizer inlines the whole expression into
+    a Filter or another Project."""
     return f"element_at(transform(array({value}), {name} -> {body}), 1)"

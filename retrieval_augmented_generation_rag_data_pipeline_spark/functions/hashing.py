@@ -9,8 +9,7 @@ text, which callers splice into ``F.expr``/``selectExpr`` (one parse,
 where a Column tree costs one py4j round trip per node). Caller SQL is
 only ever spliced into a builder's higher-order-function ARRAY
 arguments, never into its lambda bodies, so a builder's lambda names
-cannot capture the caller's. ``minhash_signature`` and ``simhash16``
-also take a column NAME and return the parsed Column.
+cannot capture the caller's.
 
 The base hash is the first 15 hex chars of md5 parsed as a 60-bit
 non-negative int — md5 is bit-identical across engines, and 15 hex chars
@@ -21,9 +20,6 @@ hash, so a*h+b stays well inside int64 (a < 2^20, h' < 2^31).
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 from .binding import let_sql
 
@@ -127,14 +123,6 @@ def minhash_signature_sql(hashes_col: str) -> str:
     return f"array({slots})"
 
 
-def minhash_signature(hashes_col: str) -> Column:
-    """Column form of ``minhash_signature_sql`` (the expression is
-    emitted as one SQL string; the Column-API equivalent costs ~400
-    py4j calls to build, which dominates the query's own runtime at
-    bench scale)."""
-    return F.expr(minhash_signature_sql(hashes_col))
-
-
 def simhash16_sql(hashes_sql: str) -> str:
     """16-bit SimHash of a 60-bit hash array (one parse — a Column loop
     was ~2300 py4j round trips per construction).
@@ -148,12 +136,6 @@ def simhash16_sql(hashes_sql: str) -> str:
         for b in range(SIMHASH_BITS)
     )
     return f"(0 + {votes})"
-
-
-def simhash16(hashes: str) -> Column:
-    """``simhash16_sql`` over a column referenced by NAME, parsed (the
-    minhash_signature convention)."""
-    return F.expr(simhash16_sql(f"`{hashes}`"))
 
 
 def hyperplane_component(plane: int, dim: int) -> float:

@@ -7,7 +7,7 @@ src/embedding_engine.py:11); the Spark equivalent is the
 iterator-of-batches pandas UDF, which initializes once per python
 worker and streams Arrow batches through it.
 
-Heavy deps are import-gated: `*_available()` probes let callers pick
+Heavy deps are import-gated: `*_available()` probes tell callers to pick
 the deterministic fakes (plans.pipeline.mock_embed_sql, fake_transcribe)
 when torch/transformers are absent — which is always the case in this
 container, so these UDFs are exercised via the fakes in tests.

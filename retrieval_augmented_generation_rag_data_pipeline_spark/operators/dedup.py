@@ -36,13 +36,13 @@ from ..functions.hashing import (
     hash_array_sql,
     hash_pair_array_sql,
     md5_long_sql,
-    minhash_signature,
     minhash_signature_sql,
-    simhash16,
+    simhash16_sql,
     tokens_sql,
     word_shingles_sql,
 )
 from ..session import ensure_parallelism
+from .joins import sql_string
 
 
 def dedup_exact(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -116,10 +116,9 @@ def minhash_signatures(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3
 ) -> DataFrame:
     """(doc_id, mh_0..mh_{NUM_PERM-1}) MinHash signature over k-word shingles."""
-    sig = minhash_signature("_h")
-    return _shingle_hashes(df, id_col, text_col, k).select(
-        "doc_id",
-        *[sig[i].alias(f"mh_{i}") for i in range(NUM_PERM)],
+    sig = minhash_signature_sql("_h")
+    return _shingle_hashes(df, id_col, text_col, k).selectExpr(
+        "doc_id", *[f"{sig}[{i}] AS mh_{i}" for i in range(NUM_PERM)]
     )
 
 
@@ -248,7 +247,7 @@ def simhash_fingerprints(
         f"`{id_col}` AS doc_id",
         f"{hash_array_sql(tokens_sql(f'`{text_col}`'))} AS _h",
     )
-    return hashed.select("doc_id", simhash16("_h").alias("simhash"))
+    return hashed.selectExpr("doc_id", f"{simhash16_sql('_h')} AS simhash")
 
 
 def ngram_jaccard_pairs(
@@ -327,7 +326,6 @@ def verify_pairs_jaccard(
     text_col: str = "text",
     k: int = 3,
     threshold: float = 0.5,
-    strict: bool = True,
 ) -> DataFrame:
     """Re-score candidate pairs with their EXACT word-shingle Jaccard —
     the per-pair rerank that turns any sketch's candidates (LSH bands,
@@ -341,12 +339,11 @@ def verify_pairs_jaccard(
     engines, where round() can straddle a half-up tie like 1/128) and
     ``is_dup`` (jaccard >= threshold, int).
 
-    INPUT CONTRACT (``strict=True``, the default): every pair id must
-    exist in ``docs``, and at least one doc of each pair must yield
-    >= 1 shingle (text of >= k words). Pairs from
-    ``lsh_candidate_pairs`` satisfy both by construction, but this is
-    a public operator — arbitrary caller pairs with a missing id or
-    two shingle-less docs (a 0/0 jaccard) fail the job loudly via an
+    INPUT CONTRACT: every pair id must exist in ``docs``, and at least
+    one doc of each pair must yield >= 1 shingle (text of >= k words).
+    Pairs from ``lsh_candidate_pairs`` satisfy both by construction, but
+    this is a public operator — arbitrary caller pairs with a missing id
+    or two shingle-less docs (a 0/0 jaccard) fail the job loudly via an
     ``assert_true`` folded into ``jaccard`` (left joins, so a missing
     id reaches the guard instead of being silently inner-joined away).
     CAVEAT — read this before relying on the guard: it fires only when
@@ -354,16 +351,9 @@ def verify_pairs_jaccard(
     prunes BOTH columns (e.g. ``select("doc_a").count()``) never
     evaluates it and bad pairs pass silently.
 
-    ``strict=False`` opts into best-effort semantics for callers
-    feeding externally-sourced candidate pairs (a stale ledger, a
-    cross-corpus sketch): pairs whose ids are missing from ``docs``
-    are DROPPED (inner joins — the pre-round-9 behavior), no guard is
-    installed, and a 0/0 shingle-less pair emits NULL ``jaccard`` /
-    ``is_dup`` instead of aborting the job.
-
     Scale: two hash equi-joins against the per-doc shingle-set frame,
     per-row set intersection linear in doc length, and the
-    intersection size is let-bound (functions/binding.let) — unbound,
+    intersection size is let-bound (functions/binding.let_sql) — unbound,
     the jaccard + is_dup references would evaluate it 4x per pair.
     Output-bound: cost tracks the candidate count (measured in
     tools/scale_probe.py ``pair_verify``: pairs/sec RISES 72k -> 323k
@@ -378,7 +368,6 @@ def verify_pairs_jaccard(
     verify path already takes; under pinning_disabled() plan tooling
     still sees the full lineage).
     """
-    from ..functions.binding import let
     from .pinning import pin
 
     sh = pin(
@@ -398,40 +387,34 @@ def verify_pairs_jaccard(
     # args left-to-right, whereas Add short-circuits to NULL on a NULL
     # left operand without ever evaluating the guard — and jac is NULL
     # in exactly the inputs the guard exists to catch.
-    guard = F.assert_true(
-        F.col("_sa").isNotNull()
-        & F.col("_sb").isNotNull()
-        & ((F.size("_sa") + F.size("_sb")) > 0),
-        F.concat(
-            F.lit("verify_pairs_jaccard: pair ("),
-            F.col("doc_a").cast("string"),
-            F.lit(", "),
-            F.col("doc_b").cast("string"),
-            F.lit(") has an id missing from docs or two shingle-less"
-                  f" docs (both texts < {k} words)"),
-        ),
-    ).cast("double")
-    # strict: plain division — the guard (coalesce arg 1) aborts on the
-    # only zero-denominator input before division runs. non-strict:
-    # try_divide, so a 0/0 shingle-less pair yields NULL under ANSI
-    # mode instead of DIVIDE_BY_ZERO.
-    def _jac_body(i):
-        den = (F.size("_sa") + F.size("_sb") - i).cast("double")
-        return i / den if strict else F.try_divide(i, den)
-
-    jac = let(F.size(F.array_intersect("_sa", "_sb")).cast("long"), _jac_body)
-    how = "left" if strict else "inner"
+    # The intersection is plain-divided: the guard (coalesce arg 1)
+    # aborts on the only zero-denominator input before division runs.
+    msg = sql_string(
+        ") has an id missing from docs or two shingle-less"
+        f" docs (both texts < {k} words)"
+    )
+    guard = (
+        "CAST(assert_true(_sa IS NOT NULL AND _sb IS NOT NULL "
+        "AND size(_sa) + size(_sb) > 0, "
+        "concat('verify_pairs_jaccard: pair (', CAST(doc_a AS STRING), ', ', "
+        f"CAST(doc_b AS STRING), {msg})) AS DOUBLE)"
+    )
+    jac = let_sql(
+        "CAST(size(array_intersect(_sa, _sb)) AS BIGINT)",
+        "i",
+        "i / CAST(size(_sa) + size(_sb) - i AS DOUBLE)",
+    )
     joined = pairs.join(
         sh.select(F.col("doc_id").alias("doc_a"), F.col("s").alias("_sa")),
         "doc_a",
-        how,
+        "left",
     ).join(
         sh.select(F.col("doc_id").alias("doc_b"), F.col("s").alias("_sb")),
         "doc_b",
-        how,
+        "left",
     )
     return (
-        joined.withColumn("jaccard", F.coalesce(guard, jac) if strict else jac)
+        joined.withColumn("jaccard", F.expr(f"coalesce({guard}, {jac})"))
         .withColumn("is_dup", (F.col("jaccard") >= threshold).cast("int"))
         .drop("_sa", "_sb")
     )

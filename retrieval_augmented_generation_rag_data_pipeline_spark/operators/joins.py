@@ -217,7 +217,7 @@ def asof_align(
     chunk end, silently stealing a chunk from the next segment and
     shifting every later segment's text by one.
 
-    Expression transport (round 16, the minhash_signature lesson): the
+    Expression transport (round 16, the minhash_signature_sql lesson): the
     whole alignment is emitted as selectExpr/SQL strings — the Column
     API costs one py4j round trip per node, and this operator's ~1500
     nodes measured ~0.9 s of pure driver chatter per construction at

@@ -12,17 +12,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.binding import let, let_sql
+from ..functions.binding import let_sql
 from ..functions.hashing import (
     LSH_BANDS,
     hash_array_sql,
     md5_long_sql,
-    minhash_signature,
+    minhash_signature_sql,
     tokens_sql,
     word_shingles_sql,
 )
 from ..session import ensure_parallelism
-from .joins import small_side
+from .joins import small_side, sql_string
 
 # Tiny function-word profiles for the n-gram/stopword language heuristic.
 # Deterministic and engine-portable (plain array intersection counts).
@@ -128,51 +128,34 @@ def lang_id(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
     rate. Returns (doc_id, pred_lang, lang_score). Deterministic
     tie-break: higher score, then lexicographic language code.
 
-    The token array is let-bound (functions.binding.let): the
+    The token array is let-bound (functions.binding.let_sql): the
     per-language scores reference it NUM_LANGS+1 times, and a plain
     staged projection would re-tokenize per reference as soon as a
     caller filters on pred_lang (filter pushdown inlines the alias)."""
-
-    def with_tokens(toks):
-        # greatest(n, 1): an empty doc has n = 0 and the bare ratio dies
-        # with DIVIDE_BY_ZERO under Spark 4's default ANSI mode; guarded,
-        # every language scores 0.0 and the tie-break picks the lexico-
-        # graphically first code — same as the oracle's guarded form
-        n = F.greatest(F.size(toks), F.lit(1))
-        scores = []
-        for code, words in sorted(LANG_PROFILES.items()):
-            stop = F.array(*[F.lit(w) for w in words])
-            hits = F.size(F.filter(toks, lambda t: F.array_contains(stop, t)))
-            scores.append(
-                F.struct(
-                    (hits / n.cast("double")).alias("score"),
-                    F.lit(code).alias("code"),
-                )
-            )
-        # array_max on struct orders by (score, code); flip code ordering
-        # by sorting desc on score then asc on code via a two-step reduce.
-        best = F.aggregate(
-            F.array(*scores),
-            scores[0],
-            lambda acc, s: F.when(
-                (s["score"] > acc["score"])
-                | ((s["score"] == acc["score"]) & (s["code"] < acc["code"])),
-                s,
-            ).otherwise(acc),
-        )
-        return F.struct(
-            best["code"].alias("pred_lang"),
-            F.round(best["score"], 6).alias("lang_score"),
-        )
-
-    staged = df.select(
-        F.col(id_col).alias("doc_id"),
-        let(F.expr(tokens_sql(f"`{text_col}`")), with_tokens).alias("_m"),
+    # greatest(n, 1): an empty doc has n = 0 and the bare ratio dies
+    # with DIVIDE_BY_ZERO under Spark 4's default ANSI mode; guarded,
+    # every language scores 0.0 and the tie-break picks the lexico-
+    # graphically first code — same as the oracle's guarded form
+    scores = [
+        "struct(size(filter(toks, t -> array_contains(array("
+        + ", ".join(sql_string(w) for w in words)
+        + "), t))) / CAST(greatest(size(toks), 1) AS DOUBLE) AS score, "
+        f"{sql_string(code)} AS code)"
+        for code, words in sorted(LANG_PROFILES.items())
+    ]
+    best = (
+        f"aggregate(array({', '.join(scores)}), {scores[0]}, (acc, s) -> "
+        "CASE WHEN s.score > acc.score OR (s.score = acc.score AND "
+        "s.code < acc.code) THEN s ELSE acc END)"
     )
-    return staged.select(
-        "doc_id",
-        F.col("_m.pred_lang").alias("pred_lang"),
-        F.col("_m.lang_score").alias("lang_score"),
+    m = let_sql(
+        tokens_sql(f"`{text_col}`"),
+        "toks",
+        f"struct({best}.code AS pred_lang, round({best}.score, 6) AS lang_score)",
+    )
+    staged = df.selectExpr(f"`{id_col}` AS doc_id", f"{m} AS _m")
+    return staged.selectExpr(
+        "doc_id", "_m.pred_lang AS pred_lang", "_m.lang_score AS lang_score"
     )
 
 
@@ -228,7 +211,7 @@ def quality_score(
     style rules) as pure column arithmetic. The token array is
     let-bound and all metrics emitted as one struct, so a caller
     filtering on any metric (pushdown inlines the projection) still
-    tokenizes once per row — see functions.binding.let.
+    tokenizes once per row — see functions.binding.let_sql.
     """
     t = f"`{text_col}`"
     n_tok, punct, stop_ratio, mean_wlen, score = _quality_signals_sql(t, "toks")
@@ -315,7 +298,7 @@ def repetition_metrics(
 
     Pure per-row array arithmetic (tokens -> shingles -> distinct
     counts) — narrow, scan-side, no shuffle; empty/short docs yield 0.
-    Token and shingle arrays are let-bound (functions.binding.let): the
+    Token and shingle arrays are let-bound (functions.binding.let_sql): the
     old staged projection built THREE tokenize copies (one inside each
     shingle expr), and a pushed filter on any fraction would multiply
     that further.
@@ -521,10 +504,8 @@ def decontaminate_fuzzy(
         h = hash_array_sql(word_shingles_sql(tokens_sql(f"`{text}`"), k))
         return (
             df.select(payload.alias("_p"), F.expr(h).alias("_h"))
-            .select(
-                "_p",
-                (F.size("_h") > 0).alias("_ok"),
-                minhash_signature("_h").alias("_sig"),
+            .selectExpr(
+                "_p", "size(_h) > 0 AS _ok", f"{minhash_signature_sql('_h')} AS _sig"
             )
             .selectExpr("_p", f"CASE WHEN _ok THEN array({keys}) END AS _k")
         )
@@ -561,7 +542,7 @@ def quality_filter(
     reference (~30x here), and the duplicated higher-order lambdas get
     fresh variable ids, defeating codegen subexpression elimination —
     measured 42s for 5k docs at sf0.1 before this fix. The let-binding
-    idiom (functions.binding.let) binds the expensive array to a lambda
+    idiom (functions.binding.let_sql) binds the expensive array to a lambda
     variable evaluated once per row no matter how many times the body
     references it, and the whole expression survives pushdown intact.
     The token array and trigram array are nested bindings; all outputs
@@ -620,41 +601,31 @@ def vocab_entropy(
     documents; corpus-level distributions belong to ngram_topk/
     corpus_stats, not here. Empty docs yield 0.0.
     """
-    def with_tokens(toks):
-        def with_uniq(uniq):
-            n = F.size(toks).cast("double")
-            h = F.aggregate(
-                uniq,
-                F.lit(0.0),
-                lambda acc, t: acc
-                - (
-                    lambda p: p * F.log(p)
-                )(F.size(F.filter(toks, lambda x: x == t)).cast("double") / n),
-            )
-            return F.struct(
-                F.size(toks).cast("long").alias("n_tokens"),
-                F.size(uniq).cast("long").alias("n_distinct"),
-                # NULL text -> NULL entropy (size(NULL) > 0 is NULL and
-                # would fall into the 0.0 branch, stamping a concrete
-                # "maximally repetitive" score on an unmeasurable doc
-                # next to NULL counts); 0.0 stays the EMPTY-doc value
-                F.when(F.size(toks) > 0, F.round(h, 6))
-                .when(toks.isNotNull(), F.lit(0.0))
-                .otherwise(F.lit(None).cast("double"))
-                .alias("entropy"),
-            )
-
-        return let(F.array_sort(F.array_distinct(toks)), with_uniq)
-
-    staged = df.select(
-        F.col(id_col).alias("doc_id"),
-        let(F.expr(tokens_sql(f"`{text_col}`")), with_tokens).alias("_m"),
+    p = "CAST(size(filter(toks, x -> x = t)) AS DOUBLE) / CAST(size(toks) AS DOUBLE)"
+    h = f"aggregate(uniq, 0.0D, (acc, t) -> acc - ({p}) * ln({p}))"
+    # NULL text -> NULL entropy (size(NULL) > 0 is NULL and would fall
+    # into the 0.0 branch, stamping a concrete "maximally repetitive"
+    # score on an unmeasurable doc next to NULL counts); 0.0 stays the
+    # EMPTY-doc value
+    metrics = let_sql(
+        tokens_sql(f"`{text_col}`"),
+        "toks",
+        let_sql(
+            "array_sort(array_distinct(toks))",
+            "uniq",
+            "struct(CAST(size(toks) AS BIGINT) AS n_tokens, "
+            "CAST(size(uniq) AS BIGINT) AS n_distinct, "
+            f"CASE WHEN size(toks) > 0 THEN round({h}, 6) "
+            "WHEN toks IS NOT NULL THEN 0.0D "
+            "ELSE CAST(NULL AS DOUBLE) END AS entropy)",
+        ),
     )
-    return staged.select(
+    staged = df.selectExpr(f"`{id_col}` AS doc_id", f"{metrics} AS _m")
+    return staged.selectExpr(
         "doc_id",
-        F.col("_m.n_tokens").alias("n_tokens"),
-        F.col("_m.n_distinct").alias("n_distinct"),
-        F.col("_m.entropy").alias("entropy"),
+        "_m.n_tokens AS n_tokens",
+        "_m.n_distinct AS n_distinct",
+        "_m.entropy AS entropy",
     )
 
 
@@ -738,41 +709,31 @@ def pii_scrub(
     text), so counts equal actual replacements: an IP-shaped substring
     inside an email (user@1.2.3.4) is consumed by <EMAIL> and is not
     double-counted as an IP. The stage chain is LET-BOUND
-    (functions.binding.let), not staged projections: filter pushdown
+    (functions.binding.let_sql), not staged projections: filter pushdown
     substitutes projection aliases into pushed predicates (the exact
-    hazard let() exists for — see quality_filter), so a caller
+    hazard let_sql exists for — see quality_filter), so a caller
     filtering on n_phones or clean_text would otherwise re-run the
     whole regex chain inside the pushed Filter.
     """
-    t0 = F.col(text_col)
-
-    def with_t1(t1):
-        def with_t2(t2):
-            return F.struct(
-                F.regexp_replace(t2, PII_PHONE, "<PHONE>").alias("clean_text"),
-                F.size(F.regexp_extract_all(t0, F.lit(PII_EMAIL), 0))
-                .cast("long")
-                .alias("n_emails"),
-                F.size(F.regexp_extract_all(t1, F.lit(PII_IPV4), 0))
-                .cast("long")
-                .alias("n_ips"),
-                F.size(F.regexp_extract_all(t2, F.lit(PII_PHONE), 0))
-                .cast("long")
-                .alias("n_phones"),
-            )
-
-        return let(F.regexp_replace(t1, PII_IPV4, "<IP>"), with_t2)
-
-    staged = df.select(
-        F.col(id_col).alias("doc_id"),
-        let(F.regexp_replace(t0, PII_EMAIL, "<EMAIL>"), with_t1).alias("_m"),
+    t0 = f"`{text_col}`"
+    email, ipv4, phone = (sql_string(p) for p in (PII_EMAIL, PII_IPV4, PII_PHONE))
+    # the body also reads the text column, so the stage variables carry
+    # names no column is expected to have
+    counts = (
+        f"struct(regexp_replace(_t2, {phone}, '<PHONE>') AS clean_text, "
+        f"CAST(size(regexp_extract_all({t0}, {email}, 0)) AS BIGINT) AS n_emails, "
+        f"CAST(size(regexp_extract_all(_t1, {ipv4}, 0)) AS BIGINT) AS n_ips, "
+        f"CAST(size(regexp_extract_all(_t2, {phone}, 0)) AS BIGINT) AS n_phones)"
     )
-    return staged.select(
+    m = let_sql(
+        f"regexp_replace({t0}, {email}, '<EMAIL>')",
+        "_t1",
+        let_sql(f"regexp_replace(_t1, {ipv4}, '<IP>')", "_t2", counts),
+    )
+    staged = df.selectExpr(f"`{id_col}` AS doc_id", f"{m} AS _m")
+    return staged.selectExpr(
         "doc_id",
-        *[
-            F.col(f"_m.{c}").alias(c)
-            for c in ("clean_text", "n_emails", "n_ips", "n_phones")
-        ],
+        *[f"_m.{c} AS {c}" for c in ("clean_text", "n_emails", "n_ips", "n_phones")],
     )
 
 
@@ -1411,7 +1372,7 @@ def lm_cross_entropy_bigram(
     lesson in lm_cross_entropy's docstring).
 
     Plan (100 TB): one narrow pass builds (token, prev-token) pairs
-    with a zip-against-shifted-self (no self-join, no window), then
+    with an indexed transform (no self-join, no window), then
     THREE broadcast hash joins against metadata-sized frozen tables
     (unigram <= max_vocab, contexts <= max_vocab, pairs <=
     max_bigrams) and one partial-aggregating per-doc sum — the only
@@ -1430,31 +1391,19 @@ def lm_cross_entropy_bigram(
         "s string, t string, _blp double",
     )
     oov = float(lm["oov_logp"])
-    tk = F.expr(tokens_sql(f"`{text_col}`"))
-
-    # arrays_zip pads to the LONGER input, and the shifted side is
-    # [NULL] (length 1) for an empty token array — unguarded, an
-    # empty/whitespace-only doc would emit one bogus (NULL, NULL) pair
-    # instead of no rows (the unigram tier's explode drops it).
-    zipped = let(
-        tk,
-        lambda a: F.when(
-            F.size(a) > 0,
-            F.arrays_zip(
-                a.alias("t"),
-                F.concat(
-                    F.array(F.lit(None).cast("string")),
-                    F.slice(a, 1, F.greatest(F.size(a) - 1, F.lit(0))),
-                ).alias("s"),
-            ),
-        ).otherwise(F.array().cast("array<struct<t:string,s:string>>")),
+    # token i paired with token i-1 (NULL for the first); no tokens, no pairs
+    bigrams = let_sql(
+        tokens_sql(f"`{text_col}`"),
+        "toks",
+        "transform(toks, (t, i) -> "
+        "struct(t AS t, CASE WHEN i > 0 THEN toks[i - 1] END AS s))",
     )
     # key=id_col: the per-doc sum below is the seam's next shuffle
     # (the three broadcast joins preserve streamed-side partitioning),
     # so the keyed repartition is the only exchange (§2.4)
-    pairs = ensure_parallelism(docs, key=id_col).select(
-        F.col(id_col).alias("doc_id"), F.explode(zipped).alias("_p")
-    ).select("doc_id", F.col("_p.t").alias("t"), F.col("_p.s").alias("s"))
+    pairs = ensure_parallelism(docs, key=id_col).selectExpr(
+        f"`{id_col}` AS doc_id", f"explode({bigrams}) AS _p"
+    ).selectExpr("doc_id", "_p.t AS t", "_p.s AS s")
     scored = (
         pairs.join(F.broadcast(vocab), "t", "left")
         .join(F.broadcast(ctx), "s", "left")
@@ -1524,55 +1473,41 @@ def c4_line_filter(
     struct so a pushed ``keep`` predicate inlines exactly one split.
     Fully SQL-expressible -> real DuckDB oracle (plans/queries.py
     c4_line_filter)."""
-    t = F.col(text_col)
-
-    def p_punct(s: Column) -> Column:
-        return s.rlike(C4_TERMINAL_RE)
-
-    def p_words(s: Column) -> Column:
-        words = F.filter(F.split(s, _WS_CLASS), lambda w: w != F.lit(""))
-        return F.size(words) >= F.lit(int(min_words))
-
-    def p_marker(s: Column) -> Column:
-        return F.instr(F.lower(s), "javascript") == 0
-
-    def with_lines(ls: Column) -> Column:
-        kept = F.filter(ls, lambda s: p_punct(s) & p_words(s) & p_marker(s))
-        n_kept = F.size(kept)
-        has_lorem = F.instr(F.lower(t), "lorem ipsum") > 0
-        has_brace = F.instr(t, "{") > 0
-        keep = (
-            (n_kept >= F.lit(int(min_kept_lines))) & ~has_lorem & ~has_brace
-        )
-        return F.struct(
-            F.size(ls).cast("long").alias("n_lines"),
-            n_kept.cast("long").alias("n_kept"),
-            F.size(F.filter(ls, lambda s: ~p_punct(s)))
-            .cast("long")
-            .alias("n_drop_punct"),
-            F.size(F.filter(ls, lambda s: p_punct(s) & ~p_words(s)))
-            .cast("long")
-            .alias("n_drop_short"),
-            F.size(
-                F.filter(ls, lambda s: p_punct(s) & p_words(s) & ~p_marker(s))
-            )
-            .cast("long")
-            .alias("n_drop_marker"),
-            has_lorem.alias("has_lorem_ipsum"),
-            has_brace.alias("has_brace"),
-            keep.alias("keep"),
-            F.array_join(kept, "\n").alias("text_clean"),
-        )
-
+    t = f"`{text_col}`"
+    eol, nl = sql_string("\r?\n"), sql_string("\n")
+    punct = f"s RLIKE {sql_string(C4_TERMINAL_RE)}"
+    words = (
+        f"size(filter(split(s, {sql_string(_WS_CLASS)}), w -> w != '')) "
+        f">= {int(min_words)}"
+    )
+    marker = "instr(lower(s), 'javascript') = 0"
+    kept = f"filter(_lines, s -> ({punct}) AND ({words}) AND ({marker}))"
+    has_lorem = f"instr(lower({t}), 'lorem ipsum') > 0"
+    has_brace = f"instr({t}, '{{') > 0"
+    # the body also reads the text column, so the lines variable carries
+    # a name no column is expected to have
+    audit = (
+        "struct(CAST(size(_lines) AS BIGINT) AS n_lines, "
+        f"CAST(size({kept}) AS BIGINT) AS n_kept, "
+        f"CAST(size(filter(_lines, s -> NOT ({punct}))) AS BIGINT) AS n_drop_punct, "
+        f"CAST(size(filter(_lines, s -> ({punct}) AND NOT ({words}))) AS BIGINT) "
+        "AS n_drop_short, "
+        f"CAST(size(filter(_lines, s -> ({punct}) AND ({words}) AND NOT ({marker}))) "
+        "AS BIGINT) AS n_drop_marker, "
+        f"{has_lorem} AS has_lorem_ipsum, {has_brace} AS has_brace, "
+        f"size({kept}) >= {int(min_kept_lines)} AND NOT ({has_lorem}) "
+        f"AND NOT ({has_brace}) AS keep, "
+        f"array_join({kept}, {nl}) AS text_clean)"
+    )
     # split on \r?\n, not \n: a CRLF document would otherwise keep a
     # stray \r on every line — Java's rlike '$' matches BEFORE a final
     # \r (line-terminator semantics) while RE2/DuckDB's '$' does not,
     # so the terminal-punctuation rule would diverge between the two
-    # engines, and text_clean would carry \r bytes (F.trim strips
+    # engines, and text_clean would carry \r bytes (trim strips
     # spaces only)
-    lines = F.transform(F.split(t, "\r?\n"), lambda s: F.trim(s))
-    staged = df.select(
-        F.col(id_col).alias("doc_id"), let(lines, with_lines).alias("_m")
+    lines = f"transform(split({t}, {eol}), s -> trim(s))"
+    staged = df.selectExpr(
+        f"`{id_col}` AS doc_id", f"{let_sql(lines, '_lines', audit)} AS _m"
     )
     cols = [
         "n_lines",
@@ -1585,6 +1520,4 @@ def c4_line_filter(
         "keep",
         "text_clean",
     ]
-    return staged.select(
-        "doc_id", *[F.col(f"_m.{c}").alias(c) for c in cols]
-    )
+    return staged.selectExpr("doc_id", *[f"_m.{c} AS {c}" for c in cols])

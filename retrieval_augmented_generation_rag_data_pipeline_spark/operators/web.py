@@ -17,10 +17,11 @@ corpus itself never shuffles except for that capped window.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .joins import small_side
+from ..functions.binding import let_sql
+from .joins import small_side, sql_string
 from .sampling import seed_hash_sql
 
 # RE2-portable (no backreferences / lookaround, runs identically under
@@ -262,35 +263,27 @@ def canonicalize_url(
     with no scheme://host prefix pass through fragment-stripped but
     otherwise untouched. Narrow per-row string work; all regexes
     RE2-portable, so the DuckDB oracle replays it exactly."""
-    from ..functions.binding import let
-
-    def norm(u: Column) -> Column:
-        def with_nofrag(nf: Column) -> Column:
-            def with_prefix(pre: Column) -> Column:
-                def with_scheme(scheme: Column) -> Column:
-                    def with_user(user: Column) -> Column:
-                        head = F.length(scheme) + F.length(user)
-                        hostport = F.substring(
-                            nf, head + F.lit(1), F.length(pre) - head
-                        )
-                        rest = F.substring(
-                            nf, F.length(pre) + F.lit(1), F.length(nf)
-                        )
-                        return F.concat(
-                            F.lower(scheme), user, F.lower(hostport), rest
-                        )
-
-                    return let(
-                        F.regexp_extract(nf, USERINFO_RE, 1), with_user
-                    )
-
-                return let(F.regexp_extract(nf, SCHEME_RE, 1), with_scheme)
-
-            return let(F.regexp_extract(nf, PREFIX_RE, 1), with_prefix)
-
-        return let(F.regexp_replace(u, "#.*", ""), with_nofrag)
-
-    return df.withColumn(out_col, norm(F.col(url_col)))
+    head = "length(scheme) + length(userinfo)"
+    hostport = f"substring(nf, {head} + 1, length(pre) - ({head}))"
+    rest = "substring(nf, length(pre) + 1, length(nf))"
+    norm = let_sql(
+        f"regexp_replace(`{url_col}`, '#.*', '')",
+        "nf",
+        let_sql(
+            f"regexp_extract(nf, {sql_string(PREFIX_RE)}, 1)",
+            "pre",
+            let_sql(
+                f"regexp_extract(nf, {sql_string(SCHEME_RE)}, 1)",
+                "scheme",
+                let_sql(
+                    f"regexp_extract(nf, {sql_string(USERINFO_RE)}, 1)",
+                    "userinfo",
+                    f"concat(lower(scheme), userinfo, lower({hostport}), {rest})",
+                ),
+            ),
+        ),
+    )
+    return df.withColumn(out_col, F.expr(norm))
 
 
 def url_dedup(

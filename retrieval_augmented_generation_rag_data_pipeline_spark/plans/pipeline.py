@@ -172,7 +172,6 @@ def prepare_corpus(
     min_tokens: int = 8,
     min_quality: float = 0.3,
     max_dup_trigram: float = 0.3,
-    dedup_kwargs: dict | None = None,
 ) -> DataFrame:
     """Raw documents -> training-ready corpus ledger, in one call: the
     end-to-end hygiene pipeline a training-data team actually runs
@@ -186,10 +185,6 @@ def prepare_corpus(
          variants collapse under content dedup;
       3. ``dedup_corpus`` over the normalized text of quality-passing
          docs only (no point clustering docs already dropped);
-         ``dedup_kwargs`` passes straight through — including
-         ``survivor_scores=`` for best-member (max-score) survivor
-         selection instead of the min-id default (round-12 verdict
-         item 4; see ``dedup.resolve_survivors``);
       4. ``assign_split`` — deterministic train/val/test labels for the
          final keeps (hash-keyed: stable under reruns and corpus growth).
 
@@ -234,8 +229,7 @@ def prepare_corpus(
     # already holds. Duplicate ids (duplicate input rows) are harmless
     # — the closure groups by vertex.
     dd = dedup_corpus(
-        cand, id_col="doc_id", text_col="norm_text", vertices=keep_ids,
-        **(dedup_kwargs or {})
+        cand, id_col="doc_id", text_col="norm_text", vertices=keep_ids
     ).select("doc_id", "component_id", F.col("keep").alias("keep_dedup"))
     out = qf.join(dd, "doc_id", "left").withColumn(
         "keep", F.col("keep_quality") & F.coalesce(F.col("keep_dedup"), F.lit(False))

@@ -518,36 +518,6 @@ def test_verify_pairs_jaccard_contract_guard(spark):
     assert verify_pairs_jaccard(half, docs).collect()[0].jaccard == 0.0
 
 
-def test_verify_pairs_jaccard_non_strict(spark):
-    """strict=False opts into best-effort semantics for external
-    candidate pairs (round-9 advice): missing-id pairs DROP (inner
-    joins, the pre-round-9 behavior), a 0/0 shingle-less pair emits
-    NULL jaccard/is_dup instead of aborting, and well-formed pairs
-    score identically to strict mode."""
-    from retrieval_augmented_generation_rag_data_pipeline_spark.operators.dedup import (
-        verify_pairs_jaccard,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma delta"),
-            (2, "alpha beta gamma epsilon"),
-            (3, "xy"),  # < k=3 words -> zero shingles
-            (4, "zz"),  # < k=3 words -> zero shingles
-        ],
-        ["doc_id", "text"],
-    )
-    pairs = spark.createDataFrame(
-        [(1, 2), (1, 999), (3, 4)], ["doc_a", "doc_b"]
-    )
-    got = {
-        (r.doc_a, r.doc_b): r
-    for r in verify_pairs_jaccard(pairs, docs, strict=False).collect()}
-    assert set(got) == {(1, 2), (3, 4)}  # (1, 999) dropped, not raised
-    assert abs(got[(1, 2)].jaccard - 1.0 / 3.0) < 1e-12
-    assert got[(3, 4)].jaccard is None and got[(3, 4)].is_dup is None
-
-
 def test_ivf_append_guards_quantizer_mismatch(spark, tmp_path):
     """Appending to an index written with DIFFERENT centroids must
     raise BEFORE any rows land: the sidecar would record the new

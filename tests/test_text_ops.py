@@ -67,22 +67,23 @@ def test_quality_filter_pushed_predicate_tokenizes_once(spark):
 
 
 def test_let_binding_basics(spark):
-    """functions.binding.let: value evaluated per-row, NULL passes
+    """functions.binding.let_sql: value evaluated per-row, NULL passes
     through to the body, multi-reference bodies see one binding."""
-    from pyspark.sql import functions as F
-
-    from retrieval_augmented_generation_rag_data_pipeline_spark.functions.binding import let
+    from retrieval_augmented_generation_rag_data_pipeline_spark.functions.binding import let_sql
 
     df = spark.createDataFrame([("a b",), (None,)], "t string")
-    rows = df.select(
-        let(
-            F.split(F.col("t"), " "),
-            lambda tk: F.size(tk) + F.size(tk),  # two refs, one binding
-        ).alias("twice_n")
-    ).collect()
+    # two refs, one binding
+    twice = let_sql("split(t, ' ')", "tk", "size(tk) + size(tk)")
+    rows = df.selectExpr(f"{twice} AS twice_n").collect()
     # NULL input -> the body runs on a NULL binding (size(NULL) = NULL),
     # matching the unbound expression's null behavior
     assert [r.twice_n for r in rows] == [4, None]
+    # filtering on the result keeps the bound expression single: the
+    # body's two references read one variable
+    kept = df.filter(f"{twice} > 2")
+    plan = kept._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("split(") == 1, plan
+    assert [r.t for r in kept.collect()] == ["a b"]
 
 
 def test_lm_cross_entropy_monotonicity(spark):
