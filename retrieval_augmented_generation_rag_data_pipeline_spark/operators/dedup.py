@@ -1083,22 +1083,6 @@ def embedding_near_dup_pairs(
     )
 
 
-def _auto_assign_path(n_cells: int) -> str:
-    """``semantic_dedup``'s assign=None tiering (round-12 verdict
-    item 1 — paper-scale cell counts must get the fast path by
-    default): literal expressions up to ``CELL_LITERAL_MAX``,
-    bit-exact broadcast-table folds up to ``CELL_EXACT_AUTO_MAX``,
-    Arrow/GEMM past that (where the interpreted k x dim fold is
-    compute-infeasible at SemDeDup's own 50k-cells cost model)."""
-    from .vectors import CELL_EXACT_AUTO_MAX, CELL_LITERAL_MAX
-
-    if n_cells <= CELL_LITERAL_MAX:
-        return "literal"
-    if n_cells <= CELL_EXACT_AUTO_MAX:
-        return "table"
-    return "arrow"
-
-
 def semantic_dedup(
     emb: DataFrame,
     threshold: float,
@@ -1108,7 +1092,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_cell_size: int | None = None,
-    assign: str | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     "SemDeDup: Data-efficient learning at web-scale through semantic
@@ -1142,35 +1125,20 @@ def semantic_dedup(
     oracle; None uses the fixed pseudo-random family (deterministic,
     test/oracle baseline).
 
-    THREE ASSIGNMENT PATHS, switched on ``assign`` (None = auto,
-    tiered on cell count): up to ``vectors.CELL_LITERAL_MAX`` cells
-    the centroids ride the plan as expression literals (``ivf_cell``
-    — join-free, the gate/oracle baseline); up to
-    ``vectors.CELL_EXACT_AUTO_MAX`` they ride a broadcast centroid
-    TABLE + per-vector argmax (``assign_cells_table`` — plan size and
-    shuffle volume independent of cell count, measured in
-    tools/scale_probe.py ``semantic_table_assign``). Those two fold
-    the same doubles in the same order AND agree on NULL vectors
-    (NULL cell on both — round-12 advisory), so the assignment — and
-    therefore every downstream keep/drop — is identical between them
-    on every input row; ``assign="literal"`` / ``assign="table"``
-    forces a path (the parity test and the scale probe pin each
-    explicitly; ``table`` has no ceiling and is the choice where the
-    SQL oracle must replay a big-cell-count assignment bit-exactly;
-    ``assign="two_level"`` is the opt-in coarse->fine exact-FOLD
-    route for big k + a SQL oracle — ~2*sqrt(k) dots per row, exact
-    within the winning coarse group, the IVF-style approximation
-    documented on ``assign_cells_two_level``). PAST
-    ``CELL_EXACT_AUTO_MAX`` the auto path is ``assign="arrow"`` — the
-    raw-throughput variant (round-12 verdict item 1: the interpreted
-    k x dim fold is ~10x slower at 10k cells and compute-infeasible
-    at the paper's 50k cells x 5B embeddings, so paper-scale callers
-    must get the fast path WITHOUT knowing to ask): one numpy float64
-    GEMM per Arrow batch against an executor-broadcast centroid
-    matrix, argmax-under-GEMM rather than the bit-exact fold
-    (``assign_cells_arrow``'s parity caveat); on real embedding data
-    all three paths agree. The within-cell pairing below is identical
-    on every path.
+    Cell assignment is ``vectors.assign_cells``, tiered on the cell
+    count alone: centroids ride the plan as expression literals up to
+    ``vectors.CELL_LITERAL_MAX`` cells (the gate/oracle baseline), a
+    broadcast centroid TABLE + per-vector fold up to
+    ``vectors.CELL_EXACT_AUTO_MAX`` (plan size and shuffle volume
+    independent of cell count; tools/scale_probe.py
+    ``semantic_table_assign``), and one numpy GEMM per Arrow batch past
+    that (the interpreted k x dim fold is ~10x slower at 10k cells and
+    compute-infeasible at the paper's 50k cells x 5B embeddings). The
+    first two agree bit-for-bit on every row, NULL vectors included,
+    so the keep/drop output never depends on which of them ran; the
+    GEMM tier is argmax-under-float64 (``assign_cells_arrow``'s parity
+    caveat) and agrees with them on real embedding data. The
+    within-cell pairing below is identical on every tier.
 
     Scale (the SemDeDup cost model): the only quadratic stage is the
     within-cell self-join, so cell count must scale with the corpus —
@@ -1187,82 +1155,26 @@ def semantic_dedup(
     is narrow (no shuffle jobs at call time).
     """
     from .pinning import pin
-    from .vectors import (
-        assign_cells_table,
-        dot_sql,
-        ivf_cell,
-        ivf_centroid,
-        l2_norm_sql,
-    )
+    from .vectors import assign_cells, dot_sql, ivf_centroid, l2_norm_sql
 
-    if centroids is not None:
-        n_cells = len(centroids)
-    if assign not in (None, "literal", "table", "two_level", "arrow"):
-        raise ValueError(
-            f"semantic_dedup: assign must be None, 'literal', 'table', "
-            f"'two_level' or 'arrow', got {assign!r}"
-        )
-    if assign is None:
-        assign = _auto_assign_path(n_cells)
+    cents = (
+        centroids
+        if centroids is not None
+        else [ivf_centroid(c, dim) for c in range(n_cells)]
+    )
     # Per-pair work is the hot path (a cell of m vectors scores ~m^2/2
     # pairs), so the L2 norm is computed ONCE per vector here, pinned —
     # an inline per-pair cosine re-aggregates both norms for every pair
     # (measured 8.5s at sf0.1 vs 0.6s for this plan). Same doubles as
     # the oracle's inline norms: fold orders match, parity unchanged.
-    # ensure_parallelism on EVERY assignment path (round-15; was
-    # table/two_level only): the literal path's n_cells x dim
-    # interpreted dots also single-thread on a one-file scan —
-    # measured 2.6s -> 1.3s for the whole operator at sf0.1.
+    # ensure_parallelism once, on the spine, for every tier: the
+    # literal tier's n_cells x dim interpreted dots also single-thread
+    # on a one-file scan — measured 2.6s -> 1.3s for the whole operator
+    # at sf0.1 (round-15)
     spine = ensure_parallelism(emb).select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_v")
     )
-    if assign == "arrow":
-        # raw-throughput path (numpy GEMM per Arrow batch) — auto past
-        # CELL_EXACT_AUTO_MAX, opt-in below it; argmax-under-float64
-        # semantics, not the oracle's bit-exact fold — see
-        # assign_cells_arrow's parity caveat
-        from .vectors import assign_cells_arrow
-
-        cents = (
-            centroids
-            if centroids is not None
-            else [ivf_centroid(c, dim) for c in range(n_cells)]
-        )
-        assigned = assign_cells_arrow(spine, cents, "_v", out_col="_cell")
-    elif assign in ("table", "two_level"):
-        cents = (
-            centroids
-            if centroids is not None
-            else [ivf_centroid(c, dim) for c in range(n_cells)]
-        )
-        # >CELL_LITERAL_MAX cells means >=32k interpreted multiply-adds
-        # PER ROW — exactly the compute-bound shape ensure_parallelism
-        # exists for (a single-file local scan is ONE partition and
-        # would single-thread the whole assignment; at cluster scale
-        # the input is already split and this is a no-op)
-        if assign == "two_level":
-            # opt-in coarse->fine exact-fold route (~2*sqrt(k) dots per
-            # row, SQL-replayable, IVF-style approximation at coarse
-            # boundaries — see assign_cells_two_level's caveat)
-            from .vectors import assign_cells_two_level
-
-            assigned = assign_cells_two_level(
-                ensure_parallelism(spine),
-                cents,
-                vec_col="_v",
-                out_col="_cell",
-            )
-        else:
-            assigned = assign_cells_table(
-                ensure_parallelism(spine),
-                cents,
-                vec_col="_v",
-                out_col="_cell",
-            )
-    else:
-        assigned = spine.withColumn(
-            "_cell", ivf_cell("_v", dim, n_cells, centroids).cast("int")
-        )
+    assigned = assign_cells(spine, cents, "_v", out_col="_cell")
     base = pin(assigned.selectExpr("*", f"{l2_norm_sql('_v')} AS _n"))
     paired = base
     if max_cell_size is not None:

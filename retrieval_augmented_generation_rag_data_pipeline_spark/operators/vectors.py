@@ -375,15 +375,15 @@ def ivf_cell(
 # data rides a broadcast, not the plan.
 CELL_LITERAL_MAX = 512
 
-# Exact-fold ceiling for AUTO path selection: past this cell count the
+# Exact-fold ceiling of ``assign_cells``: past this cell count the
 # interpreted HOF fold (k x dim multiply-adds per row, ~10x slower
 # than the GEMM at 10k cells and growing with k — round-12 verdict
 # item 1) is compute-infeasible at SemDeDup's own cost model (50k
-# cells / 5B embeddings), so ``assign=None`` switches to the
-# Arrow/numpy-GEMM path. Callers that need the SQL-replayable
-# bit-exact fold above this count (oracle replay, parity harnesses)
-# pass assign="table" explicitly — the table path has no ceiling,
-# only the throughput trade documented on assign_cells_arrow.
+# cells / 5B embeddings), so the tier switches to the Arrow/numpy-GEMM
+# path. Code that must replay the bit-exact fold above this count
+# (oracle replay, parity harnesses) calls ``assign_cells_table``
+# directly — it has no ceiling, only the throughput trade documented
+# on assign_cells_arrow.
 CELL_EXACT_AUTO_MAX = 4096
 
 
@@ -455,11 +455,9 @@ def _cells_one_row(spark, centroids: list[list[float]]) -> DataFrame:
     leading c field, so array_sort restores cell-id order regardless of
     collect_list's arrival order)."""
     # Arrow pd.DataFrame path, not the row-pickling list path: at the
-    # paper's 50k cells the pickled build alone cost ~8s per job (the
-    # measurement that moved the two-level fine table to Arrow); the
-    # int64->INT cast below mirrors that table's struct pin
-    import pandas as pd
-
+    # paper's 50k cells the pickled build alone cost ~8s per job; Arrow
+    # infers int64, so the cast below pins the struct's c to INT to
+    # match the fold's typed NULL-cell init
     pdf = pd.DataFrame(
         {
             "_cc": list(range(len(centroids))),
@@ -499,203 +497,6 @@ def _table_guard_sql(vec_col: str, dim: int, who: str) -> str:
     )
 
 
-def group_centroids(
-    centroids: list[list[float]],
-    n_coarse: int | None = None,
-    seed: int = 42,
-    max_iter: int = 20,
-) -> tuple[list[list[float]], list[int]]:
-    """Cluster the FINE centroid table into coarse groups for
-    ``assign_cells_two_level`` — driver-side seeded numpy Lloyd's over
-    the k x dim centroid matrix (metadata-sized: the 50k x 64 paper
-    config is 3 MB; this is offline artifact work like
-    train_ivf_centroids, never a per-row cost). Returns
-    (coarse_centroids, fine_to_coarse) with every coarse group
-    non-empty; default ``n_coarse`` = ceil(sqrt(k)), the cost-balanced
-    choice (coarse dots == avg fine dots per row)."""
-    import hashlib
-    import math
-
-    import numpy as np
-
-    cmat = np.asarray(centroids, dtype=np.float64)
-    k = cmat.shape[0]
-    if n_coarse is None:
-        n_coarse = max(1, math.ceil(math.sqrt(k)))
-    n_coarse = min(n_coarse, k)
-    # memoized per process on the centroid BYTES (md5 of 25 MB ~ tens
-    # of ms vs ~11s of Lloyd's at 50k cells): repeated jobs against
-    # the same frozen quantizer — the deployment shape — pay the
-    # grouping once, like the frozen-artifact caches elsewhere
-    ckey = (
-        hashlib.md5(np.ascontiguousarray(cmat).tobytes()).hexdigest(),
-        n_coarse,
-        seed,
-        max_iter,
-    )
-    cached = _GROUPING_CACHE.get(ckey)
-    if cached is not None:
-        return cached
-    rng = np.random.RandomState(seed)
-    # k-means++-style farthest-point seeding (deterministic): a plain
-    # random draw of n_coarse seeds regularly lands two seeds in one
-    # natural cluster and zero in another, and Lloyd's cannot escape
-    # the split/merge — measured 88/100 flat-argmax agreement on a
-    # 16-anchor synthetic family vs 100/100 with spread seeds
-    seeds = [int(rng.randint(k))]
-    # cosine-family distance: smaller dot = farther
-    closeness = cmat @ cmat[seeds[0]]
-    for _ in range(n_coarse - 1):
-        nxt = int(np.argmin(closeness))
-        seeds.append(nxt)
-        closeness = np.maximum(closeness, cmat @ cmat[nxt])
-    coarse = cmat[seeds].copy()
-    for _ in range(max_iter):
-        # cosine-family geometry: nearest by max dot, matching the
-        # assignment rule the groups will serve
-        assign = np.argmax(cmat @ coarse.T, axis=1)
-        new = np.vstack(
-            [
-                cmat[assign == g].mean(axis=0)
-                if (assign == g).any()
-                else coarse[g]
-                for g in range(n_coarse)
-            ]
-        )
-        if np.allclose(new, coarse):
-            coarse = new
-            break
-        coarse = new
-    assign = np.argmax(cmat @ coarse.T, axis=1)
-    # an empty coarse group would strand its slot (assign_cells_two_level's
-    # left join would hand every vector routed there a NULL cell); reseat
-    # each empty group on the worst-fit fine centroid, drawing DONORS only
-    # from groups that keep >=1 member after the move — a naive global
-    # argmin can steal the sole member of an already-filled group and
-    # re-empty it. Pigeonhole guarantees a >=2-member donor group exists
-    # while any group is empty (k >= n_coarse), so this converges in at
-    # most n_coarse reseats.
-    while True:
-        counts = np.bincount(assign, minlength=n_coarse)
-        empties = np.flatnonzero(counts == 0)
-        if empties.size == 0:
-            break
-        g = int(empties[0])
-        fit = np.max(cmat @ coarse.T, axis=1)
-        fit[counts[assign] < 2] = np.inf  # sole members can't be donors
-        worst = int(np.argmin(fit))
-        coarse[g] = cmat[worst]
-        assign[worst] = g
-    assert np.bincount(assign, minlength=n_coarse).min() > 0, (
-        "group_centroids: empty coarse group after reseat"
-    )
-    out = (
-        [list(map(float, c)) for c in coarse],
-        [int(a) for a in assign],
-    )
-    _GROUPING_CACHE[ckey] = out
-    return out
-
-
-_GROUPING_CACHE: dict[tuple, tuple] = {}
-
-
-def assign_cells_two_level(
-    df: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str,
-    out_col: str = "_cell",
-    n_coarse: int | None = None,
-    grouping: tuple[list[list[float]], list[int]] | None = None,
-) -> DataFrame:
-    """Two-level coarse->fine cell assignment — the SQL-replayable
-    exact-FOLD family's paper-scale route (round-12 verdict item 1's
-    sketched alternative): instead of k dots per row, score ~sqrt(k)
-    coarse centroids (the flat ``assign_cells_table`` machinery), then
-    argmax over only the fine centroids grouped under the winning
-    coarse cell — ~2*sqrt(k) interpreted dots per row, EXACT WITHIN
-    THE SELECTED COARSE GROUP. At the paper's 50k cells that is ~450
-    dots/row instead of 50k (~100x less interpreted work), with every
-    dot still the oracle's sequential zip_with/aggregate fold over
-    shared literals — a DuckDB oracle replays both levels verbatim,
-    which ``assign_cells_arrow``'s GEMM cannot guarantee.
-
-    SEMANTICS CAVEAT (why this is opt-in and not the auto tier): the
-    result is the standard IVF-style approximation, not the flat
-    argmax — a vector whose true nearest fine centroid lives in a
-    NON-winning coarse group gets its group-local best instead
-    (agreement with flat argmax is high when the centroid table
-    clusters well; measured on the probe corpus in
-    tests/test_vectors.py). Deployments wanting bit-identical flat
-    argmax keep ``assign="table"``; deployments wanting raw speed use
-    ``assign="arrow"``; this path is for BOTH big k and a SQL oracle.
-
-    Plan shape: one BroadcastNestedLoopJoin against the one-row coarse
-    table (the flat path's shape at sqrt(k) size), then one
-    BroadcastHashJoin on the winning coarse id against an
-    n_coarse-row grouped-fine table — no shuffle on the stream side,
-    plan size independent of k. NULL vectors ride a left join to a
-    NULL cell, the family's NULL contract.
-
-    ``grouping`` injects a precomputed ``group_centroids`` result (the
-    frozen-artifact seam: compute once offline, replay its literals in
-    the oracle); None derives it here deterministically (seeded).
-    """
-    spark = df.sparkSession
-    coarse_cents, fine_to_coarse = (
-        grouping
-        if grouping is not None
-        else group_centroids(centroids, n_coarse=n_coarse)
-    )
-    coarse = assign_cells_table(
-        df, coarse_cents, vec_col, out_col="_coarse"
-    )
-    # the k-row fine table rides the Arrow createDataFrame path (one
-    # zero-copy batch), not the row-pickling default — at the paper's
-    # 50k cells the pickled build alone cost 8s per job, ~2x the
-    # assignment itself
-    fine_pdf = pd.DataFrame(
-        {
-            "_g": [int(g) for g in fine_to_coarse],
-            "_fc": list(range(len(centroids))),
-            "_fcent": [[float(x) for x in v] for v in centroids],
-        }
-    )
-    # Arrow infers int64 — pin the struct's c to INT so the fold's
-    # typed NULL-cell init matches
-    groups = spark.createDataFrame(fine_pdf).groupBy(
-        F.col("_g").cast("int").alias("_g")
-    ).agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col("_fc").cast("int").alias("c"),
-                    F.col("_fcent").alias("cent"),
-                )
-            )
-        ).alias("_fines")
-    )
-    # same strict-minimum fold as assign_cells_table, over the winning
-    # group's fine centroids; the row-level dim guard already fired in
-    # the coarse stage, so the fine fold can skip it (guard-once)
-    best = F.expr(
-        """aggregate(
-  transform(_fines, s -> named_struct('nd', %s, 'c', s.c)),
-  named_struct('nd', CAST('Infinity' AS DOUBLE), 'c', CAST(NULL AS INT)),
-  (acc, x) -> IF(x.nd < acc.nd, x, acc)).c"""
-        % _table_nd_sql(vec_col)
-    )
-    return (
-        coarse.join(
-            F.broadcast(groups),
-            coarse["_coarse"] == groups["_g"],
-            "left",
-        )
-        .withColumn(out_col, best.cast("int"))
-        .drop("_g", "_fines", "_coarse")
-    )
-
-
 def assign_cells_arrow(
     df: DataFrame,
     centroids: list[list[float]],
@@ -713,17 +514,17 @@ def assign_cells_arrow(
     sanctioned Pandas-UDF slow path for work the built-in operators
     cannot vectorize.
 
-    PARITY CAVEAT (why this is opt-in, never the oracle path): numpy
-    sums the dot products pairwise/SIMD, not in the oracle's
-    sequential fold order, so two centroids whose dots differ by under
-    ~1 ulp can rank differently than the literal/table paths. Ties
-    break to the LOWEST cell id (numpy argmax returns the first
-    maximum), matching the exact paths' rule — on real embedding data
-    exact cross-centroid ties don't occur and all three paths agree
-    (asserted on the test corpora), but the guarantee here is
-    argmax-under-float64-GEMM, not bit-parity. Use ``assign="table"``
-    where the SQL oracle must replay the assignment; use this where
-    throughput matters.
+    PARITY CAVEAT (why this is ``assign_cells``' tier only past
+    ``CELL_EXACT_AUTO_MAX``, never the oracle path): numpy sums the dot
+    products pairwise/SIMD, not in the oracle's sequential fold order,
+    so two centroids whose dots differ by under ~1 ulp can rank
+    differently than the literal/table paths. Ties break to the LOWEST
+    cell id (numpy argmax returns the first maximum), matching the
+    exact paths' rule — on real embedding data exact cross-centroid
+    ties don't occur and all three paths agree (asserted on the test
+    corpora), but the guarantee here is argmax-under-float64-GEMM, not
+    bit-parity. Call ``assign_cells_table`` where the SQL oracle must
+    replay the assignment; use this where throughput matters.
 
     NULL vectors get a NULL cell; a dim mismatch raises loudly from
     the batch (same contract as the guarded paths).
@@ -765,6 +566,37 @@ def assign_cells_arrow(
             yield res.astype("Int32")
 
     return df.withColumn(out_col, _cell(F.col(vec_col)))
+
+
+def assign_cells(
+    df: DataFrame,
+    centroids: list[list[float]],
+    vec_col: str,
+    out_col: str = "_cell",
+) -> DataFrame:
+    """Coarse-quantizer cell assignment, tiered on the centroid count
+    alone: literal expressions (``ivf_cell``) up to
+    ``CELL_LITERAL_MAX`` cells, the broadcast-table fold
+    (``assign_cells_table``) up to ``CELL_EXACT_AUTO_MAX``, the
+    Arrow/GEMM batch argmax (``assign_cells_arrow``) past it — a
+    paper-scale caller gets the fast path without asking for it.
+
+    The literal and table tiers fold the same doubles in the same
+    order and both give NULL vectors a NULL cell, so crossing
+    ``CELL_LITERAL_MAX`` never moves a vector's cell; the GEMM tier
+    carries ``assign_cells_arrow``'s parity caveat. Returns ``df``'s
+    columns plus an INT ``out_col``. Every tier is per-row compute:
+    size the stream side's partitioning first
+    (``session.ensure_parallelism``)."""
+    n_cells = len(centroids)
+    if n_cells <= CELL_LITERAL_MAX:
+        return df.withColumn(
+            out_col,
+            ivf_cell(vec_col, len(centroids[0]), n_cells, centroids).cast("int"),
+        )
+    if n_cells <= CELL_EXACT_AUTO_MAX:
+        return assign_cells_table(df, centroids, vec_col, out_col)
+    return assign_cells_arrow(df, centroids, vec_col, out_col)
 
 
 def probe_cells_table(
@@ -812,7 +644,6 @@ def ann_ivf_topk(
     n_cells: int = 8,
     nprobe: int = 2,
     centroids: list[list[float]] | None = None,
-    assign: str | None = None,
 ) -> DataFrame:
     """Approximate top-k via IVF (inverted-file) coarse quantization.
 
@@ -830,25 +661,20 @@ def ann_ivf_topk(
     tests/test_vectors.py::test_trained_centroids_beat_fixed). Probing
     all cells (nprobe = n_cells) degenerates to exact search.
 
-    ``assign`` switches the centroid transport exactly like
-    ``semantic_dedup``: None auto-selects the literal-expression path
-    up to ``CELL_LITERAL_MAX`` cells and the broadcast-centroid-TABLE
-    path (``assign_cells_table`` / ``probe_cells_table``) past it —
-    FAISS-scale IVF wants n_cells ~ sqrt(corpus), which outgrows plan
-    literals around a billion vectors. Both paths fold identical
-    doubles, so cell lists and the final top-k agree bit-for-bit
-    (tests/test_vectors.py::test_ivf_table_path_matches_literal).
+    The centroid transport is chosen by cell count alone: literal
+    expressions up to ``CELL_LITERAL_MAX`` cells, the
+    broadcast-centroid TABLE (``assign_cells_table`` /
+    ``probe_cells_table``) past it — FAISS-scale IVF wants n_cells ~
+    sqrt(corpus), which outgrows plan literals around a billion
+    vectors. Both fold identical doubles, so cell lists and the final
+    top-k agree bit-for-bit
+    (tests/test_vectors.py::test_ivf_table_path_matches_literal). There
+    is no GEMM tier (``assign_cells``' third): the probe side needs a
+    ranked cell list, which only the folds produce, and the corpus
+    cells must come from the same fold as the probes.
     """
     if centroids is not None:
         n_cells = len(centroids)
-    if assign not in (None, "literal", "table"):
-        raise ValueError(
-            f"ann_ivf_topk: assign must be None, 'literal' or 'table', "
-            f"got {assign!r}"
-        )
-    use_table = assign == "table" or (
-        assign is None and n_cells > CELL_LITERAL_MAX
-    )
     cb = corpus.select(
         F.col(corpus_id).alias(corpus_id), F.col(vec_col).alias("_cv")
     )
@@ -859,7 +685,7 @@ def ann_ivf_topk(
     qb = queries.filter(F.col(vec_col).isNotNull()).select(
         F.col(query_id).alias("query_id"), F.col(vec_col).alias("_qv")
     )
-    if use_table:
+    if n_cells > CELL_LITERAL_MAX:
         from ..session import ensure_parallelism
 
         cents = (
@@ -913,7 +739,6 @@ def ann_ivf_topk_indexed(
     n_cells: int = 8,
     nprobe: int = 2,
     centroids: list[list[float]] | None = None,
-    allow_missing_meta: bool = False,
 ) -> DataFrame:
     """IVF top-k over a PERSISTED inverted-list index
     (sources.sinks.write_ivf_index): reads ONLY the probed partitions.
@@ -938,37 +763,15 @@ def ann_ivf_topk_indexed(
     than the index was written with — would silently return wrong
     neighbors, so it raises instead. A MISSING sidecar (foreign or
     partially-written index) also raises — an unverifiable quantizer is
-    as dangerous as a mismatched one; pass ``allow_missing_meta=True``
-    only for indexes known to predate the sidecar.
+    as dangerous as a mismatched one (``sources.sinks.check_sidecar``).
     """
     if centroids is not None:
         n_cells = len(centroids)
-    from ..sources.sinks import ivf_meta, read_sidecar_text
+    from ..sources.sinks import check_sidecar, ivf_meta
 
-    raw = read_sidecar_text(spark, index_path.rstrip("/") + "/_ivf_meta.json")
-    if raw is None and not allow_missing_meta:
-        raise ValueError(
-            f"IVF index at {index_path} has no _ivf_meta.json sidecar; cannot "
-            "verify it was written with this probe's quantizer (dim/n_cells/"
-            "centroids/vec_col). Rebuild with write_ivf_index, or pass "
-            "allow_missing_meta=True for a pre-sidecar index you trust."
-        )
-    if raw is not None:
-        import json as _json
-
-        written = _json.loads(raw)
-        asked = ivf_meta(dim, n_cells, centroids, index_vec_col)
-        bad = {k: (written.get(k), asked[k]) for k in asked if written.get(k) != asked[k]}
-        if bad:
-            raise ValueError(
-                f"IVF index at {index_path} was written with a different "
-                f"quantizer than this probe: mismatched "
-                + ", ".join(
-                    f"{k} (index={w!r}, probe={a!r})" for k, (w, a) in bad.items()
-                )
-                + ". Probe with the same dim/n_cells/centroids/vec_col the "
-                "index was built with, or rebuild the index."
-            )
+    check_sidecar(
+        spark, index_path, "ivf", ivf_meta(dim, n_cells, centroids, index_vec_col)
+    )
     probes = F.expr(
         f"transform(slice({_cell_rank_sql('_qv', dim, n_cells, centroids)}, 1, {nprobe}), s -> s.c)"
     )
@@ -1362,7 +1165,6 @@ def ann_ivfpq_topk(
     n_cells: int = 8,
     nprobe: int = 2,
     centroids: list[list[float]] | None = None,
-    allow_missing_meta: bool = False,
 ) -> DataFrame:
     """IndexIVFPQ search over a persisted index
     (sources.sinks.write_ivfpq_index): partition-pruned scan of PQ codes
@@ -1375,39 +1177,18 @@ def ann_ivfpq_topk(
     ``_ivfpq_meta.json`` sidecar is asserted before probing — a
     different dim/n_cells/centroids/codebooks than the index was
     written with raises instead of silently returning wrong neighbors,
-    and so does a MISSING sidecar (unverifiable quantizer) unless
-    ``allow_missing_meta=True``.
+    and so does a MISSING sidecar (unverifiable quantizer).
     """
     if centroids is not None:
         n_cells = len(centroids)
-    from ..sources.sinks import ivf_meta, pq_meta, read_sidecar_text
+    from ..sources.sinks import check_sidecar, ivf_meta, pq_meta
 
-    raw = read_sidecar_text(spark, index_path.rstrip("/") + "/_ivfpq_meta.json")
-    if raw is None and not allow_missing_meta:
-        raise ValueError(
-            f"IVFPQ index at {index_path} has no _ivfpq_meta.json sidecar; "
-            "cannot verify it was written with this probe's quantizer "
-            "(dim/n_cells/centroids/codebooks). Rebuild with "
-            "write_ivfpq_index, or pass allow_missing_meta=True for a "
-            "pre-sidecar index you trust."
-        )
-    if raw is not None:
-        import json as _json
-
-        written = _json.loads(raw)
-        asked = ivf_meta(dim, n_cells, centroids, index_vec_col)
-        asked.update(pq_meta(codebooks))
-        bad = {k2: (written.get(k2), asked[k2]) for k2 in asked if written.get(k2) != asked[k2]}
-        if bad:
-            raise ValueError(
-                f"IVFPQ index at {index_path} was written with a different "
-                f"quantizer than this probe: mismatched "
-                + ", ".join(
-                    f"{k2} (index={w!r}, probe={a!r})" for k2, (w, a) in bad.items()
-                )
-                + ". Probe with the same dim/n_cells/centroids/codebooks "
-                "the index was built with, or rebuild the index."
-            )
+    check_sidecar(
+        spark,
+        index_path,
+        "ivfpq",
+        {**ivf_meta(dim, n_cells, centroids, index_vec_col), **pq_meta(codebooks)},
+    )
     m = len(codebooks)
     ksub = len(codebooks[0])
     probes = F.expr(

@@ -296,6 +296,36 @@ def pq_meta(codebooks: list[list[list[float]]]) -> dict:
     }
 
 
+def check_sidecar(spark: SparkSession, index_path: str, kind: str, asked: dict) -> None:
+    """Probe-side guard of an index written by ``write_{kind}_index``:
+    raise unless its ``_{kind}_meta.json`` sidecar exists and matches
+    ``asked`` (``ivf_meta``, plus ``pq_meta`` for IVFPQ) on every key.
+    A mismatched quantizer would silently return wrong neighbors, and a
+    missing sidecar (a foreign or partially-written index) leaves the
+    quantizer unverifiable, which is as dangerous."""
+    label = f"{kind.upper()} index at {index_path}"
+    params = "/".join(asked)
+    raw = read_sidecar_text(spark, f"{index_path.rstrip('/')}/_{kind}_meta.json")
+    if raw is None:
+        raise ValueError(
+            f"{label} has no _{kind}_meta.json sidecar; cannot verify it "
+            f"was written with this probe's quantizer ({params}). "
+            f"Rebuild with write_{kind}_index."
+        )
+    written = json.loads(raw)
+    bad = [
+        f"{k} (index={written.get(k)!r}, probe={v!r})"
+        for k, v in asked.items()
+        if written.get(k) != v
+    ]
+    if bad:
+        raise ValueError(
+            f"{label} was written with a different quantizer than this "
+            f"probe: mismatched {', '.join(bad)}. Probe with the same "
+            f"{params} the index was built with, or rebuild the index."
+        )
+
+
 def write_ivfpq_index(
     corpus: DataFrame,
     path: str,

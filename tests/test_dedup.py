@@ -922,40 +922,52 @@ def test_dedup_corpus_survivor_scores_promotes_best(spark):
     assert dflt[1] and not dflt[2]
 
 
-def test_semantic_dedup_auto_assign_tiers():
-    """assign=None tiering (round-12 verdict item 1): literal up to
-    CELL_LITERAL_MAX, bit-exact table fold up to CELL_EXACT_AUTO_MAX,
-    Arrow/GEMM past it — paper-scale cell counts get the fast path
-    without the caller knowing to ask."""
-    from retrieval_augmented_generation_rag_data_pipeline_spark.operators.dedup import (
-        _auto_assign_path,
-    )
+def test_semantic_dedup_auto_assign_tiers(spark):
+    """vectors.assign_cells (semantic_dedup's cell assignment) picks its
+    tier from the centroid count alone: literal up to CELL_LITERAL_MAX,
+    bit-exact table fold up to CELL_EXACT_AUTO_MAX, Arrow/GEMM past it
+    — paper-scale cell counts get the fast path without the caller
+    asking. Read from the built plan at both sides of each ceiling
+    (dim 2: the ceilings count cells, not literals)."""
     from retrieval_augmented_generation_rag_data_pipeline_spark.operators.vectors import (
         CELL_EXACT_AUTO_MAX,
         CELL_LITERAL_MAX,
+        assign_cells,
+        ivf_centroid,
     )
 
     assert CELL_LITERAL_MAX < 800, (
         "literal ceiling must sit below the 800-cell point where the "
         "round-11 probe measured ~130MB task binaries + an OOM"
     )
-    assert _auto_assign_path(CELL_LITERAL_MAX) == "literal"
-    assert _auto_assign_path(CELL_LITERAL_MAX + 1) == "table"
-    assert _auto_assign_path(CELL_EXACT_AUTO_MAX) == "table"
-    assert _auto_assign_path(CELL_EXACT_AUTO_MAX + 1) == "arrow"
-    assert _auto_assign_path(50_000) == "arrow"  # the paper's config
+    one = spark.createDataFrame([(1, [0.5, -0.25])], "vec_id int, _v array<double>")
+    cents = [ivf_centroid(c, 2) for c in range(CELL_EXACT_AUTO_MAX + 1)]
+
+    def tier(n_cells):
+        df = assign_cells(one, cents[:n_cells], "_v")
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        if "ArrowEvalPython" in plan:
+            return "arrow"
+        return "table" if "BroadcastNestedLoopJoin" in plan else "literal"
+
+    assert tier(CELL_LITERAL_MAX) == "literal"
+    assert tier(CELL_LITERAL_MAX + 1) == "table"
+    assert tier(CELL_EXACT_AUTO_MAX) == "table"
+    assert tier(CELL_EXACT_AUTO_MAX + 1) == "arrow"
 
 
 def test_semantic_dedup_auto_arrow_matches_forced_arrow(spark):
-    """Past CELL_EXACT_AUTO_MAX, assign=None must take the GEMM path:
-    same keep/drop output as assign='arrow' on a planted near-dup
-    corpus, at a cell count where the interpreted folds would be the
-    wrong default."""
+    """Past CELL_EXACT_AUTO_MAX, semantic_dedup must take the GEMM path:
+    every vector lands in the cell assign_cells_arrow gives it on a
+    corpus with planted exact duplicates, and each planted copy drops
+    in favour of its lower-id original, at a cell count where the
+    interpreted folds would be the wrong default."""
     from retrieval_augmented_generation_rag_data_pipeline_spark.operators.dedup import (
         semantic_dedup,
     )
     from retrieval_augmented_generation_rag_data_pipeline_spark.operators.vectors import (
         CELL_EXACT_AUTO_MAX,
+        assign_cells_arrow,
         ivf_centroid,
     )
 
@@ -963,21 +975,24 @@ def test_semantic_dedup_auto_arrow_matches_forced_arrow(spark):
         spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
         .limit(40)
     )
+    corpus = emb.unionByName(emb.withColumn("vec_id", F.col("vec_id") + 100000))
     cents = [
         ivf_centroid(c, 64) for c in range(CELL_EXACT_AUTO_MAX + 8)
     ]
-    key = lambda rows: sorted(
-        (r.vec_id, r.cell, r.keep, r.dup_of) for r in rows
-    )
-    auto = key(
-        semantic_dedup(emb, threshold=0.95, dim=64, centroids=cents).collect()
-    )
-    forced = key(
-        semantic_dedup(
-            emb, threshold=0.95, dim=64, centroids=cents, assign="arrow"
+    auto = {
+        r.vec_id: r
+        for r in semantic_dedup(
+            corpus, threshold=0.999, dim=64, centroids=cents
         ).collect()
-    )
-    assert auto == forced
+    }
+    forced = {
+        r.vec_id: r._cell
+        for r in assign_cells_arrow(corpus, cents, "embedding").collect()
+    }
+    assert {v: r.cell for v, r in auto.items()} == forced
+    for r in emb.select("vec_id").collect():
+        assert auto[r.vec_id].keep
+        assert auto[r.vec_id + 100000].dup_of == r.vec_id
 
 
 def test_resolve_survivors_duplicate_score_rows_cannot_multiply(spark):

@@ -318,8 +318,8 @@ def test_interval_join_is_hash_join_not_nested_loop(spark):
 
 
 def test_indexed_probe_guards(spark, tmp_path):
-    """Missing meta sidecar raises (unverifiable quantizer) unless
-    allow_missing_meta; interval_join refuses a colliding '_b' column."""
+    """A missing meta sidecar raises (unverifiable quantizer) on both
+    persisted probes; interval_join refuses a colliding '_b' column."""
     import os
 
     import pytest
@@ -330,9 +330,12 @@ def test_indexed_probe_guards(spark, tmp_path):
     )
     from retrieval_augmented_generation_rag_data_pipeline_spark.operators.vectors import (
         ann_ivf_topk_indexed,
+        ann_ivfpq_topk,
+        default_pq_codebooks,
     )
     from retrieval_augmented_generation_rag_data_pipeline_spark.sources.sinks import (
         write_ivf_index,
+        write_ivfpq_index,
     )
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
@@ -344,11 +347,15 @@ def test_indexed_probe_guards(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="no _ivf_meta.json"):
         ann_ivf_topk_indexed(spark, path, q, k=3, dim=64, n_cells=8, nprobe=2)
-    # escape hatch for pre-sidecar indexes
-    out = ann_ivf_topk_indexed(
-        spark, path, q, k=3, dim=64, n_cells=8, nprobe=2, allow_missing_meta=True
-    )
-    assert out.count() > 0
+
+    books = default_pq_codebooks(64, m=8, ksub=16)
+    pq_path = str(tmp_path / "ivfpq_nometa")
+    write_ivfpq_index(emb, pq_path, dim=64, codebooks=books, n_cells=8)
+    os.remove(pq_path + "/_ivfpq_meta.json")
+    with pytest.raises(ValueError, match="no _ivfpq_meta.json"):
+        ann_ivfpq_topk(
+            spark, pq_path, q, k=3, dim=64, codebooks=books, n_cells=8, nprobe=2
+        )
 
     pts = spark.createDataFrame([(1, 5.0, 7)], ["id", "ts", "_b"])
     iv = spark.createDataFrame([(0.0, 10.0)], ["lo", "hi"])

@@ -324,9 +324,24 @@ def test_table_assignment_matches_literal(spark):
     assert lit_row.c is None
 
 
-def test_semantic_dedup_table_path_matches_literal(spark):
-    """Forcing assign='table' must reproduce the literal path's full
-    (keep, dup_of, cell) output — the auto-switch is pure plumbing."""
+def _plan(build) -> str:
+    """Executed plan of ``build()`` with lineage pins off, so the cell
+    assignment tier shows (a pin hides it behind the checkpoint)."""
+    from retrieval_augmented_generation_rag_data_pipeline_spark.operators.pinning import (
+        pinning_disabled,
+    )
+
+    with pinning_disabled():
+        return build()._jdf.queryExecution().executedPlan().toString()
+
+
+def test_semantic_dedup_table_path_matches_literal(spark, monkeypatch):
+    """The table tier (forced by lowering vectors.CELL_LITERAL_MAX under
+    the 8-cell count) must reproduce the literal tier's full
+    (keep, dup_of, cell) output — the tier switch is pure plumbing."""
+    from retrieval_augmented_generation_rag_data_pipeline_spark.operators import (
+        vectors,
+    )
     from retrieval_augmented_generation_rag_data_pipeline_spark.operators.dedup import (
         semantic_dedup,
     )
@@ -335,46 +350,45 @@ def test_semantic_dedup_table_path_matches_literal(spark):
     key = lambda rows: sorted(  # noqa: E731
         (r.vec_id, r.cell, r.keep, r.dup_of, r.cos_max) for r in rows
     )
-    lit = key(
-        semantic_dedup(emb, 0.35, 64, n_cells=8, assign="literal").collect()
-    )
-    tab = key(
-        semantic_dedup(emb, 0.35, 64, n_cells=8, assign="table").collect()
-    )
+    run = lambda: semantic_dedup(emb, 0.35, 64, n_cells=8)  # noqa: E731
+    assert "_cents" not in _plan(run)
+    lit = key(run().collect())
+    monkeypatch.setattr(vectors, "CELL_LITERAL_MAX", 4)
+    assert "_cents" in _plan(run)
+    tab = key(run().collect())
     assert lit == tab and len(lit) == emb.count()
 
 
-def test_ivf_table_path_matches_literal(spark):
-    """ann_ivf_topk's table path must reproduce the literal path's full
-    top-k (ids, sims, ranks) — probes and assignments fold identical
-    doubles, so the result sets are bit-equal, not merely same-recall."""
-    from retrieval_augmented_generation_rag_data_pipeline_spark.operators.vectors import (
-        ann_ivf_topk,
-        frozen_quantizer,
+def test_ivf_table_path_matches_literal(spark, monkeypatch):
+    """ann_ivf_topk's table path (forced by lowering
+    vectors.CELL_LITERAL_MAX under the 8-cell count) must reproduce the
+    literal path's full top-k (ids, sims, ranks) — probes and
+    assignments fold identical doubles, so the result sets are
+    bit-equal, not merely same-recall."""
+    from retrieval_augmented_generation_rag_data_pipeline_spark.operators import (
+        vectors,
     )
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    trained, _ = frozen_quantizer()
+    trained, _ = vectors.frozen_quantizer()
     key = lambda rows: sorted(  # noqa: E731
         (r.query_id, r.vec_id, r.sim, r.rank) for r in rows
     )
+
+    literal_max = vectors.CELL_LITERAL_MAX
     for cents in (None, trained):
-        lit = key(
-            ann_ivf_topk(
-                q, emb, k=5, dim=64, nprobe=2, centroids=cents,
-                assign="literal",
-            ).collect()
-        )
-        tab = key(
-            ann_ivf_topk(
-                q, emb, k=5, dim=64, nprobe=2, centroids=cents,
-                assign="table",
-            ).collect()
-        )
-        assert lit == tab and len(lit) == 25
+        got = {}
+        for ceiling in (literal_max, 4):
+            monkeypatch.setattr(vectors, "CELL_LITERAL_MAX", ceiling)
+            run = lambda: vectors.ann_ivf_topk(  # noqa: E731
+                q, emb, k=5, dim=64, nprobe=2, centroids=cents
+            )
+            got[ceiling] = ("_cents" in _plan(run), key(run().collect()))
+        assert got[literal_max][0] is False and got[4][0] is True
+        assert got[literal_max][1] == got[4][1] and len(got[4][1]) == 25
 
 
 def test_arrow_assignment_agrees_on_real_data(spark):
@@ -425,11 +439,13 @@ def test_arrow_assignment_agrees_on_real_data(spark):
         ).collect()
 
 
-def test_semantic_dedup_arrow_path_matches_exact_paths(spark):
-    """assign='arrow' reproduces the literal path's full output on the
-    test corpus (no dot ties on real data), and rejects unknown modes."""
-    import pytest
-
+def test_semantic_dedup_arrow_path_matches_exact_paths(spark, monkeypatch):
+    """The arrow tier (forced by lowering both vectors.CELL_* ceilings
+    under the 8-cell count) reproduces the literal tier's full output
+    on the test corpus (no dot ties on real data)."""
+    from retrieval_augmented_generation_rag_data_pipeline_spark.operators import (
+        vectors,
+    )
     from retrieval_augmented_generation_rag_data_pipeline_spark.operators.dedup import (
         semantic_dedup,
     )
@@ -438,191 +454,12 @@ def test_semantic_dedup_arrow_path_matches_exact_paths(spark):
     key = lambda rows: sorted(  # noqa: E731
         (r.vec_id, r.cell, r.keep, r.dup_of, r.cos_max) for r in rows
     )
-    lit = key(semantic_dedup(emb, 0.35, 64, n_cells=8, assign="literal").collect())
-    arw = key(semantic_dedup(emb, 0.35, 64, n_cells=8, assign="arrow").collect())
-    assert lit == arw
-    with pytest.raises(ValueError, match="assign"):
-        semantic_dedup(emb, 0.35, 64, assign="gpu")
-
-
-def test_two_level_assignment_exact_within_group(spark):
-    """assign_cells_two_level: ~2*sqrt(k) dots per row, exact within
-    the winning coarse group — for every vector the chosen fine cell
-    must be the flat-argmax BEST among the fine centroids of its
-    winning coarse group (computed independently in numpy here), and
-    agreement with the flat argmax must be high on the probe corpus
-    (the IVF-style approximation caveat, quantified). NULL vectors get
-    the family's NULL cell."""
-    import numpy as np
-
-    from retrieval_augmented_generation_rag_data_pipeline_spark.operators.vectors import (
-        assign_cells_table,
-        assign_cells_two_level,
-        group_centroids,
-        ivf_centroid,
-    )
-
-    emb = (
-        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        .limit(100)
-        .select("vec_id", F.col("embedding").alias("_v"))
-    )
-    cents = [ivf_centroid(c, 64) for c in range(256)]
-    grouping = group_centroids(cents)
-    coarse_cents, fine_to_coarse = grouping
-    two = {
-        r.vec_id: r._cell
-        for r in assign_cells_two_level(
-            emb, cents, "_v", grouping=grouping
-        ).collect()
-    }
-    flat = {
-        r.vec_id: r._cell
-        for r in assign_cells_table(emb, cents, "_v").collect()
-    }
-    vecs = {r.vec_id: np.array(r._v) for r in emb.collect()}
-    cmat = np.asarray(cents)
-    co = np.asarray(coarse_cents)
-    f2c = np.asarray(fine_to_coarse)
-    for vid, v in vecs.items():
-        g = int(np.argmax(v @ co.T))  # winning coarse group
-        members = np.where(f2c == g)[0]
-        best = int(members[np.argmax(v @ cmat[members].T)])
-        assert two[vid] == best, (vid, two[vid], best)
-    del flat  # exactness holds on ANY family; agreement is tested below
-    # NULL contract
-    one = spark.createDataFrame([(1, None)], "vec_id int, _v array<double>")
-    assert (
-        assign_cells_two_level(one, cents, "_v", grouping=grouping)
-        .first()
-        ._cell
-        is None
-    )
-
-
-def test_two_level_agreement_on_clustered_centroids(spark):
-    """The IVF premise, quantified: when the fine centroid table has
-    cluster structure (as k-means-trained centroids do — the
-    deployment case), the two-level winner agrees with the flat argmax
-    almost always. On an ISOTROPIC random family the coarse level
-    carries no signal and agreement collapses (~28/100 measured on
-    the 256-cell pseudo-random family) — which is exactly why
-    two_level is opt-in with a documented caveat, not the auto tier.
-    This builds 16 anchor directions with 16 tightly-packed fine
-    centroids each; group_centroids must recover the anchors and the
-    two-level assignment must then match flat argmax >= 95%."""
-    import numpy as np
-
-    from retrieval_augmented_generation_rag_data_pipeline_spark.operators.vectors import (
-        assign_cells_table,
-        assign_cells_two_level,
-        group_centroids,
-        ivf_centroid,
-    )
-
-    rng = np.random.RandomState(7)
-    anchors = rng.normal(size=(16, 64))
-    anchors /= np.linalg.norm(anchors, axis=1, keepdims=True)
-    fine = []
-    for c in range(256):
-        v = anchors[c % 16] + 0.08 * rng.normal(size=64)
-        fine.append([float(x) for x in v / np.linalg.norm(v)])
-    # queries drawn from the SAME clustered distribution — the
-    # deployment geometry (centroids are k-means output OF the data,
-    # so data and centroids share structure); an isotropic query set
-    # against clustered centroids reads ~62/100 because near-tied
-    # anchor clusters flip the global argmax
-    qs = []
-    for i in range(100):
-        v = anchors[i % 16] + 0.15 * rng.normal(size=64)
-        qs.append((i, [float(x) for x in v / np.linalg.norm(v)]))
-    emb = spark.createDataFrame(qs, "vec_id int, _v array<double>")
-    grouping = group_centroids(fine, n_coarse=16)
-    two = {
-        r.vec_id: r._cell
-        for r in assign_cells_two_level(
-            emb, fine, "_v", grouping=grouping
-        ).collect()
-    }
-    flat = {
-        r.vec_id: r._cell
-        for r in assign_cells_table(emb, fine, "_v").collect()
-    }
-    agree = sum(two[k] == flat[k] for k in flat)
-    assert agree / len(flat) >= 0.95, f"agreement {agree}/{len(flat)}"
-
-
-def test_semantic_dedup_two_level_drops_planted_dups(spark):
-    """semantic_dedup(assign='two_level') preserves the dedup
-    semantics: planted exact-duplicate vectors land in the same cell
-    on ANY assignment (identical vectors always share a winning
-    group) and the lower-id copy survives."""
-    from retrieval_augmented_generation_rag_data_pipeline_spark.operators.dedup import (
-        semantic_dedup,
-    )
-    from retrieval_augmented_generation_rag_data_pipeline_spark.operators.vectors import (
-        ivf_centroid,
-    )
-
-    emb = (
-        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        .limit(40)
-    )
-    dup = emb.withColumn("vec_id", F.col("vec_id") + 100000)
-    corpus = emb.unionByName(dup)
-    cents = [ivf_centroid(c, 64) for c in range(600)]
-    out = {
-        r.vec_id: r
-        for r in semantic_dedup(
-            corpus, threshold=0.999, dim=64, centroids=cents,
-            assign="two_level",
-        ).collect()
-    }
-    for r in emb.select("vec_id").collect():
-        assert out[r.vec_id].keep
-        assert not out[r.vec_id + 100000].keep
-        assert out[r.vec_id + 100000].dup_of == r.vec_id
-
-
-def test_group_centroids_reseat_never_leaves_empty_groups():
-    """Round-13 ADVICE (medium): the empty-group reseat used a global
-    argmin that could steal the SOLE member of an already-filled group,
-    re-emptying it — downstream, assign_cells_two_level's left join
-    would then silently hand valid vectors a NULL cell. Degenerate
-    centroid tables (many identical centroids -> argmax piles everything
-    into one group) force multiple reseats; every coarse group must end
-    non-empty and every fine centroid must keep a valid group."""
-    from retrieval_augmented_generation_rag_data_pipeline_spark.operators.vectors import (
-        group_centroids,
-    )
-
-    # all-identical: worst case, argmax ties everything to one group
-    same = [[1.0, 0.0, 0.0]] * 6
-    coarse, assign = group_centroids(same, n_coarse=3, seed=1)
-    assert len(coarse) == 3
-    assert set(assign) == {0, 1, 2} or all(
-        any(a == g for a in assign) for g in range(3)
-    )
-    assert len(assign) == 6 and all(0 <= a < 3 for a in assign)
-
-    # two tight natural clusters, many coarse slots: reseats must fill
-    # every slot without orphaning the tight clusters' sole donors
-    import math
-
-    tight = [[1.0, e, 0.0] for e in (0.0, 1e-9, 2e-9)] + [
-        [0.0, 1.0, e] for e in (0.0, 1e-9, 2e-9)
-    ]
-    coarse2, assign2 = group_centroids(tight, n_coarse=6, seed=3)
-    counts = [assign2.count(g) for g in range(6)]
-    assert min(counts) >= 1
-    assert len(assign2) == 6
-
-    # n_coarse == k on duplicated rows
-    dup = [[1.0, 0.0], [1.0, 0.0], [0.0, 1.0], [0.0, 1.0]]
-    coarse3, assign3 = group_centroids(dup, n_coarse=4, seed=5)
-    counts3 = [assign3.count(g) for g in range(4)]
-    assert min(counts3) >= 1
-    assert not any(math.isnan(x) for c in coarse3 for x in c)
+    run = lambda: semantic_dedup(emb, 0.35, 64, n_cells=8)  # noqa: E731
+    lit = key(run().collect())
+    monkeypatch.setattr(vectors, "CELL_LITERAL_MAX", 4)
+    monkeypatch.setattr(vectors, "CELL_EXACT_AUTO_MAX", 4)
+    assert "ArrowEvalPython" in _plan(run)
+    assert lit == key(run().collect())
 
 
 def test_ann_ivfpq_rerank_exact_scores_and_recall_gain(spark):

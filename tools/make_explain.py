@@ -411,33 +411,6 @@ def main() -> None:
         f"```\n{tree}\n```\n\nScan details:\n```\n{scans}\n```\n"
     )
 
-    # two-level cell assignment: also not a registry query (opt-in
-    # assign="two_level" inside semantic_dedup), but its plan shape —
-    # one BroadcastNestedLoopJoin against the ONE-ROW coarse table,
-    # then one BroadcastHashJoin on the winning coarse id, plan size
-    # independent of k — is the point of the route (round-13 verdict
-    # asked for this pick)
-    from retrieval_augmented_generation_rag_data_pipeline_spark.operators.vectors import (
-        assign_cells_two_level,
-    )
-
-    cents = [[1.0 if i == (j % 16) else 0.0 for i in range(64)] for j in range(64)]
-    df = assign_cells_two_level(
-        emb.select("vec_id", "embedding"), cents, "embedding"
-    )
-    plan = df._jdf.queryExecution().explainString(mode)
-    tree = tree_of(plan).rstrip()
-    out.append(
-        "## assign_cells_two_level (coarse->fine exact-fold assignment)\n\n"
-        "*~2*sqrt(k) interpreted dots per row instead of k: one "
-        "BroadcastNestedLoopJoin against the one-row coarse-centroid "
-        "table picks the coarse group, one BroadcastHashJoin on the "
-        "winning coarse id scores only that group's fine centroids; "
-        "NULL vectors ride a left join to a NULL cell; plan size "
-        "independent of k*\n\n"
-        f"```\n{tree}\n```\n"
-    )
-
     repo = pathlib.Path(__file__).resolve().parent.parent
     (repo / "EXPLAIN.md").write_text("\n".join(out))
 

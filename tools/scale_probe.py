@@ -106,19 +106,25 @@ def assign_probes(spark, which: str = "all") -> dict:
     inflate a following Arrow probe 2-10x — measured 3.6s fresh vs
     30-53s after the table probe in one process).
 
-    table: broadcast-centroid-TABLE assignment at 10k cells — plan
-    size, task binaries, and shuffle volume independent of k; cost is
-    O(k*dim) interpreted-HOF dots per vector (the bit-exact path).
+    table: ``assign_cells_table`` alone at 10k cells — plan size, task
+    binaries, and shuffle volume independent of k; cost is O(k*dim)
+    interpreted-HOF dots per vector (the bit-exact path).
 
-    arrow: the Arrow/GEMM assignment at the PAPER's 50k cells
+    arrow: ``assign_cells_arrow`` alone at the PAPER's 50k cells
     (SemDeDup's 5B-embedding configuration): one numpy float64 matmul
     per Arrow batch, centroid matrix broadcast once per executor.
 
-    auto: the DEFAULT path at 10k cells (round-12 verdict item 1's
-    done-bar): assign=None must land within ~2x of the forced-arrow
-    standalone reading, because past CELL_EXACT_AUTO_MAX the auto
-    tier IS arrow — a paper-scale caller gets the fast path without
-    knowing to ask.
+    The table and arrow readings are assignment-only (``"scope"`` in
+    the record): the job counts distinct cells, which consumes the
+    assignment column so column pruning cannot skip it. Earlier
+    PROBES_r*.json recorded whole ``semantic_dedup`` runs under these
+    keys.
+
+    auto: the whole ``semantic_dedup`` at 10k cells (round-12 verdict
+    item 1's done-bar): it must land within ~2x of the arrow
+    standalone reading, because past CELL_EXACT_AUTO_MAX the cell
+    count alone puts ``assign_cells`` on the GEMM tier — a paper-scale
+    caller gets the fast path without asking for it.
 
     The arrow/auto probes take an UNTIMED full-frame warm-up first:
     the first pandas-UDF action in a fresh process pays Python-worker
@@ -141,7 +147,7 @@ def assign_probes(spark, which: str = "all") -> dict:
     n_vecs = emb_parted.count()
     n_tcells = 10_000
 
-    def _run(key, n_cells, assign, extra=None):
+    def _run(key, n_cells, measure, extra=None):
         # two reps: the first pays once-per-process costs repetition
         # amortizes (whole-stage codegen for this plan shape, the
         # centroid broadcast's first transfer — measured 13-18s first
@@ -150,55 +156,58 @@ def assign_probes(spark, which: str = "all") -> dict:
         # ``sec_first`` keeps the cold run honest in the artifact
         cents = [vectors.ivf_centroid(c, 64) for c in range(n_cells)]
         secs = []
-        dropped = 0
         for _ in range(2):
             t0 = time.time()
-            sem = dedup.semantic_dedup(
-                emb_parted, threshold=0.95, dim=64, centroids=cents,
-                assign=assign,
-            )
-            dropped = sem.filter(~F.col("keep")).count()
+            out = measure(cents)
             secs.append(round(time.time() - t0, 2))
         sec = min(secs)
         results[key] = {
-            "vectors": n_vecs, "n_cells": n_cells, "dropped": dropped,
+            "vectors": n_vecs, "n_cells": n_cells, **out,
             "sec": sec, "sec_first": secs[0],
             "vectors_per_sec": round(n_vecs / max(sec, 1e-9)),
             **(extra or {}),
         }
 
-    def _warm_arrow():
-        from retrieval_augmented_generation_rag_data_pipeline_spark.operators.vectors import (
-            assign_cells_arrow,
-        )
+    def _assign_only(assign):
+        def measure(cents):
+            cells = assign(emb_parted, cents, "embedding").agg(
+                F.count_distinct("_cell")
+            )
+            return {"cells_used": cells.first()[0]}
 
-        assign_cells_arrow(
+        return measure
+
+    def _dedup(cents):
+        sem = dedup.semantic_dedup(
+            emb_parted, threshold=0.95, dim=64, centroids=cents
+        )
+        return {"dropped": sem.filter(~F.col("keep")).count()}
+
+    def _warm_arrow():
+        vectors.assign_cells_arrow(
             emb_parted,
             [vectors.ivf_centroid(c, 64) for c in range(4)],
             "embedding",
         ).count()
 
     if which in ("all", "table"):
-        _run("semantic_table_assign", n_tcells, "table")
+        _run(
+            "semantic_table_assign", n_tcells,
+            _assign_only(vectors.assign_cells_table), {"scope": "assignment only"},
+        )
     if which in ("all", "arrow"):
         _warm_arrow()
-        _run("semantic_arrow_assign", 50_000, "arrow")
-    if which in ("all", "two_level"):
-        # the coarse->fine exact-fold route at the paper's 50k cells:
-        # ~2*sqrt(k) interpreted dots per row instead of k (~100x less
-        # exact-fold work than the flat table path; SQL-replayable
-        # where the GEMM path is not — see assign_cells_two_level's
-        # approximation caveat)
         _run(
-            "semantic_two_level_assign", 50_000, "two_level",
-            {"assign": "two_level (coarse->fine exact fold)"},
+            "semantic_arrow_assign", 50_000,
+            _assign_only(vectors.assign_cells_arrow), {"scope": "assignment only"},
         )
     if which in ("all", "auto"):
         if which == "auto":
             _warm_arrow()
         _run(
-            "semantic_auto_assign", n_tcells, None,
-            {"assign": "None (auto -> arrow past CELL_EXACT_AUTO_MAX)"},
+            "semantic_auto_assign", n_tcells, _dedup,
+            {"scope": "semantic_dedup, tier from the cell count (arrow "
+             "past CELL_EXACT_AUTO_MAX)"},
         )
     results["loadavg_end"] = list(os.getloadavg())
     return results
@@ -213,7 +222,7 @@ def main() -> None:
     # before this sweep's JVM exists — serialized, never concurrent
     # (this box's readings inflate 2-4x under a concurrent Spark job)
     iso: dict = {}
-    for fam in ("table", "arrow", "two_level", "auto"):
+    for fam in ("table", "arrow", "auto"):
         try:
             out = subprocess.run(
                 [sys.executable, __file__, "--assign-probes", fam],
@@ -236,8 +245,7 @@ def main() -> None:
             k: iso[k] for k in ("loadavg_start", "loadavg_end") if k in iso
         }
         for k in ("semantic_table_assign", "semantic_arrow_assign",
-                  "semantic_two_level_assign", "semantic_auto_assign",
-                  "error"):
+                  "semantic_auto_assign", "error"):
             if k in iso:
                 results[k] = iso[k]
 
