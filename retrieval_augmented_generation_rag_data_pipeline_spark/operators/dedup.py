@@ -1155,13 +1155,9 @@ def semantic_dedup(
     is narrow (no shuffle jobs at call time).
     """
     from .pinning import pin
-    from .vectors import assign_cells, dot_sql, ivf_centroid, l2_norm_sql
+    from .vectors import assign_cells, dot_sql, l2_norm_sql, resolve_centroids
 
-    cents = (
-        centroids
-        if centroids is not None
-        else [ivf_centroid(c, dim) for c in range(n_cells)]
-    )
+    cents = resolve_centroids(dim, n_cells, centroids)
     # Per-pair work is the hot path (a cell of m vectors scores ~m^2/2
     # pairs), so the L2 norm is computed ONCE per vector here, pinned —
     # an inline per-pair cosine re-aggregates both norms for every pair

@@ -229,8 +229,8 @@ def train_ivf_centroids(
     MLlib KMeans runs distributed over the executors; only the
     ``n_cells x dim`` centroid floats come back to the driver —
     metadata-sized, exactly like any broadcast dimension. Centroids are
-    L2-normalized so the argmax-dot cell assignment (``ivf_cell``)
-    ranks them by cosine. At 100 TB train on ``sample_fraction`` (a few
+    L2-normalized so the argmax-dot cell assignment
+    (``assign_cells_exact``) ranks them by cosine. At 100 TB train on ``sample_fraction`` (a few
     million vectors is plenty for k-means) — never the full corpus.
     """
     from pyspark.ml.clustering import KMeans
@@ -315,64 +315,41 @@ def _dot_sql(col_name: str, values: list[float], guard: bool = True) -> str:
     return f"({g} + {agg})"
 
 
-def _cell_rank_sql(
-    col_name: str,
-    dim: int,
-    n_cells: int,
-    centroids: list[list[float]] | None = None,
-) -> str:
-    """SQL text for the sorted cell ranking.
+def _cell_rank_sql(col_name: str, centroids: list[list[float]]) -> str:
+    """SQL text for the literal tier's sorted cell ranking.
 
     Built as ONE SQL string parsed JVM-side: the equivalent Column-API
     tree needs ~n_cells*dim py4j calls for the literals, which costs
     more wall-clock to BUILD (1.6s measured for 8x64 used twice) than
     the query takes to run. Element 1 = best cell (max dot, ties ->
-    lowest cell id). ``centroids`` overrides the fixed pseudo-random
-    family (pass ``train_ivf_centroids`` output for production recall).
+    lowest cell id).
     """
-    cents = (
-        centroids
-        if centroids is not None
-        else [ivf_centroid(c, dim) for c in range(n_cells)]
-    )
     cells = ", ".join(
-        f"named_struct('nd', -({_dot_sql(col_name, cents[c], guard=(c == 0))}), 'c', {c})"
-        for c in range(len(cents))
+        f"named_struct('nd', -({_dot_sql(col_name, c, guard=(i == 0))}), 'c', {i})"
+        for i, c in enumerate(centroids)
     )
     return f"array_sort(array({cells}))"
 
 
-def ivf_cell(
-    vec_col: str,
-    dim: int,
-    n_cells: int = 8,
-    centroids: list[list[float]] | None = None,
-) -> Column:
-    """Coarse-quantizer cell assignment: argmax dot(vec, centroid).
-    Takes the vector COLUMN NAME (the expression is generated as SQL
-    text — see _cell_rank_sql).
-
-    A NULL vector gets a NULL cell — every dot is NULL, there is no
-    argmax. Without the explicit guard the ranking's array_sort is
-    stable over all-NULL keys and the first literal (cell 0) would win,
-    silently counting NULL vectors toward cell 0's ``max_cell_size``
-    budget while ``assign_cells_table`` put them in the NULL cell —
-    the round-12 advisory's literal/table divergence. With the guard
-    the two paths agree on EVERY input row, NULLs included."""
-    return F.expr(
-        f"IF({vec_col} IS NULL, CAST(NULL AS INT), "
-        f"element_at({_cell_rank_sql(vec_col, dim, n_cells, centroids)}, 1).c)"
-    )
+def resolve_centroids(
+    dim: int, n_cells: int, centroids: list[list[float]] | None
+) -> list[list[float]]:
+    """The coarse quantizer an IVF operator runs with: ``centroids``
+    when given (``train_ivf_centroids``, the frozen artifact), else the
+    fixed pseudo-random family of ``n_cells`` (``ivf_centroid``)."""
+    if centroids is not None:
+        return centroids
+    return [ivf_centroid(c, dim) for c in range(n_cells)]
 
 
-# Literal-centroid ceiling: ivf_cell / _cell_rank_sql embed n_cells x
-# dim doubles as EXPRESSION literals, and the serialized task binary
-# grows with the plan (~130 MB at 800 cells x 64 dims, measured in the
-# round-11 100x probe — with an OOM on the shared JVM at that size).
-# The ceiling therefore sits BELOW the measured-fragile 800-cell
-# point, not above it (round-12 advisory): past this bound,
-# quantizer-applying operators switch to assign_cells_table — centroid
-# data rides a broadcast, not the plan.
+# Literal-centroid ceiling: the literal tier of assign_cells_exact /
+# probe_cells embeds n_cells x dim doubles as EXPRESSION literals, and
+# the serialized task binary grows with the plan (~130 MB at 800 cells
+# x 64 dims, measured in the round-11 100x probe — with an OOM on the
+# shared JVM at that size). The ceiling therefore sits BELOW the
+# measured-fragile 800-cell point, not above it (round-12 advisory):
+# past this bound both switch to the broadcast centroid table —
+# centroid data rides a broadcast, not the plan.
 CELL_LITERAL_MAX = 512
 
 # Exact-fold ceiling of ``assign_cells``: past this cell count the
@@ -394,7 +371,8 @@ def assign_cells_table(
     out_col: str = "_cell",
 ) -> DataFrame:
     """Coarse-quantizer cell assignment via a broadcast centroid TABLE
-    — the >``CELL_LITERAL_MAX``-cells path (SemDeDup's cost model wants
+    — ``assign_cells_exact``'s tier past ``CELL_LITERAL_MAX`` cells
+    (SemDeDup's cost model wants
     cells ~ corpus/target_cell_size; the paper runs 50k cells for 5B
     embeddings, and 50k x 64 dims is ~25 MB of centroid data — two
     orders of magnitude past the literal-expression ceiling).
@@ -575,27 +553,17 @@ def assign_cells(
     out_col: str = "_cell",
 ) -> DataFrame:
     """Coarse-quantizer cell assignment, tiered on the centroid count
-    alone: literal expressions (``ivf_cell``) up to
-    ``CELL_LITERAL_MAX`` cells, the broadcast-table fold
-    (``assign_cells_table``) up to ``CELL_EXACT_AUTO_MAX``, the
-    Arrow/GEMM batch argmax (``assign_cells_arrow``) past it — a
-    paper-scale caller gets the fast path without asking for it.
+    alone: the exact fold (``assign_cells_exact``: literal, then
+    broadcast table) up to ``CELL_EXACT_AUTO_MAX`` cells, the Arrow/GEMM
+    batch argmax (``assign_cells_arrow``) past it — a paper-scale caller
+    gets the fast path without asking for it.
 
-    The literal and table tiers fold the same doubles in the same
-    order and both give NULL vectors a NULL cell, so crossing
-    ``CELL_LITERAL_MAX`` never moves a vector's cell; the GEMM tier
-    carries ``assign_cells_arrow``'s parity caveat. Returns ``df``'s
-    columns plus an INT ``out_col``. Every tier is per-row compute:
-    size the stream side's partitioning first
+    The GEMM tier carries ``assign_cells_arrow``'s parity caveat.
+    Returns ``df``'s columns plus an INT ``out_col``. Every tier is
+    per-row compute: size the stream side's partitioning first
     (``session.ensure_parallelism``)."""
-    n_cells = len(centroids)
-    if n_cells <= CELL_LITERAL_MAX:
-        return df.withColumn(
-            out_col,
-            ivf_cell(vec_col, len(centroids[0]), n_cells, centroids).cast("int"),
-        )
-    if n_cells <= CELL_EXACT_AUTO_MAX:
-        return assign_cells_table(df, centroids, vec_col, out_col)
+    if len(centroids) <= CELL_EXACT_AUTO_MAX:
+        return assign_cells_exact(df, centroids, vec_col, out_col)
     return assign_cells_arrow(df, centroids, vec_col, out_col)
 
 
@@ -607,8 +575,9 @@ def probe_cells_table(
     out_col: str = "_probes",
 ) -> DataFrame:
     """Top-``nprobe`` nearest cells per vector via the broadcast
-    centroid TABLE — the query-side companion of ``assign_cells_table``
-    (IVF probing needs the nprobe BEST cells, not just the argmax).
+    centroid TABLE — ``probe_cells``' tier past ``CELL_LITERAL_MAX``
+    cells, the query-side companion of ``assign_cells_table`` (IVF
+    probing needs the nprobe BEST cells, not just the argmax).
     Same one-row broadcast, same dots, and the ranking is
     ``array_sort`` over (nd, c) structs — element-for-element the
     ordering ``_cell_rank_sql`` produces, so literal and table probes
@@ -633,6 +602,120 @@ def probe_cells_table(
     )
 
 
+def assign_cells_exact(
+    df: DataFrame,
+    centroids: list[list[float]],
+    vec_col: str,
+    out_col: str = "_cell",
+) -> DataFrame:
+    """Exact argmax-dot cell assignment — the one assignment seam of the
+    IVF family (index writers, ``ann_ivf_topk``, ``ann_ivfpq_topk_mem``,
+    and ``assign_cells`` up to ``CELL_EXACT_AUTO_MAX``). Literal
+    expressions up to ``CELL_LITERAL_MAX`` cells, the broadcast centroid
+    table (``assign_cells_table``) past it.
+
+    Both tiers fold the same doubles in the same order, and both give a
+    NULL vector a NULL cell (every dot is NULL, there is no argmax; the
+    literal tier's IF guard stops the stable sort over all-NULL keys
+    from handing it cell 0), so crossing the ceiling never moves a
+    vector's cell (tests/test_vectors.py::
+    test_table_assignment_matches_literal) and an index written on one
+    tier is probed correctly on the other. Returns ``df``'s columns plus
+    an INT ``out_col``."""
+    if len(centroids) > CELL_LITERAL_MAX:
+        return assign_cells_table(df, centroids, vec_col, out_col)
+    return df.withColumn(
+        out_col,
+        F.expr(
+            f"IF({vec_col} IS NULL, CAST(NULL AS INT), "
+            f"element_at({_cell_rank_sql(vec_col, centroids)}, 1).c)"
+        ),
+    )
+
+
+def probe_cells(
+    df: DataFrame,
+    centroids: list[list[float]],
+    vec_col: str,
+    nprobe: int,
+) -> DataFrame:
+    """IVF probing — the one probe seam of the family: ``df``'s rows,
+    one per probed cell, with the ``nprobe`` nearest cells (best first,
+    ties to the lowest cell id) in INT ``_cell``, the key of the cell
+    join and of a persisted index's partitions. Literal expressions up
+    to ``CELL_LITERAL_MAX`` cells, the broadcast centroid table
+    (``probe_cells_table``) past it — the same tier rule and the same
+    fold as ``assign_cells_exact``, so a vector's first probe is the
+    cell it is assigned to. Callers drop NULL vectors first (the query
+    side, ``_queries``): a NULL vector has no nearest cell."""
+    if len(centroids) > CELL_LITERAL_MAX:
+        return (
+            probe_cells_table(df, centroids, vec_col, nprobe)
+            .withColumn("_cell", F.explode("_probes"))
+            .drop("_probes")
+        )
+    probes = f"transform(slice({_cell_rank_sql(vec_col, centroids)}, 1, {int(nprobe)}), s -> s.c)"
+    return df.withColumn("_cell", F.explode(F.expr(probes)))
+
+
+def _queries(queries: DataFrame, query_id: str, vec_col: str) -> DataFrame:
+    """The query side of the IVF and PQ operators: (query_id, _qv), NULL
+    query vectors dropped. A NULL vector has no nearest cell and no ADC
+    table; kept, it would probe arbitrary cells (the null-first struct
+    ordering) or score NULL against every candidate, fabricating k
+    NULL-score "neighbors" for that query."""
+    return queries.filter(F.col(vec_col).isNotNull()).select(
+        F.col(query_id).alias("query_id"), F.col(vec_col).alias("_qv")
+    )
+
+
+def _cosine_topk(
+    cb: DataFrame, qb: DataFrame, on: str, corpus_id: str, vec_col: str, k: int
+) -> DataFrame:
+    """Exact cosine rerank of blocked candidates: corpus rows ``cb``
+    (``corpus_id``, ``vec_col``, ``on``) equi-join the broadcast query
+    side ``qb`` (query_id, _qv, ``on``) on the block key. Each norm is
+    computed once per row, not per pair; try_divide scores a zero
+    vector (norm 0) NULL, ranked last, never an ANSI DIVIDE_BY_ZERO
+    job abort — same as knn_topk."""
+    v = f"`{vec_col}`"
+    scored = (
+        cb.selectExpr("*", f"{l2_norm_sql(v)} AS _cn")
+        .join(F.broadcast(qb.selectExpr("*", f"{l2_norm_sql('_qv')} AS _qn")), on)
+        .selectExpr(
+            "query_id",
+            f"`{corpus_id}`",
+            f"try_divide({dot_sql('_qv', v)}, _qn * _cn) AS sim",
+        )
+    )
+    return _topk_per_query(scored, corpus_id, k, "sim")
+
+
+def _probe_index(
+    spark, index_path: str, kind: str, meta: dict, qb: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """The persisted-probe body shared by ``ann_ivf_topk_indexed`` and
+    ``ann_ivfpq_topk``: check the index's ``_{kind}_meta.json`` sidecar
+    against ``meta`` (``sources.sinks.check_sidecar``), pin the query
+    side ``qb`` (one row per probed ``_cell``), collect its distinct
+    cells and return (the index scan pruned to them, the pinned ``qb``).
+
+    The probe cells are nqueries x nprobe integers — metadata-sized,
+    never corpus data — and the static ``_cell IN (...)`` predicate is a
+    parquet PartitionFilter: at 100 TB a 2-of-64-cell probe lists ~3%
+    of the index files, the pruning FAISS gets by opening only nprobe
+    inverted lists. The pin is there because ``qb`` feeds both the
+    collect (which materializes it) and the broadcast join; without it
+    the (n_cells x dim) ranking re-executes from source."""
+    from ..sources.sinks import check_sidecar
+    from .pinning import pin
+
+    check_sidecar(spark, index_path, kind, meta)
+    qb = pin(qb)
+    cells = sorted(r["_cell"] for r in qb.select("_cell").distinct().collect())
+    return spark.read.parquet(index_path).filter(F.col("_cell").isin(cells)), qb
+
+
 def ann_ivf_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -648,11 +731,12 @@ def ann_ivf_topk(
     """Approximate top-k via IVF (inverted-file) coarse quantization.
 
     Corpus vectors are assigned to their nearest of ``n_cells``
-    centroids (the inverted lists); each query probes its ``nprobe``
-    nearest cells and reranks candidates exactly by cosine. At scale the
-    corpus is partitioned (or bucketed) by cell so a probe touches
-    ~nprobe/n_cells of the data — the same pruning FAISS IVF does, but
-    expressed as a partition-pruned equi-join.
+    centroids (the inverted lists, ``assign_cells_exact``); each query
+    probes its ``nprobe`` nearest cells (``probe_cells``) and reranks
+    candidates exactly by cosine. At scale the corpus is partitioned (or
+    bucketed) by cell so a probe touches ~nprobe/n_cells of the data —
+    the same pruning FAISS IVF does, but expressed as a partition-pruned
+    equi-join.
 
     Default centroids are fixed pseudo-random (deterministic for the
     SQL oracle); pass ``centroids=train_ivf_centroids(corpus, ...)``
@@ -661,69 +745,27 @@ def ann_ivf_topk(
     tests/test_vectors.py::test_trained_centroids_beat_fixed). Probing
     all cells (nprobe = n_cells) degenerates to exact search.
 
-    The centroid transport is chosen by cell count alone: literal
-    expressions up to ``CELL_LITERAL_MAX`` cells, the
-    broadcast-centroid TABLE (``assign_cells_table`` /
-    ``probe_cells_table``) past it — FAISS-scale IVF wants n_cells ~
-    sqrt(corpus), which outgrows plan literals around a billion
-    vectors. Both fold identical doubles, so cell lists and the final
-    top-k agree bit-for-bit
-    (tests/test_vectors.py::test_ivf_table_path_matches_literal). There
-    is no GEMM tier (``assign_cells``' third): the probe side needs a
-    ranked cell list, which only the folds produce, and the corpus
-    cells must come from the same fold as the probes.
+    Centroids ride the plan as literals up to ``CELL_LITERAL_MAX``
+    cells and a broadcast table past it; both tiers return the same
+    rows. There is no GEMM tier: probes need a ranked cell list, which
+    only the folds give, and corpus cells must come from the probes'
+    fold. A NULL query vector emits no rows. The corpus goes through
+    ``ensure_parallelism`` first: assignment is n_cells x dim
+    interpreted multiply-adds per row, which a one-file local scan would
+    single-thread (a no-op at cluster partition counts).
     """
-    if centroids is not None:
-        n_cells = len(centroids)
-    cb = corpus.select(
-        F.col(corpus_id).alias(corpus_id), F.col(vec_col).alias("_cv")
-    )
-    # a NULL query vector must emit NO result rows (the corpus side
-    # maps NULL vectors to a NULL cell): unfiltered, every centroid dot
-    # is NULL and the null-first struct ordering would probe arbitrary
-    # cells, fabricating k rows of NULL-sim "neighbors" for that query
-    qb = queries.filter(F.col(vec_col).isNotNull()).select(
-        F.col(query_id).alias("query_id"), F.col(vec_col).alias("_qv")
-    )
-    if n_cells > CELL_LITERAL_MAX:
-        from ..session import ensure_parallelism
+    from ..session import ensure_parallelism
 
-        cents = (
-            centroids
-            if centroids is not None
-            else [ivf_centroid(c, dim) for c in range(n_cells)]
-        )
-        # corpus assignment past the literal ceiling is >=32k
-        # interpreted multiply-adds per row — spread an
-        # under-parallelized local scan before paying it (no-op at
-        # cluster partition counts); queries ride the broadcast join
-        # as-is (they are the small side by construction)
-        cb = assign_cells_table(
-            ensure_parallelism(cb), cents, "_cv", out_col="_cell"
-        )
-        qb = probe_cells_table(qb, cents, "_qv", nprobe, out_col="_probes")
-        probes = F.col("_probes")
-    else:
-        cb = cb.withColumn(
-            "_cell", ivf_cell("_cv", dim, n_cells, centroids)
-        )
-        probes = F.expr(
-            f"transform(slice({_cell_rank_sql('_qv', dim, n_cells, centroids)}, 1, {nprobe}), s -> s.c)"
-        )
-    cb = cb.selectExpr(
-        "*", f"{l2_norm_sql('_cv')} AS _cn"  # once per corpus row, not per pair
+    cents = resolve_centroids(dim, n_cells, centroids)
+    cb = assign_cells_exact(
+        ensure_parallelism(corpus).select(
+            F.col(corpus_id).alias(corpus_id), F.col(vec_col).alias("_cv")
+        ),
+        cents,
+        "_cv",
     )
-    qb = qb.select(
-        "query_id", "_qv", F.explode(probes).alias("_cell")
-    ).selectExpr("*", f"{l2_norm_sql('_qv')} AS _qn")
-    # try_divide: a zero vector (norm 0) scores NULL (ranked last),
-    # never an ANSI DIVIDE_BY_ZERO job abort — same as knn_topk
-    scored = cb.join(F.broadcast(qb), "_cell").selectExpr(
-        "query_id",
-        f"`{corpus_id}`",
-        f"try_divide({dot_sql('_qv', '_cv')}, _qn * _cn) AS sim",
-    )
-    return _topk_per_query(scored, corpus_id, k, "sim")
+    qb = probe_cells(_queries(queries, query_id, vec_col), cents, "_qv", nprobe)
+    return _cosine_topk(cb, qb, "_cell", corpus_id, "_cv", k)
 
 
 def ann_ivf_topk_indexed(
@@ -741,21 +783,18 @@ def ann_ivf_topk_indexed(
     centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """IVF top-k over a PERSISTED inverted-list index
-    (sources.sinks.write_ivf_index): reads ONLY the probed partitions.
+    (sources.sinks.write_ivf_index): reads ONLY the probed partitions
+    (``_probe_index``).
 
     ``query_vec_col`` names the vector column in ``queries``;
     ``index_vec_col`` must match the ``vec_col`` the index was WRITTEN
-    with (its schema is fixed at write time).
-
-    The probe cells are computed driver-side from the query batch —
-    queries are the broadcast-small side by definition, so this is
-    nqueries x nprobe integers, metadata-sized, never corpus data. The
-    static ``_cell IN (...)`` predicate becomes a parquet
-    PartitionFilter: at 100 TB a 2-of-64-cell probe scans ~3% of the
-    index files and the rest are pruned from the file listing, the same
-    pruning FAISS gets by opening only nprobe inverted lists. Results
-    are identical to ``ann_ivf_topk`` on the same corpus + centroids
-    (each query still joins only its own cells).
+    with (its schema is fixed at write time). Probes go through
+    ``probe_cells``: literal centroids up to ``CELL_LITERAL_MAX`` cells,
+    a broadcast table past it. Both tiers fold the same doubles as the
+    writer's assignment, so an index written on either tier is probed
+    correctly on either. A NULL query vector emits no rows. Results are
+    identical to ``ann_ivf_topk`` on the same corpus + centroids (each
+    query still joins only its own cells).
 
     The index's ``_ivf_meta.json`` sidecar (written by
     ``write_ivf_index``) is checked before probing: a quantizer
@@ -765,45 +804,17 @@ def ann_ivf_topk_indexed(
     partially-written index) also raises — an unverifiable quantizer is
     as dangerous as a mismatched one (``sources.sinks.check_sidecar``).
     """
-    if centroids is not None:
-        n_cells = len(centroids)
-    from ..sources.sinks import check_sidecar, ivf_meta
+    from ..sources.sinks import ivf_meta
 
-    check_sidecar(
-        spark, index_path, "ivf", ivf_meta(dim, n_cells, centroids, index_vec_col)
+    cents = resolve_centroids(dim, n_cells, centroids)
+    corpus, qb = _probe_index(
+        spark,
+        index_path,
+        "ivf",
+        ivf_meta(dim, len(cents), centroids, index_vec_col),
+        probe_cells(_queries(queries, query_id, query_vec_col), cents, "_qv", nprobe),
     )
-    probes = F.expr(
-        f"transform(slice({_cell_rank_sql('_qv', dim, n_cells, centroids)}, 1, {nprobe}), s -> s.c)"
-    )
-    # pin the query-side lineage once: the cell ranking feeds BOTH the
-    # driver-side partition-filter collect and the broadcast join —
-    # without this the (n_cells x dim) ranking re-executes from source
-    qb = (
-        # NULL query vectors dropped — see ann_ivf_topk
-        queries.filter(F.col(query_vec_col).isNotNull())
-        .select(
-            F.col(query_id).alias("query_id"), F.col(query_vec_col).alias("_qv")
-        )
-        .select("query_id", "_qv", F.explode(probes).alias("_cell"))
-        .localCheckpoint(eager=True)
-    )
-    cells = sorted(r["_cell"] for r in qb.select("_cell").distinct().collect())
-    corpus = spark.read.parquet(index_path).filter(F.col("_cell").isin(cells))
-    scored = (
-        corpus.selectExpr("*", f"{l2_norm_sql(f'`{index_vec_col}`')} AS _cn")
-        .join(
-            F.broadcast(qb.selectExpr("*", f"{l2_norm_sql('_qv')} AS _qn")),
-            "_cell",
-        )
-        .selectExpr(
-            "query_id",
-            f"`{corpus_id}`",
-            # try_divide: zero-norm vectors score NULL, never abort
-            f"try_divide({dot_sql('_qv', f'`{index_vec_col}`')}, _qn * _cn)"
-            " AS sim",
-        )
-    )
-    return _topk_per_query(scored, corpus_id, k, "sim")
+    return _cosine_topk(corpus, qb, "_cell", corpus_id, index_vec_col, k)
 
 
 # Offset keeps the PQ codebook family disjoint from the sign-LSH
@@ -878,46 +889,14 @@ def train_pq_codebooks(
     return books
 
 
-def _pq_encode_sql(col_name: str, codebooks: list[list[list[float]]]) -> str:
-    """SQL text for the PQ code array: per subspace, the centroid
-    minimizing L2 distance — argmax of dot(x_j, c) - ||c||²/2 (the
-    ||x_j||² term is constant per row and drops out). The half-norms are
-    precomputed in Python and embedded as literals so the Spark and
-    DuckDB sides compare the same doubles. Ties -> lowest code id
-    (array_sort on (negated score, code))."""
-    # total-length guard: the per-subspace slice guards catch an
-    # UNDER-length vector (the last slice comes up short) but an
-    # OVER-length one slices cleanly everywhere and would be silently
-    # encoded from its first m*dsub components — assert the full size
-    # once per row, mirroring the IVF family's size(col) = dim check
-    m = len(codebooks)
-    dsub0 = len(codebooks[0][0])
-    total = m * dsub0
-    tguard = (
-        f"coalesce(CAST(assert_true({col_name} IS NULL OR "
-        f"size({col_name}) = {total}, "
-        f"'pq: expected {total}-dim vector') AS DOUBLE), 0D) + "
-    )
-    parts = []
-    for j, cb in enumerate(codebooks):
-        dsub = len(cb[0])
-        sub = f"slice({col_name}, {j * dsub + 1}, {dsub})"
-        cells = ", ".join(
-            f"named_struct('nd', {tguard if (j == 0 and ci == 0) else ''}"
-            f"-({_dot_sql(sub, c, guard=(ci == 0))} - {0.5 * sum(x * x for x in c)!r}D), 'c', {ci})"
-            for ci, c in enumerate(cb)
-        )
-        parts.append(f"element_at(array_sort(array({cells})), 1).c")
-    return "array(" + ", ".join(parts) + ")"
-
-
-def _pq_one_row(spark, codebooks: list[list[list[float]]]) -> DataFrame:
-    """The broadcast side of the PQ table family: the whole codebook
-    collapsed to ONE row holding ``_pqcb array<struct<j, cents>>``
-    (subspace-ordered; each ``cents`` is centroid-id-ordered
-    ``array<struct<c, cent, hn>>`` with the half-norm ``hn`` =
-    0.5*||c||² precomputed in Python — the SAME doubles the literal
-    builders embed, so the two paths fold identical values)."""
+def _with_codebooks(df: DataFrame, codebooks: list[list[list[float]]]) -> DataFrame:
+    """``df`` cross-joined with the broadcast side of the PQ family: the
+    whole codebook collapsed to ONE row holding ``_pqcb
+    array<struct<j, cents>>`` (subspace-ordered; each ``cents`` is
+    centroid-id-ordered ``array<struct<c, cent, hn>>`` with the
+    half-norm ``hn`` = 0.5*||c||² precomputed in Python). A
+    BroadcastNestedLoopJoin against a single row: the stream side's
+    partitioning is untouched."""
     # built as ONE driver-side row (no collect_list aggregate: the
     # codebook is metadata-sized — m*ksub entries — so the agg's two
     # exchanges would cost more stages than the data is worth; the IVF
@@ -933,10 +912,11 @@ def _pq_one_row(spark, codebooks: list[list[list[float]]]) -> DataFrame:
         )
         for j, cb in enumerate(codebooks)
     ]
-    return spark.createDataFrame(
+    one = df.sparkSession.createDataFrame(
         [(row,)],
         "_pqcb array<struct<j:int,cents:array<struct<c:int,cent:array<double>,hn:double>>>>",
     )
+    return df.crossJoin(F.broadcast(one))
 
 
 def _pq_table_sub(vec_col: str, dsub: int) -> str:
@@ -956,17 +936,20 @@ def _pq_table_sub(vec_col: str, dsub: int) -> str:
     return sub, agg, g
 
 
-def _pq_table_encode_expr(vec_col: str, m: int, dsub: int):
-    """PQ code array over the broadcast ``_pqcb`` column — the SAME
-    structure as ``_pq_encode_sql`` (array_sort argmin of
-    -(dot - halfnorm), ties -> lowest code id, total-size assert on the
-    first cell, per-subspace slice guard on centroid 0) with the
-    codebook riding the broadcast row instead of the expression tree.
-    Round-15 (guide §2.3/§4): the literal form expanded m*ksub dot
-    subtrees — a ~39 KB expression parsed, analyzed, and shipped in the
-    task binary per query, for folds that execute interpreted either
-    way; this form is a constant-size template plus one broadcast row."""
-    total = m * dsub
+def _pq_table_encode_expr(vec_col: str, codebooks: list[list[list[float]]]):
+    """PQ code array over the broadcast ``_pqcb`` column: per subspace,
+    the centroid minimizing L2 distance — argmin of -(dot - halfnorm)
+    (the ||x_j||² term is constant per row and drops out), ties ->
+    lowest code id via array_sort. A total-size assert on the first
+    cell catches an OVER-length vector (it would slice cleanly
+    everywhere and be encoded from its first m*dsub components); the
+    per-subspace slice guard on centroid 0 catches an under-length one.
+    A constant-size template plus one broadcast row: embedding the
+    centroids as literals expanded m*ksub dot subtrees, a ~39 KB
+    expression parsed, analyzed and shipped in the task binary per
+    query, for folds that execute interpreted either way."""
+    dsub = len(codebooks[0][0])
+    total = len(codebooks) * dsub
     tguard = (
         f"coalesce(CAST(assert_true(`{vec_col}` IS NULL OR "
         f"size(`{vec_col}`) = {total}, "
@@ -987,9 +970,10 @@ def _pq_table_encode_expr(vec_col: str, m: int, dsub: int):
 
 
 def _pq_table_tabs_expr(vec_col: str, dsub: int):
-    """Flat m*ksub ADC lookup table over the broadcast ``_pqcb`` column
-    — same entry order (subspace-major, centroid-minor) and same
-    guard-on-centroid-0 convention as ``_pq_tables_sql``."""
+    """Flat m*ksub ADC lookup table of dot(query_subvector, centroid)
+    over the broadcast ``_pqcb`` column — subspace-major,
+    centroid-minor entry order, one slice guard per subspace (on
+    centroid 0)."""
     _sub, agg, g = _pq_table_sub(vec_col, dsub)
     return F.expr(
         f"""flatten(transform(_pqcb, sb ->
@@ -1008,38 +992,85 @@ def pq_encode(
     32x-and-up storage/IO squeeze that makes billion-vector search
     scan-able (m bytes per vector at rest instead of dim x 4).
 
-    Round-15: the codebook rides a ONE-ROW broadcast
-    (BroadcastNestedLoopJoin against a single row — the
-    ``assign_cells_table`` shape; the stream side's partitioning is
-    untouched) and the per-row argmin is a constant-size expression
-    template. The previous literal form (``_pq_encode_sql``, kept for
-    the oracle/parity harness) expanded every codebook centroid into
-    the expression tree: ~39 KB of SQL parsed and shipped per task
-    binary, for folds that run interpreted either way. Same doubles,
-    same tie/NULL/guard semantics — pinned by
-    tests comparing the two paths row-for-row.
+    The codebook rides a ONE-ROW broadcast (the ``assign_cells_table``
+    shape; the stream side's partitioning is untouched) and the per-row
+    argmin is a constant-size expression template
+    (``_pq_table_encode_expr``).
     """
-    return corpus.crossJoin(
-        F.broadcast(_pq_one_row(corpus.sparkSession, codebooks))
-    ).select(
+    return _with_codebooks(corpus, codebooks).select(
         F.col(corpus_id).alias(corpus_id),
-        _pq_table_encode_expr(vec_col, len(codebooks), len(codebooks[0][0])).alias(
-            "codes"
-        ),
+        _pq_table_encode_expr(vec_col, codebooks).alias("codes"),
     )
 
 
-def _pq_tables_sql(col_name: str, codebooks: list[list[list[float]]]) -> str:
-    """Flat m*ksub lookup table of dot(query_subvector, centroid) —
-    computed ONCE per query row, before the candidate join."""
-    entries = []
-    for j, cb in enumerate(codebooks):
-        dsub = len(cb[0])
-        sub = f"slice({col_name}, {j * dsub + 1}, {dsub})"
-        entries.extend(
-            _dot_sql(sub, c, guard=(i == 0)) for i, c in enumerate(cb)
-        )
-    return "array(" + ", ".join(entries) + ")"
+def ivfpq_encode(
+    corpus: DataFrame,
+    codebooks: list[list[list[float]]],
+    centroids: list[list[float]],
+    corpus_id: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """(vec_id, codes, _cell) in one corpus pass: ``pq_encode``'s codes
+    plus the ``assign_cells_exact`` cell — the IndexIVFPQ corpus side,
+    shared by ``ann_ivfpq_topk_mem`` and ``sources.sinks.write_ivfpq_index``.
+    No self-join, and both broadcasts are single rows, so the stream
+    side's partitioning (and so a writer's file layout) is untouched."""
+    cells = assign_cells_exact(_with_codebooks(corpus, codebooks), centroids, vec_col)
+    return cells.select(
+        F.col(corpus_id).alias(corpus_id),
+        _pq_table_encode_expr(vec_col, codebooks).alias("codes"),
+        "_cell",
+    )
+
+
+def _pq_queries(
+    queries: DataFrame,
+    codebooks: list[list[list[float]]],
+    query_id: str,
+    vec_col: str,
+    centroids: list[list[float]] | None = None,
+    nprobe: int = 0,
+) -> DataFrame:
+    """The PQ query side: (query_id, _tab) — each query's flat ADC
+    lookup table, computed once per query before the candidate join —
+    plus one row per probed ``_cell`` (``probe_cells``) when
+    ``centroids`` are given. NULL query vectors are dropped
+    (``_queries``)."""
+    qb = _with_codebooks(_queries(queries, query_id, vec_col), codebooks)
+    cells = []
+    if centroids is not None:
+        qb, cells = probe_cells(qb, centroids, "_qv", nprobe), ["_cell"]
+    return qb.select(
+        "query_id",
+        _pq_table_tabs_expr("_qv", len(codebooks[0][0])).alias("_tab"),
+        *cells,
+    )
+
+
+def _adc_topk(
+    codes: DataFrame,
+    qb: DataFrame,
+    codebooks: list[list[list[float]]],
+    corpus_id: str,
+    k: int,
+    on: str | None = None,
+) -> DataFrame:
+    """ADC scoring (Jégou et al. 2011 §III) of coded candidates against
+    the broadcast PQ query side, joined on ``on`` (None: every query
+    against every candidate): m table lookups + adds per pair, no float
+    vector read. The fold over subspaces is an ordered
+    ``aggregate(sequence(...))``, so scores are bit-reproducible (and
+    oracle-comparable) — not a shuffle-order-dependent sum."""
+    m = len(codebooks)
+    ksub = len(codebooks[0])
+    score = F.expr(
+        f"aggregate(sequence(0, {m - 1}), 0D, "
+        f"(a, j) -> a + element_at(_tab, j * {ksub} + element_at(codes, j + 1) + 1))"
+    )
+    scored = codes.join(F.broadcast(qb), on).select(
+        "query_id", corpus_id, score.alias("score")
+    )
+    return _topk_per_query(scored, corpus_id, k, "score")
 
 
 def ann_pq_topk(
@@ -1055,7 +1086,8 @@ def ann_pq_topk(
     distance computation (ADC, Jégou et al. 2011 §III): each query
     precomputes its m x ksub dot-product lookup table; scoring a
     candidate is then m table lookups + adds — no float vectors are
-    read or multiplied per candidate.
+    read or multiplied per candidate (``_adc_topk``). A NULL query
+    vector emits no rows.
 
     Scale shape: ``corpus_codes`` (from ``pq_encode``, possibly
     persisted) streams through without shuffling and its scan reads m
@@ -1063,29 +1095,9 @@ def ann_pq_topk(
     the per-query top-k window, pre-cut by a partial WindowGroupLimit.
     Compose with the IVF cell join (``ann_ivf_topk``) for IndexIVFPQ
     semantics — probe inverted lists first, ADC-score inside them.
-
-    The fold over subspaces is an ordered ``aggregate(sequence(...))``,
-    so scores are bit-reproducible (and oracle-comparable) — not a
-    shuffle-order-dependent sum.
     """
-    m = len(codebooks)
-    ksub = len(codebooks[0])
-    qb = queries.select(
-        F.col(query_id).alias("query_id"), F.col(vec_col).alias("_qv")
-    ).crossJoin(
-        F.broadcast(_pq_one_row(queries.sparkSession, codebooks))
-    ).select(
-        "query_id",
-        _pq_table_tabs_expr("_qv", len(codebooks[0][0])).alias("_tab"),
-    )
-    score = F.expr(
-        f"aggregate(sequence(0, {m - 1}), 0D, "
-        f"(a, j) -> a + element_at(_tab, j * {ksub} + element_at(codes, j + 1) + 1))"
-    )
-    scored = corpus_codes.join(F.broadcast(qb)).select(
-        "query_id", corpus_id, score.alias("score")
-    )
-    return _topk_per_query(scored, corpus_id, k, "score")
+    qb = _pq_queries(queries, codebooks, query_id, vec_col)
+    return _adc_topk(corpus_codes, qb, codebooks, corpus_id, k)
 
 
 def ann_ivfpq_topk_mem(
@@ -1106,49 +1118,26 @@ def ann_ivfpq_topk_mem(
     cells — the candidate set shrinks to ~nprobe/n_cells of the corpus
     AND each candidate costs m table lookups instead of a dim-wide dot.
 
-    One corpus pass emits (id, codes, cell); the cell equi-join against
-    the broadcast query batch replaces ``ann_pq_topk``'s cross join.
-    Use ``ann_ivfpq_topk`` (the persisted variant) when the index lives
-    on disk — it additionally prunes the scan to the probed partitions.
-    Deterministic with the default codebook/centroid families, so the
-    whole path is DuckDB-oracle-checkable (query ``ann_ivfpq_mem``).
+    One corpus pass emits (id, codes, cell) (``ivfpq_encode``); the
+    cell equi-join against the broadcast query batch replaces
+    ``ann_pq_topk``'s cross join. Cells are assigned and probed with
+    literal centroids up to ``CELL_LITERAL_MAX`` cells and a broadcast
+    table past it; both tiers return the same rows. A NULL query vector
+    emits no rows. Use ``ann_ivfpq_topk`` (the persisted variant) when
+    the index lives on disk — it additionally prunes the scan to the
+    probed partitions. Deterministic with the default codebook/centroid
+    families, so the whole path is DuckDB-oracle-checkable (query
+    ``ann_ivfpq_mem``).
     """
-    if centroids is not None:
-        n_cells = len(centroids)
-    m = len(codebooks)
-    ksub = len(codebooks[0])
     from ..session import ensure_parallelism
 
+    cents = resolve_centroids(dim, n_cells, centroids)
     # ensure_parallelism: the per-row encode (m*ksub interpreted dot
     # folds) is exactly the compute-bound shape a single-file local
     # scan would single-thread; a no-op on already-split inputs
-    cb = ensure_parallelism(corpus).crossJoin(
-        F.broadcast(_pq_one_row(corpus.sparkSession, codebooks))
-    ).select(
-        F.col(corpus_id).alias(corpus_id),
-        _pq_table_encode_expr(vec_col, m, dim // m).alias("codes"),
-        ivf_cell(vec_col, dim, n_cells, centroids).alias("_cell"),
-    )
-    probes = F.expr(
-        f"transform(slice({_cell_rank_sql('_qv', dim, n_cells, centroids)}, 1, {nprobe}), s -> s.c)"
-    )
-    qb = queries.select(
-        F.col(query_id).alias("query_id"), F.col(vec_col).alias("_qv")
-    ).crossJoin(
-        F.broadcast(_pq_one_row(queries.sparkSession, codebooks))
-    ).select(
-        "query_id",
-        _pq_table_tabs_expr("_qv", dim // m).alias("_tab"),
-        F.explode(probes).alias("_cell"),
-    )
-    score = F.expr(
-        f"aggregate(sequence(0, {m - 1}), 0D, "
-        f"(a, j) -> a + element_at(_tab, j * {ksub} + element_at(codes, j + 1) + 1))"
-    )
-    scored = cb.join(F.broadcast(qb), "_cell").select(
-        "query_id", corpus_id, score.alias("score")
-    )
-    return _topk_per_query(scored, corpus_id, k, "score")
+    cb = ivfpq_encode(ensure_parallelism(corpus), codebooks, cents, corpus_id, vec_col)
+    qb = _pq_queries(queries, codebooks, query_id, vec_col, cents, nprobe)
+    return _adc_topk(cb, qb, codebooks, corpus_id, k, "_cell")
 
 
 def ann_ivfpq_topk(
@@ -1171,51 +1160,28 @@ def ann_ivfpq_topk(
     + ADC lookup-table scoring.
 
     The two scale reductions compound: the ``_cell IN (...)`` predicate
-    prunes to the probed partitions at the file-listing level (same as
-    ``ann_ivf_topk_indexed``), and the surviving scan reads m small ints
-    per vector instead of dim floats; scoring is m table lookups. The
-    ``_ivfpq_meta.json`` sidecar is asserted before probing — a
+    prunes to the probed partitions at the file-listing level
+    (``_probe_index``, shared with ``ann_ivf_topk_indexed``), and the
+    surviving scan reads m small ints per vector instead of dim floats;
+    scoring is m table lookups. Probes use literal centroids up to
+    ``CELL_LITERAL_MAX`` cells and a broadcast table past it, the
+    writer's fold on either tier. A NULL query vector emits no rows.
+    The ``_ivfpq_meta.json`` sidecar is asserted before probing — a
     different dim/n_cells/centroids/codebooks than the index was
     written with raises instead of silently returning wrong neighbors,
     and so does a MISSING sidecar (unverifiable quantizer).
     """
-    if centroids is not None:
-        n_cells = len(centroids)
-    from ..sources.sinks import check_sidecar, ivf_meta, pq_meta
+    from ..sources.sinks import ivf_meta, pq_meta
 
-    check_sidecar(
+    cents = resolve_centroids(dim, n_cells, centroids)
+    corpus, qb = _probe_index(
         spark,
         index_path,
         "ivfpq",
-        {**ivf_meta(dim, n_cells, centroids, index_vec_col), **pq_meta(codebooks)},
+        {**ivf_meta(dim, len(cents), centroids, index_vec_col), **pq_meta(codebooks)},
+        _pq_queries(queries, codebooks, query_id, query_vec_col, cents, nprobe),
     )
-    m = len(codebooks)
-    ksub = len(codebooks[0])
-    probes = F.expr(
-        f"transform(slice({_cell_rank_sql('_qv', dim, n_cells, centroids)}, 1, {nprobe}), s -> s.c)"
-    )
-    qb = (
-        queries.select(
-            F.col(query_id).alias("query_id"), F.col(query_vec_col).alias("_qv")
-        )
-        .crossJoin(F.broadcast(_pq_one_row(queries.sparkSession, codebooks)))
-        .select(
-            "query_id",
-            _pq_table_tabs_expr("_qv", dim // len(codebooks)).alias("_tab"),
-            F.explode(probes).alias("_cell"),
-        )
-        .localCheckpoint(eager=True)  # pin: feeds the filter collect AND the join
-    )
-    cells = sorted(r["_cell"] for r in qb.select("_cell").distinct().collect())
-    corpus = spark.read.parquet(index_path).filter(F.col("_cell").isin(cells))
-    score = F.expr(
-        f"aggregate(sequence(0, {m - 1}), 0D, "
-        f"(a, j) -> a + element_at(_tab, j * {ksub} + element_at(codes, j + 1) + 1))"
-    )
-    scored = corpus.join(F.broadcast(qb), "_cell").select(
-        "query_id", corpus_id, score.alias("score")
-    )
-    return _topk_per_query(scored, corpus_id, k, "score")
+    return _adc_topk(corpus, qb, codebooks, corpus_id, k, "_cell")
 
 
 def ann_lsh_topk(
@@ -1239,20 +1205,8 @@ def ann_lsh_topk(
     ).withColumn("_bucket", lsh_bucket("_qv", dim, n_planes))
     cb = corpus.select(
         F.col(corpus_id).alias(corpus_id), F.col(vec_col).alias("_cv")
-    ).withColumn("_bucket", lsh_bucket("_cv", dim, n_planes)).selectExpr(
-        "*", f"{l2_norm_sql('_cv')} AS _cn"
-    )
-    scored = cb.join(
-        F.broadcast(qb.selectExpr("*", f"{l2_norm_sql('_qv')} AS _qn")),
-        "_bucket",
-    ).selectExpr(
-        "query_id",
-        f"`{corpus_id}`",
-        # try_divide: a zero vector (norm 0) scores NULL (ranked last),
-        # never an ANSI DIVIDE_BY_ZERO job abort — same as knn_topk
-        f"try_divide({dot_sql('_qv', '_cv')}, _qn * _cn) AS sim",
-    )
-    return _topk_per_query(scored, corpus_id, k, "sim")
+    ).withColumn("_bucket", lsh_bucket("_cv", dim, n_planes))
+    return _cosine_topk(cb, qb, "_bucket", corpus_id, "_cv", k)
 
 
 def ann_ivfpq_rerank(

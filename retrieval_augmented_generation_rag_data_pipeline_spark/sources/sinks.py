@@ -201,17 +201,22 @@ def write_ivf_index(
     listing skips it like ``_SUCCESS``): a probe with a different
     dim / n_cells / centroid set would silently return wrong neighbors,
     so ``ann_ivf_topk_indexed`` asserts against the sidecar up front.
-    """
-    from ..operators.vectors import ivf_cell
 
-    if centroids is not None:
-        n_cells = len(centroids)
-    meta = ivf_meta(dim, n_cells, centroids, vec_col)
+    Cells come from ``vectors.assign_cells_exact``: literal centroids up
+    to ``CELL_LITERAL_MAX`` cells, a broadcast centroid table past it.
+    Both tiers fold the same doubles, so the cells (and the sidecar)
+    do not depend on the tier, and the caller's partitioning — which
+    sets the written file layout — is kept. A NULL vector lands in the
+    NULL cell.
+    """
+    from ..operators.vectors import assign_cells_exact, resolve_centroids
+
+    cents = resolve_centroids(dim, n_cells, centroids)
+    meta = ivf_meta(dim, len(cents), centroids, vec_col)
     sidecar = path.rstrip("/") + "/_ivf_meta.json"
     _guard_sidecar_append(corpus.sparkSession, sidecar, meta, mode)
     (
-        corpus.select(F.col(corpus_id), F.col(vec_col))
-        .withColumn("_cell", ivf_cell(vec_col, dim, n_cells, centroids))
+        assign_cells_exact(corpus.select(F.col(corpus_id), F.col(vec_col)), cents, vec_col)
         .write.mode(mode)
         .partitionBy("_cell")
         .parquet(path)
@@ -348,34 +353,21 @@ def write_ivfpq_index(
     ~0.1% of the bytes a flat float index would). Quantizer parameters
     (IVF + PQ) persist in an ``_ivfpq_meta.json`` sidecar;
     ``ann_ivfpq_topk`` asserts against it before probing.
-    """
-    from ..operators.vectors import (
-        _pq_one_row,
-        _pq_table_encode_expr,
-        ivf_cell,
-    )
 
-    if centroids is not None:
-        n_cells = len(centroids)
-    meta = ivf_meta(dim, n_cells, centroids, vec_col)
-    meta.update(pq_meta(codebooks))
+    Codes and cells come from one corpus pass,
+    ``vectors.ivfpq_encode``: the codebook rides a one-row broadcast,
+    and cells use literal centroids up to ``CELL_LITERAL_MAX`` cells, a
+    broadcast centroid table past it (same cells on both tiers). The
+    caller's partitioning, and so the written file layout, is kept.
+    """
+    from ..operators.vectors import ivfpq_encode, resolve_centroids
+
+    cents = resolve_centroids(dim, n_cells, centroids)
+    meta = {**ivf_meta(dim, len(cents), centroids, vec_col), **pq_meta(codebooks)}
     sidecar = path.rstrip("/") + "/_ivfpq_meta.json"
     _guard_sidecar_append(corpus.sparkSession, sidecar, meta, mode)
-    m = len(codebooks)
     (
-        # one pass: id + codes + cell in a single projection — no
-        # self-join, the corpus is read exactly once; the PQ codebook
-        # rides a one-row broadcast (round-15 — constant-size plan
-        # instead of m*ksub literal dot subtrees; stream partitioning,
-        # and so the written file layout, is untouched)
-        corpus.crossJoin(
-            F.broadcast(_pq_one_row(corpus.sparkSession, codebooks))
-        )
-        .select(
-            F.col(corpus_id),
-            _pq_table_encode_expr(vec_col, m, dim // m).alias("codes"),
-            ivf_cell(vec_col, dim, n_cells, centroids).alias("_cell"),
-        )
+        ivfpq_encode(corpus, codebooks, cents, corpus_id, vec_col)
         .write.mode(mode)
         .partitionBy("_cell")
         .parquet(path)

@@ -236,8 +236,9 @@ def test_ivfpq_index_prunes_and_matches_inmemory_adc(spark, tmp_path):
     from retrieval_augmented_generation_rag_data_pipeline_spark.operators.vectors import (
         ann_ivfpq_topk,
         ann_pq_topk,
+        assign_cells_exact,
         default_pq_codebooks,
-        ivf_cell,
+        ivf_centroid,
         pq_encode,
     )
     from retrieval_augmented_generation_rag_data_pipeline_spark.sources.sinks import (
@@ -252,6 +253,9 @@ def test_ivfpq_index_prunes_and_matches_inmemory_adc(spark, tmp_path):
     q = emb.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
+    # a NULL query vector emits no rows on both ADC paths (it used to
+    # get k NULL-score "neighbors")
+    q = q.unionByName(spark.createDataFrame([(999, None)], q.schema))
     out = ann_ivfpq_topk(spark, path, q, k=5, dim=64, codebooks=books,
                          n_cells=8, nprobe=2)
 
@@ -266,11 +270,14 @@ def test_ivfpq_index_prunes_and_matches_inmemory_adc(spark, tmp_path):
 
     # value parity: in-memory ADC restricted to each query's probed cells
     probed = {r.query_id: r.vec_id for r in out.collect() if r.rank == 1}
-    cells = emb.select(
-        "vec_id", ivf_cell("embedding", 64, 8).alias("_cell")
-    )
+    cells = assign_cells_exact(
+        emb.select("vec_id", "embedding"),
+        [ivf_centroid(c, 64) for c in range(8)],
+        "embedding",
+    ).select("vec_id", "_cell")
     codes = pq_encode(emb, books).join(cells, "vec_id")
     full = ann_pq_topk(q, codes, books, k=emb.count())
+    assert 999 not in {r.query_id for r in out.collect() + full.collect()}
     # every indexed hit must carry the identical ADC score the in-memory
     # path computes for that (query, vec) pair
     mem = {(r.query_id, r.vec_id): r.score for r in full.collect()}

@@ -222,7 +222,7 @@ def test_frozen_quantizer_artifact_integrity():
     """The committed artifacts/quantizer.json is the gate's trained
     quantizer (tools/train_quantizer.py): right shapes for the
     dim=64 / n_cells=8 / m=8 / ksub=16 eval geometry, L2-normalized
-    coarse centroids (ivf_cell ranks by cosine via argmax-dot), all
+    coarse centroids (argmax-dot cell assignment ranks by cosine), all
     finite — a corrupted or hand-edited artifact fails here before it
     silently skews the oracle-checked recall numbers."""
     import math
@@ -279,15 +279,16 @@ def test_frozen_quantizer_matches_live_training_slice():
 
 
 def test_table_assignment_matches_literal(spark):
-    """assign_cells_table must agree BIT-FOR-BIT with the literal
-    ivf_cell path on shared centroids — both on the fixed pseudo-random
-    family and on the frozen trained artifact — because semantic_dedup
-    auto-switches between them on cell count and the switch must never
-    move a vector's cell (and therefore its keep/drop)."""
+    """assign_cells_table must agree BIT-FOR-BIT with the literal tier
+    of assign_cells_exact (8 and 4 cells sit under CELL_LITERAL_MAX) on
+    shared centroids — both on the fixed pseudo-random family and on
+    the frozen trained artifact — because every IVF site switches
+    between them on cell count and the switch must never move a
+    vector's cell (and therefore its keep/drop or its index cell)."""
     from retrieval_augmented_generation_rag_data_pipeline_spark.operators.vectors import (
+        assign_cells_exact,
         assign_cells_table,
         frozen_quantizer,
-        ivf_cell,
         ivf_centroid,
     )
 
@@ -297,10 +298,8 @@ def test_table_assignment_matches_literal(spark):
     trained, _ = frozen_quantizer()
     for cents in ([ivf_centroid(c, 64) for c in range(8)], trained):
         lit = {
-            r.vec_id: r.c
-            for r in emb.withColumn(
-                "c", ivf_cell("_v", 64, len(cents), cents).cast("int")
-            ).collect()
+            r.vec_id: r._cell
+            for r in assign_cells_exact(emb, cents, "_v").collect()
         }
         tab = {
             r.vec_id: r._cell
@@ -318,10 +317,8 @@ def test_table_assignment_matches_literal(spark):
     cents4 = [ivf_centroid(c, 64) for c in range(4)]
     row = assign_cells_table(one, cents4, "_v").first()
     assert row._cell is None
-    lit_row = one.select(
-        ivf_cell("_v", 64, 4, cents4).alias("c")
-    ).first()
-    assert lit_row.c is None
+    lit_row = assign_cells_exact(one, cents4, "_v").first()
+    assert lit_row._cell is None
 
 
 def _plan(build) -> str:
@@ -359,14 +356,23 @@ def test_semantic_dedup_table_path_matches_literal(spark, monkeypatch):
     assert lit == tab and len(lit) == emb.count()
 
 
-def test_ivf_table_path_matches_literal(spark, monkeypatch):
-    """ann_ivf_topk's table path (forced by lowering
-    vectors.CELL_LITERAL_MAX under the 8-cell count) must reproduce the
-    literal path's full top-k (ids, sims, ranks) — probes and
-    assignments fold identical doubles, so the result sets are
-    bit-equal, not merely same-recall."""
+def test_ivf_table_path_matches_literal(spark, monkeypatch, tmp_path):
+    """Every IVF site's table tier (forced by lowering
+    vectors.CELL_LITERAL_MAX under the 8-cell count) must reproduce its
+    literal tier's full top-k (ids, scores, ranks): ann_ivf_topk,
+    write_ivf_index + ann_ivf_topk_indexed, write_ivfpq_index +
+    ann_ivfpq_topk, and ann_ivfpq_topk_mem. Probes and assignments fold
+    identical doubles, so the result sets are bit-equal, not merely
+    same-recall. An index written on either tier and probed on either
+    returns the same rows, so existing indexes stay valid with no
+    sidecar change; each persisted probe also equals its in-memory
+    twin."""
     from retrieval_augmented_generation_rag_data_pipeline_spark.operators import (
         vectors,
+    )
+    from retrieval_augmented_generation_rag_data_pipeline_spark.sources.sinks import (
+        write_ivf_index,
+        write_ivfpq_index,
     )
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
@@ -374,21 +380,50 @@ def test_ivf_table_path_matches_literal(spark, monkeypatch):
         F.col("vec_id").alias("query_id"), "embedding"
     )
     trained, _ = vectors.frozen_quantizer()
-    key = lambda rows: sorted(  # noqa: E731
-        (r.query_id, r.vec_id, r.sim, r.rank) for r in rows
-    )
-
+    books = vectors.default_pq_codebooks(64, m=8, ksub=16)
+    key = lambda rows: sorted(tuple(r) for r in rows)  # noqa: E731
     literal_max = vectors.CELL_LITERAL_MAX
+    ceilings = (literal_max, 4)
+
     for cents in (None, trained):
-        got = {}
-        for ceiling in (literal_max, 4):
+        paths = {}
+        for ceiling in ceilings:
             monkeypatch.setattr(vectors, "CELL_LITERAL_MAX", ceiling)
-            run = lambda: vectors.ann_ivf_topk(  # noqa: E731
-                q, emb, k=5, dim=64, nprobe=2, centroids=cents
+            paths["ivf", ceiling] = str(tmp_path / f"ivf_{ceiling}_{cents is None}")
+            write_ivf_index(emb, paths["ivf", ceiling], dim=64, centroids=cents)
+            paths["pq", ceiling] = str(tmp_path / f"pq_{ceiling}_{cents is None}")
+            write_ivfpq_index(
+                emb, paths["pq", ceiling], dim=64, codebooks=books, centroids=cents
             )
-            got[ceiling] = ("_cents" in _plan(run), key(run().collect()))
-        assert got[literal_max][0] is False and got[4][0] is True
-        assert got[literal_max][1] == got[4][1] and len(got[4][1]) == 25
+        sites = {
+            "ivf": lambda: vectors.ann_ivf_topk(
+                q, emb, k=5, dim=64, nprobe=2, centroids=cents
+            ),
+            "ivfpq_mem": lambda: vectors.ann_ivfpq_topk_mem(
+                q, emb, k=5, dim=64, codebooks=books, nprobe=2, centroids=cents
+            ),
+        }
+        for w in ceilings:  # the tier the index was WRITTEN on
+            sites["ivf_indexed", w] = lambda w=w: vectors.ann_ivf_topk_indexed(
+                spark, paths["ivf", w], q, k=5, dim=64, nprobe=2, centroids=cents
+            )
+            sites["ivfpq", w] = lambda w=w: vectors.ann_ivfpq_topk(
+                spark, paths["pq", w], q, k=5, dim=64, codebooks=books,
+                nprobe=2, centroids=cents,
+            )
+        rows = {}
+        for name, run in sites.items():
+            got = {}
+            for ceiling in ceilings:  # the tier the site RUNS on
+                monkeypatch.setattr(vectors, "CELL_LITERAL_MAX", ceiling)
+                got[ceiling] = ("_cents" in _plan(run), key(run().collect()))
+            assert got[literal_max][0] is False and got[4][0] is True, name
+            assert got[literal_max][1] == got[4][1], name
+            assert len(got[4][1]) == 25, name
+            rows[name] = got[4][1]
+        for w in ceilings:
+            assert rows["ivf_indexed", w] == rows["ivf"]
+            assert rows["ivfpq", w] == rows["ivfpq_mem"]
 
 
 def test_arrow_assignment_agrees_on_real_data(spark):
@@ -401,8 +436,8 @@ def test_arrow_assignment_agrees_on_real_data(spark):
 
     from retrieval_augmented_generation_rag_data_pipeline_spark.operators.vectors import (
         assign_cells_arrow,
+        assign_cells_exact,
         frozen_quantizer,
-        ivf_cell,
         ivf_centroid,
     )
 
@@ -412,10 +447,8 @@ def test_arrow_assignment_agrees_on_real_data(spark):
     trained, _ = frozen_quantizer()
     for cents in ([ivf_centroid(c, 64) for c in range(8)], trained):
         lit = {
-            r.vec_id: r.c
-            for r in emb.withColumn(
-                "c", ivf_cell("_v", 64, len(cents), cents).cast("int")
-            ).collect()
+            r.vec_id: r._cell
+            for r in assign_cells_exact(emb, cents, "_v").collect()
         }
         arw = {
             r.vec_id: r._cell
@@ -482,16 +515,20 @@ def test_ann_ivfpq_rerank_exact_scores_and_recall_gain(spark):
     q = emb.filter(F.col("vec_id") < 6).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
+    # a NULL query vector emits no rows (it used to get k NULL-score
+    # "neighbors" from the ADC path)
+    qn = q.unionByName(spark.createDataFrame([(999, None)], q.schema))
     k = 5
     rer = ann_ivfpq_rerank(
-        q, emb, k=k, dim=64, codebooks=books, refine=4, n_cells=8, nprobe=2
+        qn, emb, k=k, dim=64, codebooks=books, refine=4, n_cells=8, nprobe=2
     ).collect()
     short = ann_ivfpq_topk_mem(
-        q, emb, k=k * 4, dim=64, codebooks=books, n_cells=8, nprobe=2
+        qn, emb, k=k * 4, dim=64, codebooks=books, n_cells=8, nprobe=2
     ).collect()
     adc = ann_ivfpq_topk_mem(
-        q, emb, k=k, dim=64, codebooks=books, n_cells=8, nprobe=2
+        qn, emb, k=k, dim=64, codebooks=books, n_cells=8, nprobe=2
     ).collect()
+    assert 999 not in {r.query_id for r in rer + short + adc}
     exact = knn_topk(q, emb, k=k, metric="dot").collect()
 
     short_set = {(r.query_id, r.vec_id) for r in short}

@@ -486,7 +486,7 @@ def main() -> None:
         train_ivf_centroids,
     )
 
-    # capped at 30x WITHIN the sweep: ivf_cell embeds n_cells x dim
+    # capped at 30x WITHIN the sweep: the literal cell tier embeds n_cells x dim
     # literal doubles, and at 100x (800 cells) the ~130 MB serialized
     # task binaries stacked on the sweep's accumulated checkpoint
     # blocks OOM'd the shared 32-core JVM — the 100x point is recorded
