@@ -13,9 +13,30 @@ instead of silently skewing the measurements.
 
 DuckDB computes the hash: engine-independent of the system under test,
 one ordered aggregation, no Spark session needed at test time.
+
+``load_artifact`` is the one loader of the committed JSON artifacts
+(LM, classifier, subword, langid, quantizer, public suffixes, DSIR
+target): it resolves the default path, caches per path, and parses.
 """
 
 from __future__ import annotations
+
+import json
+import pathlib
+
+_CACHE: dict[str, dict] = {}
+
+
+def load_artifact(path: str | None, default_name: str) -> dict:
+    """The parsed JSON artifact at ``path`` (default:
+    ``artifacts/<default_name>``), read once per process and path.
+    Callers share the returned dict, so they must not mutate it."""
+    if path is None:
+        path = str(pathlib.Path(__file__).resolve().parents[2] / "artifacts" / default_name)
+    art = _CACHE.get(path)
+    if art is None:
+        art = _CACHE[path] = json.loads(pathlib.Path(path).read_text())
+    return art
 
 
 def corpus_fingerprint(

@@ -271,7 +271,7 @@ def bloom_anti_join(
     # probe-side cost the filter exists to reduce. One lazy local
     # checkpoint evaluates the flag once; at extreme probe widths pass
     # a narrow (id, key) projection and join payloads back, the same
-    # guidance as range_parted_offsets.
+    # guidance as joins.running_sum.
     from .pinning import pin
 
     flagged = pin(flagged)

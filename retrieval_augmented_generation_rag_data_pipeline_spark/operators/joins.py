@@ -720,239 +720,137 @@ def hot_salted_count_join(
     )
 
 
-def _resolve_num_parts(df: DataFrame, num_parts: int | None) -> int:
-    """Shared partition-count resolution for the range-parted offset
-    helpers: explicit override, else spark.sql.shuffle.partitions —
-    which can be non-numeric ('auto' under AQE auto-optimized shuffle
-    on some platforms) — else the input's own parallelism, else the
-    cluster default. One copy so the twins cannot drift."""
-    if num_parts:
-        return num_parts
-    spark = df.sparkSession
-    conf = spark.conf.get("spark.sql.shuffle.partitions", "")
-    return (
-        int(conf)
-        if conf.isdigit()
-        else (df.rdd.getNumPartitions() or spark.sparkContext.defaultParallelism)
-    )
-
-
-def range_parted_offsets(
+def running_sum(
     df: DataFrame,
     order_cols: list,
-    num_parts: int | None = None,
     weight_col: str | None = None,
-):
-    """Shared machinery for distributed global prefix sums: range-
-    partition ``df`` on ``order_cols``, pin the exchange, and return
-    ``(parted, off)`` — the partitioned frame (with a ``_part`` column)
-    and a Column mapping each row's partition to the total weight of
-    all PRECEDING partitions (row count when ``weight_col`` is None,
-    else ``sum(weight_col)``). Only one stats row per partition reaches
-    the driver — the zipWithIndex trick generalized to weighted prefix
-    sums. Consumers add a per-partition running value (window or
-    row_number partitioned by ``_part``) on top.
+    group_cols: Sequence[str] = (),
+    num_parts: int | None = None,
+) -> DataFrame:
+    """``df`` plus ``_cum``: the inclusive running total (BIGINT) of
+    ``weight_col`` in ``order_cols`` order — 1 per row when
+    ``weight_col`` is None — restarting for each ``group_cols`` value
+    (NULL is a group of its own). The one distributed prefix sum under
+    ``global_index``, ``packing.pack_sequences`` and the
+    ``sampling.select_token_budget`` cuts.
 
-    The partition->offset mapping rides back into the plan through
-    ``small_side`` as a dense (partition, offset) lookup side: while
-    its literal fits ``INLINE_MAX_BYTES`` (several thousand partitions,
-    so every local-mode count) it is an ``element_at(array(...), _part
-    + 1)`` literal — a join-free plan and an O(1) read per row; above
-    that — the 10^4-10^5 partitions a 100 TB corpus implies — it is a
-    broadcast join of the tiny (part, offset) relation, which keeps the
-    plan size independent of the partition count; ``parted`` then
-    carries a ``_poff`` column and ``off`` references it. ``off`` is
-    BIGINT on both tiers.
-    Consumers must drop BOTH ``_part`` and ``_poff`` when done
-    (``drop`` ignores absent columns, so unconditionally dropping both
-    is safe on either path).
+    ``sum() OVER (ORDER BY ...)`` with no PARTITION BY funnels every row
+    through a single task (Exchange SinglePartition). Instead: range-
+    partition on ``group_cols + order_cols`` into ``num_parts`` (default
+    ``spark.sql.shuffle.partitions`` when numeric — it can read 'auto'
+    under AQE — else the input's parallelism), run ONE stats collect of
+    the weight per (partition, group) — at most ``num_parts + n_groups -
+    1`` rows, since groups are contiguous under the range exchange — and
+    add each row's preceding-partition offset to a window running sum
+    partitioned by (partition, group).
 
-    The range exchange is pinned with a local checkpoint so the stats
-    job and the downstream query read the same materialized partitions
-    (partition ids must agree between the two jobs). The checkpoint is
-    LAZY (round-15, guide §1): the stats collect is the first action,
-    so the persist rides that scan instead of paying a separate
-    eager-materialization pass over the full frame — one less job and
-    one less full-data pass per consumer; downstream actions read the
-    blocks the stats job persisted, so partition ids still agree.
+    The offsets ride back into the plan as a small side. Ungrouped they
+    are dense per partition and go through ``small_side``: an
+    ``element_at(array(...), _part + 1)`` literal while it fits
+    ``INLINE_MAX_BYTES`` (several thousand partitions), else a broadcast
+    join of the (partition, offset) relation, so the plan size stays
+    independent of the partition count. Grouped they are one
+    ``local_relation`` joined null-safe on (partition, group).
 
-    Honest plan note: consumers pay TWO full-data exchanges of ``df`` —
-    the range exchange (hidden inside the eager checkpoint job) plus a
-    hash exchange on ``_part`` that EnsureRequirements inserts for the
-    downstream window, because the checkpointed scan can no longer
-    prove partition-id clustering. Both move only the frame being
-    indexed — callers should pass the NARROW projection (ids + weights,
-    ~16 bytes/row; even a 10^10-doc corpus shuffles ~160 GB twice, not
-    the corpus itself) and join coordinates back by id if wide payloads
-    are needed downstream.
+    The range exchange is pinned with a LAZY local checkpoint (a direct
+    call, not ``pinning.pin``, so pins-off runs keep it too): the stats
+    collect and the query must read the same partition ids, and the
+    persist rides the stats scan instead of an extra full-data pass.
 
-    When ``weight_col`` is set, the stats job also validates it:
-    negative, NULL, or NON-INTEGRAL weights raise (negatives/NULLs
-    would silently corrupt every downstream offset — NULLs are skipped
-    by sum() so successors shift as if the row weighed 0 while the row
-    itself gets NULL coordinates; fractional weights would truncate
-    differently on the literal-array vs broadcast-offsets path, making
-    offsets depend on the partition count).
+    Honest plan note: this costs TWO full-data exchanges of ``df`` — the
+    range exchange (inside the checkpoint job) plus a hash exchange on
+    the window partition keys, which EnsureRequirements inserts because
+    the checkpointed scan can no longer prove partition-id clustering.
+    Both move only the frame being summed, so callers should pass the
+    NARROW projection (ids + weights, ~16 bytes/row; a 10^10-row corpus
+    shuffles ~160 GB twice, not the corpus) and join payloads back by id.
+
+    The stats job also validates ``weight_col``: negative, NULL or
+    non-integral weights raise. Negatives and NULLs would corrupt every
+    later offset (sum() skips a NULL, so successors shift as if it
+    weighed 0 while the row itself gets a NULL total); fractional
+    weights would truncate differently on the two offset tiers, making
+    totals depend on the partition count.
     """
     spark = df.sparkSession
-    n = _resolve_num_parts(df, num_parts)
+    if not num_parts:
+        conf = spark.conf.get("spark.sql.shuffle.partitions", "")
+        num_parts = (
+            int(conf)
+            if conf.isdigit()
+            else (df.rdd.getNumPartitions() or spark.sparkContext.defaultParallelism)
+        )
+    keys = ["_part", *group_cols]
     parted = (
-        df.repartitionByRange(n, *order_cols)
+        df.repartitionByRange(num_parts, *group_cols, *order_cols)
         .withColumn("_part", F.spark_partition_id())
         .localCheckpoint(eager=False)
     )
-    if weight_col is None:
-        stats = (
-            parted.groupBy("_part").agg(F.count("*").alias("_w")).collect()
+    w = F.col(weight_col) if weight_col else F.lit(1)
+    stats = (
+        parted.groupBy(*keys)
+        .agg(
+            F.sum(w).alias("_w"),
+            F.min(w).alias("_m"),
+            (F.count("*") - F.count(w)).alias("_nulls"),
+            F.sum((w != F.floor(w)).cast("int")).alias("_frac"),
         )
-    else:
-        stats = (
-            parted.groupBy("_part")
-            .agg(
-                F.sum(weight_col).alias("_w"),
-                F.min(weight_col).alias("_m"),
-                (F.count("*") - F.count(weight_col)).alias("_nulls"),
-                F.sum(
-                    (F.col(weight_col) != F.floor(weight_col)).cast("int")
-                ).alias("_frac"),
-            )
-            .collect()
-        )
-        bad = [r["_part"] for r in stats if r["_m"] is not None and r["_m"] < 0]
-        if bad:
-            raise ValueError(
-                f"range_parted_offsets: negative values in {weight_col!r} "
-                f"(partitions {sorted(bad)[:5]}); weights must be >= 0"
-            )
-        nulls = [r["_part"] for r in stats if r["_nulls"]]
-        if nulls:
-            raise ValueError(
-                f"range_parted_offsets: NULL values in {weight_col!r} "
-                f"(partitions {sorted(nulls)[:5]}); coalesce them to 0 "
-                "explicitly if that is the intended weight"
-            )
-        frac = [r["_part"] for r in stats if r["_frac"]]
-        if frac:
-            raise ValueError(
-                f"range_parted_offsets: non-integral values in "
-                f"{weight_col!r} (partitions {sorted(frac)[:5]}); prefix "
-                "offsets are integer counts and fractional weights would "
-                "silently truncate — round or cast the weight column "
-                "explicitly"
-            )
-    sums = {r["_part"]: int(r["_w"] or 0) for r in stats}
-    if not sums:
-        return parted, F.lit(0)
-    offsets, acc = [], 0
-    for p in range(max(sums) + 1):  # empty partitions included: dense
-        offsets.append((p, acc))
-        acc += sums.get(p, 0)
-    side = small_side(spark, offsets, "_part int, _poff bigint")
-    if side.frame is None:
-        return parted, F.expr(side.at_sql("_part"))
-    return parted.join(F.broadcast(side.frame), "_part"), F.col("_poff")
-
-
-def range_parted_offsets_grouped(
-    df: DataFrame,
-    group_cols: list,
-    order_cols: list,
-    num_parts: int | None = None,
-    weight_col: str | None = None,
-):
-    """``range_parted_offsets`` with PER-GROUP prefix offsets: range-
-    partition on ``group_cols + order_cols`` (each group occupies a
-    contiguous partition span) and return ``(parted, off)`` where
-    ``off`` maps each row's (partition, group) to the total weight of
-    preceding partitions WITHIN THE SAME GROUP. Consumers add a window
-    partitioned by ``(_part, *group_cols)`` on top and get one
-    independent global prefix sum per group — the per-domain running
-    token totals of ``select_token_budget_grouped`` — without ever
-    funnelling a group through a single task.
-
-    Stats collect stays metadata-sized by construction: groups are
-    contiguous under the range exchange, so the per-(partition, group)
-    frame holds at most ``num_parts + n_groups - 1`` rows regardless of
-    data volume. The offsets always ride back as a broadcast join on
-    ``(_part, *group_cols)`` (no literal-map fast path — the composite
-    key would need struct literals for marginal gain); consumers drop
-    ``_part`` and ``_goff`` when done. Weight validation (no negatives,
-    no NULLs) matches the ungrouped helper. NULL group values form
-    their own group (groupBy and the null-safe join condition both
-    treat NULL as a value).
-    """
-    spark = df.sparkSession
-    n = _resolve_num_parts(df, num_parts)
-    parted = (
-        df.repartitionByRange(n, *group_cols, *order_cols)
-        .withColumn("_part", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .collect()
     )
-    if weight_col is None:
-        stats = (
-            parted.groupBy("_part", *group_cols)
-            .agg(F.count("*").alias("_w"))
-            .collect()
-        )
-    else:
-        stats = (
-            parted.groupBy("_part", *group_cols)
-            .agg(
-                F.sum(weight_col).alias("_w"),
-                F.min(weight_col).alias("_m"),
-                (F.count("*") - F.count(weight_col)).alias("_nulls"),
-                F.sum(
-                    (F.col(weight_col) != F.floor(weight_col)).cast("int")
-                ).alias("_frac"),
-            )
-            .collect()
-        )
-        bad = [r["_part"] for r in stats if r["_m"] is not None and r["_m"] < 0]
+    for what, hit, hint in (
+        ("negative", lambda r: r["_m"] is not None and r["_m"] < 0,
+         "weights must be >= 0"),
+        ("NULL", lambda r: r["_nulls"],
+         "coalesce them to 0 explicitly if that is the intended weight"),
+        ("non-integral", lambda r: r["_frac"],
+         "offsets are integer counts and fractional weights would silently "
+         "truncate — round or cast the weight column explicitly"),
+    ):
+        bad = sorted({r["_part"] for r in stats if hit(r)})
         if bad:
             raise ValueError(
-                f"range_parted_offsets_grouped: negative values in "
-                f"{weight_col!r} (partitions {sorted(bad)[:5]}); weights "
-                "must be >= 0"
+                f"running_sum: {what} values in {weight_col!r} "
+                f"(partitions {bad[:5]}); {hint}"
             )
-        nulls = [r["_part"] for r in stats if r["_nulls"]]
-        if nulls:
-            raise ValueError(
-                f"range_parted_offsets_grouped: NULL values in "
-                f"{weight_col!r} (partitions {sorted(nulls)[:5]}); "
-                "coalesce them to 0 explicitly if that is the intended "
-                "weight"
-            )
-        frac = [r["_part"] for r in stats if r["_frac"]]
-        if frac:
-            raise ValueError(
-                f"range_parted_offsets_grouped: non-integral values in "
-                f"{weight_col!r} (partitions {sorted(frac)[:5]}); prefix "
-                "offsets are integer counts and fractional weights would "
-                "silently truncate — round or cast the weight column "
-                "explicitly"
-            )
-    # per-group running offsets in partition order
+    weights = {tuple(r[k] for k in keys): int(r["_w"] or 0) for r in stats}
+    if weights and not group_cols:  # dense: the inline tier reads by position
+        last = max(p for p, in weights)
+        weights = {(p,): weights.get((p,), 0) for p in range(last + 1)}
     acc: dict[tuple, int] = {}
-    rows = []
-    for r in sorted(stats, key=lambda r: r["_part"]):
-        g = tuple(r[c] for c in group_cols)
-        rows.append((int(r["_part"]), *g, int(acc.get(g, 0))))
-        acc[g] = acc.get(g, 0) + int(r["_w"] or 0)
-    if not rows:
-        return parted, F.lit(0).cast("long")
-    offs_schema = parted.select("_part", *group_cols).schema.add(
-        "_goff", "long", False
+    offs = []
+    for k in sorted(weights, key=lambda k: k[0]):
+        offs.append((*k, acc.get(k[1:], 0)))
+        acc[k[1:]] = acc.get(k[1:], 0) + weights[k]
+    off = F.lit(0)
+    if offs and not group_cols:
+        side = small_side(spark, offs, "_part int, _poff bigint")
+        if side.frame is None:
+            off = F.expr(side.at_sql("_part"))
+        else:
+            parted, off = parted.join(F.broadcast(side.frame), "_part"), F.col("_poff")
+    elif offs:
+        schema = parted.select(*keys).schema.add("_goff", "long", False)
+        rel = local_relation(spark, schema, [list(c) for c in zip(*offs)])
+        cond = F.col("_l._part") == F.col("_r._part")
+        for c in group_cols:
+            cond = cond & F.col(f"_l.{c}").eqNullSafe(F.col(f"_r.{c}"))
+        parted = (
+            parted.alias("_l")
+            .join(F.broadcast(rel.alias("_r")), cond)
+            .select("_l.*", F.col("_r._goff").alias("_goff"))
+        )
+        off = F.col("_goff")
+    win = (
+        Window.partitionBy("_part", *group_cols)
+        .orderBy(*order_cols)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    offs_df = spark.createDataFrame(rows, offs_schema)
-    cond = F.col("_l._part") == F.col("_r._part")
-    for c in group_cols:
-        cond = cond & F.col(f"_l.{c}").eqNullSafe(F.col(f"_r.{c}"))
-    parted = (
-        parted.alias("_l")
-        .join(F.broadcast(offs_df.alias("_r")), cond)
-        .select("_l.*", F.col("_r._goff").alias("_goff"))
+    # row_number, not sum(1): it counts the same and is never NULL, so a
+    # join on the index infers no isnotnull filter
+    total = F.sum(w).over(win) if weight_col else F.row_number().over(win)
+    return parted.withColumn("_cum", (off + total).cast("long")).drop(
+        "_part", "_poff", "_goff"
     )
-    return parted, F.col("_goff")
 
 
 def global_index(
@@ -961,20 +859,13 @@ def global_index(
     index_col: str = "_rn",
     num_parts: int | None = None,
 ) -> DataFrame:
-    """1-based global row index in ``order_cols`` order — distributed.
-
-    ``row_number() OVER (ORDER BY ...)`` with no PARTITION BY funnels
-    every row through a single task (Exchange SinglePartition) — the
-    classic scale killer. Instead: ``range_parted_offsets`` (range
-    repartition + driver-side per-partition prefix counts) plus a
-    per-partition row_number. See that helper for the plan-shape and
-    shuffle-volume notes.
-    """
-    parted, off = range_parted_offsets(df, order_cols, num_parts)
-    w = Window.partitionBy("_part").orderBy(*order_cols)
-    return parted.withColumn(
-        index_col, (off + F.row_number().over(w)).cast("long")
-    ).drop("_part", "_poff")
+    """1-based global row index in ``order_cols`` order — distributed:
+    ``running_sum`` with no weight (1 per row), ``_cum`` renamed to
+    ``index_col``. No single-partition stage anywhere in the plan; see
+    ``running_sum`` for the plan-shape and shuffle-volume notes."""
+    return running_sum(df, order_cols, num_parts=num_parts).withColumnRenamed(
+        "_cum", index_col
+    )
 
 
 def positional_zip_join(
@@ -985,16 +876,16 @@ def positional_zip_join(
 ) -> DataFrame:
     """Pair rows by position (reference src/main.py:75 ``zip``).
 
-    Both sides get a distributed global index (``global_index``: range
-    exchange + per-partition window + driver-side prefix offsets — no
-    single-partition stage anywhere in the plan) and are equi-joined on
+    Both sides get a distributed global index (``global_index``, a
+    ``running_sum`` of 1 per row — no single-partition stage anywhere
+    in the plan) and are equi-joined on
     it. Order defaults to a '_ord' column on each side; callers who
     have a natural key should join on it instead (carrying the key
     beats positional pairing at scale).
 
     The two sides' indexes are INDEPENDENT (separate inputs, separate
-    range exchanges), but each one eagerly runs a checkpoint job plus a
-    stats collect — built sequentially, the second side's jobs wait for
+    range exchanges), but each one runs construction jobs (the range
+    exchange and the stats collect) — built sequentially, the second side's jobs wait for
     the first side's stragglers. Build them on ``pinning.construct_all``:
     same plans, same results, the two materializations just overlap,
     and the caller's job group and description reach every job either

@@ -22,13 +22,14 @@ the data loader reading docs grouped by ``seq_first``:
 
 Scale design (the reason this is not one window): a global
 ``sum() OVER (ORDER BY ...)`` funnels every row through a single task
-(Exchange SinglePartition). Instead: ``joins.range_parted_offsets``
-(range repartition + driver-side per-partition prefix sums of the
-token counts — one stats row per partition reaches the driver) plus a
-per-partition running sum. See that helper for the honest plan-shape
-note (two full-data exchanges of the frame being packed) and why
-callers should pack the NARROW (id, n_tokens) projection, not a
-payload-bearing frame.
+(Exchange SinglePartition). Instead the token counts go through
+``joins.running_sum`` (range repartition, one stats row per partition
+to the driver for the preceding-partition offsets, then a
+per-partition running sum), and each doc's first token sits at its
+inclusive running total minus its own count. See that helper for the
+honest plan-shape note (two full-data exchanges of the frame being
+packed) and why callers should pack the NARROW (id, n_tokens)
+projection, not a payload-bearing frame.
 
 Zero-token documents occupy no stream positions; they are assigned to
 the sequence their offset points at (seq_first == seq_last,
@@ -39,10 +40,10 @@ that computes the offsets).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .joins import range_parted_offsets
+from .joins import running_sum
 
 
 def pack_sequences(
@@ -55,7 +56,9 @@ def pack_sequences(
 ) -> DataFrame:
     """Add packing coordinates (tok_start, seq_first, seq_last,
     n_splits, seq_offset) for concat-and-chunk sequence packing of
-    ``df`` in ``order_cols`` order. See the module docstring.
+    ``df`` in ``order_cols`` order: ``tok_start`` is the doc's
+    ``joins.running_sum`` token total minus its own count, plus
+    ``base_offset``. See the module docstring.
 
     ``base_offset`` supports INCREMENTAL (append) packing — the
     steady-state corpus-building shape, like ``incremental_dedup`` for
@@ -79,30 +82,21 @@ def pack_sequences(
             f"pack_sequences: base_offset must be >= 0, got {base_offset}"
         )
     order_cols = order_cols or ["doc_id"]
-    parted, off = range_parted_offsets(
-        df, order_cols, num_parts, weight_col=tokens_col
-    )
-    if base_offset:
-        off = off + F.lit(base_offset)
-    w = (
-        Window.partitionBy("_part")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    tok_start = (off + F.sum(tokens_col).over(w) - F.col(tokens_col)).cast(
-        "long"
-    )
+    tok_start = (
+        F.col("_cum") - F.col(tokens_col) + F.lit(base_offset)
+    ).cast("long")
     # integer DIV, not float division: offsets in a 100 TB token stream
     # exceed the double's 2^53 exact-integer range
     return (
-        parted.withColumn("tok_start", tok_start)
+        running_sum(df, order_cols, tokens_col, num_parts=num_parts)
+        .withColumn("tok_start", tok_start)
         .withColumn("seq_first", F.expr(f"tok_start DIV {seq_len}"))
         .withColumn("seq_last", F.expr(
             f"(tok_start + greatest(CAST({tokens_col} AS BIGINT), 1) - 1) DIV {seq_len}"
         ))
         .withColumn("n_splits", F.col("seq_last") - F.col("seq_first"))
         .withColumn("seq_offset", F.col("tok_start") % seq_len)
-        .drop("_part", "_poff")
+        .drop("_cum")
     )
 
 

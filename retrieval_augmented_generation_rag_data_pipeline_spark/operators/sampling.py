@@ -303,10 +303,10 @@ def select_token_budget(
     ``.filter("keep")``.
 
     Scale: the global running sum NEVER runs as an unpartitioned
-    window (ORDER BY over a corpus = one task) — it reuses
-    ``range_parted_offsets`` (the pack_sequences machinery): range-
-    partition on the rank key, one metadata-sized stats collect for
-    per-partition offsets, then a per-partition running sum. Pass a
+    window (ORDER BY over a corpus = one task): the cut is
+    ``select_token_budget_grouped``'s body with no group and one budget,
+    a ``joins.running_sum`` over the rank key (range partition, one
+    metadata-sized stats collect, per-partition running sum). Pass a
     NARROW frame (id, score, token count); join payloads back by id.
     Cumulative counts are integer longs — no float fold-order parity
     hazard anywhere.
@@ -316,11 +316,32 @@ def select_token_budget(
             f"select_token_budget: budget_tokens must be >= 0, got "
             f"{budget_tokens}"
         )
-    from .joins import range_parted_offsets
-    from pyspark.sql import Window
+    return _budget_cut(
+        docs, None, F.lit(int(budget_tokens)), score_col, tokens_col, id_col,
+        ascending, num_parts,
+    )
 
+
+def _budget_cut(
+    docs: DataFrame,
+    group_col: str | None,
+    budget: Column,
+    score_col: str,
+    tokens_col: str,
+    id_col: str,
+    ascending: bool,
+    num_parts: int | None,
+) -> DataFrame:
+    """The one body of the token-budget cuts: rank by (score, id), take
+    the inclusive running token total per group (``joins.running_sum``;
+    one global total when ``group_col`` is None) and keep the rows whose
+    total fits ``budget``, a Column that may read ``group_col``."""
+    from .joins import running_sum
+
+    groups = [group_col] if group_col else []
     base = docs.select(
         F.col(id_col).alias("doc_id"),
+        *[F.col(g).alias(g) for g in groups],
         F.col(score_col).alias("score"),
         F.col(tokens_col).cast("long").alias("n_tokens"),
     ).withColumn(
@@ -334,19 +355,11 @@ def select_token_budget(
             F.lit(float("inf")),
         ),
     )
-    parted, off = range_parted_offsets(
-        base, ["_ord", "doc_id"], num_parts, weight_col="n_tokens"
-    )
-    w = (
-        Window.partitionBy("_part")
-        .orderBy("_ord", "doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = (off + F.sum("n_tokens").over(w)).cast("long")
     return (
-        parted.withColumn("cum_tokens", cum)
-        .withColumn("keep", F.col("cum_tokens") <= budget_tokens)
-        .select("doc_id", "score", "n_tokens", "cum_tokens", "keep")
+        running_sum(base, ["_ord", "doc_id"], "n_tokens", groups, num_parts)
+        .withColumnRenamed("_cum", "cum_tokens")
+        .withColumn("keep", F.col("cum_tokens") <= budget)
+        .select("doc_id", *groups, "score", "n_tokens", "cum_tokens", "keep")
     )
 
 
@@ -431,13 +444,14 @@ def select_token_budget_grouped(
     cum_tokens the group's inclusive running total. Kept corpus =
     ``.filter("keep")``.
 
-    Scale: the per-group running sums ride
-    ``range_parted_offsets_grouped`` — range-partitioned on
-    (group, rank key) so every group's prefix sum is distributed
-    across its partition span, offsets per (partition, group) collected
-    driver-side (metadata-sized: groups are contiguous under the range
-    exchange), budgets applied as a literal map. No global window, no
-    per-group single task, no collect of data rows.
+    Scale: the per-group running sums are one ``joins.running_sum``
+    grouped on ``group_col`` — range-partitioned on (group, rank key) so
+    every group's prefix sum is spread across its partition span, with
+    offsets per (partition, group) collected driver-side (metadata-sized:
+    groups are contiguous under the range exchange) — and budgets apply
+    as a literal map. No global window, no per-group single task, no
+    collect of data rows. ``select_token_budget`` is this cut with no
+    group and one budget.
     """
     bad = {g: b for g, b in budgets.items() if b < 0}
     if bad:
@@ -449,52 +463,15 @@ def select_token_budget_grouped(
             "select_token_budget_grouped: default_budget must be >= 0, "
             f"got {default_budget}"
         )
-    from .joins import range_parted_offsets_grouped
-    from pyspark.sql import Window
-
-    base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(group_col).alias(group_col),
-        F.col(score_col).alias("score"),
-        F.col(tokens_col).cast("long").alias("n_tokens"),
-    ).withColumn(
-        # NULLS LAST via +inf coalesce — see select_token_budget
-        "_ord",
-        F.coalesce(
-            F.col("score") if ascending else -F.col("score"),
-            F.lit(float("inf")),
-        ),
-    )
-    parted, off = range_parted_offsets_grouped(
-        base,
-        [group_col],
-        ["_ord", "doc_id"],
+    budget = F.lit(int(default_budget))
+    if budgets:
+        budget_map = F.create_map(
+            *[F.lit(v) for g, b in sorted(budgets.items()) for v in (g, int(b))]
+        )
+        budget = F.coalesce(F.element_at(budget_map, F.col(group_col)), budget)
+    return _budget_cut(
+        docs, group_col, budget, score_col, tokens_col, id_col, ascending,
         num_parts,
-        weight_col="n_tokens",
-    )
-    w = (
-        Window.partitionBy("_part", group_col)
-        .orderBy("_ord", "doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = (off + F.sum("n_tokens").over(w)).cast("long")
-    budget_map = F.create_map(
-        *[F.lit(v) for g, b in sorted(budgets.items()) for v in (g, int(b))]
-    ) if budgets else None
-    budget = (
-        F.coalesce(
-            F.element_at(budget_map, F.col(group_col)),
-            F.lit(int(default_budget)),
-        )
-        if budget_map is not None
-        else F.lit(int(default_budget))
-    )
-    return (
-        parted.withColumn("cum_tokens", cum)
-        .withColumn("keep", F.col("cum_tokens") <= budget)
-        .select(
-            "doc_id", group_col, "score", "n_tokens", "cum_tokens", "keep"
-        )
     )
 
 
@@ -637,12 +614,13 @@ def dsir_importance_weights(
     one map-side-combined per-doc sum. Only the doc_id aggregation
     shuffles; ``tokens_sql`` never emits NULL elements, so a NULL term
     row is exactly a token-less doc and never draws the OOV mass."""
+    from ..functions.artifacts import load_artifact
     from .text import frozen_lm
 
     if raw_lm is None:
         raw_lm = frozen_lm()
     if target_lm is None:
-        target_lm = frozen_lm(_default_target_path())
+        target_lm = load_artifact(None, "lm_target.json")
     from ..functions.hashing import tokens_sql
     from ..session import ensure_parallelism
 
@@ -671,16 +649,6 @@ def dsir_importance_weights(
             ).alias("logw")
         )
         .select("doc_id", "logw")
-    )
-
-
-def _default_target_path() -> str:
-    import pathlib
-
-    return str(
-        pathlib.Path(__file__).resolve().parents[2]
-        / "artifacts"
-        / "lm_target.json"
     )
 
 

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.artifacts import load_artifact
 from ..functions.binding import let_sql
 from ..functions.hashing import (
     LSH_BANDS,
@@ -737,33 +738,6 @@ def pii_scrub(
     )
 
 
-_FROZEN_LM_CACHE: dict[str, dict] = {}
-
-
-_FROZEN_CLF_CACHE: dict[str, dict] = {}
-
-
-def _load_frozen(path: str | None, default_name: str, cache: dict) -> dict:
-    """Shared resolve-default-path / cache / json-load seam for the
-    frozen artifacts (lm.json, quality_clf.json) — one copy so a cache
-    or validation change can never apply to one loader and not the
-    other."""
-    import json as _json
-    import pathlib as _pathlib
-
-    if path is None:
-        path = str(
-            _pathlib.Path(__file__).resolve().parents[2]
-            / "artifacts"
-            / default_name
-        )
-    cached = cache.get(path)
-    if cached is None:
-        cached = _json.loads(_pathlib.Path(path).read_text())
-        cache[path] = cached
-    return cached
-
-
 def frozen_classifier(path: str | None = None) -> dict:
     """The committed frozen quality-classifier artifact
     (artifacts/quality_clf.json, written by tools/train_classifier.py
@@ -773,7 +747,7 @@ def frozen_classifier(path: str | None = None) -> dict:
     trained offline on the seeded reference corpus, applied to any
     corpus at any sf, weight literals replayed verbatim by the DuckDB
     oracle. Loaded once per process (tiny, cached)."""
-    return _load_frozen(path, "quality_clf.json", _FROZEN_CLF_CACHE)
+    return load_artifact(path, "quality_clf.json")
 
 
 def quality_classifier(
@@ -858,9 +832,6 @@ def quality_classifier(
     )
 
 
-_FROZEN_SUBWORD_CACHE: dict[str, dict] = {}
-
-
 def frozen_subword(path: str | None = None) -> dict:
     """The committed frozen subword-tokenizer artifact
     (artifacts/subword.json, written by tools/train_subword.py — BPE
@@ -869,7 +840,7 @@ def frozen_subword(path: str | None = None) -> dict:
     (WordPiece-style inference, Wu et al. 2016) — deterministic,
     merge-rank-free, replayed literal-for-literal by the DuckDB
     oracle. Loaded once per process (tiny, cached)."""
-    return _load_frozen(path, "subword.json", _FROZEN_SUBWORD_CACHE)
+    return load_artifact(path, "subword.json")
 
 
 # Words longer than this count as ONE UNK piece instead of being
@@ -1002,9 +973,6 @@ def token_count_subword(
     )
 
 
-_FROZEN_LANGID_CACHE: dict[str, dict] = {}
-
-
 def frozen_langid(path: str | None = None) -> dict:
     """The committed frozen language-ID classifier artifact
     (artifacts/langid.json, written by tools/train_langid.py — the
@@ -1014,7 +982,7 @@ def frozen_langid(path: str | None = None) -> dict:
     ``frozen_lm``/``frozen_classifier``: per-(trigram, language)
     log-prob literals computed at TRAINING time, replayed verbatim by
     the DuckDB oracle. Loaded once per process (tiny, cached)."""
-    return _load_frozen(path, "langid.json", _FROZEN_LANGID_CACHE)
+    return load_artifact(path, "langid.json")
 
 
 def char_ngrams(s: Column, n: int) -> Column:
@@ -1145,7 +1113,7 @@ def frozen_lm(path: str | None = None) -> dict:
     trained offline on the seeded reference corpus, applied to any
     corpus at any sf, and its log-prob literals are replayed verbatim
     by the DuckDB oracle. Loaded once per process (tiny, cached)."""
-    return _load_frozen(path, "lm.json", _FROZEN_LM_CACHE)
+    return load_artifact(path, "lm.json")
 
 
 def lm_cross_entropy(

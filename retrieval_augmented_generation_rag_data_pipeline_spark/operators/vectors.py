@@ -262,24 +262,10 @@ def frozen_quantizer(
     100 TB deployment shape: the artifact is metadata-sized (~40 KB)
     and applies to any corpus at any sf; only TRAINING touched a
     Spark job. Loaded once per process (tiny, cached)."""
-    import json as _json
-    import pathlib as _pathlib
+    from ..functions.artifacts import load_artifact
 
-    if path is None:
-        path = str(
-            _pathlib.Path(__file__).resolve().parents[2]
-            / "artifacts"
-            / "quantizer.json"
-        )
-    cached = _FROZEN_CACHE.get(path)
-    if cached is None:
-        art = _json.loads(_pathlib.Path(path).read_text())
-        cached = (art["centroids"], art["codebooks"])
-        _FROZEN_CACHE[path] = cached
-    return cached
-
-
-_FROZEN_CACHE: dict[str, tuple] = {}
+    art = load_artifact(path, "quantizer.json")
+    return art["centroids"], art["codebooks"]
 
 
 def _dot_sql(col_name: str, values: list[float], guard: bool = True) -> str:
@@ -1034,17 +1020,17 @@ def _pq_queries(
     """The PQ query side: (query_id, _tab) — each query's flat ADC
     lookup table, computed once per query before the candidate join —
     plus one row per probed ``_cell`` (``probe_cells``) when
-    ``centroids`` are given. NULL query vectors are dropped
-    (``_queries``)."""
-    qb = _with_codebooks(_queries(queries, query_id, vec_col), codebooks)
-    cells = []
-    if centroids is not None:
-        qb, cells = probe_cells(qb, centroids, "_qv", nprobe), ["_cell"]
-    return qb.select(
+    ``centroids`` are given. The table is projected BELOW the probe
+    explode, so it is built once per query, not once per probed cell.
+    NULL query vectors are dropped (``_queries``)."""
+    qb = _with_codebooks(_queries(queries, query_id, vec_col), codebooks).select(
         "query_id",
+        "_qv",
         _pq_table_tabs_expr("_qv", len(codebooks[0][0])).alias("_tab"),
-        *cells,
     )
+    if centroids is None:
+        return qb.drop("_qv")
+    return probe_cells(qb, centroids, "_qv", nprobe).select("query_id", "_tab", "_cell")
 
 
 def _adc_topk(

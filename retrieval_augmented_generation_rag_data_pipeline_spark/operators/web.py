@@ -36,8 +36,6 @@ HOST_RE = r"^[A-Za-z][A-Za-z0-9+.-]*://(?:[^/?#@]*@)?(\[[^/?#\]]*\]|[^/?#:]+)"
 # ``suffixes=frozen_suffixes()`` for co.uk-style ccTLD suffixes.
 DOMAIN_RE = r"([^.]+\.[^.]+)$"
 
-_SUFFIX_CACHE: dict[str, dict] = {}
-
 
 def frozen_suffixes(path: str | None = None) -> list[str]:
     """The committed public-suffix table
@@ -49,11 +47,9 @@ def frozen_suffixes(path: str | None = None) -> list[str]:
     without touching the operator (the lookup goes through
     ``joins.small_side``, agnostic to list size). Loaded once per
     process (tiny, cached)."""
-    from .text import _load_frozen
+    from ..functions.artifacts import load_artifact
 
-    return _load_frozen(path, "public_suffixes.json", _SUFFIX_CACHE)[
-        "suffixes"
-    ]
+    return load_artifact(path, "public_suffixes.json")["suffixes"]
 
 
 def _last_labels_re(k: int) -> str:

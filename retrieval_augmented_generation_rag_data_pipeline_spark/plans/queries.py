@@ -2952,9 +2952,9 @@ def select_token_budget(spark, sf):
     """Token-budget data selection (round 11): rank the corpus by
     frozen-LM cross-entropy (ascending — CCNet keeps the fluent,
     low-perplexity tail) and keep the maximal prefix whose cumulative
-    token count fits a global budget. The running total reuses the
-    pack_sequences distributed-prefix machinery
-    (sampling.select_token_budget) — never an unpartitioned global
+    token count fits a global budget. The running total is
+    joins.running_sum, the distributed prefix sum under pack_sequences
+    too (sampling.select_token_budget) — never an unpartitioned global
     window; cum_tokens is an integer long so the cut is parity-exact.
     Reports the KEPT rows (the n_dropped>0 convention: a bare count
     cannot hollow the plan out, and the kept set IS the deliverable)."""
@@ -3031,10 +3031,11 @@ def select_budget_grouped(spark, sf):
     mixture form of select_token_budget — each language gets its own
     token budget (_BUDGETS_BY_LANG), the kept sets union. Within a
     group the semantics are exactly the global operator's greedy
-    ranked prefix; the per-group running totals ride
-    range_parted_offsets_grouped (range-partitioned on (lang, rank),
-    per-(partition, group) offsets, broadcast join back) — no global
-    window, no per-group single task. Reports the KEPT rows."""
+    ranked prefix; the per-group running totals are one
+    joins.running_sum grouped on lang (range-partitioned on (lang,
+    rank), per-(partition, group) offsets as a broadcast local
+    relation joined back) — no global window, no per-group single
+    task. Reports the KEPT rows."""
     from ..operators.sampling import select_token_budget_grouped as _stbg
 
     docs = _t(spark, sf, "documents")
@@ -3113,7 +3114,7 @@ def select_budget_classifier(spark, sf):
     end-to-end — frozen classifier scores the corpus, the kept set is
     the maximal highest-logit prefix whose cumulative token count fits
     the budget. Same distributed running-total machinery as
-    select_token_budget (range_parted_offsets — never a global
+    select_token_budget (joins.running_sum — never a global
     window); ranking is descending (higher logit first), ties to
     doc_id. Reports the KEPT rows."""
     from ..operators.sampling import select_token_budget as _stb
@@ -5228,12 +5229,13 @@ def _dsir_select_sql() -> str | None:
     built by the SAME dsir_diff_table helper the operator uses) and
     the identical log-space Gumbel-top-k ordering. Artifact guard as
     _lm_perplexity_sql."""
-    from ..operators.sampling import _default_target_path, dsir_diff_table
+    from ..functions.artifacts import load_artifact
+    from ..operators.sampling import dsir_diff_table
     from ..operators.text import frozen_lm
 
     try:
         diff, oov_diff = dsir_diff_table(
-            frozen_lm(_default_target_path()), frozen_lm()
+            load_artifact(None, "lm_target.json"), frozen_lm()
         )
         rows = ",\n  ".join(
             "('" + t.replace("'", "''") + f"', {d!r})"

@@ -212,7 +212,7 @@ def test_pack_pieces_guard_raises_on_mismatched_seq_len(spark):
 
 def test_pack_offsets_broadcast_path_matches_literal_map(spark, monkeypatch):
     """When the partition->offset map renders past the one small-side
-    bound (joins.INLINE_MAX_BYTES), range_parted_offsets swaps the
+    bound (joins.INLINE_MAX_BYTES), joins.running_sum swaps the
     literal array offset lookup for a broadcast join (the literal's
     expression and serialized plan would grow with the partition
     count). Force the join path and check it
@@ -247,29 +247,69 @@ def test_pack_offsets_broadcast_path_matches_literal_map(spark, monkeypatch):
     )
 
 
-def test_range_parted_offsets_reject_fractional_weights(spark):
-    """Prefix offsets are integer counts; fractional weights would
-    truncate differently on the literal-map vs broadcast path (offsets
-    changing with partition count) — both helpers raise instead."""
-    import pytest
-
+def test_running_sum_rejects_bad_weights(spark):
+    """Offsets are integer counts: a fractional weight would truncate
+    differently on the inline-array and broadcast offset tiers (totals
+    changing with the partition count), and a negative or NULL weight
+    would shift every later total. The one stats job raises on each,
+    ungrouped and grouped alike."""
     from retrieval_augmented_generation_rag_data_pipeline_spark.operators.joins import (
-        range_parted_offsets,
-        range_parted_offsets_grouped,
+        running_sum,
     )
 
-    df = spark.createDataFrame(
-        [(i, "g", 1.5) for i in range(20)], "id long, g string, w double"
-    )
-    with pytest.raises(ValueError, match="non-integral"):
-        range_parted_offsets(df, ["id"], num_parts=4, weight_col="w")
-    with pytest.raises(ValueError, match="non-integral"):
-        range_parted_offsets_grouped(
-            df, ["g"], ["id"], num_parts=4, weight_col="w"
+    def frame(w):
+        return spark.createDataFrame(
+            [(i, "g" if i % 2 else None, w if i == 7 else 1.0) for i in range(20)],
+            "id long, g string, w double",
         )
-    # integral-valued doubles still pass
-    ok = spark.createDataFrame(
-        [(i, 2.0) for i in range(20)], "id long, w double"
-    )
-    parted, off = range_parted_offsets(ok, ["id"], num_parts=4, weight_col="w")
-    assert parted.count() == 20
+
+    for groups in ((), ["g"]):
+        for w, what in ((1.5, "non-integral"), (-2.0, "negative"), (None, "NULL")):
+            with pytest.raises(ValueError, match=what):
+                running_sum(frame(w), ["id"], "w", groups, num_parts=4)
+        # integral-valued doubles still pass
+        out = running_sum(frame(2.0), ["id"], "w", groups, num_parts=4)
+        assert out.count() == 20 and out.columns == ["id", "g", "w", "_cum"]
+
+
+@pytest.mark.parametrize("num_parts", [1, 3, 8])
+def test_running_sum_grouped_matches_python_and_ungrouped_tiers(
+    spark, monkeypatch, num_parts
+):
+    """``running_sum(group_cols=[g])`` equals a per-group Python running
+    total on one group, several groups, a NULL group and the empty
+    frame; on the one-group frame it also equals the ungrouped sum on
+    both offset tiers (inline array, and the broadcast join forced by
+    ``INLINE_MAX_BYTES = 0``). Totals are BIGINT on every input."""
+    from retrieval_augmented_generation_rag_data_pipeline_spark.operators import joins
+
+    def expected(rows):
+        acc, out = {}, {}
+        for i, g, w in sorted(rows):
+            acc[g] = acc.get(g, 0) + w
+            out[i] = acc[g]
+        return out
+
+    def got(rows, groups, joined=True):
+        df = spark.createDataFrame(rows, "id long, g string, w int")
+        out = joins.running_sum(df, ["id"], "w", groups, num_parts)
+        assert out.columns == ["id", "g", "w", "_cum"]
+        assert out.schema["_cum"].dataType.simpleString() == "bigint"
+        sums = {r.id: r._cum for r in out.collect()}
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert ("BroadcastHashJoin" in plan) == (joined and bool(rows)), plan
+        return sums
+
+    one = [(i, "a", i % 4) for i in range(40)]
+    inputs = {
+        "one": one,
+        "several": [(i, "abc"[i % 3], i % 5) for i in range(60)],
+        "null": [(i, None if i % 4 == 0 else "ab"[i % 2], 1 + i % 3) for i in range(50)],
+        "empty": [],
+    }
+    for name, rows in inputs.items():
+        assert got(rows, ["g"]) == expected(rows), name
+    want = expected(one)
+    assert got(one, [], joined=False) == want
+    monkeypatch.setattr(joins, "INLINE_MAX_BYTES", 0)
+    assert got(one, []) == want

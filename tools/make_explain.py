@@ -49,7 +49,7 @@ PICKS = {
         "checkpoint job and is invisible here — two full-data "
         "exchanges total, both of the narrow (id, n_tokens) "
         "coordinates frame, never the corpus (see "
-        "joins.range_parted_offsets)"
+        "joins.running_sum)"
     ),
     "pack_assembly": (
         "loader-side sequence assembly: pack_pieces is a narrow explode "
@@ -207,11 +207,11 @@ PICKS = {
     ),
     "select_budget_grouped": (
         "per-group token budgets (round 12), shown from the pinned "
-        "range exchange down (the eager checkpoint that fixes "
+        "range exchange down (the lazy checkpoint that fixes "
         "partition ids truncates the frozen-LM scoring subplan to an "
         "ExistingRDD scan — same property as pack_sequences): "
-        "per-(partition, group) offsets ride back as a "
-        "BroadcastHashJoin (metadata-sized because groups are "
+        "per-(partition, group) offsets ride back as one local "
+        "relation in a BroadcastHashJoin (metadata-sized because groups are "
         "contiguous under the range exchange), ONE Window partitioned "
         "by (_part, lang), the per-group budget a literal map — no "
         "global window, no per-group single task, no collect of data "
