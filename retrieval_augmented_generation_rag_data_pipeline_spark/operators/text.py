@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..functions.artifacts import load_artifact
 from ..functions.binding import let_sql
@@ -23,7 +24,7 @@ from ..functions.hashing import (
     word_shingles_sql,
 )
 from ..session import ensure_parallelism
-from .joins import small_side, sql_string
+from .joins import local_relation, small_side, sql_string
 
 # Tiny function-word profiles for the n-gram/stopword language heuristic.
 # Deterministic and engine-portable (plain array intersection counts).
@@ -1348,15 +1349,18 @@ def lm_cross_entropy_bigram(
     if lm is None:
         lm = frozen_lm()
     ss = docs.sparkSession
-    vocab = ss.createDataFrame(
-        list(lm["logp"].items()), "t string, _ulp double"
+    uni, cu, blp = lm["logp"], lm["ctx_unseen_logp"], lm["bigram_logp"]
+    keys = [k.split(" ", 1) for k in blp]
+    vocab = local_relation(
+        ss, StructType.fromDDL("t string, _ulp double"), [list(uni), list(uni.values())]
     )
-    ctx = ss.createDataFrame(
-        list(lm["ctx_unseen_logp"].items()), "s string, _cu double"
+    ctx = local_relation(
+        ss, StructType.fromDDL("s string, _cu double"), [list(cu), list(cu.values())]
     )
-    bi = ss.createDataFrame(
-        [(*k.split(" ", 1), v) for k, v in lm["bigram_logp"].items()],
-        "s string, t string, _blp double",
+    bi = local_relation(
+        ss,
+        StructType.fromDDL("s string, t string, _blp double"),
+        [[k[0] for k in keys], [k[1] for k in keys], list(blp.values())],
     )
     oov = float(lm["oov_logp"])
     # token i paired with token i-1 (NULL for the first); no tokens, no pairs

@@ -301,20 +301,25 @@ def _dot_sql(col_name: str, values: list[float], guard: bool = True) -> str:
     return f"({g} + {agg})"
 
 
-def _cell_rank_sql(col_name: str, centroids: list[list[float]]) -> str:
-    """SQL text for the literal tier's sorted cell ranking.
+def _cell_structs_sql(col_name: str, centroids: list[list[float]]) -> str:
+    """SQL text for the literal tier's cells: one ``(nd, c)`` struct per
+    centroid, comma-separated, with nd = -dot, so the ascending struct
+    order puts the best cell first (max dot, ties -> lowest cell id).
 
     Built as ONE SQL string parsed JVM-side: the equivalent Column-API
     tree needs ~n_cells*dim py4j calls for the literals, which costs
     more wall-clock to BUILD (1.6s measured for 8x64 used twice) than
-    the query takes to run. Element 1 = best cell (max dot, ties ->
-    lowest cell id).
+    the query takes to run.
     """
-    cells = ", ".join(
+    return ", ".join(
         f"named_struct('nd', -({_dot_sql(col_name, c, guard=(i == 0))}), 'c', {i})"
         for i, c in enumerate(centroids)
     )
-    return f"array_sort(array({cells}))"
+
+
+def _cell_rank_sql(col_name: str, centroids: list[list[float]]) -> str:
+    """SQL text for the literal tier's sorted cell ranking, best first."""
+    return f"array_sort(array({_cell_structs_sql(col_name, centroids)}))"
 
 
 def resolve_centroids(
@@ -370,8 +375,8 @@ def assign_cells_table(
     side's partitioning is untouched), and a per-row fold computes
     argmax-dot in place: ``transform`` scores each centroid once, the
     ``aggregate`` keeps the first strict minimum of (-dot), so ties go
-    to the LOWEST cell id — exactly ``_cell_rank_sql``'s ``array_sort``
-    element 1. Plan size, broadcast payload per executor, and shuffle
+    to the LOWEST cell id — exactly the literal tier's best (nd, c)
+    struct. Plan size, broadcast payload per executor, and shuffle
     volume (zero) are all independent of n_cells.
 
     NOT the join-per-(vector, cell) shape: scoring as a
@@ -602,20 +607,26 @@ def assign_cells_exact(
 
     Both tiers fold the same doubles in the same order, and both give a
     NULL vector a NULL cell (every dot is NULL, there is no argmax; the
-    literal tier's IF guard stops the stable sort over all-NULL keys
-    from handing it cell 0), so crossing the ceiling never moves a
+    literal tier's IF guard stops ``least`` over all-NULL keys from
+    handing it cell 0), so crossing the ceiling never moves a
     vector's cell (tests/test_vectors.py::
     test_table_assignment_matches_literal) and an index written on one
     tier is probed correctly on the other. Returns ``df``'s columns plus
     an INT ``out_col``."""
     if len(centroids) > CELL_LITERAL_MAX:
         return assign_cells_table(df, centroids, vec_col, out_col)
+    # least, not element 1 of the sorted ranking: the same struct order,
+    # but never NULL. A join on the cell infers isnotnull(cell), which
+    # the optimizer pushes below the caller's exchange; with a
+    # non-nullable argmax it folds to isnotnull(vector), while a
+    # nullable one would carry the whole ranking down and rank each
+    # row twice, the first time before the exchange spreads the rows.
+    best = _cell_structs_sql(vec_col, centroids)
+    if len(centroids) > 1:
+        best = f"least({best})"
     return df.withColumn(
         out_col,
-        F.expr(
-            f"IF({vec_col} IS NULL, CAST(NULL AS INT), "
-            f"element_at({_cell_rank_sql(vec_col, centroids)}, 1).c)"
-        ),
+        F.expr(f"IF({vec_col} IS NULL, CAST(NULL AS INT), {best}.c)"),
     )
 
 

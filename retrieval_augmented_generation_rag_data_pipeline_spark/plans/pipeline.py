@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_long_sql
+from ..operators.joins import sql_string
 from ..operators.text import chunk_text
 from ..operators.vectors import knn_topk, l2_normalize_sql
 from ..sources import ledger as ledger_mod
@@ -60,17 +61,14 @@ def embed_chunks(chunks: DataFrame, text_col: str = "chunk_text") -> DataFrame:
     # coalesce gives such docs a per-chunk content-derived key instead
     # (distinct unless the chunks are byte-identical, in which case
     # the colliding rows are identical anyway)
-    doc_key = F.coalesce(
-        F.col("doc_id").cast("string"),
-        F.concat(F.lit("\x00noid:"), F.md5(F.col(text_col))),
-    )
-    return chunks.select(
-        F.concat_ws(
-            ":", doc_key, F.col("chunk_idx").cast("string")
-        ).alias("vec_id"),
-        F.expr(mock_embed_sql(f"`{text_col}`")).alias("embedding"),
-        F.col(text_col).alias("text"),
-        F.col("doc_id").cast("string").alias("source_file"),
+    text = f"`{text_col}`"
+    noid = sql_string("\x00noid:")
+    doc_key = f"coalesce(CAST(doc_id AS STRING), concat({noid}, md5({text})))"
+    return chunks.selectExpr(
+        f"concat_ws(':', {doc_key}, CAST(chunk_idx AS STRING)) AS vec_id",
+        f"{mock_embed_sql(text)} AS embedding",
+        f"{text} AS text",
+        "CAST(doc_id AS STRING) AS source_file",
     )
 
 
@@ -93,7 +91,7 @@ def run_once(
     if ledger_path:
         led = ledger_mod.load_ledger(spark, ledger_path)
         docs = ledger_mod.pending(
-            docs.withColumn("key", F.col("doc_id").cast("string")), led
+            docs.withColumn("key", F.expr("CAST(doc_id AS STRING)")), led
         )
         # Pin the pending set: the index write and the ledger append are
         # two separate actions, and re-evaluating a live source between
@@ -111,11 +109,12 @@ def run_once(
         # doc. Cost: one columnar scan of the index's source_file column
         # per incremental run (nothing at all on the first run). Both
         # join sides are STRING, so ids like '01' and '1' stay distinct.
+        # The index side is not made distinct first: the anti join only
+        # asks whether a source_file exists, and a distinct would cost a
+        # shuffle-map stage and a Spark job of its own per run.
         try:
-            indexed = (
-                sinks.read_vector_index(spark, index_path)
-                .select("source_file")
-                .distinct()
+            indexed = sinks.read_vector_index(spark, index_path).select(
+                "source_file"
             )
             embed_docs = docs.join(
                 indexed,

@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.joins import sql_string
+
 LEDGER_SCHEMA = T.StructType(
     [
         T.StructField("key", T.StringType(), False),
@@ -44,10 +46,10 @@ def append_processed(df: DataFrame, key_col: str, path: str) -> None:
     # optimizer may assume non-null over the parquet) — filtered here
     # in lockstep with pending()'s null-key drop
     (
-        df.filter(F.col(key_col).isNotNull())
-        .select(
-            F.col(key_col).cast("string").alias("key"),
-            F.current_timestamp().alias("processed_at"),
+        df.filter(f"`{key_col}` IS NOT NULL")
+        .selectExpr(
+            f"CAST(`{key_col}` AS STRING) AS key",
+            "current_timestamp() AS processed_at",
         )
         .write.mode("append")
         .parquet(path)
@@ -63,7 +65,10 @@ def pending(
     """Candidates minus processed (reference src/aws_bucket.py:180).
 
     No broadcast hint — the ledger grows without bound, so AQE picks
-    broadcast only while it fits.
+    broadcast only while it fits. No distinct on the ledger side either:
+    a left anti join only needs to know whether a key exists, so
+    duplicate ledger keys change no result, while a distinct would cost
+    a shuffle-map stage and a Spark job of its own before the join.
 
     NULL-keyed candidates are DROPPED (with the same rationale as an
     equi-join dropping null keys): a NULL key can never be ledgered,
@@ -75,28 +80,24 @@ def pending(
     ``strict=True`` turns it into a loud failure: any NULL key raises
     at EXECUTION time via a per-row raise_error branch — no extra
     driver-side count action, the check rides the same scan."""
-    key = F.col(key_col)
+    key = f"`{key_col}`"
     if strict:
-        # The guard IS the key expression and the isNotNull filter is
+        # The guard IS the key expression and the IS NOT NULL filter is
         # omitted on this path — deliberately. Were both present, the
         # optimizer could merge them into `isNotNull(k) AND <guard>`
         # and short-circuit NULL rows past the raise; with the guard
         # as the join key itself, every row must evaluate it (the
         # anti-join hashes the key), so a NULL key always raises.
-        guarded = F.when(
-            key.isNull(),
-            F.raise_error(
-                F.lit(
-                    "ledger.pending(strict=True): NULL candidate key — "
-                    "an unledgerable row reached the pending scan "
-                    f"(key_col={key_col!r})"
-                )
-            ),
-        ).otherwise(key)
-        candidates = candidates.withColumn(key_col, guarded)
+        msg = sql_string(
+            "ledger.pending(strict=True): NULL candidate key — "
+            "an unledgerable row reached the pending scan "
+            f"(key_col={key_col!r})"
+        )
+        candidates = candidates.withColumn(
+            key_col,
+            F.expr(f"CASE WHEN {key} IS NULL THEN raise_error({msg}) ELSE {key} END"),
+        )
     else:
-        candidates = candidates.filter(key.isNotNull())
-    led = ledger.select(F.col("key").alias("_ledger_key")).distinct()
-    return candidates.join(
-        led, candidates[key_col] == F.col("_ledger_key"), "left_anti"
-    )
+        candidates = candidates.filter(f"{key} IS NOT NULL")
+    led = ledger.selectExpr("key AS _ledger_key")
+    return candidates.join(led, F.expr(f"{key} = _ledger_key"), "left_anti")

@@ -4,6 +4,11 @@ The FAISS index + pickle sidecar pair (reference
 src/embedding_engine.py:74-99) is unified into one flat Parquet
 vector-index table; per-file identity is the ``source_file`` column, so
 writes and scans cost O(files written), not O(documents indexed).
+
+The vector index has one fixed schema, ``VECTOR_INDEX_DDL``: the writer
+refuses any other frame and the reader declares it instead of inferring
+it, so a read of the index starts no Spark job (Parquet schema inference
+runs one to merge the file footers) and the two cannot drift apart.
 """
 
 from __future__ import annotations
@@ -13,6 +18,13 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
+
+# What pipeline.embed_chunks writes; read_vector_index declares it and
+# write_vector_index refuses anything else.
+VECTOR_INDEX_DDL = (
+    "vec_id STRING, embedding ARRAY<DOUBLE>, text STRING, source_file STRING"
+)
 
 
 def ivf_meta(
@@ -87,8 +99,17 @@ def write_vector_index(df: DataFrame, path: str, mode: str = "overwrite") -> Non
     (src/embedding_engine.py:74-84) is the ``source_file`` column, so an
     append adds one file per write partition, not one per document;
     ``compact_parquet`` merges the small files many appends leave.
-    Appending onto an old ``source_file=*/`` layout raises before
-    writing: Spark reads a mixed root as one layout, dropping rows."""
+
+    Two checks raise before anything is written. A frame whose column
+    names or types differ from ``VECTOR_INDEX_DDL``: the reader declares
+    that schema rather than inferring it, so a file written with any
+    other would read back wrong. An append onto an old
+    ``source_file=*/`` layout: Spark reads a mixed root as one layout,
+    dropping rows."""
+    want = DataType.fromDDL(VECTOR_INDEX_DDL).simpleString()
+    got = df.schema.simpleString()
+    if got != want:
+        raise ValueError(f"vector index {path!r} takes {want}, not {got}")
     if mode == "append":
         p, fs = _hadoop_path_fs(df.sparkSession, f"{path}/source_file=*")
         if fs.globStatus(p):
@@ -127,8 +148,15 @@ def write_time_partitioned(
 def read_vector_index(spark: SparkSession, path: str) -> DataFrame:
     """Vector-index load (S8, reference src/embedding_engine.py:88-99).
     A ``source_file`` filter replaces the per-file .faiss open; it skips
-    Parquet row groups by their min/max stats."""
-    return spark.read.parquet(path)
+    Parquet row groups by their min/max stats.
+
+    The schema is declared (``VECTOR_INDEX_DDL``, which the writer
+    enforces), not inferred: inference merges the file footers in a
+    Spark job, one per read, and every ``run_once`` heal and every
+    ``search`` reads the index. A missing index still raises the
+    ``PATH_NOT_FOUND`` analysis error that ``run_once`` takes as its
+    first run."""
+    return spark.read.schema(VECTOR_INDEX_DDL).parquet(path)
 
 
 def write_bucketed(

@@ -270,3 +270,37 @@ def test_run_once_appends_stay_flat(spark, tmp_path):
     shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert len(list(idx.glob("*.parquet"))) <= 3 * shuffle
     assert spark.read.parquet(str(idx)).select("source_file").distinct().count() == 60
+
+
+def test_ingest_cycle_job_budget(spark, tmp_path):
+    """The ingest cycle runs no Spark job that moves no data: a second
+    ledger-mode run_once fires at most 5 jobs (ledger broadcast, pending
+    checkpoint, index broadcast, index write, ledger append; no distinct
+    before either anti join), building search fires none (the index is
+    read with its declared schema, no footer inference), and its
+    collect at most 4."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    idx = str(tmp_path / "idx")
+    led = str(tmp_path / "led")
+    words = " ".join(f"w{i}" for i in range(40))
+
+    def batch(b):
+        return spark.range(20 * b, 20 * (b + 1), numPartitions=2).select(
+            F.col("id").alias("doc_id"), F.lit(words).alias("text")
+        )
+
+    def jobs(fn):
+        first = dag.nextJobId()
+        out = fn()
+        return out, dag.nextJobId() - first
+
+    run_once(spark, batch(0), idx, ledger_path=led)
+    _, n_run = jobs(lambda: run_once(spark, batch(1), idx, ledger_path=led))
+    first_chunk = " ".join(words.split()[:32])
+    q = spark.createDataFrame([(0, first_chunk)], "query_id long, query_text string")
+    found, n_build = jobs(lambda: search(spark, idx, q, k=3))
+    hits, n_collect = jobs(found.collect)
+    assert n_run <= 5, n_run
+    assert n_build == 0, n_build
+    assert n_collect <= 4, n_collect
+    assert len(hits) == 3 and hits[0].sim == pytest.approx(1.0)

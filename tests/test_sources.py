@@ -105,13 +105,13 @@ def test_vector_index_flat_with_string_source_file(spark, tmp_path):
     'source_file=01' and 'source_file=1' back as the same int 1)."""
     df = spark.createDataFrame(
         [
-            (0, [1.0, 0.0], "a", "f1"),
-            (1, [0.0, 1.0], "b", "f2"),
-            (2, [0.5, 0.5], "c", "f1"),
-            (3, [1.0, 1.0], "d", "01"),
-            (4, [0.0, 0.0], "e", "1"),
+            ("0", [1.0, 0.0], "a", "f1"),
+            ("1", [0.0, 1.0], "b", "f2"),
+            ("2", [0.5, 0.5], "c", "f1"),
+            ("3", [1.0, 1.0], "d", "01"),
+            ("4", [0.0, 0.0], "e", "1"),
         ],
-        "vec_id long, embedding array<double>, text string, source_file string",
+        sinks.VECTOR_INDEX_DDL,
     )
     out = str(tmp_path / "idx")
     sinks.write_vector_index(df, out)
@@ -123,7 +123,7 @@ def test_vector_index_flat_with_string_source_file(spark, tmp_path):
         "f1": 2, "f2": 1, "01": 1, "1": 1
     }
     one = back.filter(F.col("source_file") == "f1")
-    assert sorted(r.vec_id for r in one.collect()) == [0, 2]
+    assert sorted(r.vec_id for r in one.collect()) == ["0", "2"]
 
 
 def test_vector_index_append_refuses_partitioned_root(spark, tmp_path):
@@ -132,8 +132,8 @@ def test_vector_index_append_refuses_partitioned_root(spark, tmp_path):
     appending onto the old per-document layout must raise before any
     file is written."""
     df = spark.createDataFrame(
-        [(0, [1.0, 0.0], "a", "f1"), (1, [0.0, 1.0], "b", "f2")],
-        "vec_id long, embedding array<double>, text string, source_file string",
+        [("0", [1.0, 0.0], "a", "f1"), ("1", [0.0, 1.0], "b", "f2")],
+        sinks.VECTOR_INDEX_DDL,
     )
     out = tmp_path / "idx"
     df.write.partitionBy("source_file").parquet(str(out))
@@ -141,6 +141,69 @@ def test_vector_index_append_refuses_partitioned_root(spark, tmp_path):
     with pytest.raises(ValueError, match="per-source_file"):
         sinks.write_vector_index(df, str(out), mode="append")
     assert sorted(p for p in out.rglob("*") if p.is_file()) == files_before
+
+
+def test_read_vector_index_runs_no_job(spark, tmp_path):
+    """The index is read with its declared schema: no footer-inference
+    job at read time, and a missing index still fails with the
+    PATH_NOT_FOUND analysis error run_once takes as its first run."""
+    from pyspark.errors import AnalysisException
+
+    df = spark.createDataFrame(
+        [("0", [1.0, 0.0], "a", "f1")], sinks.VECTOR_INDEX_DDL
+    )
+    out = str(tmp_path / "idx")
+    sinks.write_vector_index(df, out)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    first = dag.nextJobId()
+    back = sinks.read_vector_index(spark, out)
+    assert dag.nextJobId() == first
+    assert back.schema.simpleString() == df.schema.simpleString()
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        sinks.read_vector_index(spark, str(tmp_path / "missing"))
+
+
+def test_embed_chunks_writes_the_index_schema(spark):
+    """What the pipeline writes is exactly the schema the reader
+    declares."""
+    from pyspark.sql.types import DataType
+
+    from retrieval_augmented_generation_rag_data_pipeline_spark.operators.text import chunk_text
+    from retrieval_augmented_generation_rag_data_pipeline_spark.plans.pipeline import embed_chunks
+
+    docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    got = embed_chunks(chunk_text(docs, chunk_words=2)).schema
+    assert got.simpleString() == DataType.fromDDL(sinks.VECTOR_INDEX_DDL).simpleString()
+
+
+@pytest.mark.parametrize(
+    "ddl",
+    [
+        "vec_id long, embedding array<double>, text string, source_file string",
+        "vec_id string, embedding array<float>, text string, source_file string",
+        "vec_id string, embedding array<double>, text string",
+        "vec_id string, embedding array<double>, body string, source_file string",
+    ],
+    ids=["long_id", "float_vec", "missing_col", "renamed_col"],
+)
+def test_write_vector_index_refuses_other_schema(spark, tmp_path, ddl):
+    """A frame whose names or types differ from VECTOR_INDEX_DDL would
+    read back wrong under the declared schema, so the writer raises
+    before any file is written, appending or not."""
+    good = spark.createDataFrame(
+        [("0", [1.0, 0.0], "a", "f1")], sinks.VECTOR_INDEX_DDL
+    )
+    out = tmp_path / "idx"
+    sinks.write_vector_index(good, str(out))
+    files_before = sorted(p for p in out.rglob("*") if p.is_file())
+    bad = spark.createDataFrame([], ddl)
+    for mode in ("append", "overwrite"):
+        with pytest.raises(ValueError, match="vector index"):
+            sinks.write_vector_index(bad, str(out), mode=mode)
+        assert sorted(p for p in out.rglob("*") if p.is_file()) == files_before
+    with pytest.raises(ValueError, match="vector index"):
+        sinks.write_vector_index(bad, str(tmp_path / "fresh"))
+    assert not (tmp_path / "fresh").exists()
 
 
 def test_artifact_probe_against_catalog_scan(spark, tmp_path):

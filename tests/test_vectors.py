@@ -321,6 +321,65 @@ def test_table_assignment_matches_literal(spark):
     assert lit_row._cell is None
 
 
+@pytest.mark.parametrize("n_cells", [1, 8])
+def test_literal_assignment_is_first_probe(spark, n_cells):
+    """The literal tier assigns with ``least`` over the (nd, c) structs
+    and probes with their sorted array: a vector's cell must be its
+    first probe, a one-cell quantizer included."""
+    from retrieval_augmented_generation_rag_data_pipeline_spark.operators.vectors import (
+        assign_cells_exact,
+        ivf_centroid,
+        probe_cells,
+    )
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet").select(
+        "vec_id", F.col("embedding").alias("_v")
+    ).filter(F.col("_v").isNotNull())
+    cents = [ivf_centroid(c, 64) for c in range(n_cells)]
+    cell = {r.vec_id: r._cell for r in assign_cells_exact(emb, cents, "_v").collect()}
+    first = {r.vec_id: r._cell for r in probe_cells(emb, cents, "_v", 1).collect()}
+    assert cell == first
+    assert len(set(cell.values())) == n_cells
+
+
+def test_ivf_corpus_ranked_after_the_exchange(spark):
+    """ann_ivf_topk and ann_ivfpq_topk_mem rank each corpus row once,
+    after ensure_parallelism's exchange. The cell join infers
+    isnotnull(_cell) and the optimizer pushes it below the exchange;
+    only isnotnull(embedding) may arrive there, not the cell ranking."""
+    from retrieval_augmented_generation_rag_data_pipeline_spark.operators.pinning import (
+        pinning_disabled,
+    )
+    from retrieval_augmented_generation_rag_data_pipeline_spark.operators.vectors import (
+        ann_ivf_topk,
+        ann_ivfpq_topk_mem,
+        default_pq_codebooks,
+    )
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    q = emb.filter(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    books = default_pq_codebooks(64, m=8, ksub=16)
+    with pinning_disabled():
+        built = [
+            ann_ivf_topk(q, emb, k=3, dim=64),
+            ann_ivfpq_topk_mem(q, emb, k=3, dim=64, codebooks=books),
+        ]
+    for df in built:
+        lines = df._jdf.queryExecution().optimizedPlan().toString().splitlines()
+        at = [i for i, line in enumerate(lines) if "Repartition" in line]
+        assert len(at) == 1, lines
+        depth = lines[at[0]].index("Repartition")
+        below = []
+        for line in lines[at[0] + 1:]:
+            if len(line) - len(line.lstrip(" :|+-")) <= depth - 3:
+                break
+            below.append(line)
+        assert not [line for line in below if "named_struct" in line], below
+        assert any("Filter isnotnull(embedding" in line for line in below), below
+
+
 def _plan(build) -> str:
     """Executed plan of ``build()`` with lineage pins off, so the cell
     assignment tier shows (a pin hides it behind the checkpoint)."""
