@@ -12,9 +12,11 @@ Layout
 - ``operators``  : relational / windows / joins / vectors / dedup / text
 - ``functions``  : portable scalar helpers (cross-engine hashing, arrays)
 - ``plans``      : the reference pipeline (EP1) restated as a batch DAG
-- ``streaming``  : Structured Streaming shell (T1-T4)
-- ``ml``         : gated real-model UDFs + multimodal stubs (never on the
-                   oracle-checked path)
+- ``streaming``  : the reference's poll loop as a Structured Streaming
+                   micro-batch source + foreachBatch runner (T1-T4)
+- ``ml``         : gated ASR/diarization UDFs with deterministic fakes
+                   (never on the oracle-checked path) + byte-level media
+                   features
 """
 
 __version__ = "0.1.0"

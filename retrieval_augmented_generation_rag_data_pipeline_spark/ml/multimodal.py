@@ -1,21 +1,10 @@
-"""Multimodal column plumbing: image/audio/video as opaque BINARY
-columns with typed metadata, processed via Arrow-batched mapInPandas.
+"""Multimodal column plumbing: media as opaque BINARY columns,
+processed via Arrow-batched mapInPandas.
 
-Decode strategy (two tiers, one deterministic result):
-
-- Always available: a pure-numpy decoder/encoder for the binary PNM
-  formats (P6 RGB / P5 gray) — a real, uncompressed image codec with
-  no native deps, so decode -> resize -> stats is genuinely executed
-  and byte-for-byte deterministic in any environment.
-- Gated: PIL, when installed, widens `decode_image` to every format it
-  knows (PNG/JPEG/...). The transform math (nearest-neighbor resize,
-  channel stats) stays in numpy either way, so results never depend on
-  which tier did the decoding.
-
-Audio/video codecs (ffmpeg/torchaudio) are still absent from this
-container; their steps stay deterministic stubs, while all Spark-side
-plumbing — schemas, Arrow batch iteration, partitioning, UDF
-signatures — is real and tested.
+The package takes no image/audio/video codec (PIL, ffmpeg, torchaudio)
+as a dependency, so the one operator here reads raw bytes only; the
+Spark-side plumbing — schema, Arrow batch iteration, partitioning — is
+real and oracle-checked (registry query ``multimodal_features``).
 """
 
 from __future__ import annotations
@@ -25,132 +14,19 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image|audio|video
-        T.StructField("content", T.BinaryType(), True),
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_s", T.DoubleType(), True),
-    ]
-)
 
 FEATURE_SCHEMA = (
     "media_id long, kind string, n_bytes long, digest string, feature array<double>"
 )
 
-IMAGE_STATS_SCHEMA = (
-    "media_id long, width int, height int, channels int, "
-    "mean array<double>, std array<double>, decode_error string"
-)
-
-
-def decode_available() -> bool:
-    """True when PIL widens decode to compressed formats; the PNM
-    numpy path below needs nothing."""
-    try:
-        import PIL  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-# ---------------------------------------------------------------- PNM codec
-
-
-def _decode_pnm(b: bytes) -> np.ndarray:
-    """Pure-numpy decoder for binary PNM: P6 (RGB) -> (h, w, 3) uint8,
-    P5 (gray) -> (h, w) uint8. Raises ValueError on anything else."""
-    if b[:2] not in (b"P5", b"P6"):
-        raise ValueError("not a binary PNM (P5/P6) image")
-    # header = magic, width, height, maxval as whitespace-separated
-    # tokens, with '#' comments; pixel data starts after the single
-    # whitespace byte following maxval
-    tokens: list[int] = []
-    i = 2
-    while len(tokens) < 3:
-        if i >= len(b):
-            raise ValueError("truncated PNM header")
-        c = b[i : i + 1]
-        if c == b"#":
-            while i < len(b) and b[i : i + 1] != b"\n":
-                i += 1
-        elif c.isspace():
-            i += 1
-        else:
-            j = i
-            while j < len(b) and not b[j : j + 1].isspace():
-                j += 1
-            tokens.append(int(b[i:j]))
-            i = j
-    i += 1  # the single whitespace after maxval
-    w, h, maxval = tokens
-    if maxval != 255:
-        raise ValueError(f"only maxval=255 PNM supported, got {maxval}")
-    ch = 3 if b[:2] == b"P6" else 1
-    need = w * h * ch
-    pix = np.frombuffer(b, dtype=np.uint8, count=need, offset=i)
-    return pix.reshape((h, w, 3)) if ch == 3 else pix.reshape((h, w))
-
-
-def _encode_pnm(arr: np.ndarray) -> bytes:
-    """(h, w, 3) -> P6, (h, w) -> P5; uint8 only."""
-    a = np.ascontiguousarray(arr, dtype=np.uint8)
-    if a.ndim == 3 and a.shape[2] == 3:
-        magic = b"P6"
-    elif a.ndim == 2:
-        magic = b"P5"
-    else:
-        raise ValueError(f"cannot encode array of shape {a.shape} as PNM")
-    h, w = a.shape[:2]
-    return magic + f"\n{w} {h}\n255\n".encode() + a.tobytes()
-
-
-def decode_image(b: bytes) -> np.ndarray:
-    """blob -> uint8 array: numpy PNM path first (deterministic, no
-    deps), then PIL for compressed formats when installed."""
-    try:
-        return _decode_pnm(b)
-    except ValueError:
-        if not decode_available():
-            raise
-    from io import BytesIO
-
-    from PIL import Image
-
-    img = Image.open(BytesIO(b))
-    if img.mode not in ("L", "RGB"):
-        img = img.convert("RGB")
-    return np.asarray(img, dtype=np.uint8)
-
-
-def _resize_nearest(a: np.ndarray, width: int, height: int) -> np.ndarray:
-    """Nearest-neighbor resample in numpy — same arithmetic whether the
-    blob was decoded by the PNM path or PIL, so output is environment-
-    independent (PIL's own .resize() filters vary by version)."""
-    h, w = a.shape[:2]
-    rows = np.minimum((np.arange(height) * h) // height, h - 1)
-    cols = np.minimum((np.arange(width) * w) // width, w - 1)
-    return a[rows][:, cols]
-
-
-# ------------------------------------------------------------- operators
-
 
 def extract_features(df: DataFrame, feature_dim: int = 8) -> DataFrame:
-    """Decode + feature-extract media content via mapInPandas.
+    """Feature-extract media content via mapInPandas.
 
     The feature is a byte-histogram over the raw blob — format-agnostic
     (works for audio/video blobs too), deterministic, and cheap; it
     exercises the full distributed plumbing (Arrow batching, schema,
-    partition parallelism). For pixel-level statistics on decodable
-    images use `image_stats`.
+    partition parallelism).
     """
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -179,166 +55,3 @@ def extract_features(df: DataFrame, feature_dim: int = 8) -> DataFrame:
             )
 
     return df.mapInPandas(op, schema=FEATURE_SCHEMA)
-
-
-def image_stats(df: DataFrame) -> DataFrame:
-    """Per-image decode + basic stats (dimensions, per-channel mean and
-    std). Undecodable blobs don't fail the job: they yield a row with
-    null dims and the error message in `decode_error` — at corpus
-    scale a few corrupt files must never kill a 1000-executor stage.
-    """
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "media_id": [], "width": [], "height": [], "channels": [],
-                "mean": [], "std": [], "decode_error": [],
-            }
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                out["media_id"].append(mid)
-                try:
-                    a = decode_image(bytes(blob or b""))
-                except Exception as e:  # corrupt blob -> row, not stage failure
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["channels"].append(None)
-                    out["mean"].append(None)
-                    out["std"].append(None)
-                    out["decode_error"].append(str(e)[:200])
-                    continue
-                chans = a.reshape(a.shape[0], a.shape[1], -1)
-                out["width"].append(int(a.shape[1]))
-                out["height"].append(int(a.shape[0]))
-                out["channels"].append(int(chans.shape[2]))
-                out["mean"].append([float(x) for x in chans.mean(axis=(0, 1))])
-                out["std"].append([float(x) for x in chans.std(axis=(0, 1))])
-                out["decode_error"].append(None)
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(op, schema=IMAGE_STATS_SCHEMA)
-
-
-def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Decode -> nearest-neighbor resize -> re-encode as binary PNM.
-
-    Fully functional without PIL for PNM inputs (the numpy codec);
-    with PIL installed, compressed inputs (PNG/JPEG/...) decode too.
-    Output blobs are always PNM so the bytes are deterministic across
-    environments. Undecodable rows raise — resize is an explicit
-    transform of images, unlike the per-row-tolerant `image_stats`.
-    """
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out, mimes = [], []
-            for blob in pdf["content"]:
-                a = decode_image(bytes(blob or b""))
-                r = _resize_nearest(a, width, height)
-                out.append(_encode_pnm(r))
-                mimes.append(
-                    "image/x-portable-pixmap" if r.ndim == 3
-                    else "image/x-portable-graymap"
-                )
-            yield pdf.assign(content=out, mime=mimes, width=width, height=height)
-
-    return df.mapInPandas(op, schema=MEDIA_SCHEMA)
-
-
-def sample_video_frames(df: DataFrame, every_s: float = 1.0) -> DataFrame:
-    """Frame sampling (STUB without ffmpeg): emits (media_id, frame_idx,
-    t_offset_s) rows derived from duration metadata — the explode shape
-    a real decoder would produce, deterministic for tests.
-
-    Frame timestamps are STRICTLY inside [0, duration): ceil(d/every_s)
-    frames, so a 10s clip at 1fps yields t = 0..9 (never a frame AT the
-    end, which no decoder produces), and zero/NULL-duration videos
-    yield no frames at all.
-    """
-    n_frames = F.greatest(
-        F.ceil(F.coalesce(F.col("duration_s"), F.lit(0.0)) / every_s).cast("int"),
-        F.lit(0),
-    )
-    return (
-        df.filter((F.col("kind") == "video") & (n_frames > 0))
-        .select(
-            "media_id",
-            F.explode(F.sequence(F.lit(0), n_frames - 1)).alias("frame_idx"),
-        )
-        .select(
-            "media_id",
-            "frame_idx",
-            (F.col("frame_idx") * every_s).alias("t_offset_s"),
-        )
-    )
-
-
-# ------------------------------------------------------- perceptual hashes
-
-PHASH_SCHEMA = "media_id long, phash long, decode_error string"
-
-
-def _bits_to_long(bits: np.ndarray) -> int:
-    """64 bool bits (row-major) -> SIGNED 64-bit int (bit 0 = first
-    bit), two's-complement wrapped so bit 63 fits Spark's LongType."""
-    v = 0
-    for i, b in enumerate(bits.flatten()[:64]):
-        if b:
-            v |= 1 << i
-    return v - (1 << 64) if v >= 1 << 63 else v
-
-
-def _to_gray(a: np.ndarray) -> np.ndarray:
-    """Integer channel average — deterministic across environments
-    (no float luma weights to round differently)."""
-    if a.ndim == 2:
-        return a
-    return (a.astype(np.uint32).sum(axis=2) // a.shape[2]).astype(np.uint8)
-
-
-def dhash64(a: np.ndarray) -> int:
-    """64-bit difference hash (dHash): grayscale -> 9x8 nearest-neighbor
-    resample -> horizontal-gradient sign bits. The standard perceptual
-    fingerprint for near-duplicate image detection (robust to resize,
-    recompression, small edits; Hamming distance ~ visual difference).
-    All arithmetic is the deterministic numpy tier of this module —
-    identical whether the blob came from the PNM or PIL decoder."""
-    small = _resize_nearest(_to_gray(a), 9, 8)
-    return _bits_to_long(small[:, 1:] > small[:, :-1])
-
-
-def ahash64(a: np.ndarray) -> int:
-    """64-bit average hash (aHash): grayscale -> 8x8 resample -> bits =
-    pixel > mean. Cheaper and coarser than dHash; same contract."""
-    small = _resize_nearest(_to_gray(a), 8, 8)
-    return _bits_to_long(small > small.mean())
-
-
-def image_phash(df: DataFrame, algo: str = "dhash") -> DataFrame:
-    """Per-image perceptual hash via mapInPandas: (media_id, phash,
-    decode_error). Undecodable blobs yield a NULL phash plus the error
-    message — a few corrupt files never kill a 1000-executor stage.
-    Feed the result to operators/dedup.py phash_near_dup_pairs for the
-    banded near-duplicate pass (the SQL half is oracle-gated; this
-    decode half is deterministic-unit-tested, the multimodal-tier
-    convention)."""
-    if algo not in ("dhash", "ahash"):
-        raise ValueError(f"image_phash: unknown algo {algo!r}")
-    fn = dhash64 if algo == "dhash" else ahash64
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes, errs = [], [], []
-            for mid, blob in zip(pdf["media_id"], pdf["content"]):
-                ids.append(mid)
-                try:
-                    hashes.append(fn(decode_image(bytes(blob or b""))))
-                    errs.append(None)
-                except Exception as e:  # noqa: BLE001 — per-row isolation
-                    hashes.append(None)
-                    errs.append(f"{type(e).__name__}: {e}")
-            yield pd.DataFrame(
-                {"media_id": ids, "phash": pd.array(hashes, dtype="Int64"),
-                 "decode_error": errs}
-            )
-
-    return df.mapInPandas(op, schema=PHASH_SCHEMA)

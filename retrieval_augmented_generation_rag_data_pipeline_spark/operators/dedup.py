@@ -319,6 +319,17 @@ def ngram_jaccard_pairs(
     )
 
 
+def _jaccard_sql(a: str, b: str) -> str:
+    """|a ∩ b| / |a ∪ b| of two distinct-element array columns, as one
+    SQL expression. Plain division: an empty union (0/0) is the
+    caller's to rule out first."""
+    return let_sql(
+        f"CAST(size(array_intersect({a}, {b})) AS BIGINT)",
+        "i",
+        f"i / CAST(size({a}) + size({b}) - i AS DOUBLE)",
+    )
+
+
 def verify_pairs_jaccard(
     pairs: DataFrame,
     docs: DataFrame,
@@ -399,11 +410,7 @@ def verify_pairs_jaccard(
         "concat('verify_pairs_jaccard: pair (', CAST(doc_a AS STRING), ', ', "
         f"CAST(doc_b AS STRING), {msg})) AS DOUBLE)"
     )
-    jac = let_sql(
-        "CAST(size(array_intersect(_sa, _sb)) AS BIGINT)",
-        "i",
-        "i / CAST(size(_sa) + size(_sb) - i AS DOUBLE)",
-    )
+    jac = _jaccard_sql("_sa", "_sb")
     joined = pairs.join(
         sh.select(F.col("doc_id").alias("doc_a"), F.col("s").alias("_sa")),
         "doc_a",
@@ -778,12 +785,12 @@ def dedup_corpus_edges(
         )
         a = sh.select(F.col("doc_id").alias("doc_a"), F.col("_sh").alias("_sa"))
         b = sh.select(F.col("doc_id").alias("doc_b"), F.col("_sh").alias("_sb"))
-        inter = F.size(F.array_intersect(F.col("_sa"), F.col("_sb")))
-        union = F.size(F.col("_sa")) + F.size(F.col("_sb")) - inter
+        # minhash_band_keys gives shingle-less docs no band, so every
+        # candidate has a non-empty union and the division is safe
         near_edges = (
             near_edges.join(a, "doc_a")
             .join(b, "doc_b")
-            .filter((inter / F.greatest(union, F.lit(1))) >= verify_jaccard)
+            .filter(F.expr(_jaccard_sql("_sa", "_sb")) >= verify_jaccard)
             .select("doc_a", "doc_b")
         )
     return exact_edges.unionByName(near_edges)
@@ -1749,7 +1756,7 @@ def phash_near_dup_pairs(
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs over a 64-bit perceptual-hash column
-    (ml/multimodal.py image_phash — dHash/aHash) by banded Hamming
+    (dHash/aHash, computed upstream of Spark) by banded Hamming
     blocking: the hash splits into ``n_bands`` contiguous bit bands,
     rows agreeing on >= 1 band become candidates (grouped-bucket
     expansion, the lsh_candidate_pairs shape — never a band-key

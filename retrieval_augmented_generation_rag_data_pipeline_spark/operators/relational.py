@@ -43,17 +43,6 @@ def filter_year(df: DataFrame, ts_col: str, year: int) -> DataFrame:
     return df.filter(F.year(F.col(ts_col)) == year)
 
 
-def project_derived(df: DataFrame, path_col: str, ts_col: str) -> DataFrame:
-    """Derived columns: year / extension / stem (reference
-    testing/check_bucket_files.py:53,130; src/embedding_engine.py:60)."""
-    return df.select(
-        F.col(path_col),
-        F.year(F.col(ts_col)).alias("year"),
-        F.lower(F.regexp_extract(F.col(path_col), r"\.([^.\\/]+)$", 1)).alias("ext"),
-        F.regexp_extract(F.col(path_col), r"([^/]+?)(\.[^./]*)?$", 1).alias("stem"),
-    )
-
-
 # ---- aggregations (reference §2.4) ------------------------------------------
 
 def agg_conditional_counts(df: DataFrame, cond: Column) -> DataFrame:

@@ -47,17 +47,6 @@ def _keep_expr(stratum: str, id_col: str, fraction: float, seed: int) -> Column:
     return F.expr(f"{bucket} < {quantize(fraction)}")
 
 
-def sample_deterministic(
-    df: DataFrame,
-    fraction: float,
-    id_col: str,
-    seed: int = 0,
-) -> DataFrame:
-    """Keep ~``fraction`` of rows, decided by hash(seed:id) — the
-    reproducible Bernoulli sample."""
-    return df.filter(_keep_expr("''", id_col, fraction, seed))
-
-
 def assign_split(
     df: DataFrame,
     id_col: str,
@@ -363,47 +352,6 @@ def _budget_cut(
     )
 
 
-def budgets_from_weights(
-    total_tokens: int, weights: dict[str, float]
-) -> dict[str, int]:
-    """Per-group token budgets from DoReMi/Pile-style mixture weights —
-    the driver-side arithmetic that turns a published recipe ("web 0.5,
-    books 0.3, code 0.2" — or unnormalized sampling weights) into the
-    ``budgets`` dict ``select_token_budget_grouped`` consumes.
-
-    Weights are normalized (so unnormalized recipe weights work as-is),
-    each group gets ``floor(total * w)``, and the leftover tokens from
-    flooring are distributed one each by LARGEST FRACTIONAL REMAINDER
-    (ties broken by group name) — the standard apportionment rule, so
-    the budgets always sum EXACTLY to ``total_tokens`` (asserted in
-    tests) and the whole derivation is deterministic. Zero-weight
-    groups stay listed with budget 0 (explicitly excluded, distinct
-    from an unlisted group falling to ``default_budget``).
-    """
-    if total_tokens < 0:
-        raise ValueError(
-            f"budgets_from_weights: total_tokens must be >= 0, got "
-            f"{total_tokens}"
-        )
-    bad = {g: w for g, w in weights.items() if w < 0}
-    if bad:
-        raise ValueError(
-            f"budgets_from_weights: weights must be >= 0, got {bad}"
-        )
-    norm = float(sum(weights.values()))
-    if not weights or norm == 0.0:
-        raise ValueError(
-            "budgets_from_weights: weights must be non-empty with a "
-            "positive sum"
-        )
-    raw = {g: total_tokens * (w / norm) for g, w in weights.items()}
-    budgets = {g: int(r) for g, r in raw.items()}
-    leftover = total_tokens - sum(budgets.values())
-    for g in sorted(raw, key=lambda g: (-(raw[g] - budgets[g]), g))[:leftover]:
-        budgets[g] += 1
-    return budgets
-
-
 def select_token_budget_grouped(
     docs: DataFrame,
     budgets: dict[str, int],
@@ -488,7 +436,7 @@ def mix_temperature(
     alpha < 1 upsamples low-resource sources (the XLM paper's a=0.3
     lifts rare languages without flattening the mix entirely); alpha=1
     is the natural mix; alpha=0 is uniform. The output feeds
-    ``budgets_from_weights`` / ``mix_corpora`` rates directly.
+    ``mix_corpora`` rates directly.
 
     Returns one row per source: (source, n, share, weight) with
     n = the raw count/sum (exact integer), share = n / total (exact

@@ -688,31 +688,6 @@ def _cosine_topk(
     return _topk_per_query(scored, corpus_id, k, "sim")
 
 
-def _probe_index(
-    spark, index_path: str, kind: str, meta: dict, qb: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """The persisted-probe body shared by ``ann_ivf_topk_indexed`` and
-    ``ann_ivfpq_topk``: check the index's ``_{kind}_meta.json`` sidecar
-    against ``meta`` (``sources.sinks.check_sidecar``), pin the query
-    side ``qb`` (one row per probed ``_cell``), collect its distinct
-    cells and return (the index scan pruned to them, the pinned ``qb``).
-
-    The probe cells are nqueries x nprobe integers — metadata-sized,
-    never corpus data — and the static ``_cell IN (...)`` predicate is a
-    parquet PartitionFilter: at 100 TB a 2-of-64-cell probe lists ~3%
-    of the index files, the pruning FAISS gets by opening only nprobe
-    inverted lists. The pin is there because ``qb`` feeds both the
-    collect (which materializes it) and the broadcast join; without it
-    the (n_cells x dim) ranking re-executes from source."""
-    from ..sources.sinks import check_sidecar
-    from .pinning import pin
-
-    check_sidecar(spark, index_path, kind, meta)
-    qb = pin(qb)
-    cells = sorted(r["_cell"] for r in qb.select("_cell").distinct().collect())
-    return spark.read.parquet(index_path).filter(F.col("_cell").isin(cells)), qb
-
-
 def ann_ivf_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -780,8 +755,7 @@ def ann_ivf_topk_indexed(
     centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """IVF top-k over a PERSISTED inverted-list index
-    (sources.sinks.write_ivf_index): reads ONLY the probed partitions
-    (``_probe_index``).
+    (sources.sinks.write_ivf_index): reads ONLY the probed partitions.
 
     ``query_vec_col`` names the vector column in ``queries``;
     ``index_vec_col`` must match the ``vec_col`` the index was WRITTEN
@@ -801,16 +775,23 @@ def ann_ivf_topk_indexed(
     partially-written index) also raises — an unverifiable quantizer is
     as dangerous as a mismatched one (``sources.sinks.check_sidecar``).
     """
-    from ..sources.sinks import ivf_meta
+    from ..sources.sinks import check_sidecar, ivf_meta
+    from .pinning import pin
 
     cents = resolve_centroids(dim, n_cells, centroids)
-    corpus, qb = _probe_index(
-        spark,
-        index_path,
-        "ivf",
-        ivf_meta(dim, len(cents), centroids, index_vec_col),
-        probe_cells(_queries(queries, query_id, query_vec_col), cents, "_qv", nprobe),
+    check_sidecar(spark, index_path, ivf_meta(dim, len(cents), centroids, index_vec_col))
+    # The probe cells are nqueries x nprobe integers — metadata-sized,
+    # never corpus data — and the static ``_cell IN (...)`` predicate is
+    # a parquet PartitionFilter: at 100 TB a 2-of-64-cell probe lists
+    # ~3% of the index files, the pruning FAISS gets by opening only
+    # nprobe inverted lists. ``qb`` feeds both the collect and the
+    # broadcast join; the pin stops the (n_cells x dim) ranking from
+    # re-executing from source.
+    qb = pin(
+        probe_cells(_queries(queries, query_id, query_vec_col), cents, "_qv", nprobe)
     )
+    cells = sorted(r["_cell"] for r in qb.select("_cell").distinct().collect())
+    corpus = spark.read.parquet(index_path).filter(F.col("_cell").isin(cells))
     return _cosine_topk(corpus, qb, "_cell", corpus_id, index_vec_col, k)
 
 
@@ -1008,10 +989,9 @@ def ivfpq_encode(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(vec_id, codes, _cell) in one corpus pass: ``pq_encode``'s codes
-    plus the ``assign_cells_exact`` cell — the IndexIVFPQ corpus side,
-    shared by ``ann_ivfpq_topk_mem`` and ``sources.sinks.write_ivfpq_index``.
-    No self-join, and both broadcasts are single rows, so the stream
-    side's partitioning (and so a writer's file layout) is untouched."""
+    plus the ``assign_cells_exact`` cell — the IndexIVFPQ corpus side of
+    ``ann_ivfpq_topk_mem``. No self-join, and both broadcasts are single
+    rows, so the stream side's partitioning is untouched."""
     cells = assign_cells_exact(_with_codebooks(corpus, codebooks), centroids, vec_col)
     return cells.select(
         F.col(corpus_id).alias(corpus_id),
@@ -1120,9 +1100,7 @@ def ann_ivfpq_topk_mem(
     ``ann_pq_topk``'s cross join. Cells are assigned and probed with
     literal centroids up to ``CELL_LITERAL_MAX`` cells and a broadcast
     table past it; both tiers return the same rows. A NULL query vector
-    emits no rows. Use ``ann_ivfpq_topk`` (the persisted variant) when
-    the index lives on disk — it additionally prunes the scan to the
-    probed partitions. Deterministic with the default codebook/centroid
+    emits no rows. Deterministic with the default codebook/centroid
     families, so the whole path is DuckDB-oracle-checkable (query
     ``ann_ivfpq_mem``).
     """
@@ -1135,50 +1113,6 @@ def ann_ivfpq_topk_mem(
     cb = ivfpq_encode(ensure_parallelism(corpus), codebooks, cents, corpus_id, vec_col)
     qb = _pq_queries(queries, codebooks, query_id, vec_col, cents, nprobe)
     return _adc_topk(cb, qb, codebooks, corpus_id, k, "_cell")
-
-
-def ann_ivfpq_topk(
-    spark,
-    index_path: str,
-    queries: DataFrame,
-    k: int,
-    dim: int,
-    codebooks: list[list[list[float]]],
-    query_id: str = "query_id",
-    corpus_id: str = "vec_id",
-    query_vec_col: str = "embedding",
-    index_vec_col: str = "embedding",
-    n_cells: int = 8,
-    nprobe: int = 2,
-    centroids: list[list[float]] | None = None,
-) -> DataFrame:
-    """IndexIVFPQ search over a persisted index
-    (sources.sinks.write_ivfpq_index): partition-pruned scan of PQ codes
-    + ADC lookup-table scoring.
-
-    The two scale reductions compound: the ``_cell IN (...)`` predicate
-    prunes to the probed partitions at the file-listing level
-    (``_probe_index``, shared with ``ann_ivf_topk_indexed``), and the
-    surviving scan reads m small ints per vector instead of dim floats;
-    scoring is m table lookups. Probes use literal centroids up to
-    ``CELL_LITERAL_MAX`` cells and a broadcast table past it, the
-    writer's fold on either tier. A NULL query vector emits no rows.
-    The ``_ivfpq_meta.json`` sidecar is asserted before probing — a
-    different dim/n_cells/centroids/codebooks than the index was
-    written with raises instead of silently returning wrong neighbors,
-    and so does a MISSING sidecar (unverifiable quantizer).
-    """
-    from ..sources.sinks import ivf_meta, pq_meta
-
-    cents = resolve_centroids(dim, n_cells, centroids)
-    corpus, qb = _probe_index(
-        spark,
-        index_path,
-        "ivfpq",
-        {**ivf_meta(dim, len(cents), centroids, index_vec_col), **pq_meta(codebooks)},
-        _pq_queries(queries, codebooks, query_id, query_vec_col, cents, nprobe),
-    )
-    return _adc_topk(corpus, qb, codebooks, corpus_id, k, "_cell")
 
 
 def ann_lsh_topk(

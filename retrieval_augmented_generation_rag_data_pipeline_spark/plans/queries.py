@@ -3550,9 +3550,8 @@ def multimodal_features(spark, sf):
 # Perceptual-hash near-dup (round-14 verdict item 5): the gate covers
 # the SQL half — banded Hamming blocking + exact bit_count rerank over
 # a precomputed 64-bit hash column (deterministically synthesized here
-# so DuckDB can replay it; the decode half — ml/multimodal.py dhash64
-# over real PNM pixels — is unit-tested, the multimodal-tier
-# convention). Synth plants clusters (doc_id % 37) with per-doc bit
+# so DuckDB can replay it; decoding images into hashes is outside the
+# package). Synth plants clusters (doc_id % 37) with per-doc bit
 # flips (doc_id % 5) spanning distances 0..12, including one pair
 # class at EXACTLY the max_distance boundary and classes beyond it.
 _PHASH_GROUPS = 37
@@ -3594,8 +3593,7 @@ def dedup_image_phash(spark, sf):
     lsh_candidate_pairs shape) + exact bit_count(xor) rerank, provably
     equal to the all-pairs filter for max_distance < n_bands
     (pigeonhole), which is exactly what the oracle computes
-    (operators/dedup.py phash_near_dup_pairs; hashes from
-    ml/multimodal.py image_phash in production)."""
+    (operators/dedup.py phash_near_dup_pairs)."""
     from ..functions.hashing import md5_long_sql
 
     base = F.expr(
@@ -4601,7 +4599,7 @@ FROM events WHERE user_id < 100
 @_q("zorder_key", _zorder_sql())
 def zorder_key(spark, sf):
     # same engine-portable expression string on both sides (sinks.
-    # morton_key_sql) — the key that write_zordered clusters files by
+    # morton_key_sql)
     from ..sources.sinks import morton_key_sql
 
     ev = _t(spark, sf, "events").filter(F.col("user_id") < 100)

@@ -6,12 +6,12 @@ source: the file index parallelizes listing, `pathGlobFilter` pushes the
 suffix predicate into the listing (F1), and the `content` column replaces
 the download step (S2). Against a real bucket the same code takes an
 `s3a://` URI — locality, retries, and credential wiring live in the
-Hadoop S3A layer, not here.
+Hadoop S3A layer, set through the `spark.hadoop.fs.s3a.*` keys of the
+deployment's Spark config, not here. One `scan_catalog` call with a
+brace glob (`{*.webm,*.mp3}`) lists a multi-extension inventory once.
 """
 
 from __future__ import annotations
-
-from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -124,36 +124,6 @@ def scan_catalog(
     return df
 
 
-def scan_globs(spark: SparkSession, path: str, globs: Sequence[str]) -> DataFrame:
-    """Multi-extension scan (reference src/transcription.py:431-432).
-
-    Simple patterns are combined into ONE Hadoop brace alternation
-    (`{*.wav,*.mp3}`) so the store prefix is listed once — N separate
-    scans would each run a full recursive listing (N rounds of
-    paginated LIST calls on an object store). Falls back to a union of
-    per-glob scans only when a pattern already contains braces (nested
-    alternation isn't portable — and when any glob contains a comma,
-    which the brace join would reinterpret as an alternation
-    separator); a file matching several globs appears ONCE on either
-    path (the fallback union dedupes on path to keep the two code
-    paths' semantics identical).
-    """
-    globs = list(globs)
-    if not globs:
-        raise ValueError("scan_globs: at least one glob pattern required")
-    if len(globs) > 1 and not any(
-        "{" in g or "}" in g or "," in g for g in globs
-    ):
-        return scan_catalog(spark, path, "{" + ",".join(globs) + "}")
-    dfs = [scan_catalog(spark, path, g) for g in globs]
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    # overlapping globs match the same file more than once on the
-    # union path; the combined-brace path lists it once
-    return out if len(dfs) == 1 else out.dropDuplicates(["path"])
-
-
 def scan_text_documents(spark: SparkSession, path: str, glob: str = "*.txt") -> DataFrame:
     """Whole-file text scan (S4, reference src/embedding_engine.py:58-64):
     one row per file -> (source_file, text)."""
@@ -168,55 +138,3 @@ def scan_text_documents(spark: SparkSession, path: str, glob: str = "*.txt") -> 
             F.col("value").alias("text"),
         )
     )
-
-
-def scan_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | str | None = None,
-    glob: str | None = None,
-) -> DataFrame:
-    """JSON-lines scan — the interchange format most text corpora ship
-    in (one document object per line; the reference's own per-file JSON
-    transcripts, src/transcription.py:349-351, are the single-object
-    cousin).
-
-    Pass ``schema`` in production: without it Spark runs a FULL
-    inference pass over the data before the real scan — at 100 TB that
-    is a second read of the corpus. With a schema the scan is one pass,
-    line-splittable (plain .jsonl parallelizes by byte range; gzipped
-    files are one split each — prefer uncompressed or zstd-seekable
-    shards at scale), and malformed lines land in the standard
-    ``_corrupt_record`` column instead of failing the job.
-    """
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.option("recursiveFileLookup", "true").json(path)
-
-
-def scan_csv(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | str | None = None,
-    header: bool = True,
-    delimiter: str = ",",
-    glob: str | None = None,
-) -> DataFrame:
-    """CSV scan with the same schema-first stance as scan_jsonl
-    (inference costs a full extra pass; headers alone don't give
-    types). Recursive like every sibling scanner — nested shard
-    layouts (path/source=x/part-*.csv) are read fully, not silently
-    truncated to the top-level directory."""
-    reader = spark.read.option("header", str(header).lower()).option(
-        "delimiter", delimiter
-    )
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.option("recursiveFileLookup", "true").csv(path)

@@ -97,8 +97,7 @@ def write_vector_index(df: DataFrame, path: str, mode: str = "overwrite") -> Non
     """Vector-index sink (S7): (vec_id, embedding, text, source_file) as
     flat Parquet. The reference's per-file FAISS layout
     (src/embedding_engine.py:74-84) is the ``source_file`` column, so an
-    append adds one file per write partition, not one per document;
-    ``compact_parquet`` merges the small files many appends leave.
+    append adds one file per write partition, not one per document.
 
     Two checks raise before anything is written. A frame whose column
     names or types differ from ``VECTOR_INDEX_DDL``: the reader declares
@@ -120,31 +119,6 @@ def write_vector_index(df: DataFrame, path: str, mode: str = "overwrite") -> Non
     df.write.mode(mode).parquet(path)
 
 
-def write_time_partitioned(
-    df: DataFrame,
-    path: str,
-    ts_col: str = "ts",
-    mode: str = "overwrite",
-) -> None:
-    """Date-partitioned parquet sink for event streams.
-
-    Hive-style `event_date=YYYY-MM-DD/` directories let Catalyst prune
-    whole partitions for time-range predicates (the reference's
-    year-filter diagnosis at testing/check_bucket_files.py:112 becomes a
-    metadata-only operation instead of a full scan). Files within a
-    partition are range-sorted on the timestamp so min/max row-group
-    stats prune within the partition too.
-    """
-    (
-        df.withColumn("event_date", F.to_date(F.col(ts_col)))
-        .repartition(F.col("event_date"))
-        .sortWithinPartitions(ts_col)
-        .write.mode(mode)
-        .partitionBy("event_date")
-        .parquet(path)
-    )
-
-
 def read_vector_index(spark: SparkSession, path: str) -> DataFrame:
     """Vector-index load (S8, reference src/embedding_engine.py:88-99).
     A ``source_file`` filter replaces the per-file .faiss open; it skips
@@ -157,31 +131,6 @@ def read_vector_index(spark: SparkSession, path: str) -> DataFrame:
     ``PATH_NOT_FOUND`` analysis error that ``run_once`` takes as its
     first run."""
     return spark.read.schema(VECTOR_INDEX_DDL).parquet(path)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    path: str,
-    key: str,
-    n_buckets: int = 8,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed+sorted external table for co-located joins.
-
-    Two tables bucketed by the same key into the same bucket count
-    join with ZERO shuffle (sort-merge over pre-bucketed files) — the
-    standard layout for fact tables that are repeatedly joined on the
-    same key at 100 TB. Registered in the session catalog with explicit
-    storage at ``path``.
-    """
-    (
-        df.write.mode(mode)
-        .option("path", path)
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
-        .saveAsTable(table)
-    )
 
 
 def _guard_sidecar_append(spark, sidecar_path: str, meta: dict, mode: str) -> None:
@@ -199,7 +148,7 @@ def _guard_sidecar_append(spark, sidecar_path: str, meta: dict, mode: str) -> No
             f"append to {sidecar_path.rsplit('/', 1)[0]!r} with different "
             "quantizer parameters than the existing index sidecar; "
             "rewrite with mode='overwrite' or reuse the original "
-            "centroids/codebooks"
+            "centroids"
         )
 
 
@@ -290,60 +239,21 @@ def morton_key_sql(col_a: str, col_b: str, bits: int = 16) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    n_files: int = 8,
-    bits: int = 16,
-    mode: str = "overwrite",
-) -> None:
-    """Write parquet Z-ordered on two columns: range-partition by the
-    Morton key (each output file owns a curve segment), sort within
-    partitions, drop the key. A later scan filtering on EITHER column
-    prunes most files from their footer min/max stats — single-column
-    sorting can only ever serve one of the two predicates.
-    """
-    z = df.withColumn("_z", F.expr(morton_key_sql(col_a, col_b, bits)))
-    (
-        z.repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
-def pq_meta(codebooks: list[list[list[float]]]) -> dict:
-    """Canonical PQ metadata: subspace layout + a 6-decimal-rounded md5
-    fingerprint of the codebooks (metadata-sized at any m x ksub x dsub)."""
-    canon = json.dumps(
-        [[[round(float(x), 6) for x in c] for c in cb] for cb in codebooks]
-    )
-    return {
-        "m": len(codebooks),
-        "ksub": len(codebooks[0]),
-        "dsub": len(codebooks[0][0]),
-        "codebook_hash": hashlib.md5(canon.encode("utf-8")).hexdigest(),
-    }
-
-
-def check_sidecar(spark: SparkSession, index_path: str, kind: str, asked: dict) -> None:
-    """Probe-side guard of an index written by ``write_{kind}_index``:
-    raise unless its ``_{kind}_meta.json`` sidecar exists and matches
-    ``asked`` (``ivf_meta``, plus ``pq_meta`` for IVFPQ) on every key.
-    A mismatched quantizer would silently return wrong neighbors, and a
-    missing sidecar (a foreign or partially-written index) leaves the
-    quantizer unverifiable, which is as dangerous."""
-    label = f"{kind.upper()} index at {index_path}"
+def check_sidecar(spark: SparkSession, index_path: str, asked: dict) -> None:
+    """Probe-side guard of an index written by ``write_ivf_index``:
+    raise unless its ``_ivf_meta.json`` sidecar exists and matches
+    ``asked`` (``ivf_meta``) on every key. A mismatched quantizer would
+    silently return wrong neighbors, and a missing sidecar (a foreign or
+    partially-written index) leaves the quantizer unverifiable, which is
+    as dangerous."""
+    label = f"IVF index at {index_path}"
     params = "/".join(asked)
-    raw = read_sidecar_text(spark, f"{index_path.rstrip('/')}/_{kind}_meta.json")
+    raw = read_sidecar_text(spark, f"{index_path.rstrip('/')}/_ivf_meta.json")
     if raw is None:
         raise ValueError(
-            f"{label} has no _{kind}_meta.json sidecar; cannot verify it "
+            f"{label} has no _ivf_meta.json sidecar; cannot verify it "
             f"was written with this probe's quantizer ({params}). "
-            f"Rebuild with write_{kind}_index."
+            "Rebuild with write_ivf_index."
         )
     written = json.loads(raw)
     bad = [
@@ -357,90 +267,3 @@ def check_sidecar(spark: SparkSession, index_path: str, kind: str, asked: dict) 
             f"probe: mismatched {', '.join(bad)}. Probe with the same "
             f"{params} the index was built with, or rebuild the index."
         )
-
-
-def write_ivfpq_index(
-    corpus: DataFrame,
-    path: str,
-    dim: int,
-    codebooks: list[list[list[float]]],
-    n_cells: int = 8,
-    centroids: list[list[float]] | None = None,
-    corpus_id: str = "vec_id",
-    vec_col: str = "embedding",
-    mode: str = "overwrite",
-) -> None:
-    """Persist an IVF+PQ index: PQ codes (m small ints per vector, not
-    the float vectors) in parquet partitioned by coarse-quantizer cell —
-    FAISS's IndexIVFPQ storage restated as a partitioned table.
-
-    At rest this is the full scale story: a probe prunes to nprobe/
-    n_cells of the PARTITIONS (metadata-level, files never opened) and
-    what it does scan is m bytes per vector instead of dim x 4 — the
-    two reductions compound (e.g. 2-of-64 probe over 8-byte codes scans
-    ~0.1% of the bytes a flat float index would). Quantizer parameters
-    (IVF + PQ) persist in an ``_ivfpq_meta.json`` sidecar;
-    ``ann_ivfpq_topk`` asserts against it before probing.
-
-    Codes and cells come from one corpus pass,
-    ``vectors.ivfpq_encode``: the codebook rides a one-row broadcast,
-    and cells use literal centroids up to ``CELL_LITERAL_MAX`` cells, a
-    broadcast centroid table past it (same cells on both tiers). The
-    caller's partitioning, and so the written file layout, is kept.
-    """
-    from ..operators.vectors import ivfpq_encode, resolve_centroids
-
-    cents = resolve_centroids(dim, n_cells, centroids)
-    meta = {**ivf_meta(dim, len(cents), centroids, vec_col), **pq_meta(codebooks)}
-    sidecar = path.rstrip("/") + "/_ivfpq_meta.json"
-    _guard_sidecar_append(corpus.sparkSession, sidecar, meta, mode)
-    (
-        ivfpq_encode(corpus, codebooks, cents, corpus_id, vec_col)
-        .write.mode(mode)
-        .partitionBy("_cell")
-        .parquet(path)
-    )
-    write_sidecar_text(corpus.sparkSession, sidecar, json.dumps(meta))
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    out_path: str,
-    target_mb: int = 256,
-) -> int:
-    """Rewrite a parquet dataset into ~target_mb files (small-files
-    maintenance).
-
-    Streaming ingest with per-trigger rate caps (the reference writes one
-    output per file per cycle) accumulates thousands of tiny files; at
-    scale that degrades listing, scheduling, and scan throughput. Sizing
-    comes from the actual on-disk bytes. Returns the number of output
-    files.
-
-    Both directions are handled: shrinking the file count is a
-    shuffle-free ``coalesce``; growing it (splitting oversized files)
-    needs a real ``repartition`` — ``coalesce`` can only merge existing
-    partitions, so asking it for more is a silent no-op that would leave
-    the big files untouched.
-
-    Sizing uses the catalog listing (``scan_catalog``'s ``length``
-    column — file-status metadata, no content read), so the same call
-    works against local paths and object stores (s3a://...) alike; no
-    local-filesystem assumption anywhere.
-    """
-    from .readers import scan_catalog
-
-    df = spark.read.parquet(path)
-    total_bytes = (
-        scan_catalog(spark, path, glob="*.parquet")
-        .agg(F.sum("length").alias("_bytes"))
-        .collect()[0]["_bytes"]
-    ) or 0
-    n = int(max(1, -(-total_bytes // (target_mb * 1024 * 1024))))
-    if n > df.rdd.getNumPartitions():
-        df = df.repartition(n)
-    else:
-        df = df.coalesce(n)
-    df.write.mode("overwrite").parquet(out_path)
-    return n

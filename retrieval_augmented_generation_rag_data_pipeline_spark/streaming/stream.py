@@ -8,9 +8,8 @@ while True / sleep(30) / ledger set / 2-files-per-cycle cap) maps to:
   T3 rate limiting     -> maxFilesPerTrigger
   T4 chained stages    -> foreachBatch running the batch DAG
 
-Event-time extras the reference lacks (watermark + tumbling/session
-windows over `events`) are exposed as windowed_events /
-sessionized_events — identical semantics to the batch W3 operator.
+Only the loop lives here: every stage a micro-batch runs is a batch
+operator, so the streaming and batch paths cannot drift apart.
 """
 
 from __future__ import annotations
@@ -18,7 +17,6 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
@@ -65,130 +63,3 @@ def run_stream(
     else:
         writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
     return writer.start()
-
-
-def windowed_events(
-    events: DataFrame,
-    window_seconds: int = 300,
-    watermark: str = "10 minutes",
-    ts_col: str = "ts",
-    key_cols: list[str] | None = None,
-    aggs: list | None = None,
-) -> DataFrame:
-    """Watermarked tumbling-window aggregation over an event stream —
-    boundaries identical to the batch tumbling_bucket operator.
-
-    ``key_cols``/``aggs`` parameterize the grouping keys and the
-    (pre-aliased) aggregate expressions; the defaults keep the
-    historical per-event_type count/sum-of-value shape, which requires
-    those columns in ``events``.
-    """
-    if key_cols is None:
-        key_cols = ["event_type"]
-    if aggs is None:
-        aggs = [F.count("*").alias("n"), F.sum("value").alias("sum_value")]
-    grouped = (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(
-            F.window(F.col(ts_col), f"{window_seconds} seconds").alias("w"),
-            *key_cols,
-        )
-        .agg(*aggs)
-    )
-    agg_out = [c for c in grouped.columns if c != "w" and c not in key_cols]
-    return grouped.select(
-        F.col("w.start").alias("window_start"), *key_cols, *agg_out
-    )
-
-
-def sessionized_events(
-    events: DataFrame,
-    gap: str = "5 minutes",
-    watermark: str = "10 minutes",
-    ts_col: str = "ts",
-    key_cols: list[str] | None = None,
-    aggs: list | None = None,
-) -> DataFrame:
-    """Session windows keyed by user (the streaming generalization of the
-    batch islands operator W1). ``key_cols``/``aggs`` as in
-    ``windowed_events``; defaults keep the per-user count/sum shape."""
-    if key_cols is None:
-        key_cols = ["user_id"]
-    if aggs is None:
-        aggs = [F.count("*").alias("n_events"), F.sum("value").alias("sum_value")]
-    grouped = (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap).alias("w"), *key_cols)
-        .agg(*aggs)
-    )
-    agg_out = [c for c in grouped.columns if c != "w" and c not in key_cols]
-    return grouped.select(
-        F.col("w.start").alias("session_start"),
-        F.col("w.end").alias("session_end"),
-        *key_cols,
-        *agg_out,
-    )
-
-
-def dedup_ingest(
-    spark: SparkSession,
-    src_path: str,
-    out_path: str,
-    digest_ledger: str,
-    checkpoint: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_files_per_trigger: int = 2,
-    trigger_seconds: int | None = None,
-) -> StreamingQuery:
-    """Content-level exactly-once ingest: the file-source checkpoint
-    already dedups FILES (T2); this additionally dedups CONTENT — a
-    re-uploaded, renamed, or copied file whose text matches an
-    already-ingested document is dropped against a persistent digest
-    ledger. Generalizes the reference's key-level processed-set
-    (src/aws_bucket.py:55-68,180) to the content level a training
-    corpus needs.
-
-    Per micro-batch: digest each doc (md5 of the raw text — compose
-    with operators.text.normalize_text upstream for canonicalized
-    matching), drop in-batch duplicates deterministically (lowest id
-    per digest), anti-join the surviving docs against the ledger, append
-    the fresh docs to ``out_path`` and their digests to the ledger.
-
-    Delivery note: the output write and the ledger append are two
-    non-atomic steps — a crash between them re-emits those docs on
-    retry (at-least-once at the content level; the reference has the
-    same gap between its download and ledger save). The digest ledger
-    bounds at one row per DISTINCT document ever ingested, and the
-    anti-join stays AQE-broadcastable until it genuinely outgrows
-    memory — after that it is a plain shuffle join on the digest.
-    """
-    from ..sources.ledger import append_processed, load_ledger, pending
-    from pyspark.sql import Window
-
-    def batch_fn(df: DataFrame, epoch: int) -> None:
-        # coalesce: md5(NULL) is NULL, and a NULL digest never equals
-        # the ledger key in the anti-join — a null-text doc would be
-        # re-ingested (and a NULL key appended to the ledger) on EVERY
-        # micro-batch forever. NULL text keys with the empty document:
-        # content-identical for dedup purposes, one ingested instance.
-        d = df.withColumn(
-            "_digest", F.md5(F.coalesce(F.col(text_col), F.lit("")))
-        )
-        w = Window.partitionBy("_digest").orderBy(F.col(id_col))
-        d = (
-            d.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        fresh = pending(d, load_ledger(spark, digest_ledger), "_digest")
-        fresh = fresh.localCheckpoint(eager=True)  # one evaluation, two sinks
-        fresh.drop("_digest").write.mode("append").parquet(out_path)
-        append_processed(fresh, "_digest", digest_ledger)
-
-    return run_stream(
-        read_document_stream(spark, src_path, max_files_per_trigger),
-        batch_fn,
-        checkpoint,
-        trigger_seconds=trigger_seconds,
-    )

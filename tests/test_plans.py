@@ -225,71 +225,6 @@ def test_ivf_index_meta_guards_quantizer_mismatch(spark, tmp_path):
         )
 
 
-def test_ivfpq_index_prunes_and_matches_inmemory_adc(spark, tmp_path):
-    """The persisted IVF+PQ layout: scan lists only probed `_cell=`
-    partitions AND reads codes (no float vectors); scores equal the
-    in-memory ADC over the same probed cells; quantizer mismatch raises."""
-    import pytest
-    import re
-    from pyspark.sql import functions as F
-
-    from retrieval_augmented_generation_rag_data_pipeline_spark.operators.vectors import (
-        ann_ivfpq_topk,
-        ann_pq_topk,
-        assign_cells_exact,
-        default_pq_codebooks,
-        ivf_centroid,
-        pq_encode,
-    )
-    from retrieval_augmented_generation_rag_data_pipeline_spark.sources.sinks import (
-        write_ivfpq_index,
-    )
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    books = default_pq_codebooks(64, m=8, ksub=16)
-    path = str(tmp_path / "ivfpq_index")
-    write_ivfpq_index(emb, path, dim=64, codebooks=books, n_cells=8)
-
-    q = emb.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    # a NULL query vector emits no rows on both ADC paths (it used to
-    # get k NULL-score "neighbors")
-    q = q.unionByName(spark.createDataFrame([(999, None)], q.schema))
-    out = ann_ivfpq_topk(spark, path, q, k=5, dim=64, codebooks=books,
-                         n_cells=8, nprobe=2)
-
-    jvm = spark.sparkContext._jvm
-    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    plan = out._jdf.queryExecution().explainString(mode)
-    assert re.search(r"PartitionFilters: \[_cell#\d+ IN \(", plan), plan
-    # the index scan reads the compact codes, never an embedding column
-    scan_schemas = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
-    assert any("codes" in ln for ln in scan_schemas), scan_schemas
-    assert not any("embedding" in ln for ln in scan_schemas if "codes" in ln)
-
-    # value parity: in-memory ADC restricted to each query's probed cells
-    probed = {r.query_id: r.vec_id for r in out.collect() if r.rank == 1}
-    cells = assign_cells_exact(
-        emb.select("vec_id", "embedding"),
-        [ivf_centroid(c, 64) for c in range(8)],
-        "embedding",
-    ).select("vec_id", "_cell")
-    codes = pq_encode(emb, books).join(cells, "vec_id")
-    full = ann_pq_topk(q, codes, books, k=emb.count())
-    assert 999 not in {r.query_id for r in out.collect() + full.collect()}
-    # every indexed hit must carry the identical ADC score the in-memory
-    # path computes for that (query, vec) pair
-    mem = {(r.query_id, r.vec_id): r.score for r in full.collect()}
-    for r in out.collect():
-        assert abs(mem[(r.query_id, r.vec_id)] - r.score) < 1e-9
-
-    with pytest.raises(ValueError, match="different"):
-        ann_ivfpq_topk(spark, path, q, k=5, dim=64,
-                       codebooks=default_pq_codebooks(64, m=4, ksub=16),
-                       n_cells=8, nprobe=2)
-
-
 def test_interval_join_is_hash_join_not_nested_loop(spark):
     """The bucketed interval join must plan as an equi-join (hash/SMJ on
     the bucket key), never BroadcastNestedLoopJoin, and must return
@@ -325,8 +260,8 @@ def test_interval_join_is_hash_join_not_nested_loop(spark):
 
 
 def test_indexed_probe_guards(spark, tmp_path):
-    """A missing meta sidecar raises (unverifiable quantizer) on both
-    persisted probes; interval_join refuses a colliding '_b' column."""
+    """A missing meta sidecar raises (unverifiable quantizer) on the
+    persisted probe; interval_join refuses a colliding '_b' column."""
     import os
 
     import pytest
@@ -337,12 +272,9 @@ def test_indexed_probe_guards(spark, tmp_path):
     )
     from retrieval_augmented_generation_rag_data_pipeline_spark.operators.vectors import (
         ann_ivf_topk_indexed,
-        ann_ivfpq_topk,
-        default_pq_codebooks,
     )
     from retrieval_augmented_generation_rag_data_pipeline_spark.sources.sinks import (
         write_ivf_index,
-        write_ivfpq_index,
     )
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
@@ -354,15 +286,6 @@ def test_indexed_probe_guards(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="no _ivf_meta.json"):
         ann_ivf_topk_indexed(spark, path, q, k=3, dim=64, n_cells=8, nprobe=2)
-
-    books = default_pq_codebooks(64, m=8, ksub=16)
-    pq_path = str(tmp_path / "ivfpq_nometa")
-    write_ivfpq_index(emb, pq_path, dim=64, codebooks=books, n_cells=8)
-    os.remove(pq_path + "/_ivfpq_meta.json")
-    with pytest.raises(ValueError, match="no _ivfpq_meta.json"):
-        ann_ivfpq_topk(
-            spark, pq_path, q, k=3, dim=64, codebooks=books, n_cells=8, nprobe=2
-        )
 
     pts = spark.createDataFrame([(1, 5.0, 7)], ["id", "ts", "_b"])
     iv = spark.createDataFrame([(0.0, 10.0)], ["lo", "hi"])

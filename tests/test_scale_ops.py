@@ -1,4 +1,4 @@
-"""Scale-technique operators: salted join and time-partitioned storage.
+"""Scale-technique operators: salted joins and the Z-order key.
 
 These don't change WHAT is computed — the tests pin that they compute
 the same rows as the plain formulation — only HOW it distributes.
@@ -9,12 +9,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from retrieval_augmented_generation_rag_data_pipeline_spark.operators.joins import salted_join
-from retrieval_augmented_generation_rag_data_pipeline_spark.sources.readers import (
-    load_events,
-)
-from retrieval_augmented_generation_rag_data_pipeline_spark.sources.sinks import (
-    write_time_partitioned,
-)
 
 SF = "/root/testdata/sf0.001"
 
@@ -49,74 +43,6 @@ def test_salted_join_skewed_key(spark):
     assert out.filter(F.col("k") == 7).count() == 900
 
 
-def test_time_partitioned_write_prunes(spark, tmp_path):
-    ev = load_events(spark, SF)
-    path = str(tmp_path / "ev_parts")
-    write_time_partitioned(ev, path)
-
-    back = spark.read.parquet(path)
-    assert back.count() == ev.count()
-
-    one_day = back.filter(F.col("event_date") == "2024-01-01")
-    jvm = spark.sparkContext._jvm
-    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    plan = one_day._jdf.queryExecution().explainString(mode)
-    # the date predicate must be a partition filter (metadata pruning),
-    # never a data filter
-    assert "PartitionFilters: [isnotnull(event_date" in plan
-    exp = ev.filter(F.to_date("ts") == "2024-01-01").count()
-    assert one_day.count() == exp
-
-
-def test_compact_parquet_reduces_file_count(spark, tmp_path):
-    from retrieval_augmented_generation_rag_data_pipeline_spark.sources.sinks import (
-        compact_parquet,
-    )
-    import pathlib
-
-    src = str(tmp_path / "many")
-    # simulate streaming ingest: 16 tiny files
-    spark.range(10000).repartition(16).write.parquet(src)
-    assert len(list(pathlib.Path(src).glob("part-*.parquet"))) == 16
-    out = str(tmp_path / "compacted")
-    n = compact_parquet(spark, src, out, target_mb=256)
-    assert n == 1
-    assert len(list(pathlib.Path(out).glob("part-*.parquet"))) == 1
-    assert spark.read.parquet(out).count() == 10000
-
-
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    from retrieval_augmented_generation_rag_data_pipeline_spark.sources.sinks import (
-        write_bucketed,
-    )
-
-    c = spark.read.parquet(f"{SF}/customer.parquet").select(
-        "c_custkey", "c_mktsegment"
-    )
-    o = spark.read.parquet(f"{SF}/orders.parquet").select(
-        F.col("o_custkey").alias("c_custkey"), "o_orderkey"
-    )
-    write_bucketed(c, "b_cust", str(tmp_path / "b_cust"), "c_custkey", 4)
-    write_bucketed(o, "b_ord", str(tmp_path / "b_ord"), "c_custkey", 4)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # force the join strategy decision to depend on bucketing alone
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("b_cust").join(spark.table("b_ord"), "c_custkey")
-        jvm = spark.sparkContext._jvm
-        mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        plan = joined._jdf.queryExecution().explainString(mode)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan  # co-located: zero shuffle
-        # and it still computes the right thing
-        exp = c.join(o, "c_custkey").count()
-        assert joined.count() == exp
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS b_cust")
-        spark.sql("DROP TABLE IF EXISTS b_ord")
-
-
 def test_salted_join_rejects_dim_preserving_how(spark):
     import pytest
 
@@ -129,35 +55,13 @@ def test_salted_join_rejects_dim_preserving_how(spark):
     assert salted_join(f, d, "k", salt=4, how="left_semi").count() == 5
 
 
-def test_compact_parquet_splits_oversized_files(spark, tmp_path):
-    """The growing direction: one big file -> several target-size files.
-    Requires repartition (coalesce cannot raise the partition count)."""
-    from retrieval_augmented_generation_rag_data_pipeline_spark.sources.sinks import (
-        compact_parquet,
-    )
-    import pathlib
-
-    src = str(tmp_path / "one_big")
-    (
-        spark.range(500_000)
-        .withColumn("payload", F.md5(F.col("id").cast("string")))
-        .coalesce(1)
-        .write.parquet(src)
-    )
-    assert len(list(pathlib.Path(src).glob("part-*.parquet"))) == 1
-    out = str(tmp_path / "split")
-    n = compact_parquet(spark, src, out, target_mb=1)
-    assert n > 1
-    assert len(list(pathlib.Path(out).glob("part-*.parquet"))) == n
-    assert spark.read.parquet(out).count() == 500_000
-
-
 def test_zorder_write_clusters_both_columns(spark, tmp_path):
-    """Z-ordered files must have NARROW per-file min/max spans on BOTH
-    dimensions (that is what footer-stat data skipping prunes on); a
-    single-column sort can only achieve this for one of the two."""
+    """Files range-partitioned on the Morton key must have NARROW
+    per-file min/max spans on BOTH dimensions (that is what footer-stat
+    data skipping prunes on); a single-column sort can only achieve this
+    for one of the two."""
     from retrieval_augmented_generation_rag_data_pipeline_spark.sources.sinks import (
-        write_zordered,
+        morton_key_sql,
     )
 
     n = 4096
@@ -166,7 +70,9 @@ def test_zorder_write_clusters_both_columns(spark, tmp_path):
         (F.col("id") * 40503 % 1024).alias("b"),
     )
     path = str(tmp_path / "zorder")
-    write_zordered(df, path, "a", "b", n_files=16, bits=10)
+    df.withColumn("_z", F.expr(morton_key_sql("a", "b", 10))).repartitionByRange(
+        16, "_z"
+    ).drop("_z").write.parquet(path)
 
     back = spark.read.parquet(path).withColumn(
         "file", F.input_file_name()

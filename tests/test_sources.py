@@ -1,9 +1,9 @@
 """Source/sink coverage (SURVEY.md §2.1 S1-S6, S9-S10).
 
 Exercises the binaryFile catalog scan (the reference's S3
-list+filter+download collapsed into one source), the multi-glob union
-scan, the wholetext document scan, and the JSON / formatted-dialogue
-sinks — all against tmp files, no cloud dependency.
+list+filter+download collapsed into one source, multi-extension
+listings included), the wholetext document scan, and the JSON /
+formatted-dialogue sinks — all against tmp files, no cloud dependency.
 """
 
 from __future__ import annotations
@@ -18,7 +18,6 @@ from retrieval_augmented_generation_rag_data_pipeline_spark.operators.text impor
 from retrieval_augmented_generation_rag_data_pipeline_spark.sources import sinks
 from retrieval_augmented_generation_rag_data_pipeline_spark.sources.readers import (
     scan_catalog,
-    scan_globs,
     scan_text_documents,
 )
 
@@ -47,9 +46,12 @@ def test_scan_catalog_with_content(spark, tmp_path):
 
 
 def test_scan_globs_union(spark, tmp_path):
+    """The reference's multi-extension listing (src/transcription.py:
+    431-432) is one brace glob: the prefix is listed once."""
     _mkfiles(tmp_path)
-    df = scan_globs(spark, str(tmp_path), ["*.webm", "*.mp3"])
-    assert df.count() == 3
+    df = scan_catalog(spark, str(tmp_path), glob="{*.webm,*.mp3}")
+    names = sorted(r.path.rsplit("/", 1)[-1] for r in df.collect())
+    assert names == ["x.webm", "y.mp3", "z.webm"]
 
 
 def test_scan_text_documents_wholetext(spark, tmp_path):
@@ -242,19 +244,15 @@ def test_derive_artifact_no_extension(spark):
 
 
 def test_jsonl_roundtrip_with_schema_and_corrupt_line(spark, tmp_path):
-    """write_json emits one JSON object per line (jsonl); scan_jsonl with
-    an explicit schema reads it back identically in ONE pass, and a
+    """write_json emits one JSON object per line (jsonl); a JSON read
+    with an explicit schema gets it back identically in ONE pass, and a
     malformed line surfaces in _corrupt_record instead of failing."""
-    from retrieval_augmented_generation_rag_data_pipeline_spark.sources.readers import (
-        scan_jsonl,
-    )
-
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(50)
     path = str(tmp_path / "docs_jsonl")
     sinks.write_json(docs.coalesce(1), path)
 
     schema = "doc_id long, text string, lang string, source string, n_chars long"
-    back = scan_jsonl(spark, path, schema=schema, glob="*.json")
+    back = spark.read.schema(schema).json(path)
     a = {tuple(r) for r in docs.select("doc_id", "text", "lang", "source", "n_chars").collect()}
     b = {tuple(r) for r in back.select("doc_id", "text", "lang", "source", "n_chars").collect()}
     assert a == b
@@ -262,28 +260,14 @@ def test_jsonl_roundtrip_with_schema_and_corrupt_line(spark, tmp_path):
     bad = tmp_path / "bad"
     bad.mkdir()
     (bad / "part-0.json").write_text('{"doc_id": 1, "text": "ok"}\n{not json\n')
-    got = scan_jsonl(
-        spark, str(bad), schema="doc_id long, text string, _corrupt_record string"
-    ).collect()
+    got = (
+        spark.read.schema("doc_id long, text string, _corrupt_record string")
+        .json(str(bad))
+        .collect()
+    )
     assert len(got) == 2
     assert {r.doc_id for r in got} == {1, None}
     assert any(r._corrupt_record is not None for r in got)
-
-
-def test_scan_csv_schema_first(spark, tmp_path):
-    from retrieval_augmented_generation_rag_data_pipeline_spark.sources.readers import (
-        scan_csv,
-    )
-
-    p = tmp_path / "t.csv"
-    p.write_text("id,name,score\n1,alpha,0.5\n2,beta,1.25\n")
-    out = scan_csv(
-        spark, str(p), schema="id long, name string, score double"
-    ).collect()
-    assert sorted((r.id, r.name, r.score) for r in out) == [
-        (1, "alpha", 0.5),
-        (2, "beta", 1.25),
-    ]
 
 
 def test_derive_artifact_keeps_dotfile_names(spark):
@@ -311,54 +295,6 @@ def test_morton_key_rejects_sign_bit_bits():
     with pytest.raises(ValueError, match="sign bit"):
         morton_key_sql("a", "b", bits=32)
     assert "<< 61" in morton_key_sql("a", "b", bits=31)
-
-
-def test_scan_globs_combines_into_one_listing(spark, tmp_path):
-    from retrieval_augmented_generation_rag_data_pipeline_spark.sources.readers import scan_globs
-
-    (tmp_path / "a.wav").write_bytes(b"x")
-    (tmp_path / "b.mp3").write_bytes(b"y")
-    (tmp_path / "c.txt").write_bytes(b"z")
-    out = scan_globs(spark, str(tmp_path), ["*.wav", "*.mp3"])
-    names = sorted(r.path.rsplit("/", 1)[-1] for r in out.collect())
-    assert names == ["a.wav", "b.mp3"]
-
-
-def test_scan_csv_reads_nested_shards(spark, tmp_path):
-    from retrieval_augmented_generation_rag_data_pipeline_spark.sources.readers import scan_csv
-
-    sub = tmp_path / "source=x"
-    sub.mkdir()
-    (sub / "part-0.csv").write_text("id,v\n1,a\n2,b\n")
-    (tmp_path / "part-1.csv").write_text("id,v\n3,c\n")
-    out = scan_csv(spark, str(tmp_path), schema="id INT, v STRING")
-    assert sorted(r.id for r in out.collect()) == [1, 2, 3]
-
-
-def test_scan_globs_overlap_comma_and_empty(spark, tmp_path):
-    """The union fallback must match the combined-brace path's
-    one-row-per-file semantics (overlapping globs used to duplicate
-    files), comma-bearing globs must NOT be brace-combined (the comma
-    would be reinterpreted as an alternation separator), and an empty
-    glob list raises instead of IndexError."""
-    import pytest
-
-    from retrieval_augmented_generation_rag_data_pipeline_spark.sources.readers import scan_globs
-
-    (tmp_path / "a1.txt").write_text("x")
-    (tmp_path / "b1.txt").write_text("y")
-    (tmp_path / "a,weird.csv").write_text("z")
-    base = str(tmp_path)
-    # overlapping patterns (second contains braces -> union fallback)
-    out = scan_globs(spark, base, ["a*.txt", "{a,b}*.txt"])
-    paths = [r.path for r in out.collect()]
-    assert len(paths) == len(set(paths)) == 2  # one row per file
-    # comma-bearing glob: must match the literal comma file
-    out2 = scan_globs(spark, base, ["a,weird*.csv", "b*.txt"])
-    names = sorted(p.rsplit("/", 1)[-1] for r in out2.collect() for p in [r.path])
-    assert names == ["a,weird.csv", "b1.txt"]
-    with pytest.raises(ValueError, match="at least one glob"):
-        scan_globs(spark, base, [])
 
 
 def test_pinned_table_schemas_match_files(spark):

@@ -419,19 +419,17 @@ def test_ivf_table_path_matches_literal(spark, monkeypatch, tmp_path):
     """Every IVF site's table tier (forced by lowering
     vectors.CELL_LITERAL_MAX under the 8-cell count) must reproduce its
     literal tier's full top-k (ids, scores, ranks): ann_ivf_topk,
-    write_ivf_index + ann_ivf_topk_indexed, write_ivfpq_index +
-    ann_ivfpq_topk, and ann_ivfpq_topk_mem. Probes and assignments fold
-    identical doubles, so the result sets are bit-equal, not merely
-    same-recall. An index written on either tier and probed on either
-    returns the same rows, so existing indexes stay valid with no
-    sidecar change; each persisted probe also equals its in-memory
-    twin."""
+    write_ivf_index + ann_ivf_topk_indexed, and ann_ivfpq_topk_mem.
+    Probes and assignments fold identical doubles, so the result sets
+    are bit-equal, not merely same-recall. An index written on either
+    tier and probed on either returns the same rows, so existing
+    indexes stay valid with no sidecar change; the persisted probe also
+    equals its in-memory twin."""
     from retrieval_augmented_generation_rag_data_pipeline_spark.operators import (
         vectors,
     )
     from retrieval_augmented_generation_rag_data_pipeline_spark.sources.sinks import (
         write_ivf_index,
-        write_ivfpq_index,
     )
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
@@ -450,10 +448,6 @@ def test_ivf_table_path_matches_literal(spark, monkeypatch, tmp_path):
             monkeypatch.setattr(vectors, "CELL_LITERAL_MAX", ceiling)
             paths["ivf", ceiling] = str(tmp_path / f"ivf_{ceiling}_{cents is None}")
             write_ivf_index(emb, paths["ivf", ceiling], dim=64, centroids=cents)
-            paths["pq", ceiling] = str(tmp_path / f"pq_{ceiling}_{cents is None}")
-            write_ivfpq_index(
-                emb, paths["pq", ceiling], dim=64, codebooks=books, centroids=cents
-            )
         sites = {
             "ivf": lambda: vectors.ann_ivf_topk(
                 q, emb, k=5, dim=64, nprobe=2, centroids=cents
@@ -465,10 +459,6 @@ def test_ivf_table_path_matches_literal(spark, monkeypatch, tmp_path):
         for w in ceilings:  # the tier the index was WRITTEN on
             sites["ivf_indexed", w] = lambda w=w: vectors.ann_ivf_topk_indexed(
                 spark, paths["ivf", w], q, k=5, dim=64, nprobe=2, centroids=cents
-            )
-            sites["ivfpq", w] = lambda w=w: vectors.ann_ivfpq_topk(
-                spark, paths["pq", w], q, k=5, dim=64, codebooks=books,
-                nprobe=2, centroids=cents,
             )
         rows = {}
         for name, run in sites.items():
@@ -482,7 +472,6 @@ def test_ivf_table_path_matches_literal(spark, monkeypatch, tmp_path):
             rows[name] = got[4][1]
         for w in ceilings:
             assert rows["ivf_indexed", w] == rows["ivf"]
-            assert rows["ivfpq", w] == rows["ivfpq_mem"]
 
 
 def test_arrow_assignment_agrees_on_real_data(spark):
@@ -565,8 +554,10 @@ def test_ann_ivfpq_rerank_exact_scores_and_recall_gain(spark):
     from retrieval_augmented_generation_rag_data_pipeline_spark.operators.vectors import (
         ann_ivfpq_rerank,
         ann_ivfpq_topk_mem,
+        ann_pq_topk,
         default_pq_codebooks,
         knn_topk,
+        pq_encode,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -587,7 +578,8 @@ def test_ann_ivfpq_rerank_exact_scores_and_recall_gain(spark):
     adc = ann_ivfpq_topk_mem(
         qn, emb, k=k, dim=64, codebooks=books, n_cells=8, nprobe=2
     ).collect()
-    assert 999 not in {r.query_id for r in rer + short + adc}
+    flat = ann_pq_topk(qn, pq_encode(emb, books), books, k=k).collect()
+    assert 999 not in {r.query_id for r in rer + short + adc + flat}
     exact = knn_topk(q, emb, k=k, metric="dot").collect()
 
     short_set = {(r.query_id, r.vec_id) for r in short}
