@@ -81,6 +81,15 @@ def hash_array_sql(arr_sql: str) -> str:
     return f"transform({arr_sql}, h -> {md5_long_sql('h')})"
 
 
+def shingle_hashes_sql(text_sql: str, k: int = 3) -> str:
+    """60-bit hashes of a text's k-word shingles, in shingle order (one
+    per shingle, repeats kept): tokenize -> k-shingle -> ``md5_long_sql``,
+    the one per-document shingle set of the dedup family, fingerprints
+    and decontamination. Oracle mirror:
+    ``O.hash_array(O.word_shingles(O.tokens(x), k))``."""
+    return hash_array_sql(word_shingles_sql(tokens_sql(text_sql), k))
+
+
 def md5_pair_sql(col_sql: str) -> str:
     """120-bit deterministic hash of a string: struct<h1,h2> of two
     60-bit longs from md5 hex chars 1-15 and 16-30. For keys that must

@@ -4,6 +4,15 @@ Exact hash dedup, MinHash+LSH, SimHash, and n-gram Jaccard — all built
 on the portable md5-derived hash (functions.hashing) so every one is
 DuckDB-oracle-checkable. Each returns a DataFrame (never collects).
 
+A document's shingle set has ONE form here: the 60-bit shingle-hash
+array ``_shingle_hashes`` stages (``hashing.shingle_hashes_sql``).
+MinHash sketches it, ``ngram_jaccard_pairs`` explodes its distinct
+hashes into the inverted index, and ``verify_pairs_jaccard`` — the one
+exact-Jaccard verify, which ``dedup_corpus``'s ``verify_jaccard`` also
+calls — intersects its distinct hashes (8 bytes per shingle, where the
+shingle strings cost k words each). Hash-Jaccard equals string-Jaccard
+unless two distinct shingles collide in 60 bits.
+
 Algorithms follow the published formulations: MinHash resemblance
 sketches (Broder, "On the resemblance and containment of documents",
 1997), banded LSH for candidate generation (Leskovec/Rajaraman/Ullman,
@@ -17,7 +26,7 @@ Scale notes (100 TB):
 - MinHash LSH: signatures computed scan-side (narrow), the only shuffle
   is the band-bucket self-join (key = (band_idx, band_signature));
 - SimHash: narrow per-row compute, group by fingerprint;
-- n-gram Jaccard: shingle-explode + equi-join on shingle hash — the
+- n-gram Jaccard: shingle-hash explode + equi-join on the hash — the
   classic "inverted index join"; skew on stop-shingles is the risk, so
   callers should cap shingle document frequency (df_cap) like any
   inverted-index system.
@@ -35,8 +44,8 @@ from ..functions.hashing import (
     NUM_PERM,
     hash_array_sql,
     hash_pair_array_sql,
-    md5_long_sql,
     minhash_signature_sql,
+    shingle_hashes_sql,
     simhash16_sql,
     tokens_sql,
     word_shingles_sql,
@@ -69,15 +78,30 @@ def dedup_exact(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     computed twice (agg side + probe side) — a narrow scan+md5,
     cheaper at scale than one hot task.
     """
-    from .joins import hot_salted_count_join
+    docs = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+    d, groups = _digest_groups(docs)
+    return _digest_join(d, groups).select("doc_id", "canonical_id", "group_size")
 
-    d = df.select(
-        F.col(id_col).alias("doc_id"), F.md5(F.col(text_col)).alias("_digest")
-    )
+
+def _digest_groups(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The exact-digest step shared by ``dedup_exact`` and
+    ``dedup_corpus_edges``: the (doc_id, _digest) rows of a (doc_id,
+    text) frame and their per-digest (_digest, canonical_id,
+    group_size) aggregate. A caller filters the aggregate (the build
+    side) before ``_digest_join``."""
+    d = docs.select("doc_id", F.md5("text").alias("_digest"))
     groups = d.groupBy("_digest").agg(
         F.min("doc_id").alias("canonical_id"),
         F.count("*").cast("long").alias("group_size"),
     )
+    return d, groups
+
+
+def _digest_join(d: DataFrame, groups: DataFrame) -> DataFrame:
+    """Digest rows joined back to their group on the null-safe digest,
+    hot digests salted (see ``dedup_exact``)."""
+    from .joins import hot_salted_count_join
+
     return hot_salted_count_join(
         d,
         groups,
@@ -85,13 +109,15 @@ def dedup_exact(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
         count_col="group_size",
         salt_src="doc_id",
         null_safe=True,
-    ).select("doc_id", "canonical_id", "group_size")
+    )
 
 
 def _shingle_hashes(
     df: DataFrame, id_col: str, text_col: str, k: int
 ) -> DataFrame:
-    """(doc_id, _h) — shingle-hash array staged in its OWN projection.
+    """(doc_id, _h) — shingle-hash array staged in its OWN projection:
+    the package's one per-document shingle set (MinHash, the n-gram
+    inverted index and the Jaccard verify all start here).
 
     The tokenize -> shingle -> md5 pipeline is the expensive part of every
     sketch below; inlining it into each of the NUM_PERM signature slots
@@ -107,8 +133,7 @@ def _shingle_hashes(
     df = ensure_parallelism(df)
     return df.selectExpr(
         f"`{id_col}` AS doc_id",
-        hash_array_sql(word_shingles_sql(tokens_sql(f"`{text_col}`"), k))
-        + " AS _h",
+        shingle_hashes_sql(f"`{text_col}`", k) + " AS _h",
     )
 
 
@@ -263,26 +288,26 @@ def ngram_jaccard_pairs(
     ``df_cap`` drops shingles appearing in more than df_cap docs (skew /
     stop-shingle control — essential at scale, off by default so the
     oracle stays simple).
+
+    The inverted index is the (doc_id, _h) postings of each doc's
+    DISTINCT shingle hashes — ``_shingle_hashes``' array, exploded —
+    so the pairs score the same hash sets ``verify_pairs_jaccard`` does.
     """
-    shingled = ensure_parallelism(df).selectExpr(
-        f"`{id_col}` AS doc_id",
-        f"array_distinct({word_shingles_sql(tokens_sql(f'`{text_col}`'), k)})"
-        " AS _sh",
-    )
     # The inverted index is pinned (lazy localCheckpoint): it feeds BOTH
     # sides of the pair self-join (plus the optional hot-shingle cap),
     # and each consumer would otherwise replay the whole tokenize ->
     # shingle -> md5 pipeline over the corpus. Materializing the
     # (doc_id, hash) postings once is exactly what "building an inverted
     # index" means; per-doc sizes derive from it (one count per doc —
-    # _sh is already distinct, so rows per doc == n_sh) instead of a
+    # the hashes are distinct, so rows per doc == n_sh) instead of a
     # separate pass. Zero-shingle docs drop out of sizes, which is
     # harmless: they can never appear in a candidate pair.
     from .pinning import pin
 
     inv = pin(
-        shingled.select("doc_id", F.explode("_sh").alias("shingle"))
-        .selectExpr("doc_id", f"{md5_long_sql('shingle')} AS _h")
+        _shingle_hashes(df, id_col, text_col, k).selectExpr(
+            "doc_id", "explode(array_distinct(_h)) AS _h"
+        )
     )
     if df_cap is not None:
         hot = inv.groupBy("_h").count().filter(F.col("count") > df_cap).select("_h")
@@ -319,17 +344,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def _jaccard_sql(a: str, b: str) -> str:
-    """|a ∩ b| / |a ∪ b| of two distinct-element array columns, as one
-    SQL expression. Plain division: an empty union (0/0) is the
-    caller's to rule out first."""
-    return let_sql(
-        f"CAST(size(array_intersect({a}, {b})) AS BIGINT)",
-        "i",
-        f"i / CAST(size({a}) + size({b}) - i AS DOUBLE)",
-    )
-
-
 def verify_pairs_jaccard(
     pairs: DataFrame,
     docs: DataFrame,
@@ -341,7 +355,8 @@ def verify_pairs_jaccard(
     """Re-score candidate pairs with their EXACT word-shingle Jaccard —
     the per-pair rerank that turns any sketch's candidates (LSH bands,
     SimHash radius, embedding buckets) into measured precision instead
-    of an assumption.
+    of an assumption. The package's one shingle-set Jaccard verify:
+    ``dedup_corpus``'s ``verify_jaccard`` calls it too.
 
     ``pairs`` must carry ``doc_a``/``doc_b`` id columns (extra columns
     pass through); ``docs`` provides the texts. Adds ``jaccard`` (the
@@ -349,6 +364,13 @@ def verify_pairs_jaccard(
     round it: the count/size division is bit-identical IEEE on both
     engines, where round() can straddle a half-up tie like 1/128) and
     ``is_dup`` (jaccard >= threshold, int).
+
+    The shingle sets are the DISTINCT 60-bit shingle hashes
+    (``array_distinct`` of ``_shingle_hashes``' array), not the shingle
+    strings: the score equals the string-set Jaccard unless two
+    distinct shingles of a pair collide in 60 bits, and the pinned
+    frame holds 8 bytes per distinct shingle where strings hold k
+    words.
 
     INPUT CONTRACT: every pair id must exist in ``docs``, and at least
     one doc of each pair must yield >= 1 shingle (text of >= k words).
@@ -362,8 +384,8 @@ def verify_pairs_jaccard(
     prunes BOTH columns (e.g. ``select("doc_a").count()``) never
     evaluates it and bad pairs pass silently.
 
-    Scale: two hash equi-joins against the per-doc shingle-set frame,
-    per-row set intersection linear in doc length, and the
+    Scale: two hash equi-joins against the per-doc shingle-hash-set
+    frame, per-row set intersection linear in doc length, and the
     intersection size is let-bound (functions/binding.let_sql) — unbound,
     the jaccard + is_dup references would evaluate it 4x per pair.
     Output-bound: cost tracks the candidate count (measured in
@@ -371,21 +393,16 @@ def verify_pairs_jaccard(
     -> 683k across 10x/30x/100x), never the corpus squared — the
     candidates stay however-bucketed their generator made them.
 
-    The shingle frame is ensure_parallelism'd (round-15: a one-file
-    corpus scans as ONE partition, serializing the tokenize+shingle
-    pass onto one core) and pinned — BOTH sides of the pair join
-    consume it, and unpinned each would replay the full
-    tokenize+shingle pass (the same trade dedup_corpus_edges'
-    verify path already takes; under pinning_disabled() plan tooling
-    still sees the full lineage).
+    The hash-set frame is pinned: BOTH sides of the pair join consume
+    it, and unpinned each would replay the full tokenize+shingle+md5
+    pass (``_shingle_hashes`` already spreads an under-split input;
+    under pinning_disabled() plan tooling still sees the full lineage).
     """
     from .pinning import pin
 
     sh = pin(
-        ensure_parallelism(docs).selectExpr(
-            f"`{id_col}` AS doc_id",
-            f"array_distinct({word_shingles_sql(tokens_sql(f'`{text_col}`'), k)})"
-            " AS s",
+        _shingle_hashes(docs, id_col, text_col, k).selectExpr(
+            "doc_id", "array_distinct(_h) AS s"
         )
     )
     # contract guard (see docstring): assert_true is NULL when passing,
@@ -410,7 +427,11 @@ def verify_pairs_jaccard(
         "concat('verify_pairs_jaccard: pair (', CAST(doc_a AS STRING), ', ', "
         f"CAST(doc_b AS STRING), {msg})) AS DOUBLE)"
     )
-    jac = _jaccard_sql("_sa", "_sb")
+    jac = let_sql(
+        "CAST(size(array_intersect(_sa, _sb)) AS BIGINT)",
+        "i",
+        "i / CAST(size(_sa) + size(_sb) - i AS DOUBLE)",
+    )
     joined = pairs.join(
         sh.select(F.col("doc_id").alias("doc_a"), F.col("s").alias("_sa")),
         "doc_a",
@@ -713,7 +734,6 @@ def dedup_corpus_edges(
     must carry (doc_id, text). Exposed as its own operator so plan
     tooling can guard its shape — inside ``dedup_corpus`` the eager
     per-round checkpoints truncate the visible plan."""
-    from .joins import hot_salted_count_join
 
     # Exact-digest star edges, NOT dedup_exact(docs).filter(doc !=
     # canonical): the edges only exist for digests with >= 2 members,
@@ -725,24 +745,9 @@ def dedup_corpus_edges(
     # and AQE sees a build side small enough to broadcast. Same
     # null-safe digest grouping and hot-key salting as dedup_exact.
     def _exact_side():
-        d = docs.select("doc_id", F.md5("text").alias("_digest"))
-        dup_groups = (
-            d.groupBy("_digest")
-            .agg(
-                F.min("doc_id").alias("canonical_id"),
-                F.count("*").cast("long").alias("group_size"),
-            )
-            .filter(F.col("group_size") >= 2)
-        )
+        d, groups = _digest_groups(docs)
         return (
-            hot_salted_count_join(
-                d,
-                dup_groups,
-                key="_digest",
-                count_col="group_size",
-                salt_src="doc_id",
-                null_safe=True,
-            )
+            _digest_join(d, groups.filter(F.col("group_size") >= 2))
             .filter(F.col("doc_id") != F.col("canonical_id"))
             .select(
                 F.col("canonical_id").alias("doc_a"),
@@ -772,25 +777,11 @@ def dedup_corpus_edges(
         near_edges = near_edges.filter(F.col("n_bands") >= min_bands)
     near_edges = near_edges.select("doc_a", "doc_b")
     if verify_jaccard is not None:
-        # reuse the staged (and ensure_parallelism'd) shingle pipeline —
-        # an inline re-derivation would skip the repartition and
-        # serialize the expensive hashing on under-split inputs; pinned
-        # because BOTH sides of the pair-rescore join consume it (each
-        # would replay the tokenize->shingle->md5 pass otherwise)
-        from .pinning import pin
-
-        sh = pin(
-            _shingle_hashes(docs, "doc_id", "text", k)
-            .select("doc_id", F.array_distinct(F.col("_h")).alias("_sh"))
-        )
-        a = sh.select(F.col("doc_id").alias("doc_a"), F.col("_sh").alias("_sa"))
-        b = sh.select(F.col("doc_id").alias("doc_b"), F.col("_sh").alias("_sb"))
         # minhash_band_keys gives shingle-less docs no band, so every
-        # candidate has a non-empty union and the division is safe
+        # candidate meets verify_pairs_jaccard's input contract
         near_edges = (
-            near_edges.join(a, "doc_a")
-            .join(b, "doc_b")
-            .filter(F.expr(_jaccard_sql("_sa", "_sb")) >= verify_jaccard)
+            verify_pairs_jaccard(near_edges, docs, k=k, threshold=verify_jaccard)
+            .filter("is_dup = 1")
             .select("doc_a", "doc_b")
         )
     return exact_edges.unionByName(near_edges)
@@ -897,9 +888,10 @@ def dedup_corpus(
       16 perms in 4 bands, P[>=2 bands] for Jaccard s is
       1-(1-s^4)^4 - 4 s^4 (1-s^4)^3 — sharply suppresses s < 0.5 pairs.
     - ``verify_jaccard``: rescore every surviving candidate pair by
-      EXACT shingle Jaccard and keep pairs >= the threshold (the
-      candidates-then-verify discipline of MMDS ch.3). Costs two
-      shuffle joins of the (small) pair list against the shingle sets,
+      EXACT shingle Jaccard (``verify_pairs_jaccard``) and keep pairs
+      >= the threshold (the candidates-then-verify discipline of MMDS
+      ch.3). Costs one pinned pass over the corpus' distinct shingle
+      hashes plus two joins of the (small) pair list against it;
       never touches non-candidate pairs.
 
     Scale notes (100 TB): exact edges are star-shaped (canonical -> each

@@ -431,19 +431,6 @@ def asof_align(
     )
 
 
-def anti_join_ledger(
-    candidates: DataFrame, ledger: DataFrame, key: str = "key"
-) -> DataFrame:
-    """Skip already-processed keys (reference src/aws_bucket.py:180).
-
-    left_anti against the ledger. No broadcast hint: a ledger grows
-    without bound (every key ever processed), so AQE must pick the
-    strategy — broadcast while it fits, shuffle join after. At 100 TB
-    prefer the streaming checkpoint, which tracks files natively.
-    """
-    return candidates.join(ledger.select(key).distinct(), key, "left_anti")
-
-
 def broadcast_lookup(
     facts: DataFrame, dim: DataFrame, key: str, how: str = "inner"
 ) -> DataFrame:

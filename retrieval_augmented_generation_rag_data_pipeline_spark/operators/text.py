@@ -17,9 +17,9 @@ from ..functions.artifacts import load_artifact
 from ..functions.binding import let_sql
 from ..functions.hashing import (
     LSH_BANDS,
-    hash_array_sql,
     md5_long_sql,
     minhash_signature_sql,
+    shingle_hashes_sql,
     tokens_sql,
     word_shingles_sql,
 )
@@ -270,7 +270,7 @@ def doc_fingerprint(
     t = f"`{text_col}`"
     whole = md5_long_sql(f"trim({t})")
     fp = let_sql(
-        hash_array_sql(word_shingles_sql(tokens_sql(t), k)),
+        shingle_hashes_sql(t, k),
         "hs",
         f"struct(coalesce(array_min(hs), {whole}) AS fp_min, "
         f"coalesce(array_max(hs), {whole}) AS fp_max)",
@@ -437,7 +437,7 @@ def decontaminate(
     Either way a document is dropped per row, never by id.
     """
     def keys(text: str) -> str:
-        return hash_array_sql(word_shingles_sql(tokens_sql(f"`{text}`"), n))
+        return shingle_hashes_sql(f"`{text}`", n)
 
     staged = ensure_parallelism(docs).select(
         F.struct(*[F.col(c) for c in docs.columns]).alias("_p"),
@@ -503,7 +503,7 @@ def decontaminate_fuzzy(
         # the minhash_band_keys staging: one (payload, _h) projection,
         # one (_ok, _sig) projection, band keys as cheap array indexing
         # over the staged _sig; shingle-less rows get no keys
-        h = hash_array_sql(word_shingles_sql(tokens_sql(f"`{text}`"), k))
+        h = shingle_hashes_sql(f"`{text}`", k)
         return (
             df.select(payload.alias("_p"), F.expr(h).alias("_h"))
             .selectExpr(

@@ -656,11 +656,12 @@ def probe_cells(
 
 
 def _queries(queries: DataFrame, query_id: str, vec_col: str) -> DataFrame:
-    """The query side of the IVF and PQ operators: (query_id, _qv), NULL
-    query vectors dropped. A NULL vector has no nearest cell and no ADC
-    table; kept, it would probe arbitrary cells (the null-first struct
-    ordering) or score NULL against every candidate, fabricating k
-    NULL-score "neighbors" for that query."""
+    """The query side of the IVF, PQ and sign-LSH operators: (query_id,
+    _qv), NULL query vectors dropped. A NULL vector has no nearest cell,
+    no ADC table and no sign bucket; kept, it would probe arbitrary
+    cells (the null-first struct ordering), land in bucket 0, or score
+    NULL against every candidate, fabricating k NULL-score "neighbors"
+    for that query."""
     return queries.filter(F.col(vec_col).isNotNull()).select(
         F.col(query_id).alias("query_id"), F.col(vec_col).alias("_qv")
     )
@@ -1129,11 +1130,12 @@ def ann_lsh_topk(
 
     The equi-join on bucket id replaces the cross join — at 100 TB this
     is a standard shuffle (or broadcast, if the query side is small)
-    keyed on the bucket, candidates ~ n/2^planes per bucket.
+    keyed on the bucket, candidates ~ n/2^planes per bucket. A NULL
+    query vector has no bucket and emits no rows (``_queries``).
     """
-    qb = queries.select(
-        F.col(query_id).alias("query_id"), F.col(vec_col).alias("_qv")
-    ).withColumn("_bucket", lsh_bucket("_qv", dim, n_planes))
+    qb = _queries(queries, query_id, vec_col).withColumn(
+        "_bucket", lsh_bucket("_qv", dim, n_planes)
+    )
     cb = corpus.select(
         F.col(corpus_id).alias(corpus_id), F.col(vec_col).alias("_cv")
     ).withColumn("_bucket", lsh_bucket("_cv", dim, n_planes))

@@ -41,7 +41,7 @@ from ..operators import (
     vectors,
     windows,
 )
-from ..sources import readers
+from ..sources import ledger, readers
 from ..operators.joins import asof_align
 from ..operators.windows import merge_islands, tumbling_bucket
 
@@ -514,9 +514,11 @@ def semi_join(spark, sf):
        WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)""",
 )
 def anti_join_ledger(spark, sf):
+    """The ingest cycle's own skip step, ``ledger.pending``, with the
+    orders' customer keys standing in for the processed ledger."""
     c = _t(spark, sf, "customer")
-    ledger = _t(spark, sf, "orders").select(F.col("o_custkey").alias("c_custkey"))
-    return joins.anti_join_ledger(c, ledger, "c_custkey").select("c_custkey")
+    done = _t(spark, sf, "orders").select(F.col("o_custkey").alias("key"))
+    return ledger.pending(c, done, key_col="c_custkey").select("c_custkey")
 
 
 @_q(
@@ -2308,7 +2310,9 @@ def dedup_eval(spark, sf):
     so precision = avg(is_dup) is one agg away. The verify is the
     shared ``dedup.verify_pairs_jaccard`` rerank — the same code the
     scale probe measures (see its docstring for the let-binding and
-    unrounded-jaccard contracts)."""
+    unrounded-jaccard contracts). It scores distinct shingle HASHES;
+    the oracle scores the shingle strings, so parity also checks that
+    no hash collision moved a score."""
     corpus = _dup_corpus(spark, sf)
     cand = dedup.lsh_candidate_pairs(corpus)
     return dedup.verify_pairs_jaccard(cand, corpus).select(

@@ -64,14 +64,6 @@ def test_ngram_jaccard(spark, docs):
     assert (1, 4) not in pairs  # no shared 3-gram shingles
 
 
-def test_ngram_jaccard_df_cap_drops_stop_shingles(spark):
-    rows = [(i, "common shingle here unique%d word%d tail%d" % (i, i, i)) for i in range(10)]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    uncapped = ngram_jaccard_pairs(df).count()
-    capped = ngram_jaccard_pairs(df, df_cap=5).count()
-    assert capped < uncapped
-
-
 def test_connected_components_toy_graph(spark):
     from retrieval_augmented_generation_rag_data_pipeline_spark.operators.dedup import (
         connected_components,

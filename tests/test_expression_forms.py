@@ -217,3 +217,27 @@ def test_every_public_function_is_reachable():
 
 def test_kept_functions_exist_and_are_otherwise_unreached():
     assert sorted(set(KEPT) & set(_unreachable())) == sorted(KEPT)
+
+
+# --- no shadowed definitions: a second top-level def replaces the first ---
+
+
+def test_no_module_defines_a_top_level_name_twice():
+    """A second top-level ``def``/``class`` of one name silently replaces
+    the first: a shadowed test never runs, a shadowed function is dead
+    code that reads as live."""
+    files = sorted(_PKG_DIR.rglob("*.py"))
+    files += sorted((_REPO / "tests").glob("*.py"))
+    files += sorted((_REPO / "perfbench").glob("*.py"))
+    twice = []
+    for path in files:
+        seen: set[str] = set()
+        for stmt in ast.parse(path.read_text()).body:
+            if not isinstance(
+                stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                continue
+            if stmt.name in seen:
+                twice.append(f"{path.relative_to(_REPO)}::{stmt.name}")
+            seen.add(stmt.name)
+    assert twice == []

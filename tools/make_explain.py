@@ -70,7 +70,8 @@ PICKS = {
     "dedup_eval": (
         "LSH candidate quality verified, not trusted: every banded-LSH "
         "candidate pair re-scored with exact shingle Jaccard — two hash "
-        "equi-joins against the shingle-set frame, the intersection "
+        "equi-joins against the pinned frame of each doc's distinct "
+        "60-bit shingle hashes (the set MinHash sketches), the intersection "
         "let-bound so it evaluates once per pair (jaccard + is_dup "
         "reference it 4x unbound); candidates stay bucketed, never "
         "all-pairs"
